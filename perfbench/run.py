@@ -77,6 +77,7 @@ def main(argv=None) -> int:
             value = 0.0  # the layer does no work on this workload
         else:
             fail(f"workload {args.workload} did not measure {m['name']}")
+        # a failed operation's latency is infinite, which JSON cannot hold
         out[m["name"]] = {"value": value if math.isfinite(value) else 1e9, "unit": m["unit"]}
     details = {
         "workload": args.workload,
