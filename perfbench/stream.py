@@ -32,7 +32,7 @@ import eventlog
 import gen
 import harness
 
-TICK_S = 3.0  # offered rate: one file every TICK_S seconds
+TICK_S = 5.0  # offered rate: one file every TICK_S seconds
 WARM_TICKS = 2
 SCHEMA = "channel_id string, t double, value double"
 QUERIES = ("stream_lfilter", "stream_rainflow")
