@@ -9,9 +9,10 @@ relational (native-tier) query.  The kernel tier is hash-anchored too:
 recursive-CTE oracles replay rainflow (full E1049), the causal and
 zero-phase IIR recursions, and the Smallwood SRS resonator bit-exactly,
 and O(N^2) DFT oracles anchor the spectral tier (psd_dft /
-psd_welch_dft / psd_summary_dft / psd_rms_dft).  Only the full-length
-FFT/spline production queries remain rows-only (their math is pinned to
-the anchors and to NumPy goldens in tests/, see SURVEY.md §5.2).
+psd_welch_dft / psd_summary_dft / psd_rms_dft).  The full-length
+FFT/spline production queries are oracle-checked too (``oracle_prod.py``
+replays the splines bit-exactly and the FFT legs under measured-margin
+rounding), so no query is rows-only.
 
 Float policy: row-level expressions are bit-identical across engines, so
 they are returned raw; any result downstream of a reduction (sum/avg) is
@@ -3122,7 +3123,7 @@ def q_ann_ivf(spark, sf_dir):
     # r16: persist the encoded (vec_id, v, _rk) table — the probe and
     # list sides of the candidate join otherwise each re-run the
     # vectorized encode kernel (the r15 regression on this leg was that
-    # doubled Arrow stage, see OPTIMIZATION_r16.md §ANN).
+    # doubled Arrow stage).
     return _ann.ivf_topk(
         _embeds_base(spark, sf_dir),
         F.col("vec_id") < 50,
@@ -9831,25 +9832,14 @@ def _replay_stream_gate(spark, name, sf_dir, parts, schema, build):
             # measured at seconds of the lfilter leg's wall on a loaded
             # host; a 4-column empty parquet needs no cluster.
             if empty_stage is None:
-                import pyarrow as pa
                 import pyarrow.parquet as pq
+                from pyspark.sql.pandas.types import to_arrow_schema
 
-                _PA_TYPES = {
-                    "string": pa.string(),
-                    "double": pa.float64(),
-                    "bigint": pa.int64(),
-                    "int": pa.int32(),
-                    "boolean": pa.bool_(),
-                }
-                fields = [
-                    (f.name, _PA_TYPES[f.dataType.simpleString()])
-                    for f in tagged.drop("_gate_part").schema.fields
-                ]
                 empty_stage = os.path.join(root, "empty.parquet")
                 pq.write_table(
-                    pa.table(
-                        {n: pa.array([], type=t) for n, t in fields}
-                    ),
+                    to_arrow_schema(
+                        tagged.drop("_gate_part").schema
+                    ).empty_table(),
                     empty_stage,
                 )
             dst = os.path.join(src, f"part-{i:03d}.parquet")
@@ -10209,89 +10199,24 @@ def _sql_streaming_lfilter():
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the driver's per-round CORRECTNESS gate validates
-    # the first 50 entries in dict order.  Round-15 ordering
+    # the first 50 entries in dict order.  Round-17 ordering
     # (tests/test_entry_contract.py pins the window AND a max-staleness
     # contract — no below-cap query may be more than 2 recorded rounds
     # stale, so this dict must rotate every round):
-    #   tier A — the 45 r12-greens that age past the 2-round bound the
-    #            moment CORRECTNESS_r15.json lands (exactly the set the
-    #            r14 ordering promised below its cap marker): the
-    #            TPC-H/dedup/ANN/curation/media-codec tier.
-    #   tier B — 5 slots: the two r15 CONSOLIDATIONS re-proving their
-    #            composed forms (rainflow now carries its segmented
-    #            residue-merge twin, filt_butter its overlap-save
-    #            chunked twin — rainflow_chunked / filt_chunked retired
-    #            as standalone slots; _compose_paths), plus 3 NEW gates
-    #            needing first driver proof: video_stream_info (H.264 +
-    #            HEVC stream inspection vs the construction-arithmetic
-    #            expectation table, incl. the 300-byte first-NAL
-    #            framing-collision regression), textio_roundtrip (the
-    #            §2.1 csv/json adapters round-tripped with the
-    #            keep_corrupt quarantine), and streaming_lfilter (the
-    #            third streaming gate — cross-batch z-state carry,
-    #            bit-exact vs the filt_iir_exact recursion).
-    #   below the cap — the 49 r13-greens (fresh through r15; they are
-    #            r16's mandatory set — leaving 1 free slot in r16, so
-    #            plan r16 consolidations BEFORE adding gates), then the
-    #            46 r14-greens (fresh through r16); the local gate
-    #            (tools/oracle_check.py) keeps full coverage meanwhile.
-    #            Registry 144 - 2 retired + 3 new = 145 of the ~150
-    #            ceiling.
+    #   tier A — the 49 r13-greens that aged past the 2-round bound when
+    #            CORRECTNESS_r16.json landed (r16's mandatory set, never
+    #            rotated in): the window/SQL basics, the streaming gates,
+    #            the text/crawl tier and the container extractors.
+    #   tier B — 1 slot: interp_daily, the first of the 46 r14-greens
+    #            that age out the moment CORRECTNESS_r17.json lands.
+    #   below the cap — the other 45 r14-greens (fresh through r16: the
+    #            rotation after CORRECTNESS_r17.json lands must take them,
+    #            leaving 5 free slots, so plan consolidations BEFORE adding
+    #            gates), then the 50 r16-greens (fresh through r18); the
+    #            local gate (tools/oracle_check.py) keeps full coverage
+    #            meanwhile.  Registry: 145 entries.
     return {
-        # -- tier A: r12-green carry-overs (45; mandatory this round) ----
-        "media_phash": q_media_phash,
-        "media_phash_pairs": q_media_phash_pairs,
-        "decontaminate": q_decontaminate,
-        "stratified_sample": q_stratified_sample,
-        "ngram_counts": q_ngram_counts,
-        "media_image_png": q_media_image_png,
-        "tpch_pricing": q_tpch_pricing,
-        "tpch_order_priority": q_tpch_order_priority,
-        "tpch_rollup": q_tpch_rollup,
-        "tpch_custdist": q_tpch_custdist,
-        "tpch_revenue_join": q_tpch_revenue_join,
-        "tpch_local_supplier": q_tpch_local_supplier,
-        "para_dedup": q_para_dedup,
-        "quality_classify": q_quality_classify,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "temp_sample": q_temp_sample,
-        "pii_scrub": q_pii_scrub,
-        "lm_ppl": q_lm_ppl,
-        "source_overlap": q_source_overlap,
-        "embed_kmeans": q_embed_kmeans,
-        "cluster_sample": q_cluster_sample,
-        "media_image_real": q_media_image_real,
-        "semdedup": q_semdedup,
-        "corpus_curate": q_corpus_curate,
-        "ann_int8": q_ann_int8,
-        "quality_score": q_quality_score,
-        "doc_fingerprint": q_doc_fingerprint,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "dedup_jaccard_ppjoin": q_dedup_jaccard_ppjoin,
-        "embed_cosine_topk": q_embed_cosine_topk,
-        "ann_lsh": q_ann_lsh,
-        "media_features": q_media_features,
-        "media_audio_real": q_media_audio_real,
-        "robots_filter": q_robots_filter,
-        "crawl_admission": q_crawl_admission,
-        "train_order": q_train_order,
-        "ann_ivf_pq": q_ann_ivf_pq,
-        "seq_pack": q_seq_pack,
-        "corpus_to_shards": q_corpus_to_shards,
-        "ide_scan": q_ide_scan,
-        # -- tier B: consolidations re-proving + new gates ---------------
-        "rainflow": q_rainflow,
-        "filt_butter": q_filt_butter,
-        "video_stream_info": q_video_stream_info,
-        "textio_roundtrip": q_textio_roundtrip,
-        "streaming_lfilter": q_streaming_lfilter,
-        # ---- driver cap: entries BELOW here are not driver-checked -------
-        # -- r13 tier (49; fresh through r15; r16 mandatory) -------------
+        # -- tier A: r13-green carry-overs (49; mandatory this round) ----
         "mov_rms": q_mov_rms,
         "integral": q_integral,
         "derivative": q_derivative,
@@ -10341,8 +10266,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rss_daily": q_rss_daily,
         "streaming_corpus_filter": q_streaming_corpus_filter,
         "streaming_rainflow": q_streaming_rainflow,
-        # -- r14 tier (46; fresh through r16) ----------------------------
+        # -- tier B: oldest r14-green (1) ------------------------------
         "interp_daily": q_interp_daily,
+        # ---- driver cap: entries BELOW here are not driver-checked -------
+        # -- r14 tier (45; fresh through r16) ----------------------------
         "interp_nearest": q_interp_nearest,
         "interp_cubic": q_interp_cubic,
         "interp_quadratic": q_interp_quadratic,
@@ -10388,6 +10315,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "wds_store_roundtrip": q_wds_store_roundtrip,
         "crawl_frontier": q_crawl_frontier,
         "dsir_select": q_dsir_select,
+        # -- r16 tier (50; fresh through r18) ----------------------------
+        "media_phash": q_media_phash,
+        "media_phash_pairs": q_media_phash_pairs,
+        "decontaminate": q_decontaminate,
+        "stratified_sample": q_stratified_sample,
+        "ngram_counts": q_ngram_counts,
+        "media_image_png": q_media_image_png,
+        "tpch_pricing": q_tpch_pricing,
+        "tpch_order_priority": q_tpch_order_priority,
+        "tpch_rollup": q_tpch_rollup,
+        "tpch_custdist": q_tpch_custdist,
+        "tpch_revenue_join": q_tpch_revenue_join,
+        "tpch_local_supplier": q_tpch_local_supplier,
+        "para_dedup": q_para_dedup,
+        "quality_classify": q_quality_classify,
+        "bloom_decontaminate": q_bloom_decontaminate,
+        "temp_sample": q_temp_sample,
+        "pii_scrub": q_pii_scrub,
+        "lm_ppl": q_lm_ppl,
+        "source_overlap": q_source_overlap,
+        "embed_kmeans": q_embed_kmeans,
+        "cluster_sample": q_cluster_sample,
+        "media_image_real": q_media_image_real,
+        "semdedup": q_semdedup,
+        "corpus_curate": q_corpus_curate,
+        "ann_int8": q_ann_int8,
+        "quality_score": q_quality_score,
+        "doc_fingerprint": q_doc_fingerprint,
+        "dedup_exact": q_dedup_exact,
+        "dedup_minhash": q_dedup_minhash,
+        "dedup_minhash_lsh": q_dedup_minhash_lsh,
+        "dedup_clusters": q_dedup_clusters,
+        "dedup_simhash": q_dedup_simhash,
+        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
+        "dedup_jaccard_ppjoin": q_dedup_jaccard_ppjoin,
+        "embed_cosine_topk": q_embed_cosine_topk,
+        "ann_lsh": q_ann_lsh,
+        "media_features": q_media_features,
+        "media_audio_real": q_media_audio_real,
+        "robots_filter": q_robots_filter,
+        "crawl_admission": q_crawl_admission,
+        "train_order": q_train_order,
+        "ann_ivf_pq": q_ann_ivf_pq,
+        "seq_pack": q_seq_pack,
+        "corpus_to_shards": q_corpus_to_shards,
+        "ide_scan": q_ide_scan,
+        "rainflow": q_rainflow,
+        "filt_butter": q_filt_butter,
+        "video_stream_info": q_video_stream_info,
+        "textio_roundtrip": q_textio_roundtrip,
+        "streaming_lfilter": q_streaming_lfilter,
     }
 
 

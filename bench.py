@@ -5,7 +5,8 @@ JSON line:  {"metric": ..., "value": total_sec, "unit": "sec",
 
 Execution is measured with the noop sink (full pipeline runs, nothing is
 collected to the driver), after a small warm-up action so JVM/codegen
-startup isn't billed to the first query.
+startup isn't billed to the first query.  Without $SPARK_GRAFT_CPUS the
+run uses every core the process may run on.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from pandas_sigproc_spark.session import get_spark
+from pandas_sigproc_spark.session import get_spark, host_cpus
 
 # Fixed 64-merge BPE vocabulary for the encode-throughput leg:
 # bpe_train(documents, 64) over the sf0.1 corpus, hardcoded so the leg
@@ -324,7 +325,7 @@ def _materialize_scaled(spark, sf_dir: str, repl: int, out_dir: str) -> None:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench", cpus=cpus)
 

@@ -91,7 +91,7 @@ def test_cap_comment_matches_reality():
     assert "---- driver cap" in src
     names = list(entry_mod.queries().keys())
     # the comment names the 50th entry explicitly; keep them in sync
-    assert names[49] == "streaming_lfilter", (
+    assert names[49] == "interp_daily", (
         f"50th queries() entry is {names[49]!r}; update the cap comment "
         "and this pin together when re-rotating"
     )

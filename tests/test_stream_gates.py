@@ -113,3 +113,29 @@ def test_replay_gate_refuses_degenerate_single_batch(spark, tmp_path):
             "doc_id long, text string",
             lambda s: s,
         )
+
+
+def test_replay_gate_writes_empty_part_for_any_column_type(spark, tmp_path):
+    # An all-filtered-out part is written as an empty parquet file that
+    # carries the stream's schema; timestamp and array columns must map
+    # to Arrow as readily as the flat numeric ones.
+    def part(i, n):
+        return spark.range(n).select(
+            (F.col("id") + 10 * i).alias("doc_id"),
+            F.timestamp_seconds(F.col("id") + 10 * i).alias("ts"),
+            F.array(F.col("id").cast("double"), F.lit(0.5)).alias("v"),
+        )
+
+    schema = "doc_id long, ts timestamp, v array<double>"
+    got = entry_mod._replay_stream_gate(
+        spark,
+        "emptytypes",
+        str(tmp_path / "sf"),
+        [part(0, 3), part(1, 0), part(2, 2)],
+        schema,
+        lambda s: s,
+    )
+    assert sorted(r.doc_id for r in got.collect()) == [0, 1, 2, 20, 21]
+    assert got.dtypes == [
+        ("doc_id", "bigint"), ("ts", "timestamp"), ("v", "array<double>")
+    ]

@@ -65,7 +65,7 @@ def _time(fn, reps=3):
 
 
 def main():
-    spark = get_spark("skew_bench", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("skew_bench")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            ".bench_scale")
     path = _materialize(spark, out_dir)

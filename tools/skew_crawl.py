@@ -50,7 +50,7 @@ def _wall(fn):
 
 
 def main() -> None:
-    spark = get_spark("skew_crawl", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("skew_crawl")
     n = 200_000
     rows = []
 

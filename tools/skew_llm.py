@@ -311,7 +311,7 @@ def probe_chunking(spark):
 
 
 def main():
-    spark = get_spark("skew_llm", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    spark = get_spark("skew_llm")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     rows = []
     rows += probe_giant_doc(spark)

@@ -43,7 +43,7 @@ def noop(df) -> float:
 
 
 def main() -> None:
-    spark = get_spark("skew_pack", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("skew_pack")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
 
