@@ -61,7 +61,9 @@ _KMEANS_IMPL = "expr"
 # semantic_dedup's determinism note), so the gate corpora are
 # bit-identical either way.  NULL vectors are skipped like
 # posexplode(NULL); a NULL ELEMENT inside a vector is the one documented
-# carve-out (NumPy carries it as NaN, Spark's SUM would skip it).
+# carve-out: NumPy's NaN partial crosses the Arrow boundary as NULL, so
+# SUM skips the whole batch's partial for that coordinate, where the
+# expression path skips only the element (see kmeans_embeddings).
 _KMEANS_UPDATE_IMPL = "kernel"
 
 
@@ -83,6 +85,21 @@ def kmeans_embeddings(
     after ``iters`` assign/update rounds.  Ties in the argmin break to
     the smallest cluster id (stable, engine-independent on equal
     distances).
+
+    NULL elements: a NULL vector is skipped, but a NULL ELEMENT inside a
+    vector is not.  In the default production mode
+    (``exact_sums=False``) it turns its Arrow batch's partial sum of that
+    coordinate for its cluster into NULL (the NaN NumPy computes crosses
+    the Arrow boundary as NULL), and Spark's SUM skips that partial
+    while the member count keeps it.  The centroid coordinate then
+    silently leaves out every member that shared the batch, so it
+    depends on the batch layout; when all of the cluster's members share
+    one batch the coordinate is NULL (NaN in pandas).  A NULL coordinate
+    makes every distance to that centroid NULL, which the argmin ranks
+    FIRST, so the next round assigns every vector to that one cluster.
+    ``exact_sums=True`` gives the NULL coordinate, and that collapse,
+    whenever a member has a NULL element.  Drop or impute NULL elements
+    before clustering.
     """
     assigned, cents = _lloyd(
         df, k, iters, id_col, vec_col, exact_sums, persist=persist, impl=impl
@@ -378,6 +395,14 @@ def semantic_dedup(
     Output: ``(id_col long, cluster int, keep boolean)`` — one row per
     input vector, so downstream filters see both kept and dropped rows
     (and the drop rate) without a second pass.
+
+    NULL elements inside a vector corrupt the k-means rounds this runs
+    first (see :func:`kmeans_embeddings`): in the default production
+    mode the affected centroid coordinate drops the members that shared
+    the NULL element's Arrow batch, or turns NULL and pulls every vector
+    into one cluster — which makes the pair join quadratic in the
+    corpus (the ``max_cluster_rows`` guard fails it once that cluster
+    passes the cap).  Drop or impute NULL elements first.
 
     The dominance rule (compare against ALL smaller ids, not a greedy
     kept-chain) is deterministic, engine-independent, and expressible as

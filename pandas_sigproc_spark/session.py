@@ -3,9 +3,22 @@
 Local mode runs one task slot per core: ``cpus`` defaults to
 ``$SPARK_GRAFT_CPUS``, else to the cores this process may run on; the
 driver heap defaults to 8 GiB (``$SPARK_DRIVER_MEMORY``).  On a real
-cluster every setting here except master/driver-memory carries over
-unchanged.  AQE stays on so skewed channel groups and small shuffle
-partitions get re-planned at runtime.
+cluster every setting here except master/driver-memory and the
+checkpoint file manager carries over unchanged.  AQE stays on so skewed
+channel groups and small shuffle partitions get re-planned at runtime.
+
+Streaming checkpoints go through Spark's ``FileSystem``-based checkpoint
+file manager.  The default ``FileContext`` one renames each checkpoint
+file through ``AbstractFileSystem.renameInternal``, which calls
+``getFileLinkStatus`` on both paths; without Hadoop's native
+``libhadoop`` (pip PySpark never ships it) the local filesystem answers
+that by forking ``readlink`` — about 3 ms a fork inside the driver JVM,
+and ~100 forks per micro-batch of a stateful query.  The ``FileSystem``
+manager renames by ``exists`` + ``FileSystem.rename``: on ``file:``
+paths the same check-then-rename the ``FileContext`` path does, with no
+fork.  The setting is for LOCAL ``file:`` checkpoints.  On HDFS the
+``FileContext`` rename is atomic, so a cluster deployment keeps Spark's
+default.
 """
 
 from __future__ import annotations
@@ -13,6 +26,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # The directory holding this package.  Python workers import the package
 # (its UDFs pickle by reference, and the worker daemon lives in it), so it
@@ -61,6 +79,8 @@ def get_spark(app_name: str = "pandas_sigproc_spark", cpus: int | None = None) -
         # (a fixed 0.3-0.5 s per task before CPython 3.13; see the module).
         .config("spark.python.daemon.module", "pandas_sigproc_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
+        # No forked readlink per checkpoint rename (see the module).
+        .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()

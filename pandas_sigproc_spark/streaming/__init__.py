@@ -129,18 +129,17 @@ _LFILTER_OUT_SCHEMA = StructType(
     ]
 )
 
-_LFILTER_STATE_SCHEMA = StructType([StructField("zi", ArrayType(DoubleType()))])
-
 
 def _check_batch_bound(n_rows: int, max_batch_rows: int | None, op: str) -> None:
     """Enforce the documented per-(channel, micro-batch) memory contract.
 
-    The stateful ops concat-and-sort one channel's micro-batch in task
-    memory; the SIZE of that batch is controlled upstream (trigger
-    interval, maxFilesPerTrigger / maxOffsetsPerTrigger).  When the
-    caller declares the bound they sized those knobs for, exceeding it
-    fails LOUDLY with the tuning guidance instead of silently ballooning
-    an executor toward OOM.
+    The stateful ops hold one state group's micro-batch in task memory
+    (see :func:`_channel_runs`); the SIZE of each channel's share is
+    controlled upstream (trigger interval, maxFilesPerTrigger /
+    maxOffsetsPerTrigger).  When the caller declares the per-channel
+    bound they sized those knobs for, exceeding it fails LOUDLY with the
+    tuning guidance instead of silently ballooning an executor toward
+    OOM.
     """
     if max_batch_rows is not None and n_rows > max_batch_rows:
         raise ValueError(
@@ -166,6 +165,52 @@ def _drain_bounded(pdf_iter, max_batch_rows: int | None, op: str) -> list:
     return chunks
 
 
+def _channel_runs(pdf_iter, order_cols, max_batch_rows: int | None, op: str):
+    """Drain one state group's Arrow chunks into per-channel runs.
+
+    Returns ``(cids, offs, t, value)``: rows ``offs[i]:offs[i + 1]`` of
+    the ``t`` and ``value`` arrays are channel ``cids[i]``'s micro-batch,
+    in ``order_cols`` order.  Chunks arrive in arbitrary relative order
+    after the shuffle, and threading state through a mis-ordered series
+    would corrupt it, so the columns are concatenated and sorted ONCE
+    with a stable ``np.lexsort`` over (channel, *order_cols): channels
+    come out contiguous in ascending id order, tied rows keep their
+    arrival order (the mergesort order of a pandas ``sort_values``).
+    A NULL ``channel_id`` is a channel of its own, as under per-channel
+    keying.
+
+    ``max_batch_rows`` is a per-channel bound counted chunk by chunk:
+    the chunk that pushes any one channel over it raises before the
+    next chunk is drained or anything is concatenated.
+    """
+    chunks, seen = [], {}
+    for pdf in pdf_iter:
+        if max_batch_rows is not None:
+            for cid, n in pdf["channel_id"].value_counts(dropna=False).items():
+                seen[cid] = seen.get(cid, 0) + n
+                _check_batch_bound(seen[cid], max_batch_rows, op)
+        chunks.append(pdf)
+    if not chunks:
+        return [], np.zeros(1, np.int64), np.empty(0), np.empty(0)
+    cols = {
+        c: np.concatenate([pdf[c].to_numpy() for pdf in chunks])
+        for c in dict.fromkeys(("channel_id", "t", "value", *order_cols))
+    }
+    codes, uniq = pd.factorize(
+        cols["channel_id"], sort=True, use_na_sentinel=False
+    )
+    order = np.lexsort([cols[c] for c in reversed(order_cols)] + [codes])
+    offs = np.zeros(len(uniq) + 1, np.int64)
+    np.cumsum(np.bincount(codes, minlength=len(uniq)), out=offs[1:])
+    cids = [None if pd.isna(c) else c for c in uniq]
+    return (
+        cids,
+        offs,
+        cols["t"].astype(np.float64)[order],
+        cols["value"].astype(np.float64)[order],
+    )
+
+
 def _bucket_key(n_buckets: int):
     """Deterministic channel -> bucket key for bucket-level state ops.
 
@@ -173,6 +218,123 @@ def _bucket_key(n_buckets: int):
     restarts (xxhash64 is seed-pinned), never derived from rand()
     (guide §2.5: retried tasks must reproduce the assignment)."""
     return F.pmod(F.xxhash64(F.col("channel_id")), F.lit(int(n_buckets)))
+
+
+def _channel_state_op(
+    df: DataFrame,
+    kernel,
+    out_schema: StructType,
+    state_name: str,
+    order_cols: tuple[str, ...],
+    max_batch_rows: int | None,
+    channel_buckets: int | None,
+    op: str,
+) -> DataFrame:
+    """One stateful per-channel fold, keyed by channel or by channel bucket.
+
+    ``kernel(st, cids, offs, t, value)`` gets a group's sorted channel
+    runs (:func:`_channel_runs`) and ``st``, the carried state of each
+    channel (a list of doubles; absent for a new channel).  It folds
+    every run into ``st`` in place and returns, per output column after
+    ``channel_id``, one array per channel.
+
+    The state op emits ONE packed row per channel (``channel_id`` plus
+    array columns) and a native ``inline(arrays_zip(...))`` restores
+    ``out_schema``: per-sample rows never cross the Python boundary,
+    where PySpark pads the state columns to the output row count.
+
+    Keying: per channel (state ``{state_name}`` per key), or with
+    ``channel_buckets=n`` by ``pmod(xxhash64(channel_id), n)`` with a
+    dict of per-channel states per group plus ``n_buckets`` — the bucket
+    is part of the state key, so a restart with another ``n`` raises
+    instead of remapping every channel.  A batch DataFrame runs the same
+    kernel once per channel from empty state.
+    """
+    vals = out_schema.names[1:]
+    packed = StructType(
+        [StructField("channel_id", StringType())]
+        + [StructField(c, ArrayType(DoubleType())) for c in vals]
+    )
+
+    def fold(st, pdf_iter, tag):
+        cids, offs, t, value = _channel_runs(
+            pdf_iter, order_cols, max_batch_rows, tag
+        )
+        outs = kernel(st, cids, offs, t, value)
+        return pd.DataFrame({"channel_id": cids, **dict(zip(vals, outs))})
+
+    def saved(v) -> list:
+        return np.asarray(v, np.float64).tolist()
+
+    if not df.isStreaming:
+        out = df.groupBy("channel_id").applyInPandas(
+            lambda pdf: fold({}, [pdf], f"{op}[batch]"), packed
+        )
+    elif channel_buckets is None:
+
+        def step(key, pdf_iter, state):
+            (cid,) = key
+            st = {cid: state.get[0]} if state.exists else {}
+            out = fold(st, pdf_iter, op)
+            if cid in st:
+                state.update((saved(st[cid]),))
+            yield out
+
+        out = df.groupBy("channel_id").applyInPandasWithState(
+            step,
+            outputStructType=packed,
+            stateStructType=StructType(
+                [StructField(state_name, ArrayType(DoubleType()))]
+            ),
+            outputMode="append",
+            timeoutConf="NoTimeout",
+        )
+    else:
+        n_buckets = int(channel_buckets)
+        if n_buckets < 1:
+            raise ValueError("need channel_buckets >= 1")
+
+        def step(key, pdf_iter, state):
+            st = {}
+            if state.exists:
+                chans, states, n_saved = state.get
+                if n_saved != n_buckets:
+                    raise ValueError(
+                        f"{op}: the checkpoint's state was written with "
+                        f"channel_buckets={n_saved}, but this query runs "
+                        f"with channel_buckets={n_buckets}. The bucket is "
+                        "part of the state key, so a different count "
+                        "would remap every channel away from its carried "
+                        f"state; restart with channel_buckets={n_saved} "
+                        "or from a fresh checkpoint."
+                    )
+                st = dict(zip(chans, states))
+            out = fold(st, pdf_iter, op)
+            state.update(
+                (list(st), [saved(v) for v in st.values()], n_buckets)
+            )
+            yield out
+
+        out = (
+            df.withColumn("_bkt", _bucket_key(n_buckets))
+            .groupBy("_bkt")
+            .applyInPandasWithState(
+                step,
+                outputStructType=packed,
+                stateStructType=StructType(
+                    [
+                        StructField("channels", ArrayType(StringType())),
+                        StructField(
+                            f"{state_name}s", ArrayType(ArrayType(DoubleType()))
+                        ),
+                        StructField("n_buckets", IntegerType()),
+                    ]
+                ),
+                outputMode="append",
+                timeoutConf="NoTimeout",
+            )
+        )
+    return out.select("channel_id", F.inline(F.arrays_zip(*vals)))
 
 
 def streaming_lfilter(
@@ -196,174 +358,82 @@ def streaming_lfilter(
     6th-order filter on a million channels is ~48 MB of state total,
     trivially scalable in the state store.
 
-    Memory bound: the concat-and-sort holds ONE micro-batch of ONE
-    channel in executor memory (not the whole stream) — the chunk
-    iterator's streaming property is traded for ordering correctness.
-    For high-rate channels bound the batch upstream: file sources →
+    Shape: the state op returns ONE packed row per channel
+    (``channel_id``, ``t`` and ``value`` arrays) and a native
+    ``inline(arrays_zip)`` expands it to the public
+    ``(channel_id, t, value)`` rows, so the Python boundary carries one
+    row per channel, not one per sample (see :func:`_channel_state_op`).
+    Inside a group the channels are split with one stable ``lexsort``;
+    every run of equal length at or below the exact-recursion cutover
+    goes through ONE vectorized DF2T recursion
+    (``kernels.iir_batch._lfilter_loop_batch``, bit-identical per row to
+    the 1-D loop) and longer runs through the 1-D ``lfilter``'s FFT
+    path — the numerics stay a function of each channel's own run
+    length, never of its neighbours.
+
+    Memory bound: a task holds ONE micro-batch of ONE state group in
+    memory (not the whole stream) — the chunk iterator's streaming
+    property is traded for ordering correctness.  For high-rate
+    channels bound the batch upstream: file sources →
     ``maxFilesPerTrigger`` / ``maxBytesPerTrigger``; rate/Kafka →
     ``maxOffsetsPerTrigger``; or a processing-time trigger short enough
     that rate × interval × 16 B/row fits comfortably per task.
-    ``max_batch_rows`` turns that contract into an ENFORCED guard: a
-    micro-batch delivering more rows than declared for one channel fails
-    loudly with the tuning guidance instead of creeping toward task OOM
+    ``max_batch_rows`` turns that contract into an ENFORCED per-channel
+    guard, counted chunk by chunk: the chunk that pushes one channel
+    past the bound fails the batch loudly with the tuning guidance
+    before the group is concatenated
     (tests/test_streaming.py::test_oversized_batch_guard).
 
-    ``channel_buckets`` (r16 optimization, guide §4 — amortize the
-    per-group protocol cost, not the arithmetic): ``applyInPandasWithState``
-    pays a fixed per-(key, micro-batch) protocol cost (state row
-    round-trip + one pandas frame per group each side, measured
-    ~0.6-0.9 ms regardless of row count), which dominates when keys are
-    many and per-key batches are small (1500 channels x ~17 rows each).
-    With ``channel_buckets=n`` the state op is keyed by
-    ``pmod(xxhash64(channel_id), n)`` and each group carries a DICT of
-    per-channel delay lines in its state row; inside the group every
-    channel is still sorted and filtered independently, so the output
-    rows and the carried per-channel state are bit-identical to the
-    per-channel keying — only the group count drops from #channels to
-    ``n`` (pinned in tests/test_streaming.py).  Pick n a few times the
-    core count (keys spread over the state partitions, guide §2.5);
-    per-channel keying remains the default.  ``max_batch_rows`` stays a
-    PER-CHANNEL bound, enforced after the in-group split (the
-    pre-concat incremental guard cannot see channel boundaries, so the
-    bucketed form trades that early-abort for the amortization —
-    per-task memory is then one bucket's micro-batch slice, i.e. batch
-    bytes / n).
+    ``channel_buckets=n`` keys the state op by
+    ``pmod(xxhash64(channel_id), n)`` instead of by channel: each group
+    carries a dict of per-channel delay lines, so many small channels
+    share one group's fixed protocol cost (a state row round trip and a
+    pandas frame each way per group and micro-batch).  Output rows and
+    carried per-channel state are bit-identical to per-channel keying
+    (pinned in tests/test_streaming.py).  Pick n a few times the core
+    count (keys spread over the state partitions, guide §2.5);
+    per-channel keying remains the default.  ``n`` is stored in the
+    state, and a restart from a checkpoint written with another ``n``
+    raises a ``ValueError`` naming both.
     """
-    from pandas_sigproc_spark.kernels.iir import lfilter
+    from pandas_sigproc_spark.kernels.iir import (
+        _LOOP_CUTOVER,
+        _normalize_ba,
+        lfilter,
+    )
+    from pandas_sigproc_spark.kernels.iir_batch import _lfilter_loop_batch
 
     b = np.asarray(b, dtype=np.float64)
     a = np.asarray(a, dtype=np.float64)
-    nstate = max(len(a), len(b)) - 1
+    bn, an = _normalize_ba(b, a)
+    nstate = max(len(bn), len(an)) - 1
+    loop_only = nstate + 1 > 16
+    zero = np.zeros(nstate)
 
-    def step(key, pdf_iter, state):
-        if state.exists:
-            (zi_list,) = state.get
-            zi = np.asarray(zi_list, dtype=np.float64)
-        else:
-            zi = np.zeros(nstate)
-        # Concat all Arrow chunks and sort ONCE: chunks arrive in
-        # arbitrary relative order after the shuffle, and threading the
-        # delay line through per-chunk-sorted pieces would filter a
-        # mis-ordered series and corrupt the carried state.
-        chunks = _drain_bounded(pdf_iter, max_batch_rows, "streaming_lfilter")
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                list(order_cols), kind="mergesort"
-            )
-            y, zi = lfilter(b, a, pdf["value"].to_numpy(np.float64), zi=zi)
-            state.update((zi.tolist(),))
-            yield pd.DataFrame(
-                {"channel_id": pdf["channel_id"], "t": pdf["t"], "value": y}
-            )
-        else:  # defensive: never invoked without data under NoTimeout
-            state.update((zi.tolist(),))
-            return
-
-    if not df.isStreaming:
-        # Batch fallback: the SAME sort (order_cols, stable mergesort)
-        # and the same zero-state kernel as the streaming step — the
-        # earlier delegation to filters._apply_filter ignored
-        # order_cols and sorted unstably, so tied-stamp rows could
-        # filter in a different order than the streaming replay,
-        # breaking the module's stream==batch contract exactly where
-        # order_cols exists (a review finding).
-        def batch_kernel(kdf: pd.DataFrame) -> pd.DataFrame:
-            _check_batch_bound(
-                len(kdf), max_batch_rows, "streaming_lfilter[batch]"
-            )
-            kdf = kdf.sort_values(list(order_cols), kind="mergesort")
-            y, _ = lfilter(
-                b, a, kdf["value"].to_numpy(np.float64), zi=np.zeros(nstate)
-            )
-            return pd.DataFrame(
-                {"channel_id": kdf["channel_id"], "t": kdf["t"], "value": y}
-            )
-
-        return df.groupBy("channel_id").applyInPandas(
-            batch_kernel, _LFILTER_OUT_SCHEMA
-        )
-
-    if channel_buckets is not None:
-        if int(channel_buckets) < 1:
-            raise ValueError("need channel_buckets >= 1")
-        bucket_state = StructType(
-            [
-                StructField("channels", ArrayType(StringType())),
-                StructField("zis", ArrayType(ArrayType(DoubleType()))),
-            ]
-        )
-
-        def bucket_step(key, pdf_iter, state):
-            if state.exists:
-                chans, zis = state.get
-                st = {
-                    c: np.asarray(z, dtype=np.float64)
-                    for c, z in zip(chans, zis)
-                }
-            else:
-                st = {}
-            chunks = list(pdf_iter)
-            outs = []
-            if chunks:
-                # ONE stable sort puts channels contiguous AND each
-                # channel in order_cols order — the same mergesort the
-                # per-channel step applies, so each channel's series is
-                # bit-identical to the per-channel keying.
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    ["channel_id", *order_cols], kind="mergesort"
+    def kernel(st, cids, offs, t, x):
+        ys = [None] * len(cids)
+        by_len: dict[int, list[int]] = {}
+        for i, n in enumerate(np.diff(offs).tolist()):
+            if n <= _LOOP_CUTOVER or loop_only:
+                by_len.setdefault(n, []).append(i)
+            else:  # the 1-D kernel's FFT path, chosen by the same rule
+                ys[i], st[cids[i]] = lfilter(
+                    b, a, x[offs[i]: offs[i + 1]],
+                    zi=np.asarray(st.get(cids[i], zero), np.float64),
                 )
-                for cid, g in pdf.groupby("channel_id", sort=False):
-                    _check_batch_bound(
-                        len(g), max_batch_rows, "streaming_lfilter"
-                    )
-                    zi = st.get(cid)
-                    if zi is None:
-                        zi = np.zeros(nstate)
-                    y, zi = lfilter(
-                        b, a, g["value"].to_numpy(np.float64), zi=zi
-                    )
-                    st[cid] = zi
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "channel_id": g["channel_id"],
-                                "t": g["t"],
-                                "value": y,
-                            }
-                        )
-                    )
-            state.update(
-                (
-                    list(st.keys()),
-                    [np.asarray(z).tolist() for z in st.values()],
-                )
-            )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-            else:  # defensive: never invoked without data under NoTimeout
-                return
+        for n, rows in by_len.items():
+            X = np.stack([x[offs[i]: offs[i] + n] for i in rows])
+            Zi = np.array(
+                [st.get(cids[i], zero) for i in rows], np.float64
+            ).reshape(len(rows), nstate)
+            Y, Z = _lfilter_loop_batch(bn, an, X, Zi)
+            for r, i in enumerate(rows):
+                ys[i], st[cids[i]] = Y[r], Z[r]
+        return [t[offs[i]: offs[i + 1]] for i in range(len(cids))], ys
 
-        return (
-            df.withColumn("_bkt", _bucket_key(channel_buckets))
-            .groupBy("_bkt")
-            .applyInPandasWithState(
-                bucket_step,
-                outputStructType=_LFILTER_OUT_SCHEMA,
-                stateStructType=bucket_state,
-                outputMode="append",
-                timeoutConf="NoTimeout",
-            )
-        )
-
-    return (
-        df.groupBy("channel_id")
-        .applyInPandasWithState(
-            step,
-            outputStructType=_LFILTER_OUT_SCHEMA,
-            stateStructType=_LFILTER_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="NoTimeout",
-        )
+    return _channel_state_op(
+        df, kernel, _LFILTER_OUT_SCHEMA, "zi", tuple(order_cols),
+        max_batch_rows, channel_buckets, "streaming_lfilter",
     )
 
 
@@ -484,10 +554,6 @@ _RAINFLOW_OUT_SCHEMA = StructType(
     ]
 )
 
-_RAINFLOW_STATE_SCHEMA = StructType(
-    [StructField("residue", ArrayType(DoubleType()))]
-)
-
 
 def streaming_rainflow(
     df: DataFrame, order_cols: tuple[str, ...] = ("t",),
@@ -516,136 +582,32 @@ def streaming_rainflow(
     rainflow is order-sensitive, so untie-broken equal stamps would make
     counts vary run to run).
 
-    Memory bound: like ``streaming_lfilter``, the concat-and-sort holds
-    one micro-batch of one channel per task — bound the batch upstream
-    (``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` / trigger
-    interval) for high-rate channels; ``max_batch_rows`` enforces the
-    declared bound loudly (see ``_check_batch_bound``).
-
-    ``channel_buckets`` — same bucket-level state option as
-    :func:`streaming_lfilter` (see its docstring): key the state op by
-    ``pmod(xxhash64(channel_id), n)`` and carry a dict of per-channel
-    residues per group, amortizing the per-group protocol cost over
-    many small channels.  Emitted cycles and carried residues are
-    bit-identical to per-channel keying; ``max_batch_rows`` stays a
-    per-channel bound enforced after the in-group split.
+    Shape, memory bound, ``max_batch_rows`` and ``channel_buckets``
+    (including the restart check on the stored bucket count) are those
+    of :func:`streaming_lfilter`: one packed row of ``rng`` / ``cnt``
+    arrays per channel crosses the Python boundary and is expanded
+    natively, and emitted cycles and carried residues are bit-identical
+    under either keying.
     """
     from pandas_sigproc_spark.kernels.rainflow import extract_full_cycles_4pt
 
-    oc = list(order_cols)
-
-    def step(key, pdf_iter, state):
-        if state.exists:
-            (residue,) = state.get
-            residue = list(residue)
-        else:
-            residue = []
-        cid = key[0]
-        # One concat+sort per batch: Arrow chunks arrive in arbitrary
-        # relative order after the groupBy shuffle, so per-chunk sorting
-        # would silently process a mis-ordered series.
-        chunks = _drain_bounded(pdf_iter, max_batch_rows, "streaming_rainflow")
-        pdf = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        if len(pdf):
-            pdf = pdf.sort_values(oc, kind="mergesort")
-            vals = np.concatenate(
-                [np.asarray(residue, np.float64), pdf["value"].to_numpy(np.float64)]
-            )
-            out, residue = extract_full_cycles_4pt(vals)
-        else:
-            out = []
-        state.update((list(residue),))
-        yield pd.DataFrame(
-            {
-                "channel_id": [cid] * len(out),
-                "rng": [r for r, _ in out],
-                "cnt": [c for _, c in out],
-            }
-        )
-
-    if not df.isStreaming:
-        # Batch fallback: full cycles of the whole signal in one shot.
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(oc, kind="mergesort")
-            fulls, _res = extract_full_cycles_4pt(
-                pdf["value"].to_numpy(np.float64)
-            )
-            cid = pdf["channel_id"].iloc[0]
-            return pd.DataFrame(
-                {
-                    "channel_id": [cid] * len(fulls),
-                    "rng": [r for r, _ in fulls],
-                    "cnt": [c for _, c in fulls],
-                }
-            )
-
-        return df.groupBy("channel_id").applyInPandas(
-            kernel, _RAINFLOW_OUT_SCHEMA
-        )
-
-    if channel_buckets is not None:
-        if int(channel_buckets) < 1:
-            raise ValueError("need channel_buckets >= 1")
-        bucket_state = StructType(
-            [
-                StructField("channels", ArrayType(StringType())),
-                StructField("residues", ArrayType(ArrayType(DoubleType()))),
-            ]
-        )
-
-        def bucket_step(key, pdf_iter, state):
-            if state.exists:
-                chans, residues = state.get
-                st = {c: list(r) for c, r in zip(chans, residues)}
-            else:
-                st = {}
-            chunks = list(pdf_iter)
-            cids, rngs, cnts = [], [], []
-            if chunks:
-                # one stable sort: channels contiguous, each channel in
-                # order_cols order — bit-identical per-channel series to
-                # the per-channel keying (see streaming_lfilter).
-                pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                    ["channel_id", *oc], kind="mergesort"
+    def kernel(st, cids, offs, t, x):
+        rngs, cnts = [], []
+        for i, cid in enumerate(cids):
+            fulls, st[cid] = extract_full_cycles_4pt(
+                np.concatenate(
+                    [np.asarray(st.get(cid, ()), np.float64),
+                     x[offs[i]: offs[i + 1]]]
                 )
-                for cid, g in pdf.groupby("channel_id", sort=False):
-                    _check_batch_bound(
-                        len(g), max_batch_rows, "streaming_rainflow"
-                    )
-                    vals = np.concatenate(
-                        [
-                            np.asarray(st.get(cid, []), np.float64),
-                            g["value"].to_numpy(np.float64),
-                        ]
-                    )
-                    out, res = extract_full_cycles_4pt(vals)
-                    st[cid] = [float(x) for x in res]
-                    cids.extend([cid] * len(out))
-                    rngs.extend(r for r, _ in out)
-                    cnts.extend(c for _, c in out)
-            state.update((list(st.keys()), list(st.values())))
-            yield pd.DataFrame(
-                {"channel_id": cids, "rng": rngs, "cnt": cnts}
             )
+            rc = np.array(fulls, np.float64).reshape(-1, 2)
+            rngs.append(rc[:, 0].copy())
+            cnts.append(rc[:, 1].copy())
+        return rngs, cnts
 
-        return (
-            df.withColumn("_bkt", _bucket_key(channel_buckets))
-            .groupBy("_bkt")
-            .applyInPandasWithState(
-                bucket_step,
-                outputStructType=_RAINFLOW_OUT_SCHEMA,
-                stateStructType=bucket_state,
-                outputMode="append",
-                timeoutConf="NoTimeout",
-            )
-        )
-
-    return df.groupBy("channel_id").applyInPandasWithState(
-        step,
-        outputStructType=_RAINFLOW_OUT_SCHEMA,
-        stateStructType=_RAINFLOW_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return _channel_state_op(
+        df, kernel, _RAINFLOW_OUT_SCHEMA, "residue", tuple(order_cols),
+        max_batch_rows, channel_buckets, "streaming_rainflow",
     )
 
 

@@ -488,3 +488,176 @@ def test_streaming_rms_is_tumbling_mov_rms(spark):
     out = streaming_rms(df, 2.0).orderBy("t0").toPandas()
     assert list(out["t0"]) == [0.0, 2.0]
     np.testing.assert_allclose(out["rms"], 1.0)
+
+
+def test_channel_runs_guard_fires_before_next_chunk():
+    # max_batch_rows is counted per channel, chunk by chunk: the chunk
+    # that pushes one channel over the bound raises before the next
+    # chunk is drained (and before anything is concatenated), while a
+    # group whose channels each stay under the bound passes however
+    # many rows it holds in total.
+    from pandas_sigproc_spark.streaming import _channel_runs
+
+    def chunk(cid, n, t0=0.0):
+        t = t0 + np.arange(n, dtype=np.float64)
+        return pd.DataFrame({"channel_id": cid, "t": t, "value": t})
+
+    def chunks():
+        yield chunk("a", 60)
+        yield chunk("b", 90)
+        yield chunk("a", 60, 60.0)  # a: 120 rows > 100
+        raise AssertionError("drained past the chunk that crossed the bound")
+
+    with pytest.raises(ValueError, match="max_batch_rows=100"):
+        _channel_runs(chunks(), ("t",), 100, "op")
+
+    parts = [chunk(c, 90) for c in ("a", "b", "c")]
+    cids, offs, t, value = _channel_runs(iter(parts[::-1]), ("t",), 100, "op")
+    assert cids == ["a", "b", "c"] and offs.tolist() == [0, 90, 180, 270]
+    assert np.array_equal(t, np.tile(np.arange(90.0), 3))
+
+
+def _write_parts(root, parts, first=0):
+    for i, part in enumerate(parts, first):
+        path = os.path.join(root, f"part-{i:03d}.parquet")
+        part.to_parquet(path, index=False)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _ragged_parts(n_files, lens=(2500, 100, 37), seed=11):
+    """n_files slices of channels whose per-file lengths differ; the
+    first is above the exact-recursion cutover (the FFT path)."""
+    rng = np.random.default_rng(seed)
+    parts = []
+    for i in range(n_files):
+        frames = []
+        for j, n in enumerate(lens):
+            t = i * n + np.arange(n, dtype=np.float64)
+            frames.append(
+                pd.DataFrame(
+                    {"channel_id": f"r{j}", "t": t,
+                     "value": rng.standard_normal(n)}
+                )
+            )
+        parts.append(pd.concat(frames, ignore_index=True))
+    return parts
+
+
+def _chained_lfilter(b, a, parts, cid):
+    """The 1-D kernel over each file's slice in turn, carrying zi."""
+    zi = np.zeros(max(len(a), len(b)) - 1)
+    ys = []
+    for part in parts:
+        x = part[part.channel_id == cid].sort_values("t")["value"].to_numpy()
+        y, zi = lfilter(b, a, x, zi=zi)
+        ys.append(y)
+    return np.concatenate(ys)
+
+
+def test_bucketed_lfilter_ragged_runs_and_fft_path(spark, tmp_path):
+    # One bucket holds three channels of unequal length in every
+    # micro-batch, one of them above the 2,048-sample cutover.  Each
+    # channel's output must be bit-identical to the 1-D kernel chained
+    # over the same batches — which for the short channels IS one-shot
+    # lfilter over the whole series — and the public schema survives
+    # the packed-row round trip.
+    from pandas_sigproc_spark.streaming import _LFILTER_OUT_SCHEMA
+
+    root = str(tmp_path / "src")
+    os.makedirs(root)
+    parts = _ragged_parts(2)
+    _write_parts(root, parts)
+    b, a = butter(2, 0.2, "lowpass")
+    out_df = streaming_lfilter(_read_stream(spark, root), b, a, channel_buckets=1)
+    assert out_df.schema == _LFILTER_OUT_SCHEMA
+    out, n_batches = _run_stream(spark, out_df, "t_lfilt_ragged", "append")
+    assert n_batches >= 2
+    got = out.toPandas()
+    full = pd.concat(parts, ignore_index=True)
+    for cid in ("r0", "r1", "r2"):
+        g = got[got.channel_id == cid].sort_values("t")
+        want = _chained_lfilter(b, a, parts, cid)
+        assert np.array_equal(g["value"].to_numpy(), want), cid
+        assert np.array_equal(
+            g["t"].to_numpy(), np.sort(full[full.channel_id == cid]["t"])
+        ), cid
+        if cid != "r0":
+            x = full[full.channel_id == cid].sort_values("t")["value"]
+            assert np.array_equal(want, lfilter(b, a, x.to_numpy())), cid
+
+
+def _start_to_sink(df, root, name):
+    return (
+        df.writeStream.format("parquet")
+        .option("path", os.path.join(root, "sink", name))
+        .option("checkpointLocation", os.path.join(root, "ck", name))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def test_stateful_ops_restart_from_checkpoint(spark, tmp_path):
+    # Both operators stop after batch 2 and restart from their
+    # checkpoints for batches 3-4: the delay lines and residues carried
+    # through the state store must make the whole output bit-identical
+    # to one-shot filtering / counting of each channel.
+    from pandas_sigproc_spark.kernels.rainflow import extract_full_cycles_4pt
+    from pandas_sigproc_spark.streaming import streaming_rainflow
+
+    root = str(tmp_path)
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    parts = _ragged_parts(4, lens=(120, 80, 80, 33))
+    b, a = butter(2, 0.2, "lowpass")
+
+    def run():
+        for name, op in (
+            ("lfilter", lambda s: streaming_lfilter(s, b, a, channel_buckets=2)),
+            ("rainflow", lambda s: streaming_rainflow(s, channel_buckets=2)),
+        ):
+            q = _start_to_sink(op(_read_stream(spark, src)), root, name)
+            q.awaitTermination(120)
+            assert q.exception() is None
+
+    _write_parts(src, parts[:2])
+    run()
+    _write_parts(src, parts[2:], first=2)
+    run()
+    filt = spark.read.parquet(os.path.join(root, "sink", "lfilter")).toPandas()
+    cyc = spark.read.parquet(os.path.join(root, "sink", "rainflow")).toPandas()
+    full = pd.concat(parts, ignore_index=True)
+    for cid, g in full.groupby("channel_id"):
+        x = g.sort_values("t")["value"].to_numpy()
+        got = filt[filt.channel_id == cid].sort_values("t")["value"].to_numpy()
+        assert np.array_equal(got, lfilter(b, a, x)), cid
+        fulls, _ = extract_full_cycles_4pt(x)
+        assert sorted(cyc[cyc.channel_id == cid]["rng"]) == sorted(
+            r for r, _ in fulls
+        ), cid
+
+
+def test_restart_with_other_channel_buckets_is_refused(spark, tmp_path):
+    # The bucket count is part of the state key: a checkpoint written at
+    # channel_buckets=2 restarted at 3 must fail naming both counts
+    # instead of silently re-zeroing the remapped channels' state.
+    root = str(tmp_path)
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    parts = _ragged_parts(3, lens=(50,) * 6)
+    b, a = butter(2, 0.2, "lowpass")
+    _write_parts(src, parts[:2])
+    q = _start_to_sink(
+        streaming_lfilter(_read_stream(spark, src), b, a, channel_buckets=2),
+        root, "lf",
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None and len(q.recentProgress) >= 2
+    _write_parts(src, parts[2:], first=2)
+    q = _start_to_sink(
+        streaming_lfilter(_read_stream(spark, src), b, a, channel_buckets=3),
+        root, "lf",
+    )
+    with pytest.raises(Exception) as ei:
+        q.awaitTermination(120)
+    msg = str(ei.value)
+    assert "channel_buckets=2" in msg and "channel_buckets=3" in msg, msg

@@ -7,7 +7,7 @@ from pandas_sigproc_spark.session import get_spark
 tag = sys.argv[1]
 names = sys.argv[2:]
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark("dump_plans", cpus=32)
+spark = get_spark("dump_plans")
 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 qs = E.queries()
 out_dir = os.path.join(

@@ -19,7 +19,7 @@ from pandas_sigproc_spark.session import get_spark  # noqa: E402
 
 tag = sys.argv[1]
 names = sys.argv[2:] or ["rainflow", "lfilter", "corpus"]
-spark = get_spark("dump_stream_plans", cpus=32)
+spark = get_spark("dump_stream_plans")
 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 SCHEMAS = {

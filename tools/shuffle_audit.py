@@ -6,7 +6,7 @@ query runs through the noop sink inside its own job group with the
 Spark event log enabled, then the log's TaskEnd metrics are summed per
 group — total shuffle bytes written, shuffle bytes read, and input
 bytes.  This is the number a 1000-executor network actually prices
-(local[32] hides exchange width in memory bandwidth), and it is how
+(local mode hides exchange width in memory bandwidth), and it is how
 the r10 dedup_embed narrow-join claim was verified (23.46 MB -> 6.51
 MB at sf0.1).
 
@@ -42,9 +42,13 @@ def main():
     el_dir = tempfile.mkdtemp(prefix="shuffle_audit_el_")
     from pyspark.sql import SparkSession
 
+    from pandas_sigproc_spark.session import host_cpus
+
+    cpus = host_cpus()
+
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", f"file://{el_dir}")
         .config("spark.eventLog.compress", "false")

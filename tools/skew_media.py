@@ -228,7 +228,7 @@ def probe_audio_hot_hash(spark):
 
 
 def main():
-    spark = get_spark("skew_media", cpus=32)
+    spark = get_spark("skew_media")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
     rows += probe_incremental_probe_guard(spark)

@@ -31,10 +31,14 @@ def main():
     import __spark_entry__ as entry_mod
     from pyspark.sql import SparkSession
 
+    from pandas_sigproc_spark.session import host_cpus
+
+    cpus = host_cpus()
+
     el_dir = tempfile.mkdtemp(prefix="stage_profile_el_")
     spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
