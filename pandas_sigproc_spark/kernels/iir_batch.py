@@ -28,8 +28,16 @@ from pandas_sigproc_spark.kernels.iir import (
     _ar_impulse_response,
     _lfilter_loop,
     _normalize_ba,
+    lfilter,
     lfilter_zi,
 )
+
+# Below this many live rows the vectorized recursion's per-step array
+# overhead costs more than the scalar 1-D loop it replaces (100-200
+# samples through 2nd-8th order filters cross over at 8 rows on a 4-core
+# x86 host); the two are bit-identical per row, so only speed depends on
+# the choice.
+_BATCH_MIN_ROWS = 8
 
 
 def _lfilter_loop_batch(b, a, X: np.ndarray, Zi: np.ndarray | None = None):
@@ -117,36 +125,86 @@ def _pad_stack(arrays: list[np.ndarray]) -> np.ndarray:
     return X
 
 
-def lfilter_batch_ragged(b, a, arrays: list[np.ndarray]) -> list[np.ndarray]:
+def _loop_ragged(b, a, arrays: list[np.ndarray], Zi: np.ndarray):
+    """Exact DF2T recursion over UNEQUAL-length rows from per-row initial
+    states ``Zi``; returns ``(outputs, final_states)``.
+
+    The rows are right-zero-padded into one matrix and the recursion runs
+    in segments between consecutive distinct lengths, each over only the
+    rows still live: every row's final state is taken at its own length,
+    and no padding is filtered.  A segment with fewer than
+    ``_BATCH_MIN_ROWS`` live rows runs the scalar 1-D loop per row.
+    Rows never interact, so each row is bit-identical to
+    ``iir._lfilter_loop`` on that row alone.
+    """
+    lens = np.array([len(x) for x in arrays])
+    X = _pad_stack(arrays)
+    Y = np.empty_like(X)
+    Z = np.array(Zi, dtype=np.float64)
+    start = 0
+    for stop in np.unique(lens).tolist():
+        if stop == start:
+            continue
+        rows = np.flatnonzero(lens >= stop)
+        if len(rows) >= _BATCH_MIN_ROWS:
+            Y[rows, start:stop], Z[rows] = _lfilter_loop_batch(
+                b, a, X[rows, start:stop], Z[rows]
+            )
+        else:
+            for r in rows:
+                Y[r, start:stop], Z[r] = _lfilter_loop(
+                    b, a, X[r, start:stop], Z[r]
+                )
+        start = stop
+    return [Y[r, :n].copy() for r, n in enumerate(lens.tolist())], list(Z)
+
+
+def lfilter_batch_ragged(b, a, arrays: list[np.ndarray], zis=None):
     """Causal filter for UNEQUAL-length channels in one call.
 
     Short channels (the 1-D loop-path rule: len <= _LOOP_CUTOVER, or
-    order > 16) are right-zero-padded into ONE vectorized recursion —
-    rows never interact in the elementwise DF2T step, so each row's
-    valid prefix is bit-identical to filtering it alone, regardless of
-    which channels share the batch.  Long channels group by exact length
-    through the FFT batch path (nfft stays a function of the channel's
-    own length, never of its neighbours).  This is what lets the
-    bucketed operators group by samplerate alone instead of
-    (length, samplerate) — one batched kernel per bucket instead of one
-    per distinct length.
+    order > 16) share ONE exact recursion (:func:`_loop_ragged`) — rows
+    never interact in the elementwise DF2T step, so each row is
+    bit-identical to filtering it alone, regardless of which channels
+    share the batch.  Long channels group by exact length through the
+    FFT batch path (nfft stays a function of the channel's own length,
+    never of its neighbours).  This is what lets the bucketed operators
+    group by samplerate alone instead of (length, samplerate) — one
+    batched kernel per bucket instead of one per distinct length.
+
+    With ``zis`` (one initial delay line per channel) the call returns
+    ``(outputs, final_states)`` and every row matches the 1-D
+    ``iir.lfilter(b, a, x, zi=zi)`` bit for bit: short rows start the
+    shared recursion from their own state, and long rows go through that
+    1-D kernel one by one (the batched FFT path carries no state).
     """
     bn, an = _normalize_ba(b, a)
     ntaps = max(len(bn), len(an))
     out: list = [None] * len(arrays)
+    zf: list = [None] * len(arrays)
     shorts = [
         i for i, x in enumerate(arrays)
         if len(x) <= _LOOP_CUTOVER or ntaps > 16
     ]
     if shorts:
-        X = _pad_stack([np.asarray(arrays[i], np.float64) for i in shorts])
-        Y = _lfilter_loop_batch(bn, an, X)
-        for r, i in enumerate(shorts):
-            out[i] = Y[r, : len(arrays[i])].copy()
+        Zi = (
+            np.zeros((len(shorts), max(ntaps - 1, 1)))
+            if zis is None
+            else np.stack([np.asarray(zis[i], np.float64) for i in shorts])
+        )
+        ys, zs = _loop_ragged(
+            bn, an, [np.asarray(arrays[i], np.float64) for i in shorts], Zi
+        )
+        for i, y, z in zip(shorts, ys, zs):
+            out[i], zf[i] = y, z
+    longs = [i for i in range(len(arrays)) if out[i] is None]
+    if zis is not None:
+        for i in longs:
+            out[i], zf[i] = lfilter(b, a, arrays[i], zi=zis[i])
+        return out, zf
     by_len: dict[int, list[int]] = {}
-    for i, x in enumerate(arrays):
-        if out[i] is None:
-            by_len.setdefault(len(x), []).append(i)
+    for i in longs:
+        by_len.setdefault(len(arrays[i]), []).append(i)
     for _n, idxs in by_len.items():
         Y = lfilter_batch(b, a, np.stack([arrays[i] for i in idxs]))
         for r, i in enumerate(idxs):

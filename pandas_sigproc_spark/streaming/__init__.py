@@ -363,11 +363,11 @@ def streaming_lfilter(
     ``inline(arrays_zip)`` expands it to the public
     ``(channel_id, t, value)`` rows, so the Python boundary carries one
     row per channel, not one per sample (see :func:`_channel_state_op`).
-    Inside a group the channels are split with one stable ``lexsort``;
-    every run of equal length at or below the exact-recursion cutover
-    goes through ONE vectorized DF2T recursion
-    (``kernels.iir_batch._lfilter_loop_batch``, bit-identical per row to
-    the 1-D loop) and longer runs through the 1-D ``lfilter``'s FFT
+    Inside a group the channels are split with one stable ``lexsort``
+    and filtered by ONE ``kernels.iir_batch.lfilter_batch_ragged`` call
+    seeded with each channel's delay line: runs at or below the
+    exact-recursion cutover share one DF2T recursion (bit-identical per
+    row to the 1-D loop), longer runs take the 1-D ``lfilter``'s FFT
     path — the numerics stay a function of each channel's own run
     length, never of its neighbours.
 
@@ -396,40 +396,21 @@ def streaming_lfilter(
     state, and a restart from a checkpoint written with another ``n``
     raises a ``ValueError`` naming both.
     """
-    from pandas_sigproc_spark.kernels.iir import (
-        _LOOP_CUTOVER,
-        _normalize_ba,
-        lfilter,
-    )
-    from pandas_sigproc_spark.kernels.iir_batch import _lfilter_loop_batch
+    from pandas_sigproc_spark.kernels.iir import _normalize_ba
+    from pandas_sigproc_spark.kernels.iir_batch import lfilter_batch_ragged
 
     b = np.asarray(b, dtype=np.float64)
     a = np.asarray(a, dtype=np.float64)
     bn, an = _normalize_ba(b, a)
-    nstate = max(len(bn), len(an)) - 1
-    loop_only = nstate + 1 > 16
-    zero = np.zeros(nstate)
+    zero = np.zeros(max(len(bn), len(an)) - 1)
 
     def kernel(st, cids, offs, t, x):
-        ys = [None] * len(cids)
-        by_len: dict[int, list[int]] = {}
-        for i, n in enumerate(np.diff(offs).tolist()):
-            if n <= _LOOP_CUTOVER or loop_only:
-                by_len.setdefault(n, []).append(i)
-            else:  # the 1-D kernel's FFT path, chosen by the same rule
-                ys[i], st[cids[i]] = lfilter(
-                    b, a, x[offs[i]: offs[i + 1]],
-                    zi=np.asarray(st.get(cids[i], zero), np.float64),
-                )
-        for n, rows in by_len.items():
-            X = np.stack([x[offs[i]: offs[i] + n] for i in rows])
-            Zi = np.array(
-                [st.get(cids[i], zero) for i in rows], np.float64
-            ).reshape(len(rows), nstate)
-            Y, Z = _lfilter_loop_batch(bn, an, X, Zi)
-            for r, i in enumerate(rows):
-                ys[i], st[cids[i]] = Y[r], Z[r]
-        return [t[offs[i]: offs[i + 1]] for i in range(len(cids))], ys
+        spans = [slice(offs[i], offs[i + 1]) for i in range(len(cids))]
+        ys, zfs = lfilter_batch_ragged(
+            b, a, [x[s] for s in spans], [st.get(c, zero) for c in cids]
+        )
+        st.update(zip(cids, zfs))
+        return [t[s] for s in spans], ys
 
     return _channel_state_op(
         df, kernel, _LFILTER_OUT_SCHEMA, "zi", tuple(order_cols),

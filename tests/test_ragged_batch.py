@@ -50,6 +50,29 @@ def test_ragged_lfilter_bit_equals_solo_short(lengths, seed):
         assert (got == lfilter(b, a, x)).all()
 
 
+@settings(max_examples=25, deadline=None)
+@given(
+    lengths=st.lists(
+        st.sampled_from([0, 1, 7, 100, 100, 100, 2048, 2049, 3000]),
+        min_size=1, max_size=20,
+    ),
+    seed=st.integers(min_value=0, max_value=10_000),
+)
+def test_ragged_lfilter_with_states_bit_equals_solo(lengths, seed):
+    # Per-row initial states: every row's output AND final state equal
+    # the 1-D kernel's bits, on both sides of the cutover and of the
+    # scalar/vectorized row-count switch (1 to 20 rows, ragged lengths,
+    # so segments shrink as rows end).
+    b, a = a_weighting(48000.0)
+    arrays = _arrays(lengths, seed)
+    rng = np.random.default_rng(seed + 1)
+    zis = [rng.standard_normal(len(a) - 1) for _ in arrays]
+    ys, zfs = lfilter_batch_ragged(b, a, arrays, zis)
+    for x, zi, y, zf in zip(arrays, zis, ys, zfs):
+        want_y, want_zf = lfilter(b, a, x, zi=zi)
+        assert (y == want_y).all() and (zf == want_zf).all()
+
+
 def test_ragged_mixes_loop_and_fft_paths():
     # Short rows take the bit-exact loop; long rows (> _LOOP_CUTOVER) take
     # the FFT path grouped by exact length — same rule as the 1-D kernel.

@@ -431,6 +431,25 @@ def test_oversized_batch_guard(spark, stream_dir):
     assert ok.count() > 0
 
 
+def test_batch_fallbacks_enforce_max_batch_rows(spark, stream_dir):
+    # Both operators' batch fallbacks run the streaming state-op body, so
+    # a declared per-channel bound holds there too (each channel has 400
+    # rows): streaming_rainflow's batch form ignored it before the two
+    # operators shared one body.
+    from pandas_sigproc_spark.streaming import streaming_rainflow
+
+    _, full = stream_dir
+    b, a = butter(2, 0.2, "lowpass")
+    batch = spark.createDataFrame(full, SCHEMA)
+    for out in (
+        streaming_lfilter(batch, b, a, max_batch_rows=300),
+        streaming_rainflow(batch, max_batch_rows=300),
+    ):
+        with pytest.raises(Exception, match="max_batch_rows=300"):
+            out.collect()
+    assert streaming_rainflow(batch, max_batch_rows=400).count() > 0
+
+
 def test_lfilter_batch_fallback_honors_order_cols(spark):
     # Tied timestamps with a seq tiebreak: the batch fallback must sort
     # exactly like the streaming step (order_cols, stable mergesort) —
