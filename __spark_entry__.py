@@ -1934,12 +1934,13 @@ FROM tok
 
 def q_lang_id_model(spark, sf_dir):
     # Model-based language ID (operators/langid.py): a fastText-style
-    # hashed character-trigram linear classifier — per-gram md5 bucket,
-    # broadcast weight-table join, BIGINT milli-weight sums (no float
-    # associativity before the final division), argmax with fixed
-    # priority, 'und' when no gram matches — plus disagreement stats
-    # vs the stopword heuristic (pred_heur, agree).  One shuffle: the
-    # partially-aggregated groupBy(doc_id).
+    # hashed character-trigram linear classifier — per-gram md5 bucket
+    # weights, BIGINT milli-weight sums (no float associativity before
+    # the final division), argmax with fixed priority, 'und' when no
+    # gram matches — plus disagreement stats vs the stopword heuristic
+    # (pred_heur, agree).  One Arrow pass per batch, zero shuffles; the
+    # oracle replays the relational explode/join/groupBy form.  NULL
+    # text counts as empty on both sides.
     from pandas_sigproc_spark.operators.langid import lang_id_model
 
     d = _docs_par(spark, sf_dir)
@@ -1979,10 +1980,10 @@ WITH w(bucket, w_en, w_de, w_es, w_fr) AS (
 ),
 tok AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CONCAT(' ', TRIM(REGEXP_REPLACE(LOWER(text), '[^a-z]+', ' ', 'g')),
+         CONCAT(' ', TRIM(REGEXP_REPLACE(LOWER(t), '[^a-z]+', ' ', 'g')),
                 ' ') AS s,
-         STRING_SPLIT(text, ' ') AS ws
-  FROM documents
+         STRING_SPLIT(t, ' ') AS ws
+  FROM (SELECT doc_id, COALESCE(text, '') AS t FROM documents)
 ),
 heur AS (
   SELECT doc_id, s, {_lang_pred_sql()} AS pred_heur FROM tok

@@ -1,22 +1,29 @@
-"""Batched IIR execution: filter MANY equal-length channels at once.
+"""Batched IIR execution: filter MANY channels in one call.
 
 ``lfilter``/``filtfilt`` in :mod:`.iir` are 1-D.  At scale the dominant
 cost is not the math but per-channel overhead (Arrow group dispatch, FFT
 setup, Python call overhead) — 1500 channels of 700 samples each cost far
-more as 1500 kernel calls than as one (1500, 700) matrix op.  This module
-vectorizes the same algorithms across a leading batch axis:
+more as 1500 kernel calls than as one (1500, 700) matrix op.  The entry
+points take a list of UNEQUAL-length channels sharing one filter:
+
+- ``lfilter_batch_ragged(b, a, arrays, zis=None)`` — causal filter,
+  optionally from per-channel initial states.
+- ``filtfilt_batch_ragged(b, a, arrays)`` — SciPy-default zero-phase.
+
+Each channel takes the 1-D kernel's path rule (len <= _LOOP_CUTOVER or
+order > 16 -> exact recursion).  Short channels share one exact DF2T
+recursion (:func:`_loop_ragged`), bit-identical per row to the 1-D loop;
+long channels group by exact length through the FFT helpers:
 
 - ``lfilter_batch(b, a, X)`` — zero-state response for ``X[batch, time]``:
   FIR part via one batched ``rfft``; AR part via one batched convolution
-  with the shared truncated impulse response (same coefficients for the
-  whole batch — the equal-samplerate case, which is exactly when batching
-  applies).
-- ``filtfilt_batch(b, a, X)`` — SciPy-default zero-phase: batched odd
-  padding, ``zi * x0`` initial state handled by superposition with a
-  zero-input response computed once per unit state and scaled per row
-  (linearity), forward and backward.
+  with the shared truncated impulse response.
+- ``filtfilt_batch(b, a, X)`` — batched odd padding, ``zi * x0`` initial
+  state handled by superposition with a zero-input response computed
+  once per unit state and scaled per row (linearity), forward and
+  backward.
 
-Numerical parity with the 1-D kernels is asserted in tests (rtol 1e-9).
+Long-row parity with the 1-D kernels is asserted in tests (rtol 1e-9).
 """
 
 from __future__ import annotations
@@ -40,8 +47,9 @@ from pandas_sigproc_spark.kernels.iir import (
 _BATCH_MIN_ROWS = 8
 
 
-def _lfilter_loop_batch(b, a, X: np.ndarray, Zi: np.ndarray | None = None):
-    """DF2T recursion vectorized across the batch axis.
+def _lfilter_loop_batch(b, a, X: np.ndarray, Zi: np.ndarray):
+    """DF2T recursion vectorized across the batch axis, from per-row
+    initial states ``Zi``; returns ``(outputs, final_states)``.
 
     The same per-sample difference equation as ``iir._lfilter_loop``, with
     every scalar op replaced by the elementwise op over the batch column —
@@ -52,21 +60,17 @@ def _lfilter_loop_batch(b, a, X: np.ndarray, Zi: np.ndarray | None = None):
     production-leg DuckDB oracles (oracle_prod.py) replay bucketed filter
     queries bit-for-bit.
     """
-    nb, nlen = X.shape
+    nlen = X.shape[1]
     n = max(len(a), len(b))
     bp = np.zeros(n)
     ap = np.zeros(n)
     bp[: len(b)] = b
     ap[: len(a)] = a
-    Z = (
-        np.zeros((nb, max(n - 1, 1)))
-        if Zi is None
-        else np.asarray(Zi, dtype=np.float64).copy()
-    )
+    Z = np.asarray(Zi, dtype=np.float64).copy()
     Y = np.empty_like(X)
     if n == 1:
         Y[:] = bp[0] * X
-        return (Y, Z) if Zi is not None else Y
+        return Y, Z
     for i in range(nlen):
         x = X[:, i]
         y = bp[0] * x + Z[:, 0]
@@ -74,7 +78,7 @@ def _lfilter_loop_batch(b, a, X: np.ndarray, Zi: np.ndarray | None = None):
             Z[:, j] = bp[j + 1] * x + Z[:, j + 1] - ap[j + 1] * y
         Z[:, n - 2] = bp[n - 1] * x - ap[n - 1] * y
         Y[:, i] = y
-    return (Y, Z) if Zi is not None else Y
+    return Y, Z
 
 
 def _fft_convolve_batch(X: np.ndarray, h: np.ndarray) -> np.ndarray:
@@ -89,19 +93,12 @@ def _fft_convolve_batch(X: np.ndarray, h: np.ndarray) -> np.ndarray:
 
 
 def lfilter_batch(b, a, X: np.ndarray) -> np.ndarray:
-    """Zero-state IIR/FIR response along the last axis of ``X[batch, time]``."""
+    """Zero-state FFT-path response along the last axis of ``X[batch,
+    time]`` — the long-row helper of the ragged entry points (rows
+    longer than ``_LOOP_CUTOVER`` through filters of order <= 16; every
+    other row takes the exact recursion in :func:`_loop_ragged`)."""
     b, a = _normalize_ba(b, a)
     X = np.asarray(X, dtype=np.float64)
-    if X.ndim == 1:
-        X = X[None, :]
-    # Mirror the 1-D kernel's path-selection rule EXACTLY (iir.lfilter:
-    # len <= _LOOP_CUTOVER or order > 16 -> exact recursion): which
-    # numerics serve a request must be a pure function of the request,
-    # never of how channels happened to be grouped — so a channel filtered
-    # inside a bucket yields the same bits as the same channel alone.
-    n_taps = max(len(a), len(b))
-    if X.shape[-1] <= _LOOP_CUTOVER or n_taps > 16:
-        return _lfilter_loop_batch(b, a, X)
     if len(a) == 1:
         return _fft_convolve_batch(X, b)
     h = _ar_impulse_response(a, max_len=X.shape[-1])
@@ -215,8 +212,8 @@ def lfilter_batch_ragged(b, a, arrays: list[np.ndarray], zis=None):
 def filtfilt_batch_ragged(b, a, arrays: list[np.ndarray]) -> list[np.ndarray]:
     """Zero-phase filtering for UNEQUAL-length channels in one call —
     same path rules and bit-exactness contract as lfilter_batch_ragged
-    (the short path replays iir.filtfilt's two seeded loop passes row
-    by row on a padded matrix)."""
+    (the short path replays iir.filtfilt's two seeded loop passes as two
+    :func:`_loop_ragged` passes)."""
     bn, an = _normalize_ba(b, a)
     ntaps = max(len(bn), len(an))
     padlen = 3 * ntaps
@@ -238,17 +235,11 @@ def filtfilt_batch_ragged(b, a, arrays: list[np.ndarray]) -> list[np.ndarray]:
             front = 2.0 * x[0] - x[padlen:0:-1]
             back = 2.0 * x[-1] - x[-2: -padlen - 2: -1]
             exts.append(np.concatenate([front, x, back]))
-        X = _pad_stack(exts)
-        Y, _ = _lfilter_loop_batch(bn, an, X, Zi=zi[None, :] * X[:, :1])
-        R = np.zeros_like(Y)
-        for r, e in enumerate(exts):
-            m = len(e)
-            R[r, :m] = Y[r, :m][::-1]
-        Y2, _ = _lfilter_loop_batch(bn, an, R, Zi=zi[None, :] * R[:, :1])
-        for r, i in enumerate(shorts):
-            m = len(exts[r])
-            yr = Y2[r, :m][::-1]
-            out[i] = yr[padlen: m - padlen].copy()
+        ys, _ = _loop_ragged(bn, an, exts, np.stack([zi * e[0] for e in exts]))
+        rs = [y[::-1] for y in ys]
+        ys, _ = _loop_ragged(bn, an, rs, np.stack([zi * r[0] for r in rs]))
+        for i, y in zip(shorts, ys):
+            out[i] = y[::-1][padlen:-padlen].copy()
     by_len: dict[int, list[int]] = {}
     for i, x in enumerate(arrays):
         if out[i] is None:
@@ -267,7 +258,8 @@ def _unit_zir(b, a, zi_unit: np.ndarray, length: int) -> np.ndarray:
 
 
 def filtfilt_batch(b, a, X: np.ndarray) -> np.ndarray:
-    """Zero-phase forward-backward filtering of every row of ``X``.
+    """Zero-phase forward-backward filtering of every row of ``X`` — the
+    long-row FFT helper of :func:`filtfilt_batch_ragged`.
 
     Matches ``kernels.iir.filtfilt`` row-for-row: odd extension of
     ``3 * max(len(a), len(b))`` samples, ``lfilter_zi``-scaled initial
@@ -278,32 +270,14 @@ def filtfilt_batch(b, a, X: np.ndarray) -> np.ndarray:
     """
     b, a = _normalize_ba(b, a)
     X = np.asarray(X, dtype=np.float64)
-    squeeze = X.ndim == 1
-    if squeeze:
-        X = X[None, :]
-    nb, n = X.shape
     ntaps = max(len(a), len(b))
     padlen = 3 * ntaps
-    if n <= padlen:
-        raise ValueError(
-            f"input length ({n}) must exceed padlen ({padlen}) for filtfilt"
-        )
-
     front = 2.0 * X[:, :1] - X[:, padlen:0:-1]
     back = 2.0 * X[:, -1:] - X[:, -2 : -padlen - 2 : -1]
     ext = np.concatenate([front, X, back], axis=1)
     next_ = ext.shape[1]
 
     zi = lfilter_zi(b, a)
-    if next_ <= _LOOP_CUTOVER or ntaps > 16:
-        # Exact-recursion path, mirroring iir.filtfilt's two lfilter loop
-        # passes bit-for-bit per row (zi seeded directly, no
-        # superposition) — see _lfilter_loop_batch.
-        Y, _ = _lfilter_loop_batch(b, a, ext, Zi=zi[None, :] * ext[:, :1])
-        Yr = np.ascontiguousarray(Y[:, ::-1])
-        Y, _ = _lfilter_loop_batch(b, a, Yr, Zi=zi[None, :] * Yr[:, :1])
-        out = Y[:, ::-1][:, padlen:-padlen]
-        return out[0] if squeeze else out
     if len(a) > 1:
         h = _ar_impulse_response(a, max_len=next_)
         # Degenerate designs (h is None) have no finite decay length;
@@ -321,5 +295,4 @@ def filtfilt_batch(b, a, X: np.ndarray) -> np.ndarray:
 
     Y = one_pass(ext)
     Y = one_pass(Y[:, ::-1])[:, ::-1]
-    out = Y[:, padlen:-padlen]
-    return out[0] if squeeze else out
+    return Y[:, padlen:-padlen]

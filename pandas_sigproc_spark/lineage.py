@@ -142,7 +142,3 @@ def after_rss(cat: DataFrame, channel_ids=None, out_channel: str = "rss") -> Dat
     )
     return cat.unionByName(row)
 
-
-def after_timeshift(cat: DataFrame) -> DataFrame:
-    """Name/unit unchanged (extension.py:371-392 keeps both)."""
-    return cat

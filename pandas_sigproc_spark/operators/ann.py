@@ -926,16 +926,6 @@ def pq_codes_expr(
     return F.array(*[_code(j) for j in range(m)])
 
 
-def pq_lut_expr(u: Column, cbv: Column, *, m: int, sub: int) -> Column:
-    """The query-side ADC lookup table: ``lut[j][c]`` = inner product of
-    the query's j-th normalized subvector with codebook entry ``c`` —
-    m x ksub doubles per QUERY row (never per corpus row)."""
-    def _row(j: int) -> Column:
-        return F.transform(cbv, lambda cv: _pq_ip(u, cv, j * sub, sub))
-
-    return F.array(*[_row(j) for j in range(m)])
-
-
 def _pq_codebook(
     vecs: DataFrame,
     codebook_pred: Column,
@@ -1061,22 +1051,6 @@ def _pq_code_table(
         _one_batch(kern),
         schema="vec_id long, codes array<int>, list_id long",
     )
-
-
-def _checked_dim_u(u_expr: Column, dim: int) -> Column:
-    """Normalized vector with a loud per-row dimensionality assert: a
-    corpus vector longer than ``dim`` would otherwise be SILENTLY
-    truncated by the subspace slices (recall collapse with no error),
-    and a shorter one zip_with-null-pads into the -1 sentinel path (a
-    review finding)."""
-    return F.when(
-        F.size("v") != dim,
-        F.expr(
-            f"assert_true(false, concat('ivf-pq: vector length ',"
-            f" cast(size(v) as string), ' != dim={dim} — pass the"
-            f" corpus dimensionality via dim='))"
-        ).cast("array<double>"),
-    ).otherwise(u_expr)
 
 
 def pq_code_table(

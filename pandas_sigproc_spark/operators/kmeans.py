@@ -30,41 +30,33 @@ from pyspark.sql import DataFrame, functions as F
 
 from pandas_sigproc_spark.operators.ann import _dot, _norm
 
-# Default assignment implementation.  "expr" = the original map-side
-# array_min(transform(...)) fold; "kernel" = the vectorized mapInPandas
-# argmin over driver-collected centroids (_assign_kernel, bit-identical
-# — tests/test_kmeans_kernel.py).  r15 A/B (interleaved min-of-4, 1x /
-# 8x / 64x embeddings, both exact modes): at the gate regime (k=8,
-# dim=64) the kernel LOSES ~0.2-0.5 s per leg at every scale tried
-# (e.g. 64x production 4.08 vs 3.65 s) — the per-row fold is only
-# k*dim=512 interpreted steps while the kernel pays two driver collect
-# jobs plus Arrow encode stages, and the per-iteration wall is
-# dominated by the centroid-update explode, not the assignment.  So
-# the default stays "expr" (guide §4.1: measure, don't assume);
-# "kernel" is the measured-right choice only when k*dim grows 1-2
-# orders (many-cluster curation), where the interpreted fold scales
-# linearly in k and the kernel's argmin stays vectorized.
-_KMEANS_IMPL = "expr"
-
-# Production-mode (exact_sums=False) centroid-UPDATE implementation.
-# "kernel" = per-batch partial sums in one mapInPandas (each Arrow batch
-# emits k rows of (cluster, n, dim-long partial-sum array); the explode
-# then runs over k*batches rows instead of N*dim — guide §2.3 "aggregate
-# before you shuffle").  "expr" = the original posexplode(N*dim rows) +
-# partial agg.  The exact-mode fence: exact_sums=True ALWAYS uses the
-# expression path — its ordered per-(cluster, dim) fold is the
-# bit-reproducibility contract, and a batch-local NumPy sum would change
-# the summation order.  Production mode's partial-agg SUM never pinned
-# an order (its result already depends on Spark's partitioning), so the
-# kernel is inside the documented semantics class; on float32-sourced
+# Assignment is the map-side array_min(transform(...)) fold over a
+# one-row broadcast of the centroids.  r15 A/B against a vectorized
+# mapInPandas argmin over driver-collected centroids (interleaved
+# min-of-4, 1x / 8x / 64x embeddings, both exact modes): at the gate
+# regime (k=8, dim=64) the kernel LOST ~0.2-0.5 s per leg at every scale
+# tried (e.g. 64x production 4.08 vs 3.65 s) — the per-row fold is only
+# k*dim=512 interpreted steps while the kernel paid two driver collect
+# jobs plus Arrow encode stages, and the per-iteration wall is dominated
+# by the centroid update, not the assignment.  No caller runs the
+# many-cluster regime (k*dim 1-2 orders larger) where the kernel could
+# win, so the fold is the one path.
+#
+# Production-mode (exact_sums=False) centroid UPDATE: per-batch partial
+# sums in one mapInPandas (each Arrow batch emits k rows of (cluster, n,
+# dim-long partial-sum array); the explode then runs over k*batches rows
+# instead of N*dim — guide §2.3 "aggregate before you shuffle").  The
+# exact-mode fence: exact_sums=True ALWAYS uses the expression fold —
+# its ordered per-(cluster, dim) fold is the bit-reproducibility
+# contract, and a batch-local NumPy sum would change the summation
+# order.  Production mode's partial-agg SUM never pinned an order (its
+# result already depends on Spark's partitioning), so the per-batch
+# partials are inside the documented semantics class; on float32-sourced
 # embeddings every order sums exactly in float64 (zero rounding, see
-# semantic_dedup's determinism note), so the gate corpora are
-# bit-identical either way.  NULL vectors are skipped like
-# posexplode(NULL); a NULL ELEMENT inside a vector is the one documented
-# carve-out: NumPy's NaN partial crosses the Arrow boundary as NULL, so
-# SUM skips the whole batch's partial for that coordinate, where the
-# expression path skips only the element (see kmeans_embeddings).
-_KMEANS_UPDATE_IMPL = "kernel"
+# semantic_dedup's determinism note).  NULL vectors are skipped; a NULL
+# ELEMENT inside a vector is the one documented carve-out: NumPy's NaN
+# partial crosses the Arrow boundary as NULL, so SUM skips the whole
+# batch's partial for that coordinate (see kmeans_embeddings).
 
 
 def kmeans_embeddings(
@@ -76,7 +68,6 @@ def kmeans_embeddings(
     vec_col: str = "embedding",
     exact_sums: bool = False,
     persist=None,
-    impl: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration Lloyd's over an ``array<float|double>`` column.
 
@@ -102,7 +93,7 @@ def kmeans_embeddings(
     before clustering.
     """
     assigned, cents = _lloyd(
-        df, k, iters, id_col, vec_col, exact_sums, persist=persist, impl=impl
+        df, k, iters, id_col, vec_col, exact_sums, persist=persist
     )
     if persist:
         # ONE block for both consumers: counts and the centroid table
@@ -140,76 +131,28 @@ def kmeans_assignments(
     vec_col: str = "embedding",
     exact_sums: bool = False,
     persist=None,
-    impl: str | None = None,
 ) -> DataFrame:
     """Per-vector cluster assignment after ``iters`` Lloyd rounds:
     ``(vec_id long, cluster int)`` — the input to cluster-balanced
     sampling / semantic curation stages."""
     assigned, _ = _lloyd(
-        df, k, iters, id_col, vec_col, exact_sums, persist=persist, impl=impl
+        df, k, iters, id_col, vec_col, exact_sums, persist=persist
     )
     return assigned.select(
         F.col("vid").alias(id_col), F.col("cluster").cast("int").alias("cluster")
     )
 
 
-def _assign_kernel(e, cents):
-    """Vectorized Lloyd assignment (r15 optimization, guide §4.2): the
-    k-row centroid table is collected driver-side — the same bytes the
-    expression path ships as a one-row collect_list broadcast — and each
-    Arrow batch of vectors is assigned with the ordered sqdist fold
-    (kernels/vecmath.ordered_sqdist, bit-identical to the JVM
-    ``aggregate(zip_with(v, c, (a-b)*(a-b)))`` left fold) plus a
-    first-occurrence argmin over centroid rows in ascending-cluster
-    order — exactly the lexicographic ``array_min`` over (d, cluster)
-    structs of the expression form.  NaN distances (a NaN vector
-    component makes EVERY centroid distance NaN) compare greater than
-    any double and equal to each other in JVM struct ordering, so
-    masking them to +inf and taking the first minimum reproduces the
-    expression's tie-to-smallest-cluster verdict."""
-    import numpy as np
-    import pandas as pd
-
-    from pandas_sigproc_spark.kernels import vecmath as vm
-    from pandas_sigproc_spark.operators.ann import _one_batch
-
-    rows = cents.select("cluster", "c").collect()
-    pairs = sorted((int(r["cluster"]), list(r["c"])) for r in rows)
-    cl_ids = np.array([c for c, _ in pairs], dtype=np.int64)
-    C = (
-        np.array([v for _, v in pairs], dtype=np.float64)
-        if pairs
-        else np.zeros((0, 0), dtype=np.float64)
-    )
-
-    def kern(pdf):
-        X = vm.stack_vectors(pdf["v"], C.shape[1], "kmeans: vector length")
-        D = vm.ordered_sqdist(X, C)
-        np.copyto(D, np.inf, where=np.isnan(D))
-        idx = D.argmin(axis=1)
-        return pd.DataFrame(
-            {
-                "vid": pdf["vid"].to_numpy(),
-                "v": pdf["v"],
-                "cluster": cl_ids[idx].astype("int32"),
-            }
-        )
-
-    return e.mapInPandas(
-        _one_batch(kern), schema="vid long, v array<double>, cluster int"
-    )
-
-
 def _update_partials(assigned):
-    """Per-batch partial centroid sums (r16 optimization): one
+    """Per-batch partial centroid sums (production-mode update): one
     ``mapInPandas`` pass emits, per Arrow batch and per (cluster, vector
     length) group, a single ``(cluster, n, s array<double>)`` row — the
     batch's member count and elementwise sum.  Downstream explodes
     k*batches partial rows instead of N*dim element rows.  Grouping by
     length keeps ragged inputs on the expression semantics: a row
     contributes to exactly the dims it has, and ``sum(ps)/sum(n)`` per
-    (cluster, dim) then equals the expression path's
-    ``sum(val)/count(*)`` row for row."""
+    (cluster, dim) then equals a per-element ``sum(val)/count(*)``
+    over the exploded vectors row for row."""
     import numpy as np
     import pandas as pd
 
@@ -236,12 +179,9 @@ def _update_partials(assigned):
     )
 
 
-def _lloyd(df, k, iters, id_col, vec_col, exact_sums, persist=None, impl=None):
+def _lloyd(df, k, iters, id_col, vec_col, exact_sums, persist=None):
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
-    impl = impl or _KMEANS_IMPL
-    if impl not in ("kernel", "expr"):
-        raise ValueError(f"impl must be 'kernel' or 'expr'; got {impl!r}")
     e = df.select(
         F.col(id_col).cast("long").alias("vid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
@@ -254,7 +194,6 @@ def _lloyd(df, k, iters, id_col, vec_col, exact_sums, persist=None, impl=None):
         # centroid arrays) re-reads these rows, so without the cache the
         # corpus is re-scanned once per round per consumer branch.
         e = persist(e) if callable(persist) else e.persist()
-    dim = F.size("v")
 
     # Deterministic seeding: the k smallest ids, cluster = seed rank - 1.
     # orderBy().limit(k) executes as a distributed TakeOrdered (per-
@@ -286,38 +225,32 @@ def _lloyd(df, k, iters, id_col, vec_col, exact_sums, persist=None, impl=None):
         )
 
     # Assignment is FULLY map-side: the k centroids collapse to a ONE-ROW
-    # broadcast array ("expr") or a driver-collected closure ("kernel" —
-    # same k rows, same bytes) and the argmin runs per input row — struct
+    # broadcast array and the argmin runs per input row — struct
     # ordering is lexicographic (d, then cluster), exactly the stable
     # smallest-cluster tie-break the oracle's QUALIFY ROW_NUMBER()
-    # OVER (ORDER BY d, cluster) replays, and _assign_kernel reproduces
-    # it bit-for-bit (tests/test_kmeans_kernel.py).  No corpus shuffle,
-    # no window: the explode-to-pairs + partitionBy(vid) row_number
-    # alternative shuffles N*k rows per iteration — a corpus-sized
-    # exchange that dominated the sf0.1 wall and would be the bottleneck
-    # at 100 TB.
+    # OVER (ORDER BY d, cluster) replays.  No corpus shuffle, no window:
+    # the explode-to-pairs + partitionBy(vid) row_number alternative
+    # shuffles N*k rows per iteration — a corpus-sized exchange that
+    # dominated the sf0.1 wall and would be the bottleneck at 100 TB.
     assigned = None
     for _ in range(iters):
-        if impl == "kernel":
-            assigned = _assign_kernel(e, cents)
-        else:
-            carr = cents.agg(
-                F.sort_array(F.collect_list(F.struct("cluster", "c"))).alias(
-                    "_cs"
-                )
+        carr = cents.agg(
+            F.sort_array(F.collect_list(F.struct("cluster", "c"))).alias(
+                "_cs"
             )
-            best = F.array_min(
-                F.transform(
-                    F.col("_cs"),
-                    lambda s: F.struct(
-                        sqdist(F.col("v"), s["c"]).alias("d"),
-                        s["cluster"].alias("cluster"),
-                    ),
-                )
+        )
+        best = F.array_min(
+            F.transform(
+                F.col("_cs"),
+                lambda s: F.struct(
+                    sqdist(F.col("v"), s["c"]).alias("d"),
+                    s["cluster"].alias("cluster"),
+                ),
             )
-            assigned = e.crossJoin(F.broadcast(carr)).select(
-                "vid", "v", best["cluster"].alias("cluster")
-            )
+        )
+        assigned = e.crossJoin(F.broadcast(carr)).select(
+            "vid", "v", best["cluster"].alias("cluster")
+        )
         if exact_sums:
             per_dim = assigned.select(
                 "cluster",
@@ -339,24 +272,14 @@ def _lloyd(df, k, iters, id_col, vec_col, exact_sums, persist=None, impl=None):
                     / F.count("*")
                 ).alias("cval"),
             )
-        elif _KMEANS_UPDATE_IMPL == "kernel":
-            # r16: per-batch partial sums — the N*dim explode becomes
-            # k*batches partial rows (see _update_partials / the
-            # _KMEANS_UPDATE_IMPL note).
+        else:
+            # per-batch partial sums — the N*dim explode becomes
+            # k*batches partial rows (see _update_partials)
             partials = _update_partials(assigned)
             summed = partials.select(
                 "cluster", "n", F.posexplode("s").alias("dim", "ps")
             ).groupBy("cluster", "dim").agg(
                 (F.sum("ps") / F.sum("n")).alias("cval")
-            )
-        else:
-            per_dim = assigned.select(
-                "cluster",
-                "vid",
-                F.posexplode("v").alias("dim", "val"),
-            )
-            summed = per_dim.groupBy("cluster", "dim").agg(
-                (F.sum("val") / F.count("*")).alias("cval")
             )
         cents = (
             summed.groupBy("cluster")
@@ -384,7 +307,6 @@ def semantic_dedup(
     round_digits: int = 6,
     max_cluster_rows: int | None | str = "auto",
     persist=True,
-    impl: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (after Abbas et al. 2023,
     arXiv:2303.09540): k-means the embeddings, then inside each cluster
@@ -462,7 +384,7 @@ def semantic_dedup(
     data.
     """
     assigned, _ = _lloyd(
-        df, k, iters, id_col, vec_col, exact_sums, persist=persist, impl=impl
+        df, k, iters, id_col, vec_col, exact_sums, persist=persist
     )
     # Normalize ONCE per row before the pair fan-out: the pair cosine then
     # collapses to a single dot-product fold.  Computing norms inside the

@@ -1,5 +1,5 @@
 """Model-based language identification: a fastText-style hashed
-character-n-gram linear classifier, fully relational.
+character-n-gram linear classifier.
 
 The heuristic ``lang_id`` (operators/text.py ``lang_pred_expr``) scores
 languages by stopword hits — fine as a coarse gate, wrong on short or
@@ -29,11 +29,12 @@ aggregate is a BIGINT sum — no float associativity anywhere before the
 single final division — so Spark and the DuckDB oracle agree bit-for-bit
 on the argmax and to 6 dp on the reported scores.
 
-Scale shape (100 TB): normalize + trigram explode are map-side; the
-weight table is a broadcast join (56 rows here; at most ``B`` rows by
-construction); the one shuffle is the partially-aggregated
-``groupBy(doc_id)`` whose exchange rows are (doc_id, 6 longs) — width
-independent of document length.  Zero Python anywhere.
+Scale shape (100 TB): normalization is a JVM expression; one Arrow
+pass per batch then sums each document's trigram weights from a dense
+table of every normalized trigram (:func:`_scores_kernel`), so the plan
+is map-side with zero shuffles.  The DuckDB oracle replays the
+relational form (per-gram md5 bucket, weight-table join, groupBy
+doc_id) and must agree row for row.
 """
 
 from __future__ import annotations
@@ -100,29 +101,13 @@ def normalize_expr(text_col: str = "text") -> Column:
     word-final trigrams like " th" / "ng " exist at document edges).
     Pattern is in the Java/RE2 common subset — the DuckDB oracle
     replays it with the literal same regex (plus DuckDB's 'g' flag;
-    Spark replaces all matches by default)."""
+    Spark replaces all matches by default).  The lowercasing differs on
+    some non-ASCII letters: Java lowercases ``İ`` (U+0130) to ``i`` +
+    U+0307, DuckDB to ``i`` alone, so the two normalize to different
+    strings.  Parity with the oracle holds only for text whose letters
+    lowercase the same in both engines."""
     cleaned = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z]+", " ")
     return F.concat(F.lit(" "), F.trim(cleaned), F.lit(" "))
-
-
-def trigrams_expr(norm_col: str = "s") -> Column:
-    """Character trigrams of a normalized column — one substring per
-    position (linear; no per-gram re-split).  A document shorter than
-    3 chars yields its single short prefix, which hashes to an
-    unweighted bucket and scores 'und'."""
-    return F.expr(
-        f"transform(sequence(1, greatest(length({norm_col}) - 2, 1)),"
-        f" i -> substring({norm_col}, i, 3))"
-    )
-
-
-def bucket_expr(gram_col: str = "g") -> Column:
-    """The engine-portable md5 bucket of a gram (60-bit prefix, mod
-    B) — identical in Spark, DuckDB and :func:`lang_model_rows`.
-    Composes text.hash60_sql, the single-homed definition every
-    oracle-parity site must share (a review finding: this was a hand
-    copy)."""
-    return F.expr(f"{_text.hash60_sql(gram_col)} % {LANG_MODEL_BUCKETS}")
 
 
 #: Normalized-trigram alphabet, index order of the dense weight table
@@ -140,11 +125,12 @@ def _trigram_weight_table():
     sub-3-char gram ``"  "``, the normalization of empty text).
 
     Every possible trigram is bucketed with the IDENTICAL md5
-    arithmetic the expression path uses (so hashing-trick collisions
-    between a lexicon gram and any other trigram reproduce exactly),
-    then looked up in the collapsed model M.  Built once per process
-    (~19.7k md5s, a few ms) and cached — guide §4's heavyweight-init-
-    once rule; the closure ships only table bytes, never recomputes.
+    arithmetic :func:`lang_model_rows` and the oracle use (so
+    hashing-trick collisions between a lexicon gram and any other
+    trigram reproduce exactly), then looked up in the collapsed model
+    M.  Built once per process (~19.7k md5s, a few ms) and cached —
+    guide §4's heavyweight-init-once rule; the closure ships only table
+    bytes, never recomputes.
     """
     global _TRIGRAM_TABLE
     if _TRIGRAM_TABLE is None:
@@ -179,11 +165,11 @@ _KERNEL_SCHEMA = (
 
 
 def _scores_kernel(batches):
-    """Arrow-batched twin of the explode → md5-bucket → broadcast-join
-    → groupBy aggregate AND the stopword-heuristic expression: one
-    per-document pass, zero shuffle (r15 optimization, guide §4.2 —
-    the expression path ran one interpreted md5 per CHARACTER of every
-    document plus ~45 interpreted HOF stopword scans per row).
+    """One per-document Arrow pass computing what the oracle's
+    explode → md5-bucket → weight-join → groupBy aggregate AND the
+    stopword heuristic compute, with zero shuffle (r15: the relational
+    form ran one interpreted md5 per CHARACTER of every document plus
+    ~45 interpreted HOF stopword scans per row).
 
     Bit-equivalence: trigram weights come from the precomputed
     :func:`_trigram_weight_table` (same md5 bucket arithmetic, summed
@@ -195,7 +181,7 @@ def _scores_kernel(batches):
     heuristic argmax = first language in LANG_ORDER whose count
     reaches the max == the expression's priority when-chain.  All
     outputs are integers; every float op stays in the relational
-    finish, shared with the expression path.
+    finish in :func:`lang_id_model`.
     """
     import numpy as np
     import pandas as pd
@@ -246,7 +232,6 @@ def lang_id_model(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "kernel",
 ) -> DataFrame:
     """Classify each document's language with the hashed-trigram linear
     model AND report disagreement against the stopword heuristic.
@@ -258,72 +243,20 @@ def lang_id_model(
     ``pred_lang = 'und'`` when no gram matched.  Ties break in
     :data:`MODEL_LANGS` priority order, like the heuristic.
 
-    ``impl='kernel'`` (default) computes the integer per-document
-    aggregate in one Arrow pass (:func:`_scores_kernel` — zero
-    shuffles); ``impl='expr'`` keeps the original fully-relational
-    explode/join/groupBy plan (the streaming-composable form, and the
-    reference the kernel is equality-tested against).
+    The integer per-document aggregate is one Arrow pass
+    (:func:`_scores_kernel` — zero shuffles); the argmax, scores and
+    heuristic label are JVM expressions over its integers.
     """
-    spark = docs.sparkSession
     # null-as-empty (the tier's rule): a NULL text previously yielded
     # pred_heur=NULL/agree=NULL while the model said 'und' — the row
     # vanished from BOTH sides of an agree filter (a review finding)
-    base0 = docs.select(
+    agg = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.coalesce(F.col(text_col), F.lit("")).alias("_txt"),
-    )
+    ).select(
+        "doc_id", normalize_expr("_txt").alias("s"), "_txt"
+    ).mapInPandas(_scores_kernel, _KERNEL_SCHEMA)
     heur_langs = list(_text.LANG_ORDER) + ["und"]
-    if impl == "kernel":
-        agg = base0.select(
-            "doc_id", normalize_expr("_txt").alias("s"), "_txt"
-        ).mapInPandas(_scores_kernel, _KERNEL_SCHEMA)
-    else:
-        wdf = spark.createDataFrame(
-            lang_model_rows(),
-            "bucket long, w_en long, w_de long, w_es long, w_fr long",
-        )
-        # The heuristic prediction rides through the per-gram aggregate
-        # as an INT index (decoded back to its label after the
-        # groupBy): a string min() would push the whole aggregate to
-        # SortAggregate, sorting every exploded gram row — int min
-        # keeps it a HashAggregate with map-side partial combine.
-        heur_idx = (
-            F.array_position(
-                F.array(*[F.lit(x) for x in heur_langs]),
-                _text.lang_pred_expr("ws"),
-            ).cast("int")
-            - 1
-        )
-        base = base0.select(
-            "doc_id",
-            normalize_expr("_txt").alias("s"),
-            F.split(F.col("_txt"), " ").alias("ws"),
-        ).select(
-            "doc_id",
-            "s",
-            heur_idx.alias("heur_idx"),
-        )
-        grams = base.select(
-            "doc_id",
-            "heur_idx",
-            F.explode(trigrams_expr("s")).alias("g"),
-        )
-        joined = grams.select(
-            "doc_id", "heur_idx", bucket_expr("g").alias("bucket")
-        ).join(F.broadcast(wdf), "bucket", "left")
-        agg = joined.groupBy("doc_id").agg(
-            F.min("heur_idx").alias("heur_idx"),
-            F.count("*").alias("n_grams"),
-            F.sum(
-                F.when(F.col("w_en").isNotNull(), 1).otherwise(0)
-            ).cast("long").alias("n_hits"),
-            *[
-                F.sum(F.coalesce(F.col(f"w_{lang}"), F.lit(0)))
-                .cast("long")
-                .alias(f"s_{lang}")
-                for lang in MODEL_LANGS
-            ],
-        )
     heur_decode = F.element_at(
         F.array(*[F.lit(lang) for lang in heur_langs]),
         F.col("heur_idx") + 1,

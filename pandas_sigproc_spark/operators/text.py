@@ -347,7 +347,7 @@ def normalize_text(
 
 def _rep_counts_py(text: str | None):
     """Integer repetition counts for ONE document — exactly the counts
-    the relational explode/agg path aggregates: ``(n_lines,
+    a relational explode/agg plan aggregates: ``(n_lines,
     n_distinct_lines, top_bigram_count, total_bigrams)``.  NULL text →
     all None (split(NULL) is NULL, explode(NULL) emits no rows); fewer
     than 2 words → (n_lines, n_dist, None, None) (the empty bigram
@@ -373,120 +373,63 @@ def _rep_counts_py(text: str | None):
     return (n_lines, n_dist, max(counts.values()), len(ws) - 1)
 
 
-def repetition_stats(
-    docs, *, id_col: str = "doc_id", text_col: str = "text",
-    impl: str = "kernel",
-):
+def repetition_stats(docs, *, id_col: str = "doc_id", text_col: str = "text"):
     """Gopher-style repetition quality signals per document:
 
     - ``dup_line_frac`` — fraction of newline-delimited lines that are
-      duplicates of an earlier line (map-side expression);
+      duplicates of an earlier line;
     - ``top_bigram_frac`` — fraction of word-bigram occurrences taken by
       the single most frequent bigram.
 
     High values of either mark boilerplate/spam for corpus filtering.
 
-    ``impl="kernel"`` (default, r15 optimization — guide §4.2, the
-    source_overlap precedent): one Arrow pass computes the four INTEGER
-    counts per document (:func:`_rep_counts_py` — a dict-counter walk,
-    linear per doc) and the division/rounding stays a JVM expression on
-    those exact integers, so every output double is bit-identical to
-    the relational plan while the per-bigram explode, both aggregation
-    exchanges, and the corpus-sized join disappear (plan: scan →
-    MapInPandas → project, zero shuffles).
-
-    ``impl="expr"`` keeps the relational form (explode → count → max →
-    join back): per-document work stays linear and the only shuffle
-    keys on (doc, bigram) — uniformly distributed, no skew.  It remains
-    the specification and the test anchor (a per-doc *expression* over
-    distinct bigrams would be quadratic in document length — the
-    kernel's hash counter is not).
+    One Arrow pass computes the four INTEGER counts per document
+    (:func:`_rep_counts_py` — a dict-counter walk, linear per doc) and
+    the division/rounding stays a JVM expression on those exact
+    integers, so every output double is bit-identical to the relational
+    explode → count → max → join form the DuckDB oracle
+    (``SQL_REP_STATS``) runs, with no per-bigram explode, aggregation
+    exchange or corpus-sized join (plan: scan → MapInPandas → project,
+    zero shuffles).  A per-doc *expression* over distinct bigrams would
+    be quadratic in document length — the hash counter is not.
     """
-    if impl not in ("kernel", "expr"):
-        raise ValueError(f"impl must be 'kernel' or 'expr'; got {impl!r}")
-    if impl == "kernel":
-        import pandas as pd
+    import pandas as pd
 
-        def run(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                rows = [
-                    _rep_counts_py(None if t is None else str(t))
-                    for t in pdf[text_col]
-                ]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].to_numpy(),
-                        "n_lines": [r[0] for r in rows],
-                        "_nd": [r[1] for r in rows],
-                        "_top": [r[2] for r in rows],
-                        "_tot": [r[3] for r in rows],
-                    }
-                )
+    def run(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            rows = [
+                _rep_counts_py(None if t is None else str(t))
+                for t in pdf[text_col]
+            ]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].to_numpy(),
+                    "n_lines": [r[0] for r in rows],
+                    "_nd": [r[1] for r in rows],
+                    "_top": [r[2] for r in rows],
+                    "_tot": [r[3] for r in rows],
+                }
+            )
 
-        counted = docs.select(
-            F.col(id_col).cast("long").alias("doc_id"), F.col(text_col)
-        ).mapInPandas(
-            run,
-            "doc_id long, n_lines long, _nd long, _top long, _tot long",
-        )
-        return counted.select(
-            "doc_id",
-            "n_lines",
-            F.round(
-                (F.col("n_lines") - F.col("_nd"))
-                / F.col("n_lines").cast("double"),
-                6,
-            ).alias("dup_line_frac"),
-            F.round(
-                F.coalesce(F.col("_top") / F.col("_tot"), F.lit(0.0)), 6
-            ).alias("top_bigram_frac"),
-        )
-    ws = F.split(F.col(text_col), " ")
-    lines = F.split(F.col(text_col), "\n")
-    base = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.size(lines).cast("long").alias("n_lines"),
+    counted = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col)
+    ).mapInPandas(
+        run,
+        "doc_id long, n_lines long, _nd long, _top long, _tot long",
+    )
+    return counted.select(
+        "doc_id",
+        "n_lines",
         F.round(
-            (F.size(lines) - F.size(F.array_distinct(lines)))
-            / F.size(lines).cast("double"),
+            (F.col("n_lines") - F.col("_nd"))
+            / F.col("n_lines").cast("double"),
             6,
         ).alias("dup_line_frac"),
-        # Bigrams via zip_with over two slices of ONE split: higher-order
-        # lambdas are evaluated interpreted with NO common-subexpression
-        # elimination, so putting split() inside the lambda (e.g.
-        # element_at(split(text), i)) re-splits the whole document per
-        # element — O(len^2) per doc, measured 15s -> 0.4s at sf0.1.
-        F.when(F.size(ws) < 2, F.array().cast("array<string>"))
-        .otherwise(
-            F.zip_with(
-                F.slice(ws, 1, F.size(ws) - 1),
-                F.slice(ws, 2, F.size(ws) - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        )
-        .alias("_bgs"),
-    )
-    per_bigram = base.select("doc_id", F.explode("_bgs").alias("_bg"))
-    top = (
-        per_bigram.groupBy("doc_id", "_bg")
-        .agg(F.count("*").alias("_c"))
-        .groupBy("doc_id")
-        .agg(F.max("_c").alias("_top"), F.sum("_c").alias("_tot"))
-    )
-    # Plain equi-join on doc_id — `top` has one row per DOCUMENT, so it
-    # is corpus-sized and must never be broadcast.
-    return (
-        base.join(top, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_lines",
-            "dup_line_frac",
-            F.round(
-                F.coalesce(F.col("_top") / F.col("_tot"), F.lit(0.0)), 6
-            ).alias("top_bigram_frac"),
-        )
+        F.round(
+            F.coalesce(F.col("_top") / F.col("_tot"), F.lit(0.0)), 6
+        ).alias("top_bigram_frac"),
     )
 
 

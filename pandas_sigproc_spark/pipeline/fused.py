@@ -63,14 +63,6 @@ class _FilterStage:
         out = _iir.filtfilt(b, a, y) if self.zero_phase else _iir.lfilter(b, a, y)
         return t, out, sr
 
-    def run_batch(self, Y: np.ndarray, sr: float) -> np.ndarray:
-        b, a = self.make_ba(sr)
-        return (
-            _iirb.filtfilt_batch(b, a, Y)
-            if self.zero_phase
-            else _iirb.lfilter_batch(b, a, Y)
-        )
-
     def run_batch_ragged(self, ys: list, sr: float) -> list:
         b, a = self.make_ba(sr)
         return (

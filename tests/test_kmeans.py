@@ -284,3 +284,24 @@ def test_kmeans_embeddings_persist_hook(spark):
     assert sum(r["n"] for r in rows if r["dim"] == 0) == 20
     for b in blocks:
         b.unpersist()
+
+
+def test_default_exact_assignment_plan_has_no_mapinpandas(spark):
+    # The assignment is the map-side array_min fold over a broadcast of
+    # the centroids, and exact mode's update is the ordered fold: no
+    # Python stage anywhere in the plan.
+    from pandas_sigproc_spark.operators.kmeans import kmeans_assignments
+
+    rng = np.random.default_rng(3)
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": range(40),
+                "embedding": [list(map(float, v)) for v in rng.normal(size=(40, 8))],
+            }
+        )
+    )
+    asg = kmeans_assignments(df, k=4, iters=2, exact_sums=True)
+    plan = asg._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert len(asg.collect()) == 40

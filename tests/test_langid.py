@@ -120,13 +120,101 @@ def test_deterministic_across_runs(spark):
     assert a == b
 
 
+def _relational_lang_id(docs):
+    """The fully relational form of ``lang_id_model``: per-gram explode,
+    md5 bucket, broadcast weight-table join, BIGINT sums per doc.  The
+    kernel's reference; it is the plan the DuckDB oracle replays, run
+    on Spark so the two engines' lowercasing cannot differ."""
+    from functools import reduce
+    from operator import and_
+
+    from pyspark.sql import functions as F
+
+    from pandas_sigproc_spark.operators import text as T
+    from pandas_sigproc_spark.operators.langid import normalize_expr
+
+    wdf = docs.sparkSession.createDataFrame(
+        lang_model_rows(),
+        "bucket long, w_en long, w_de long, w_es long, w_fr long",
+    )
+    heur_langs = list(T.LANG_ORDER) + ["und"]
+    heur_idx = (
+        F.array_position(
+            F.array(*[F.lit(x) for x in heur_langs]), T.lang_pred_expr("ws")
+        ).cast("int")
+        - 1
+    )
+    base = docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.coalesce(F.col("text"), F.lit("")).alias("_txt"),
+    ).select(
+        "doc_id",
+        normalize_expr("_txt").alias("s"),
+        F.split(F.col("_txt"), " ").alias("ws"),
+    ).select("doc_id", "s", heur_idx.alias("heur_idx"))
+    trigrams = F.expr(
+        "transform(sequence(1, greatest(length(s) - 2, 1)),"
+        " i -> substring(s, i, 3))"
+    )
+    bucket = F.expr(f"{T.hash60_sql('g')} % {LANG_MODEL_BUCKETS}")
+    agg = (
+        base.select("doc_id", "heur_idx", F.explode(trigrams).alias("g"))
+        .select("doc_id", "heur_idx", bucket.alias("bucket"))
+        .join(F.broadcast(wdf), "bucket", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.min("heur_idx").alias("heur_idx"),
+            F.count("*").alias("n_grams"),
+            F.sum(F.when(F.col("w_en").isNotNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_hits"),
+            *[
+                F.sum(F.coalesce(F.col(f"w_{lang}"), F.lit(0)))
+                .cast("long")
+                .alias(f"s_{lang}")
+                for lang in MODEL_LANGS
+            ],
+        )
+    )
+    heur = F.element_at(
+        F.array(*[F.lit(x) for x in heur_langs]), F.col("heur_idx") + 1
+    )
+    pred = F.when(F.col("n_hits") == 0, F.lit("und"))
+    for lang in MODEL_LANGS:
+        pred = pred.when(
+            reduce(
+                and_,
+                [
+                    F.col(f"s_{lang}") >= F.col(f"s_{o}")
+                    for o in MODEL_LANGS
+                    if o != lang
+                ],
+            ),
+            F.lit(lang),
+        )
+    return agg.select(
+        "doc_id",
+        pred.alias("pred_lang"),
+        *[
+            F.round(
+                F.col(f"s_{lang}") / (F.col("n_grams") * F.lit(1000.0)), 6
+            ).alias(f"score_{lang}")
+            for lang in MODEL_LANGS
+        ],
+        F.col("n_grams").cast("long").alias("n_grams"),
+        "n_hits",
+        heur.alias("pred_heur"),
+        (pred == heur).alias("agree"),
+    )
+
+
 def test_kernel_matches_expression_path(spark):
-    """r15 optimization pin: the Arrow per-document kernel
-    (impl='kernel', the default) must be row-for-row identical to the
-    original relational explode/join/groupBy plan (impl='expr') on the
-    edge battery — empty/NULL/sub-trigram docs, unicode that the
-    normalizer strips, cross-language stopword ties, and a doc with no
-    lexicon gram at all."""
+    """r15 optimization pin: the Arrow per-document kernel must be
+    row-for-row identical to the relational explode/join/groupBy plan
+    (:func:`_relational_lang_id`) on the edge battery —
+    empty/NULL/sub-trigram docs, unicode that the normalizer strips,
+    cross-language stopword ties, and a doc with no lexicon gram at
+    all."""
     texts = [
         "the quick brown fox and the lazy dog of doom is here",
         "der die und ist das ein ich schöne",
@@ -141,9 +229,9 @@ def test_kernel_matches_expression_path(spark):
         "Über straße İstanbul çok güzel",
     ]
     df = _df(spark, texts)
-    kern = lang_id_model(df, impl="kernel").orderBy("doc_id").collect()
-    expr = lang_id_model(df, impl="expr").orderBy("doc_id").collect()
-    assert kern == expr
+    kern = lang_id_model(df).orderBy("doc_id").collect()
+    expr = _relational_lang_id(df).orderBy("doc_id").collect()
+    assert len(kern) == len(texts) and kern == expr
 
 
 def test_kernel_plan_has_no_explode_or_shuffle(spark):
@@ -158,3 +246,38 @@ def test_kernel_plan_has_no_explode_or_shuffle(spark):
     )
     assert "Generate" not in plan
     assert "Exchange" not in plan
+
+
+def test_oracle_sql_matches_operator_in_duckdb(spark):
+    """The registry's DuckDB oracle for ``lang_id_model`` replays the
+    operator row for row on ASCII text, NULL and empty text included
+    (null-as-empty: 'und' from both the model and the heuristic)."""
+    import duckdb
+
+    from __spark_entry__ import _sql_lang_id_model
+
+    texts = list(SENTENCES.values()) + [
+        None,
+        "",
+        "a",
+        "zz",
+        "the der el le de",
+        "1234 !@#$ %^&*",
+        "  leading and trailing  ",
+        "x" * 300,
+    ]
+    got = [
+        tuple(r)
+        for r in lang_id_model(_df(spark, texts)).orderBy("doc_id").collect()
+    ]
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+    )
+    want = con.execute(
+        f"SELECT * FROM ({_sql_lang_id_model()}) ORDER BY doc_id"
+    ).fetchall()
+    assert len(got) == len(texts) and got == want
+    # the NULL row: 'und' from the model and the heuristic, so agree
+    assert got[texts.index(None)][-3:] == (0, "und", True)

@@ -123,11 +123,19 @@ def test_chunk_giant_doc_linear(spark):
 
 
 def test_repetition_stats_kernel_equals_expr(spark):
-    # r15: the kernel path (one Arrow pass for the integer counts, JVM
-    # division/round) must match the relational explode/agg/join plan
-    # row-for-row, including the edge classes: NULL text, empty text,
-    # single word, multi-space runs (empty "words"), all-duplicate
-    # lines, and a long repetitive doc.
+    # The Arrow kernel (one pass for the integer counts, JVM
+    # division/round) must match the relational explode/agg/join form
+    # the registry's DuckDB oracle runs (SQL_REP_STATS), row for row,
+    # including the edge classes: NULL text, empty text, single word,
+    # multi-space runs (empty "words"), all-duplicate lines, and a long
+    # repetitive doc.  The oracle doubles every third doc's text as a
+    # second line; the Spark side applies the same doubling, as the
+    # registered query does.
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from __spark_entry__ import SQL_REP_STATS
+
     texts = [
         None,
         "",
@@ -142,15 +150,20 @@ def test_repetition_stats_kernel_equals_expr(spark):
     pdf = pd.DataFrame(
         {"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}
     )
-    df = spark.createDataFrame(pdf)
-    k = sorted(map(tuple, repetition_stats(df, impl="kernel").collect()))
-    e = sorted(map(tuple, repetition_stats(df, impl="expr").collect()))
-    assert k == e
-    # and the kernel plan really is join/aggregate-free
-    plan = (
-        repetition_stats(df, impl="kernel")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    df = spark.createDataFrame(pdf).select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(F.col("text"), F.lit("\n"), F.col("text")),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
     )
+    got = sorted(map(tuple, repetition_stats(df).collect()))
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = sorted(con.execute(SQL_REP_STATS).fetchall())
+    assert len(got) == len(texts) and got == want
+    # and the kernel plan really is join/aggregate-free
+    plan = repetition_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "Join" not in plan

@@ -11,7 +11,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
-from pandas_sigproc_spark.session import get_spark
+from pandas_sigproc_spark.session import get_spark, host_cpus
 
 args = sys.argv[1:]
 reps = 3
@@ -19,8 +19,7 @@ if args and args[0] == "-n":
     reps = int(args[1])
     args = args[2:]
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-spark = get_spark("time_legs", cpus=cpus)
+spark = get_spark("time_legs", cpus=host_cpus())
 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 qs = E.queries()
 # one warm-up job so the first leg doesn't pay JVM warm-up
