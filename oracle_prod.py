@@ -263,20 +263,18 @@ def filtfilt_ctes(p: str, b, a, src: str, srcn: str) -> str:
 
 # q_filt_butter: filt_butter(_uniform, 0.3*(HOURLY/2), 4, 'lowpass',
 # n_buckets=32).  order 4 halves to 2 (extension.py:480-483 quirk); the
-# bucketed kernel designs from round(sr, 9) of the inferred rate — the
-# hourly grid's diffs are exactly 3600.0 (t0 + i*3600.0 stays exact at
-# epoch magnitudes), so sr == 1/3600 and the rounded design is a global
-# constant.
-_SR_HOURLY_R9 = round(1.0 / 3600.0, 9)
+# kernel designs from the inferred rate as is — the hourly grid's diffs
+# are exactly 3600.0 (t0 + i*3600.0 stays exact at epoch magnitudes), so
+# sr == 1/3600 == HOURLY and the design is a global constant.
 
 
 def butter_prod_ba():
-    wn = np.asarray(0.3 * (HOURLY / 2), dtype=np.float64) / (0.5 * _SR_HOURLY_R9)
+    wn = np.asarray(0.3 * (HOURLY / 2), dtype=np.float64) / (0.5 * HOURLY)
     return _design.butter(2, wn, "lowpass")
 
 
 def cfc_prod_ba():
-    return _design.cfc_coefficients(0.05 * HOURLY, _SR_HOURLY_R9)
+    return _design.cfc_coefficients(0.05 * HOURLY, HOURLY)
 
 
 def aw_prod_ba():
@@ -819,8 +817,8 @@ def welch_seg_ctes(p: str, n_window: int, n_ov: int, fs: float,
 
 def sql_psd_welch() -> str:
     # q_psd_welch: wl=128*3600, overlap .5, hann, mean, bucketed ->
-    # rate = round(1/3600, 9); n_window = int(rate*wl) = 128.
-    cte, val = welch_seg_ctes("w", 128, 64, _SR_HOURLY_R9)
+    # rate = 1/3600 as inferred; n_window = int(rate*wl) = 128.
+    cte, val = welch_seg_ctes("w", 128, 64, HOURLY)
     return f"""
 WITH {SIG_CTE},
 {UNIFORM_CTES},
@@ -832,7 +830,7 @@ FROM wseg WHERE k > 0 GROUP BY channel_id, k
 
 
 def sql_psd_median() -> str:
-    cte, val = welch_seg_ctes("w", 64, 32, _SR_HOURLY_R9)
+    cte, val = welch_seg_ctes("w", 64, 32, HOURLY)
     return f"""
 WITH {SIG_CTE},
 {UNIFORM_CTES},
@@ -870,7 +868,7 @@ wsrms AS (
 
 
 def sql_psd_maxrms() -> str:
-    cte, val = welch_seg_ctes("w", 64, 32, _SR_HOURLY_R9)
+    cte, val = welch_seg_ctes("w", 64, 32, HOURLY)
     return f"""
 WITH {SIG_CTE},
 {UNIFORM_CTES},
@@ -889,7 +887,7 @@ WHERE w.k > 0 GROUP BY w.channel_id, w.k
 
 def sql_psd_damage() -> str:
     # fatigue_exponent b=4: factor = (mean((seg_rms/mean_rms)^4)^(1/4))^2.
-    cte, val = welch_seg_ctes("w", 64, 32, _SR_HOURLY_R9)
+    cte, val = welch_seg_ctes("w", 64, 32, HOURLY)
     return f"""
 WITH {SIG_CTE},
 {UNIFORM_CTES},
@@ -908,8 +906,8 @@ WHERE w.k > 0 GROUP BY w.channel_id, w.k
 
 
 def sql_psd_all() -> str:
-    # q_psd_all: summarize='all', NO buckets -> whole-channel path with the
-    # UNROUNDED samplerate (operators/psd.py _whole_channel_psd).
+    # q_psd_all: summarize='all' -> the whole-channel body with the
+    # declared samplerate as is (operators/psd.py _bucketed_psd).
     cte, val = welch_seg_ctes("w", 64, 32, HOURLY)
     return f"""
 WITH {SIG_CTE},
@@ -938,7 +936,7 @@ FROM wseg WHERE k > 0 GROUP BY channel_id, k
 def sql_psd_rms() -> str:
     # q_psd_rms: 128-window bucketed Welch mean -> rms_lin trapezoid over
     # the POSITIVE-frequency spectrum (get_psd output), rounded 6.
-    cte, val = welch_seg_ctes("w", 128, 64, _SR_HOURLY_R9)
+    cte, val = welch_seg_ctes("w", 128, 64, HOURLY)
     return f"""
 WITH {SIG_CTE},
 {UNIFORM_CTES},

@@ -1,10 +1,11 @@
 """Batched IIR execution: filter MANY channels in one call.
 
 ``lfilter``/``filtfilt`` in :mod:`.iir` are 1-D.  At scale the dominant
-cost is not the math but per-channel overhead (Arrow group dispatch, FFT
-setup, Python call overhead) — 1500 channels of 700 samples each cost far
-more as 1500 kernel calls than as one (1500, 700) matrix op.  The entry
-points take a list of UNEQUAL-length channels sharing one filter:
+cost is not the math but per-channel overhead (Arrow group dispatch,
+Python call overhead) — 1500 channels of 700 samples each cost far more
+as 1500 scalar recursions than as one recursion over a (1500, 700)
+matrix.  The entry points take a list of UNEQUAL-length channels sharing
+one filter:
 
 - ``lfilter_batch_ragged(b, a, arrays, zis=None)`` — causal filter,
   optionally from per-channel initial states.
@@ -13,17 +14,9 @@ points take a list of UNEQUAL-length channels sharing one filter:
 Each channel takes the 1-D kernel's path rule (len <= _LOOP_CUTOVER or
 order > 16 -> exact recursion).  Short channels share one exact DF2T
 recursion (:func:`_loop_ragged`), bit-identical per row to the 1-D loop;
-long channels group by exact length through the FFT helpers:
-
-- ``lfilter_batch(b, a, X)`` — zero-state response for ``X[batch, time]``:
-  FIR part via one batched ``rfft``; AR part via one batched convolution
-  with the shared truncated impulse response.
-- ``filtfilt_batch(b, a, X)`` — batched odd padding, ``zi * x0`` initial
-  state handled by superposition with a zero-input response computed
-  once per unit state and scaled per row (linearity), forward and
-  backward.
-
-Long-row parity with the 1-D kernels is asserted in tests (rtol 1e-9).
+every long channel runs the 1-D kernel itself (its FFT setup is already
+amortised over more than 2,048 samples).  So every row is bit-identical
+to per-channel filtering at any length, whatever channels share the call.
 """
 
 from __future__ import annotations
@@ -32,9 +25,9 @@ import numpy as np
 
 from pandas_sigproc_spark.kernels.iir import (
     _LOOP_CUTOVER,
-    _ar_impulse_response,
     _lfilter_loop,
     _normalize_ba,
+    filtfilt,
     lfilter,
     lfilter_zi,
 )
@@ -79,39 +72,6 @@ def _lfilter_loop_batch(b, a, X: np.ndarray, Zi: np.ndarray):
         Z[:, n - 2] = bp[n - 1] * x - ap[n - 1] * y
         Y[:, i] = y
     return Y, Z
-
-
-def _fft_convolve_batch(X: np.ndarray, h: np.ndarray) -> np.ndarray:
-    """Row-wise convolution of X[batch, n] with 1-D kernel h (full, cropped
-    to n)."""
-    n = X.shape[-1]
-    nfull = n + len(h) - 1
-    nfft = 1 << (nfull - 1).bit_length()
-    Xf = np.fft.rfft(X, nfft, axis=-1)
-    Hf = np.fft.rfft(h, nfft)
-    return np.fft.irfft(Xf * Hf, nfft, axis=-1)[..., :n]
-
-
-def lfilter_batch(b, a, X: np.ndarray) -> np.ndarray:
-    """Zero-state FFT-path response along the last axis of ``X[batch,
-    time]`` — the long-row helper of the ragged entry points (rows
-    longer than ``_LOOP_CUTOVER`` through filters of order <= 16; every
-    other row takes the exact recursion in :func:`_loop_ragged`)."""
-    b, a = _normalize_ba(b, a)
-    X = np.asarray(X, dtype=np.float64)
-    if len(a) == 1:
-        return _fft_convolve_batch(X, b)
-    h = _ar_impulse_response(a, max_len=X.shape[-1])
-    if h is None:
-        # Degenerate tf-form design (see kernels.iir._ar_ir_fft): exact
-        # per-row recursion, matching scipy tf-form numerics.
-        with np.errstate(over="ignore", invalid="ignore"):
-            return np.stack([_lfilter_loop(b, a, row) for row in X])
-    F = _fft_convolve_batch(X, b)
-    # Taps beyond the row length cannot reach the cropped output (see
-    # kernels.iir.lfilter) — cap h so short-channel batches through
-    # slow-decay filters stay proportional to the data, not the IR.
-    return _fft_convolve_batch(F, h[: X.shape[-1]])
 
 
 def _pad_stack(arrays: list[np.ndarray]) -> np.ndarray:
@@ -163,17 +123,16 @@ def lfilter_batch_ragged(b, a, arrays: list[np.ndarray], zis=None):
     order > 16) share ONE exact recursion (:func:`_loop_ragged`) — rows
     never interact in the elementwise DF2T step, so each row is
     bit-identical to filtering it alone, regardless of which channels
-    share the batch.  Long channels group by exact length through the
-    FFT batch path (nfft stays a function of the channel's own length,
-    never of its neighbours).  This is what lets the bucketed operators
-    group by samplerate alone instead of (length, samplerate) — one
-    batched kernel per bucket instead of one per distinct length.
+    share the batch.  Long channels run the 1-D ``iir.lfilter`` one by
+    one.  This is what lets the channel operators group by samplerate
+    alone instead of (length, samplerate) — one call per bucket instead
+    of one per distinct length.
 
     With ``zis`` (one initial delay line per channel) the call returns
     ``(outputs, final_states)`` and every row matches the 1-D
     ``iir.lfilter(b, a, x, zi=zi)`` bit for bit: short rows start the
-    shared recursion from their own state, and long rows go through that
-    1-D kernel one by one (the batched FFT path carries no state).
+    shared recursion from their own state, and long rows pass theirs to
+    the 1-D kernel.
     """
     bn, an = _normalize_ba(b, a)
     ntaps = max(len(bn), len(an))
@@ -194,26 +153,20 @@ def lfilter_batch_ragged(b, a, arrays: list[np.ndarray], zis=None):
         )
         for i, y, z in zip(shorts, ys, zs):
             out[i], zf[i] = y, z
-    longs = [i for i in range(len(arrays)) if out[i] is None]
-    if zis is not None:
-        for i in longs:
-            out[i], zf[i] = lfilter(b, a, arrays[i], zi=zis[i])
-        return out, zf
-    by_len: dict[int, list[int]] = {}
-    for i in longs:
-        by_len.setdefault(len(arrays[i]), []).append(i)
-    for _n, idxs in by_len.items():
-        Y = lfilter_batch(b, a, np.stack([arrays[i] for i in idxs]))
-        for r, i in enumerate(idxs):
-            out[i] = Y[r]
-    return out
+    for i in range(len(arrays)):
+        if out[i] is None:
+            if zis is None:
+                out[i] = lfilter(b, a, arrays[i])
+            else:
+                out[i], zf[i] = lfilter(b, a, arrays[i], zi=zis[i])
+    return out if zis is None else (out, zf)
 
 
 def filtfilt_batch_ragged(b, a, arrays: list[np.ndarray]) -> list[np.ndarray]:
     """Zero-phase filtering for UNEQUAL-length channels in one call —
     same path rules and bit-exactness contract as lfilter_batch_ragged
     (the short path replays iir.filtfilt's two seeded loop passes as two
-    :func:`_loop_ragged` passes)."""
+    :func:`_loop_ragged` passes; a long channel runs ``iir.filtfilt``)."""
     bn, an = _normalize_ba(b, a)
     ntaps = max(len(bn), len(an))
     padlen = 3 * ntaps
@@ -240,59 +193,7 @@ def filtfilt_batch_ragged(b, a, arrays: list[np.ndarray]) -> list[np.ndarray]:
         ys, _ = _loop_ragged(bn, an, rs, np.stack([zi * r[0] for r in rs]))
         for i, y in zip(shorts, ys):
             out[i] = y[::-1][padlen:-padlen].copy()
-    by_len: dict[int, list[int]] = {}
     for i, x in enumerate(arrays):
         if out[i] is None:
-            by_len.setdefault(len(x), []).append(i)
-    for _n, idxs in by_len.items():
-        Y = filtfilt_batch(b, a, np.stack([arrays[i] for i in idxs]))
-        for r, i in enumerate(idxs):
-            out[i] = Y[r]
+            out[i] = filtfilt(b, a, x)
     return out
-
-
-def _unit_zir(b, a, zi_unit: np.ndarray, length: int) -> np.ndarray:
-    """Zero-input response for initial state ``zi_unit`` over ``length``."""
-    y, _ = _lfilter_loop(b, a, np.zeros(length), zi=zi_unit.copy())
-    return y
-
-
-def filtfilt_batch(b, a, X: np.ndarray) -> np.ndarray:
-    """Zero-phase forward-backward filtering of every row of ``X`` — the
-    long-row FFT helper of :func:`filtfilt_batch_ragged`.
-
-    Matches ``kernels.iir.filtfilt`` row-for-row: odd extension of
-    ``3 * max(len(a), len(b))`` samples, ``lfilter_zi``-scaled initial
-    conditions per pass.  The initial-state correction uses linearity:
-    the zero-input response for the unit state vector ``zi`` is computed
-    once (a short sequential run at the filter's decay length) and scaled
-    by each row's first sample.
-    """
-    b, a = _normalize_ba(b, a)
-    X = np.asarray(X, dtype=np.float64)
-    ntaps = max(len(a), len(b))
-    padlen = 3 * ntaps
-    front = 2.0 * X[:, :1] - X[:, padlen:0:-1]
-    back = 2.0 * X[:, -1:] - X[:, -2 : -padlen - 2 : -1]
-    ext = np.concatenate([front, X, back], axis=1)
-    next_ = ext.shape[1]
-
-    zi = lfilter_zi(b, a)
-    if len(a) > 1:
-        h = _ar_impulse_response(a, max_len=next_)
-        # Degenerate designs (h is None) have no finite decay length;
-        # the correction must then span the whole extended signal.
-        h_len = len(h) if h is not None else next_
-    else:
-        h_len = ntaps
-    zir_len = min(next_, h_len)
-    zir_unit = _unit_zir(b, a, zi, zir_len)
-
-    def one_pass(M: np.ndarray) -> np.ndarray:
-        Y = lfilter_batch(b, a, M)
-        Y[:, :zir_len] += M[:, :1] * zir_unit[None, :]
-        return Y
-
-    Y = one_pass(ext)
-    Y = one_pass(Y[:, ::-1])[:, ::-1]
-    return Y[:, padlen:-padlen]

@@ -72,7 +72,10 @@ def detrend_array(x: np.ndarray, kind, axis: int = -1) -> np.ndarray:
         xm = np.moveaxis(x, axis, -1)
         tm = t - t.mean()
         denom = float(np.dot(tm, tm))
-        slope = (xm @ tm) / denom
+        # Row-wise product-sum, not ``xm @ tm``: BLAS blocks a matrix-
+        # vector product by the number of rows, so a row's slope would
+        # depend on how many segments are stacked with it.
+        slope = (xm * tm).sum(axis=-1) / denom
         mean = xm.mean(axis=-1)
         fit = mean[..., None] + slope[..., None] * tm
         return np.moveaxis(xm - fit, -1, axis)

@@ -18,8 +18,9 @@ from collections.abc import Callable, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark.planner import bucket_expr as _bucket_expr
 from pyspark.sql.types import StructType
+
+from pandas_sigproc_spark.planner import group_apply
 
 
 def apply_channel_kernel(
@@ -56,16 +57,4 @@ def apply_channel_kernel(
             return pd.DataFrame(columns=out_cols)
         return pd.concat(pieces, ignore_index=True)
 
-    src = df
-    if n_buckets is None:
-        return src.groupBy("channel_id").applyInPandas(
-            lambda pdf: run(pdf), schema
-        )
-    from pyspark.sql import functions as F
-
-    bucketed = src.withColumn(
-        "_b", _bucket_expr("channel_id", n_buckets)
-    )
-    return bucketed.groupBy("_b").applyInPandas(
-        lambda pdf: run(pdf.drop(columns=["_b"])), schema
-    )
+    return group_apply(df, run, schema, n_buckets)

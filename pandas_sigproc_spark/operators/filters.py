@@ -4,14 +4,15 @@
 These are the reference's grouped sequential kernels
 (``extension.py:452-567``): the recursion carries state sample-to-sample,
 so each channel must be processed in time order by one task.  Implementation
-is ``groupBy("channel_id").applyInPandas`` — Arrow-batched, one channel per
-group, running the vendored NumPy kernels (which themselves use the
-O(n log n) FFT path for long channels, the chunked-filtering scale story of
+is one ``applyInPandas`` body over a group of channels — one channel per
+group, or a hash bucket of them (planner.group_apply) — running the
+vendored NumPy ragged batch kernels (which themselves use the O(n log n)
+FFT path for long channels, the chunked-filtering scale story of
 SURVEY.md §7.3.1).
 
-Filter coefficients are designed *driver-side* from the channel catalog's
-samplerate (constant-folded into the UDF closure) when all channels share a
-rate, or per-group from the group's own time base otherwise.
+Filter coefficients are designed per group from each channel's own time
+base (``_infer_sr``), once per distinct rate; the chunked mode designs
+driver-side from the declared ``samplerate``.
 
 Scale note: groups are independent, so 1e6 channels fan out across
 executors; the shuffle is one pass on ``channel_id``.  A channel too big
@@ -28,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pandas_sigproc_spark.planner import bucket_expr as _bucket_expr
+from pandas_sigproc_spark.planner import channel_arrays, group_apply
 
 from pandas_sigproc_spark.kernels import design as _design
 from pandas_sigproc_spark.kernels import iir as _iir
@@ -54,51 +55,31 @@ def _infer_sr(t: np.ndarray) -> float:
 def _apply_filter(
     df: DataFrame, make_ba, zero_phase: bool, n_buckets: int | None = None
 ) -> DataFrame:
-    """Shared applyInPandas driver: design (b, a) per group, run the IIR.
+    """Shared applyInPandas driver: design (b, a) per samplerate, run the
+    IIR over every channel of the group.
 
-    ``n_buckets=None``: one Arrow group per channel (huge channels).
-    ``n_buckets=K``: channels are hashed into K buckets and each task
-    filters its whole bucket as a (channels x time) matrix with the
-    batched kernels — same results, but per-channel Arrow/FFT overhead is
-    amortized ~bucket-size times.  The right mode at 100 TB depends on
-    channel length: many small channels -> bucket; few huge ones -> per
-    channel (SURVEY.md §7.3.1).
+    ``n_buckets=None`` groups one channel; ``n_buckets=K`` hashes channels
+    into K buckets, so each task filters its whole bucket with the ragged
+    batch kernels — per-channel Arrow and call overhead amortized ~bucket-size
+    times.  Both run this one body (planner.group_apply), and each row of
+    the ragged kernels is bit-identical to the 1-D kernel on that channel
+    alone, so the output does not depend on the mode.  Many small channels
+    -> bucket; few huge ones -> per channel (SURVEY.md §7.3.1).
     """
 
-    def one_channel(cid, t, y) -> pd.DataFrame:
-        sr = _infer_sr(t)
-        b, a = make_ba(sr)
-        out = _iir.filtfilt(b, a, y) if zero_phase else _iir.lfilter(b, a, y)
-        return pd.DataFrame({"channel_id": cid, "t": t, "value": out})
-
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["channel_id", "t"])
         pieces = []
-        # Batch channels per samplerate (one coefficient design each); the
-        # RAGGED batch kernels handle unequal lengths internally — short
-        # channels right-pad into one vectorized recursion (bit-identical
-        # per row to solo execution), long ones sub-group by exact length
-        # for the FFT path.  Grouping by (length, samplerate) here —
-        # round 3's scheme — fragmented buckets into per-length slivers
-        # whose Python-loop overhead dominated (BENCH r4: filt_butter
-        # 2.2x); one group per rate restores one kernel pass per bucket.
+        # Batch channels per samplerate (one coefficient design each),
+        # keyed by the inferred rate exactly as the design uses it.  The
+        # RAGGED batch kernels handle unequal lengths internally, so one
+        # group per rate is one kernel pass per bucket; grouping by
+        # (length, samplerate) — round 3's scheme — fragmented buckets
+        # into per-length slivers (BENCH r4: filt_butter 2.2x).
         groups: dict = {}
-        for cid, grp in pdf.groupby("channel_id", sort=False):
-            t = grp["t"].to_numpy(dtype=np.float64)
-            y = grp["value"].to_numpy(dtype=np.float64)
-            sr = _infer_sr(t)
-            groups.setdefault(round(sr, 9), []).append((cid, t, y))
+        for cid, t, y in channel_arrays(pdf):
+            groups.setdefault(_infer_sr(t), []).append((cid, t, y))
         for sr, members in groups.items():
             b, a = make_ba(sr)
-            if len(members) == 1:
-                cid, t, y = members[0]
-                out = (
-                    _iir.filtfilt(b, a, y) if zero_phase else _iir.lfilter(b, a, y)
-                )
-                pieces.append(
-                    pd.DataFrame({"channel_id": cid, "t": t, "value": out})
-                )
-                continue
             ys = [y for _, _, y in members]
             outs = (
                 _iirb.filtfilt_batch_ragged(b, a, ys)
@@ -111,22 +92,8 @@ def _apply_filter(
                 )
         return pd.concat(pieces, ignore_index=True)
 
-    src = df.select("channel_id", "t", "value")
-    if n_buckets is None:
-        def single(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("t")
-            return one_channel(
-                pdf["channel_id"].iloc[0],
-                pdf["t"].to_numpy(dtype=np.float64),
-                pdf["value"].to_numpy(dtype=np.float64),
-            )
-
-        return src.groupBy("channel_id").applyInPandas(single, _OUT_SCHEMA)
-    bucketed = src.withColumn(
-        "_b", _bucket_expr("channel_id", n_buckets)
-    )
-    return bucketed.groupBy("_b").applyInPandas(
-        lambda pdf: kernel(pdf.drop(columns=["_b"])), _OUT_SCHEMA
+    return group_apply(
+        df.select("channel_id", "t", "value"), kernel, _OUT_SCHEMA, n_buckets
     )
 
 

@@ -16,8 +16,10 @@ Spark-first decomposition (SURVEY.md §2.8 row get_psd):
    rescales are a per-channel broadcast join of a 1-row factor table.
 
 For moderate channels (fits comfortably in one task) the whole-channel
-kernel path (``welch_psd``) avoids the explode; ``segmented=True`` picks
-the scale path.
+path avoids the explode: one body stacks the Welch segments of every
+channel in its group — one channel, or a hash bucket of small ones — into
+one batched FFT, with ``welch_psd``'s numerics per channel.
+``segmented=True`` picks the scale path.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pandas_sigproc_spark.planner import bucket_expr as _bucket_expr
+from pandas_sigproc_spark.planner import channel_arrays, group_apply
 
 from pandas_sigproc_spark.kernels import spectral as _spectral
 
@@ -50,13 +52,17 @@ def get_psd(
     """Per-channel PSD -> spectra(channel_id, freq, power).
 
     ``summarize='all'`` returns (channel_id, seg, freq, power).
-    ``samplerate=None`` infers per group from the time base.
+    ``samplerate=None`` infers per channel from the time base; the rate,
+    declared or inferred, is used as is for the segment length and the
+    density scale.
     Execution modes by channel size (SURVEY.md §7.3.1): ``n_buckets=K``
     batches many small channels per task with one stacked FFT;
     ``segmented=True`` splits one huge channel across tasks (relational
-    segment ids + per-segment FFT); per-channel otherwise.  Both default
-    to ``"auto"``: the mode is picked from per-channel row statistics
-    (planner.py) so the 100 TB plan needs no kwargs; explicit values win.
+    segment ids + per-segment FFT); per-channel otherwise, which runs the
+    bucketed body with one channel per group, so the two give the same
+    bits.  Both default to ``"auto"``: the mode is picked from
+    per-channel row statistics (planner.py) so the 100 TB plan needs no
+    kwargs; explicit values win.
     """
     if segmented == "auto" or n_buckets == "auto":
         from pandas_sigproc_spark import planner
@@ -77,19 +83,7 @@ def get_psd(
             " got segmented=True with window_length=None"
         )
     if window_length is None or not segmented:
-        if n_buckets is not None and summarize != "all":
-            return _bucketed_psd(
-                df,
-                window_length,
-                overlap,
-                window_type,
-                summarize,
-                fatigue_exponent,
-                detrend,
-                samplerate,
-                n_buckets,
-            )
-        return _whole_channel_psd(
+        return _bucketed_psd(
             df,
             window_length,
             overlap,
@@ -98,6 +92,7 @@ def get_psd(
             fatigue_exponent,
             detrend,
             samplerate,
+            n_buckets,
         )
     return _segmented_psd(
         df,
@@ -112,59 +107,6 @@ def get_psd(
     )
 
 
-def _whole_channel_psd(
-    df, window_length, overlap, window_type, summarize, fatigue_exponent, detrend, sr
-):
-    out_schema = _SEG_SCHEMA if summarize == "all" else _SPECTRA_SCHEMA
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        t = pdf["t"].to_numpy(dtype=np.float64)
-        y = pdf["value"].to_numpy(dtype=np.float64)
-        rate = sr if sr is not None else _infer_sr(t)
-        freq, pxx = _spectral.welch_psd(
-            y,
-            rate,
-            window_length=window_length,
-            overlap=overlap,
-            window_type=window_type,
-            summarize=summarize,
-            fatigue_exponent=fatigue_exponent,
-            detrend=detrend,
-        )
-        cid = pdf["channel_id"].iloc[0]
-        if summarize == "all":
-            if window_length is not None:
-                n_seg, n_bin = pxx.shape
-                return pd.DataFrame(
-                    {
-                        "channel_id": cid,
-                        "seg": np.repeat(np.arange(n_seg), n_bin),
-                        "freq": np.tile(freq, n_seg),
-                        "power": pxx.ravel(),
-                    }
-                )
-            # 'all' with the default window_length: the whole signal is
-            # ONE segment — emit it as seg 0 (a review finding: the
-            # fallthrough returned 3 columns against the 4-column
-            # schema and crashed with RESULT_COLUMN_NAMES_MISMATCH)
-            return pd.DataFrame(
-                {
-                    "channel_id": cid,
-                    "seg": np.zeros(len(freq), dtype=np.int64),
-                    "freq": freq,
-                    "power": pxx,
-                }
-            )
-        return pd.DataFrame({"channel_id": cid, "freq": freq, "power": pxx})
-
-    return (
-        df.select("channel_id", "t", "value")
-        .groupBy("channel_id")
-        .applyInPandas(kernel, out_schema)
-    )
-
-
 def _bucketed_psd(
     df,
     window_length,
@@ -176,47 +118,55 @@ def _bucketed_psd(
     sr,
     n_buckets,
 ):
-    """Many-small-channels path: hash channels into buckets; inside each
-    task, stack every channel's Welch segments into ONE batched FFT call,
-    then reduce per channel.  Identical numerics to the per-channel path
-    (asserted in tests); ~bucket-size fewer Arrow groups and FFT setups.
+    """Whole-channel path: inside each group (one channel, or a hash
+    bucket of them — planner.group_apply), stack every channel's Welch
+    segments into ONE batched FFT call, then reduce per channel.  Rows of
+    the batch never interact, so each channel's spectrum is bit-identical
+    to ``welch_psd`` on it alone (asserted in tests); bucketing cuts
+    ~bucket-size Arrow groups and FFT setups.
     """
+    all_segs = summarize == "all"
+
+    def emit(cid, freq, pxx) -> pd.DataFrame:
+        if not all_segs:
+            return pd.DataFrame({"channel_id": cid, "freq": freq, "power": pxx})
+        # 'all' keeps one periodogram per segment; the whole-signal
+        # periodogram of window_length=None is segment 0.
+        pxx = np.atleast_2d(pxx)
+        n_seg, n_bin = pxx.shape
+        return pd.DataFrame(
+            {
+                "channel_id": cid,
+                "seg": np.repeat(np.arange(n_seg), n_bin),
+                "freq": np.tile(freq, n_seg),
+                "power": pxx.ravel(),
+            }
+        )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["channel_id", "t"])
         pieces = []
-        chans = []
-        for cid, grp in pdf.groupby("channel_id", sort=False):
-            t = grp["t"].to_numpy(dtype=np.float64)
-            y = grp["value"].to_numpy(dtype=np.float64)
-            rate = sr if sr is not None else _infer_sr(t)
-            chans.append((cid, y, rate))
-        # One group per samplerate: Welch segments are all n_window long
-        # regardless of the channel's own length, so EVERY member's
-        # segments stack into a single batched FFT (per-row numerics are
-        # unchanged — rfft rows are independent).  Grouping by
-        # (rate, length) — round 3's scheme — fragmented buckets into one
-        # FFT call per distinct channel length.
+        # One group per samplerate — the declared one, or each channel's
+        # inferred rate exactly as the design uses it: Welch segments are
+        # all n_window long regardless of the channel's own length, so
+        # EVERY member's segments stack into a single batched FFT.
+        # Grouping by (rate, length) — round 3's scheme — fragmented
+        # buckets into one FFT call per distinct channel length.
         groups: dict = {}
-        for cid, y, rate in chans:
-            groups.setdefault(round(rate, 9), []).append((cid, y))
+        for cid, t, y in channel_arrays(pdf):
+            rate = sr if sr is not None else _infer_sr(t)
+            groups.setdefault(rate, []).append((cid, y))
         for rate, members in groups.items():
             if window_length is None:
                 # Whole-channel periodograms need equal lengths per call.
                 by_len: dict = {}
                 for cid, y in members:
                     by_len.setdefault(len(y), []).append((cid, y))
-                for _n, mem in by_len.items():
+                for mem in by_len.values():
                     X = np.stack([y for _, y in mem])
                     freq, pxx = _spectral.periodogram(X, rate, "boxcar", "constant")
                     keep = freq > 0
                     for row, (cid, _y) in enumerate(mem):
-                        pieces.append(
-                            pd.DataFrame(
-                                {"channel_id": cid, "freq": freq[keep],
-                                 "power": pxx[row][keep]}
-                            )
-                        )
+                        pieces.append(emit(cid, freq[keep], pxx[row][keep]))
                 continue
             n_window = int(rate * window_length)
             n_overlap = int(round(n_window * overlap))
@@ -238,18 +188,14 @@ def _bucketed_psd(
                 sub = psd_all[pos: pos + n_seg]
                 pos += n_seg
                 pxx = _spectral.summarize_psds(sub, freq, summarize, fatigue_exponent)
-                pieces.append(
-                    pd.DataFrame(
-                        {"channel_id": cid, "freq": freq[keep], "power": pxx[keep]}
-                    )
-                )
+                pieces.append(emit(cid, freq[keep], pxx[..., keep]))
         return pd.concat(pieces, ignore_index=True)
 
-    src = df.select("channel_id", "t", "value").withColumn(
-        "_b", _bucket_expr("channel_id", n_buckets)
-    )
-    return src.groupBy("_b").applyInPandas(
-        lambda pdf: kernel(pdf.drop(columns=["_b"])), _SPECTRA_SCHEMA
+    return group_apply(
+        df.select("channel_id", "t", "value"),
+        kernel,
+        _SEG_SCHEMA if all_segs else _SPECTRA_SCHEMA,
+        n_buckets,
     )
 
 

@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark.planner import bucket_expr as _bucket_expr
+from pandas_sigproc_spark.planner import group_apply
 
 from pandas_sigproc_spark.kernels import rainflow as _rf
 
@@ -55,21 +55,16 @@ def rainflow(
     if n_buckets == "auto":
         from pandas_sigproc_spark import planner
 
-        stats = planner.get_stats(df)
-        if stats.max_rows > planner.HUGE_CHANNEL_ROWS:
+        n_buckets, chunk_rows = planner.auto_rainflow_mode(df)
+        if chunk_rows is not None:
             return rainflow_chunked(
                 df,
-                chunk_rows=planner.HUGE_CHANNEL_ROWS // 4,
+                chunk_rows=chunk_rows,
                 ndigits=ndigits,
                 nbins=nbins,
                 binsize=binsize,
                 order_cols=order_cols,
             )
-        if stats.max_rows <= planner.SMALL_CHANNEL_ROWS and stats.n_channels > 1:
-            cpus = df.sparkSession.sparkContext.defaultParallelism
-            n_buckets = min(4 * cpus, max(stats.n_channels // 4, 1))
-        else:
-            n_buckets = None
 
     def one(cid, y: np.ndarray) -> pd.DataFrame:
         pairs = _rf.count_cycles(y, ndigits=ndigits, nbins=nbins, binsize=binsize)
@@ -94,14 +89,8 @@ def rainflow(
             return pd.DataFrame(columns=["channel_id", "bin", "cycles"])
         return pd.concat(pieces, ignore_index=True)
 
-    src = df.select("channel_id", *order_cols, "value")
-    if n_buckets is None:
-        return src.groupBy("channel_id").applyInPandas(kernel, _OUT_SCHEMA)
-    from pyspark.sql import functions as F
-
-    bucketed = src.withColumn("_b", _bucket_expr("channel_id", n_buckets))
-    return bucketed.groupBy("_b").applyInPandas(
-        lambda pdf: kernel(pdf.drop(columns=["_b"])), _OUT_SCHEMA
+    return group_apply(
+        df.select("channel_id", *order_cols, "value"), kernel, _OUT_SCHEMA, n_buckets
     )
 
 

@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from pandas_sigproc_spark.planner import bucket_expr as _bucket_expr
+from pandas_sigproc_spark.planner import group_apply
 
 from pandas_sigproc_spark.kernels.srs import (
     build_freq_array,
@@ -146,9 +146,6 @@ def _get_srs_bucketed(df, freq, quality_factor, n_buckets):
             )
         return pd.concat(pieces, ignore_index=True)
 
-    src = df.select("channel_id", "t", "value").withColumn(
-        "_b", _bucket_expr("channel_id", n_buckets)
-    )
-    return src.groupBy("_b").applyInPandas(
-        lambda pdf: kernel(pdf.drop(columns=["_b"])), _OUT_SCHEMA
+    return group_apply(
+        df.select("channel_id", "t", "value"), kernel, _OUT_SCHEMA, n_buckets
     )

@@ -40,9 +40,9 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark.planner import bucket_expr as _bucket_expr
+from pandas_sigproc_spark.planner import channel_arrays, group_apply
 
 from pandas_sigproc_spark.kernels import design as _design
 from pandas_sigproc_spark.kernels import iir as _iir
@@ -144,8 +144,8 @@ class _IntegralStage:
     name = "int"
 
     def run(self, t: np.ndarray, y: np.ndarray, sr: float):
-        # empty channels never reach a stage: the apply() stage loops
-        # hold the single empty-propagation guard (one home)
+        # empty channels never reach a stage: the apply() stage loop
+        # holds the single empty-propagation guard (one home)
         seg = (y[1:] + y[:-1]) / 2.0 * np.diff(t)
         return t, np.concatenate([[0.0], np.cumsum(seg)]), sr
 
@@ -245,11 +245,12 @@ class KernelPipeline:
         """Run all stages in one grouped kernel.
 
         ``n_buckets=None``: one Arrow group per channel.  ``n_buckets=K``:
-        channels hash into K buckets; the leading run of filter stages
-        executes as one (channels × time) matrix op per same-shape batch,
-        and stages from the first resample onward run per channel (the
-        grid depends on each channel's own time range) — the same two
-        fan-out modes as ``operators/filters.py``.
+        channels hash into K buckets.  Both run one body
+        (planner.group_apply): the leading run of filter stages executes
+        through the ragged batch kernels, one call per samplerate in the
+        group, and the stages after it run per channel (a resample grid
+        depends on each channel's own time range) — the same two fan-out
+        modes as ``operators/filters.py``, with the same bits.
         """
         if not self._stages:
             raise ValueError("KernelPipeline has no stages")
@@ -292,75 +293,51 @@ class KernelPipeline:
                     f" ({len(t)} rows at this stage): {e}"
                 ) from e
 
-        def run_all(cid, t: np.ndarray, y: np.ndarray):
-            # samplerate is inferred LAZILY, at the first stage that
-            # actually reads it: a chain of only window-math stages
-            # (detrend -> integral, say) accepts non-uniform and
-            # single-sample channels exactly like the standalone
-            # operators (SURVEY §7.3.3), instead of refusing them with
-            # a filter-tier error no stage in the chain justifies (an
-            # r15 review finding — eager inference ran even when no
-            # stage consumed sr)
-            sr = None
-            for s in stages:
-                if len(t) == 0:
-                    # a prior stage emptied the channel (mov_rms window
-                    # longer than a short channel): every stage maps
-                    # empty -> empty, so stop instead of letting a
-                    # filter/detrend stage crash on a 0-length array —
-                    # one straggler channel must never kill the job
-                    # (a review finding: the first guard landed only in
-                    # integral/resample, not the stage loop — this loop
-                    # is now the ONE home of the empty rule)
-                    break
-                if getattr(s, "needs_sr", False) and sr is None:
-                    sr = named_sr(cid, t)
-                t, y, sr = run_stage(s, cid, t, y, sr)
-            return t, y
-
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["channel_id", "t"])
             pieces = []
-            # One group per samplerate: the RAGGED batch kernels handle
-            # unequal lengths internally (bit-identical per row to solo
-            # execution — kernels/iir_batch).  Grouping by (length, sr)
-            # fragmented buckets into per-length slivers whose dispatch
-            # overhead dominated (same fix as operators/filters.py).
+            # One group per samplerate: the leading filter stages share
+            # one (b, a) design per rate, and the RAGGED batch kernels
+            # handle unequal lengths internally (bit-identical per row to
+            # solo execution — kernels/iir_batch).  Grouping by
+            # (length, sr) fragmented buckets into per-length slivers
+            # whose dispatch overhead dominated (same fix as
+            # operators/filters.py).  Without leading filter stages sr
+            # is inferred LAZILY, at the first stage that reads it: a
+            # chain of only window-math stages (detrend -> integral, say)
+            # accepts non-uniform and single-sample channels exactly like
+            # the standalone operators (SURVEY §7.3.3).
             groups: dict = {}
-            for cid, grp in pdf.groupby("channel_id", sort=False):
-                t = grp["t"].to_numpy(dtype=np.float64)
-                y = grp["value"].to_numpy(dtype=np.float64)
-                if n_batchable:
-                    # the sr-grouping exists only for the ragged batch
-                    # kernel (leading filter stages share one (b, a)
-                    # design per rate); without batchable stages sr is
-                    # inferred lazily per channel like run_all — see
-                    # the r15 lazy-sr note there
-                    sr = named_sr(cid, t)
-                    groups.setdefault(round(sr, 9), []).append((cid, t, y))
-                else:
-                    groups.setdefault(None, []).append((cid, t, y))
+            for cid, t, y in channel_arrays(pdf):
+                sr = named_sr(cid, t) if n_batchable else None
+                groups.setdefault(sr, []).append((cid, t, y))
             for sr, members in groups.items():
-                if len(members) > 1 and n_batchable:
+                if n_batchable:
                     ys = [y for _, _, y in members]
                     for s in stages[:n_batchable]:
                         try:
                             ys = s.run_batch_ragged(ys, sr)
                         except ValueError as e:
-                            cids = [c for c, _, _ in members]
+                            chans = ", ".join(
+                                f"{c!r} ({len(t)} rows)" for c, t, _ in members
+                            )
                             raise ValueError(
                                 f"fused stage {s.name} failed on a batch"
-                                f" of channels {cids!r}: {e}"
+                                f" of channels {chans}: {e}"
                             ) from e
                     members = [
-                        (cid, t, ys[row]) for row, (cid, t, _y) in enumerate(members)
+                        (cid, t, y) for (cid, t, _y), y in zip(members, ys)
                     ]
                 for cid, t, y in members:
                     cur_sr = sr
-                    for s in (
-                        stages[n_batchable:] if len(members) > 1 else stages
-                    ):
-                        if len(t) == 0:  # emptied: every stage maps empty->empty
+                    for s in stages[n_batchable:]:
+                        if len(t) == 0:
+                            # a prior stage emptied the channel (mov_rms
+                            # window longer than a short channel): every
+                            # stage maps empty -> empty, so stop instead of
+                            # letting a filter/detrend stage crash on a
+                            # 0-length array — one straggler channel must
+                            # never kill the job.  This loop is the ONE
+                            # home of the empty rule.
                             break
                         if getattr(s, "needs_sr", False) and cur_sr is None:
                             cur_sr = named_sr(cid, t)
@@ -370,22 +347,8 @@ class KernelPipeline:
                     )
             return pd.concat(pieces, ignore_index=True)
 
-        src = df.select("channel_id", "t", "value")
-        if n_buckets is None:
-            def single(pdf: pd.DataFrame) -> pd.DataFrame:
-                pdf = pdf.sort_values("t")
-                cid = pdf["channel_id"].iloc[0]
-                t, y = run_all(
-                    cid,
-                    pdf["t"].to_numpy(dtype=np.float64),
-                    pdf["value"].to_numpy(dtype=np.float64),
-                )
-                return pd.DataFrame({"channel_id": cid, "t": t, "value": y})
-
-            return src.groupBy("channel_id").applyInPandas(single, _OUT_SCHEMA)
-        bucketed = src.withColumn("_b", _bucket_expr("channel_id", n_buckets))
-        return bucketed.groupBy("_b").applyInPandas(
-            lambda pdf: kernel(pdf.drop(columns=["_b"])), _OUT_SCHEMA
+        return group_apply(
+            df.select("channel_id", "t", "value"), kernel, _OUT_SCHEMA, n_buckets
         )
 
     def lineage_name(self, name: str) -> str:

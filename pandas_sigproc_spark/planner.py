@@ -10,6 +10,11 @@ SURVEY.md §7.3.1 gives every whole-channel kernel three execution modes:
                  for any single task: overlap-save filtering, relational
                  Welch segmentation).
 
+Per-channel and bucketed are one body with two group keys
+(:func:`group_apply`): each operator writes only the bucket body, and
+per-channel execution runs it with one channel per group, so a channel's
+output never depends on which of the two the planner picked.
+
 Through round 3 these were opt-in kwargs, so a naive 100 TB user got the
 one-task-per-channel plan by default.  This module makes the scale path
 the DEFAULT: operators pass ``"auto"`` and the planner picks the mode
@@ -27,6 +32,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 #: Above this many rows, one channel is too big to give a single task
@@ -98,19 +105,68 @@ def get_stats(df: DataFrame) -> ChannelStats:
     return stats
 
 
-def bucket_expr(col: str = "channel_id", n_buckets: int = 1):
-    """Deterministic channel->bucket id in [0, n_buckets) for the
-    batched-kernel operators (filters/psd/srs/rainflow/custom/fused) —
-    ONE home for the formula (a review finding counted six hand
-    copies).  ``pmod``, not ``abs(hash) % n``: ``F.hash`` is 32-bit and
-    ``abs(Integer.MIN_VALUE)`` stays negative, so the old form could
-    emit a stray negative bucket id (harmless for batching, but a
-    surprise to anything keying on the range)."""
-    return F.pmod(F.hash(col), F.lit(int(n_buckets)))
+def group_apply(src: DataFrame, body, schema, n_buckets: int | None) -> DataFrame:
+    """Run ``body(pdf) -> pdf`` over the channel groups of ``src`` — the
+    one per-channel / bucketed fork of the channel operators
+    (filters/psd/srs/rainflow/custom/fused).
+
+    ``n_buckets=None`` keys by ``channel_id`` (one channel per group);
+    ``n_buckets=K`` keys by ``pmod(hash(channel_id), K)``.  ``body``
+    always sees the source columns only, so it is written once, for a
+    group of any number of channels.  ``pmod``, not ``abs(hash) % K``:
+    ``F.hash`` is 32-bit and ``abs(Integer.MIN_VALUE)`` stays negative.
+    """
+    if n_buckets is None:
+        return src.groupBy("channel_id").applyInPandas(body, schema)
+    keyed = src.withColumn("_b", F.pmod(F.hash("channel_id"), F.lit(int(n_buckets))))
+    return keyed.groupBy("_b").applyInPandas(
+        lambda pdf: body(pdf.drop(columns=["_b"])), schema
+    )
 
 
-def _cpus(df: DataFrame) -> int:
-    return df.sparkSession.sparkContext.defaultParallelism
+def channel_arrays(pdf: pd.DataFrame) -> list:
+    """Split a group frame into ``(channel_id, t, value)`` arrays, one
+    triple per channel, each sorted by ``t`` — the first step of the
+    filter, PSD and fused :func:`group_apply` bodies.
+
+    NumPy argsorts instead of a ``(channel_id, t)`` frame sort: the
+    frame sort factorizes the string column inside a lexsort and cost a
+    one-channel group of 100,000 rows ~5x the ``t``-only sort of a
+    per-channel body.  Two cheaper cases are taken first, so a
+    per-channel group costs no more than that ``t``-only sort: a group
+    of one channel (every group under the ``channel_id`` key) skips the
+    string factorize, and rows already in ``(channel, t)`` order — the
+    usual arrival, one time-ordered run per channel — skip the sorts.
+    A null ``channel_id`` is a channel of its own, as under the
+    ``channel_id`` group key.
+    """
+    t = pdf["t"].to_numpy(dtype=np.float64)
+    y = pdf["value"].to_numpy(dtype=np.float64)
+    ids = pdf["channel_id"].to_numpy()
+    if len(ids) and ids[0] == ids[-1] and (ids == ids[0]).all():
+        codes, cids = np.zeros(len(ids), dtype=np.intp), [ids[0]]
+    else:
+        codes, cids = pd.factorize(ids)
+        cids = list(cids)
+        if len(codes) and codes.min() < 0:
+            codes = np.where(codes < 0, len(cids), codes)
+            cids.append(None)
+    dc, dt = np.diff(codes), np.diff(t)
+    if ((dc > 0) | ((dc == 0) & (dt >= 0))).all():
+        order = np.arange(len(t))
+    else:
+        by_t = np.argsort(t)
+        order = by_t[np.argsort(codes[by_t], kind="stable")]
+    cuts = np.cumsum(np.bincount(codes, minlength=len(cids)))[:-1]
+    return [(cid, t[i], y[i]) for cid, i in zip(cids, np.split(order, cuts))]
+
+
+def _fleet_buckets(df: DataFrame, s: ChannelStats) -> int | None:
+    """Bucket count for a fleet of small channels, else None (per-channel)."""
+    if s.max_rows <= SMALL_CHANNEL_ROWS and s.n_channels > 1:
+        cpus = df.sparkSession.sparkContext.defaultParallelism
+        return min(4 * cpus, max(s.n_channels // 4, 1))
+    return None
 
 
 def auto_filter_mode(df: DataFrame, samplerate: float | None):
@@ -124,9 +180,17 @@ def auto_filter_mode(df: DataFrame, samplerate: float | None):
     s = get_stats(df)
     if s.max_rows > HUGE_CHANNEL_ROWS and samplerate is not None:
         return None, HUGE_CHANNEL_ROWS // 4
-    if s.max_rows <= SMALL_CHANNEL_ROWS and s.n_channels > 1:
-        return min(4 * _cpus(df), max(s.n_channels // 4, 1)), None
-    return None, None
+    return _fleet_buckets(df, s), None
+
+
+def auto_rainflow_mode(df: DataFrame):
+    """(n_buckets, chunk_rows) for rainflow: a channel above the per-task
+    bound takes the segmented residue-merge plan, small-channel fleets
+    bucket, else per-channel."""
+    s = get_stats(df)
+    if s.max_rows > HUGE_CHANNEL_ROWS:
+        return None, HUGE_CHANNEL_ROWS // 4
+    return _fleet_buckets(df, s), None
 
 
 def auto_psd_mode(df: DataFrame, samplerate: float | None, window_length):
@@ -138,9 +202,7 @@ def auto_psd_mode(df: DataFrame, samplerate: float | None, window_length):
         and window_length is not None
     ):
         return None, True
-    if s.max_rows <= SMALL_CHANNEL_ROWS and s.n_channels > 1:
-        return min(4 * _cpus(df), max(s.n_channels // 4, 1)), False
-    return None, False
+    return _fleet_buckets(df, s), False
 
 
 def auto_window_mode(df: DataFrame):
@@ -163,6 +225,4 @@ def auto_srs_mode(df: DataFrame):
     if s.max_rows > HUGE_CHANNEL_ROWS:
         # One huge channel: fan the frequency axis out instead.
         return None, 8
-    if s.max_rows <= SMALL_CHANNEL_ROWS and s.n_channels > 1:
-        return min(4 * _cpus(df), max(s.n_channels // 4, 1)), 1
-    return None, 1
+    return _fleet_buckets(df, s), 1

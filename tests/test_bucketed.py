@@ -1,13 +1,18 @@
 """Bucketed (many-channels-per-task) execution must be numerically
-identical to per-channel execution — same kernels, different batching.
-This is the shuffle-invariance scale test of SURVEY.md §5.2.5."""
+identical to per-channel execution — one body, different group keys.
+This is the shuffle-invariance scale test of SURVEY.md §5.2.5: every
+operator case runs the per-channel side with ``n_buckets=None`` (the
+``"auto"`` default buckets these fleets too)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from pandas_sigproc_spark import kernels as K
-from pandas_sigproc_spark.kernels.iir_batch import filtfilt_batch, lfilter_batch
+from pandas_sigproc_spark.kernels.iir_batch import (
+    filtfilt_batch_ragged,
+    lfilter_batch_ragged,
+)
 from pandas_sigproc_spark.operators import filt_a, filt_butter, get_psd, get_srs
 from tests.conftest import make_signals
 
@@ -26,20 +31,22 @@ def many_channels(spark):
 
 class TestBatchKernels:
     def test_lfilter_batch_matches_rows(self):
+        # equal-length rows above the 2,048-sample loop cutover keep the
+        # 1-D kernel's bits whatever else shares the call
         rng = np.random.default_rng(0)
-        X = rng.standard_normal((5, 4000))
+        X = list(rng.standard_normal((5, 4000)))
         b, a = K.butter(3, 0.2, "lowpass")
-        Y = lfilter_batch(b, a, X)
+        Y = lfilter_batch_ragged(b, a, X)
         for i in range(5):
-            np.testing.assert_allclose(Y[i], K.lfilter(b, a, X[i]), rtol=1e-9, atol=1e-12)
+            np.testing.assert_array_equal(Y[i], K.lfilter(b, a, X[i]))
 
     def test_filtfilt_batch_matches_rows(self):
         rng = np.random.default_rng(1)
-        X = rng.standard_normal((7, 3000))
+        X = list(rng.standard_normal((7, 3000)))
         b, a = K.butter(2, 0.1, "lowpass")
-        Y = filtfilt_batch(b, a, X)
+        Y = filtfilt_batch_ragged(b, a, X)
         for i in range(7):
-            np.testing.assert_allclose(Y[i], K.filtfilt(b, a, X[i]), rtol=1e-9, atol=1e-11)
+            np.testing.assert_array_equal(Y[i], K.filtfilt(b, a, X[i]))
 
     def test_srs_multi_matches_single(self):
         rng = np.random.default_rng(2)
@@ -56,6 +63,41 @@ class TestBatchKernels:
             np.testing.assert_allclose(neg_m[i], neg, rtol=1e-10)
 
 
+def test_channel_arrays_sorts_each_channel_and_keeps_null_ids():
+    import pandas as pd
+
+    from pandas_sigproc_spark.planner import channel_arrays
+
+    pdf = pd.DataFrame(
+        {"channel_id": ["b", None, "a", "b", None, "a"],
+         "t": [2.0, 1.0, 1.0, 1.0, 0.0, 0.0],
+         "value": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]}
+    )
+    got = {cid: (t.tolist(), y.tolist()) for cid, t, y in channel_arrays(pdf)}
+    assert got == {
+        "a": ([0.0, 1.0], [6.0, 3.0]),
+        "b": ([1.0, 2.0], [4.0, 1.0]),
+        None: ([0.0, 1.0], [5.0, 2.0]),
+    }
+    # one channel (the per-channel key), and rows already in (channel, t)
+    # order, take the shortcuts: same triples
+    for cids, ts in (
+        (["a", "a", "a"], [2.0, 0.0, 1.0]),
+        ([None, None, None], [2.0, 0.0, 1.0]),
+        (["b", "b", "a", "a"], [0.0, 1.0, 0.0, 1.0]),
+        (["b", "b", "a", "b"], [0.0, 1.0, 0.0, 2.0]),
+    ):
+        pdf = pd.DataFrame({"channel_id": cids, "t": ts,
+                            "value": np.arange(len(ts), dtype=float)})
+        got = {cid: (t.tolist(), y.tolist()) for cid, t, y in channel_arrays(pdf)}
+        want = {
+            cid: (g["t"].tolist(), g["value"].tolist())
+            for cid, g in pdf.sort_values("t").groupby("channel_id", dropna=False)
+        }
+        want = {None if cid is None or cid != cid else cid: v for cid, v in want.items()}
+        assert got == want, (cids, ts)
+
+
 class TestBucketedOperators:
     def _cmp(self, a_df, b_df, keys, atol=1e-11):
         a = a_df.orderBy(*keys).toPandas()
@@ -65,10 +107,16 @@ class TestBucketedOperators:
             a.iloc[:, -1].to_numpy(), b.iloc[:, -1].to_numpy(), rtol=1e-9, atol=atol
         )
 
+    def _same(self, a_df, b_df, keys):
+        a = a_df.orderBy(*keys).toPandas()
+        b = b_df.orderBy(*keys).toPandas()
+        assert len(a) == len(b)
+        assert a.equals(b), "bucketed output differs from per-channel bits"
+
     def test_filt_butter_bucketed(self, spark, many_channels):
         df, fs = many_channels
-        self._cmp(
-            filt_butter(df, 50.0, 2, "lowpass"),
+        self._same(
+            filt_butter(df, 50.0, 2, "lowpass", n_buckets=None),
             filt_butter(df, 50.0, 2, "lowpass", n_buckets=3),
             ["channel_id", "t"],
         )
@@ -77,17 +125,16 @@ class TestBucketedOperators:
         df, fs = many_channels
         # A-weighting needs audio-ish rates; rescale time to pretend 48k.
         fast = df.select("channel_id", (F.col("t") / 96.0).alias("t"), "value")
-        # A-weighting has near-unit-circle poles (20.6 Hz @ 48 kHz): the
-        # batch FFT path agrees with the exact recursion to ~1e-8 abs,
-        # not 1e-11 — fine for a dB-scale acoustics filter.
-        self._cmp(
-            filt_a(fast), filt_a(fast, n_buckets=3), ["channel_id", "t"], atol=1e-7
+        self._same(
+            filt_a(fast, n_buckets=None),
+            filt_a(fast, n_buckets=3),
+            ["channel_id", "t"],
         )
 
     def test_psd_bucketed(self, spark, many_channels):
         df, fs = many_channels
-        self._cmp(
-            get_psd(df, window_length=0.5, samplerate=fs),
+        self._same(
+            get_psd(df, window_length=0.5, samplerate=fs, n_buckets=None),
             get_psd(df, window_length=0.5, samplerate=fs, n_buckets=3),
             ["channel_id", "freq"],
         )
@@ -95,20 +142,92 @@ class TestBucketedOperators:
     @pytest.mark.parametrize("mode", ["median", "max rms", "damage"])
     def test_psd_bucketed_summarize(self, spark, many_channels, mode):
         df, fs = many_channels
-        self._cmp(
-            get_psd(df, window_length=0.5, summarize=mode, samplerate=fs),
+        self._same(
+            get_psd(df, window_length=0.5, summarize=mode, samplerate=fs,
+                    n_buckets=None),
             get_psd(df, window_length=0.5, summarize=mode, samplerate=fs, n_buckets=4),
             ["channel_id", "freq"],
+        )
+
+    @pytest.mark.parametrize("window_length", [0.5, None])
+    def test_psd_all_bucketed(self, spark, many_channels, window_length):
+        df, fs = many_channels
+        bucketed = get_psd(df, window_length=window_length, summarize="all",
+                           samplerate=fs, n_buckets=3)
+        # 'all' used to force per-channel keying whatever n_buckets said
+        assert "_b" in bucketed._jdf.queryExecution().analyzed().toString()
+        self._same(
+            get_psd(df, window_length=window_length, summarize="all",
+                    samplerate=fs, n_buckets=None),
+            bucketed,
+            ["channel_id", "seg", "freq"],
         )
 
     def test_srs_bucketed(self, spark, many_channels):
         df, fs = many_channels
         fn = [20.0, 50.0, 100.0]
         self._cmp(
-            get_srs(df, freq=fn),
+            get_srs(df, freq=fn, n_buckets=None),
             get_srs(df, freq=fn, n_buckets=3),
             ["channel_id", "freq"],
         )
+
+    def test_psd_explicit_rate_is_used_as_given(self, spark):
+        # int(round(1/3, 9) * 30) is 9, int(1/3 * 30) is 10: the bucketed
+        # body must segment with the caller's samplerate, not a rounded one
+        rng = np.random.default_rng(5)
+        t = np.arange(100) * 3.0
+        chans = {f"s{i:02d}": (t, rng.standard_normal(len(t))) for i in range(12)}
+        df = make_signals(spark, chans)
+        per = get_psd(df, window_length=30.0, samplerate=1 / 3, n_buckets=None)
+        assert per.count() == 12 * 5
+        self._same(
+            per,
+            get_psd(df, window_length=30.0, samplerate=1 / 3, n_buckets=3),
+            ["channel_id", "freq"],
+        )
+
+    @pytest.fixture(scope="class")
+    def hourly(self, spark):
+        # epoch-magnitude hourly grid: every diff is exactly 3600.0
+        rng = np.random.default_rng(6)
+        t = 1.7e9 + np.arange(300) * 3600.0
+        chans = {f"h{i:02d}": (t, rng.standard_normal(len(t))) for i in range(12)}
+        return make_signals(spark, chans)
+
+    def test_hourly_filt_butter_bit_equal(self, spark, hourly):
+        hz = 1.0 / 3600.0
+        self._same(
+            filt_butter(hourly, 0.3 * hz / 2, 4, "lowpass", n_buckets=None),
+            filt_butter(hourly, 0.3 * hz / 2, 4, "lowpass", n_buckets=3),
+            ["channel_id", "t"],
+        )
+
+    def test_hourly_psd_bit_equal(self, spark, hourly):
+        self._same(
+            get_psd(hourly, window_length=64 * 3600.0, n_buckets=None),
+            get_psd(hourly, window_length=64 * 3600.0, n_buckets=3),
+            ["channel_id", "freq"],
+        )
+
+    def test_long_channels_in_bucket(self, spark, many_channels):
+        # Three equal-length channels above the 2,048-sample loop cutover
+        # share one bucket with the short ones; each must keep its
+        # per-channel bits (long rows used to batch through an FFT helper
+        # that matched the 1-D kernel only to rtol 1e-9).
+        df, fs = many_channels
+        rng = np.random.default_rng(7)
+        t = np.arange(5000) / fs
+        long = make_signals(
+            spark, {f"long{i}": (t, rng.standard_normal(len(t))) for i in range(3)}
+        )
+        mixed = df.unionByName(long)
+        fast = mixed.select("channel_id", (F.col("t") / 96.0).alias("t"), "value")
+        for op, src in (
+            (lambda d, nb: filt_butter(d, 50.0, 2, "lowpass", n_buckets=nb), mixed),
+            (lambda d, nb: filt_a(d, n_buckets=nb), fast),
+        ):
+            self._same(op(src, None), op(src, 1), ["channel_id", "t"])
 
 
 class TestBucketedTable:

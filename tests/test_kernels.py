@@ -234,6 +234,23 @@ class TestSpectral:
         assert w[0] == 0.0
         np.testing.assert_allclose(w[1:], w[1:][::-1], atol=1e-15)
 
+    @pytest.mark.parametrize("detrend", ["linear", "constant", False])
+    def test_stacked_welch_segments_bit_equal_solo(self, detrend):
+        # A bucketed PSD stacks the Welch segments of every channel in its
+        # bucket into one periodogram call; no channel's bits may depend
+        # on how many neighbours share the stack.
+        fs, wl = 1000.0, 0.256
+        rng = np.random.default_rng(23)
+        t = np.arange(1000) / fs
+        chans = [rng.standard_normal(len(t)) + 3.0 * t * i for i in range(23)]
+        n = int(fs * wl)
+        segs = np.stack([c[s : s + n] for c in chans for s in range(0, 1000 - n + 1, n // 2)])
+        freq, stacked = periodogram(segs, fs, "hann", detrend, axis=1)
+        per = len(stacked) // len(chans)
+        for i, c in enumerate(chans):
+            f, solo = welch_psd(c, fs, wl, summarize="all", detrend=detrend)
+            assert (stacked[i * per : (i + 1) * per][:, freq > 0] == solo).all()
+
 
 class TestSrs:
     def test_freq_array_octave_spacing(self):
@@ -440,7 +457,7 @@ class TestDegenerateDesigns:
         rng = np.random.default_rng(3)
         X = rng.standard_normal((4, 3000))
         I._IR_CACHE.clear()
-        got = IB.lfilter_batch(b, a, X)
+        got = IB.lfilter_batch_ragged(b, a, list(X))
         for row in range(4):
             np.testing.assert_array_equal(got[row], I._lfilter_loop(b, a, X[row]))
 

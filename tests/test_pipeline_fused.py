@@ -234,6 +234,13 @@ def test_short_channel_filter_error_is_located(spark):
     pipe = KernelPipeline().mov_rms(0.5).filt_butter(2.0, 2, "lowpass")
     with _pytest.raises(Exception, match="fused stage.*tiny.*rows at this stage"):
         pipe.apply(df).collect()
+    # a leading filter stage runs batched: the error names every channel
+    # of the group with its row count, under either group key
+    for nb in (None, 2):
+        with _pytest.raises(Exception, match=r"fused stage.*'tiny' \(5 rows\)"):
+            KernelPipeline().filt_butter(2.0, 2, "lowpass").apply(
+                df.limit(5), n_buckets=nb
+            ).collect()
 
 
 def test_infer_sr_error_is_located(spark):

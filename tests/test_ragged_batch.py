@@ -1,7 +1,7 @@
 """Ragged batch IIR kernels (kernels/iir_batch): property-level pin that
-batching unequal-length channels NEVER changes any channel's bits on the
-loop path, and stays within FFT tolerance on the long path — the contract
-the bucketed operators and the production DuckDB oracles stand on."""
+batching unequal-length channels NEVER changes any channel's bits, on the
+loop path or the long path — the contract the bucketed operators and the
+production DuckDB oracles stand on."""
 
 import numpy as np
 import pytest
@@ -74,20 +74,29 @@ def test_ragged_lfilter_with_states_bit_equals_solo(lengths, seed):
 
 
 def test_ragged_mixes_loop_and_fft_paths():
-    # Short rows take the bit-exact loop; long rows (> _LOOP_CUTOVER) take
-    # the FFT path grouped by exact length — same rule as the 1-D kernel.
+    # Short rows take the shared exact loop; long rows (> _LOOP_CUTOVER)
+    # run the 1-D kernel's FFT path one by one — same bits either way.
     b, a = butter(2, 0.2, "lowpass")
     arrays = _arrays([100, 5000, 5000, 333, 4096])
     outs = filtfilt_batch_ragged(b, a, arrays)
     for x, got in zip(arrays, outs):
-        exp = filtfilt(b, a, x)
-        if len(x) + 18 <= 2048:
-            assert (got == exp).all()
-        else:
-            assert np.allclose(got, exp, rtol=1e-9, atol=1e-12)
+        assert (got == filtfilt(b, a, x)).all()
 
 
 def test_ragged_filtfilt_rejects_too_short():
     b, a = butter(2, 0.2, "lowpass")
     with pytest.raises(ValueError, match="padlen"):
         filtfilt_batch_ragged(b, a, [np.zeros(5)])
+
+
+@pytest.mark.parametrize("n", [1024, 5000])
+def test_equal_length_rows_bit_equal_1d(n):
+    # rows sharing a length above or below the cutover keep the 1-D
+    # kernel's bits, so a channel's bits never depend on its bucket
+    arrays = _arrays([300, 300, n, n, n], seed=11)
+    b, a = butter(2, 0.25, "lowpass")
+    outs = filtfilt_batch_ragged(b, a, arrays)
+    assert all((y == filtfilt(b, a, x)).all() for x, y in zip(arrays, outs))
+    b, a = a_weighting(48000.0)
+    outs = lfilter_batch_ragged(b, a, arrays)
+    assert all((y == lfilter(b, a, x)).all() for x, y in zip(arrays, outs))
