@@ -3194,7 +3194,11 @@ def _uniform(spark, sf_dir):
 
 def q_filt_cfc(spark, sf_dir):
     # CFC class scaled to the hourly band (cfc in "Hz" of this time base).
-    return filt_cfc(_uniform(spark, sf_dir), 0.05 * _HOURLY, n_buckets=32)
+    return filt_cfc(
+        _uniform(spark, sf_dir),
+        0.05 * _HOURLY,
+        n_buckets=spark.sparkContext.defaultParallelism,
+    )
 
 
 def q_filt_a(spark, sf_dir):
@@ -3208,7 +3212,7 @@ def q_filt_a(spark, sf_dir):
         ((F.row_number().over(w) - 1) / F.lit(48000.0)).alias("t"),
         "value",
     )
-    return filt_a(idx, n_buckets=32)
+    return filt_a(idx, n_buckets=spark.sparkContext.defaultParallelism)
 
 
 def q_filt_chain(spark, sf_dir):
@@ -3229,7 +3233,7 @@ def q_filt_chain(spark, sf_dir):
         KernelPipeline()
         .filt_butter(8000.0, 4, "lowpass")
         .filt_a()
-        .apply(idx, n_buckets=32)
+        .apply(idx, n_buckets=spark.sparkContext.defaultParallelism)
     )
 
 
@@ -3321,7 +3325,7 @@ def q_psd_welch(spark, sf_dir):
         overlap=0.5,
         summarize="mean",
         samplerate=_HOURLY,
-        n_buckets=32,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
     # Rounded for the hash gate vs the O(N^2)-DFT oracle
     # (oracle_prod.sql_psd_welch): powers are >= ~500 here, the FFT-DFT
@@ -3335,7 +3339,10 @@ def q_psd_welch(spark, sf_dir):
 def q_srs(spark, sf_dir):
     freq = [1e-5 * 2 ** (i / 3.0) for i in range(13)]  # sub-Nyquist band
     return get_srs(
-        _uniform(spark, sf_dir), freq=freq, quality_factor=10.0, n_buckets=32
+        _uniform(spark, sf_dir),
+        freq=freq,
+        quality_factor=10.0,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -3349,7 +3356,7 @@ def q_psd_damage(spark, sf_dir):
         summarize="damage",
         fatigue_exponent=4.0,
         samplerate=_HOURLY,
-        n_buckets=32,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
     # Rounded for the DFT-oracle hash gate (see q_psd_welch).
     return out.select(
@@ -3367,7 +3374,7 @@ def q_psd_median(spark, sf_dir):
         overlap=0.5,
         summarize="median",
         samplerate=_HOURLY,
-        n_buckets=32,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
     # Rounded for the DFT-oracle hash gate (see q_psd_welch).
     return out.select(
@@ -3384,7 +3391,7 @@ def q_psd_maxrms(spark, sf_dir):
         overlap=0.5,
         summarize="max rms",
         samplerate=_HOURLY,
-        n_buckets=32,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
     # Rounded for the DFT-oracle hash gate (see q_psd_welch).
     return out.select(
@@ -3445,7 +3452,7 @@ def q_psd_rms(spark, sf_dir):
         overlap=0.5,
         summarize="mean",
         samplerate=_HOURLY,
-        n_buckets=32,
+        n_buckets=spark.sparkContext.defaultParallelism,
     )
     return rms_lin(spec).select(
         "channel_id", F.round("rms_lin", 6).alias("rms_lin")
@@ -3467,7 +3474,12 @@ def q_rainflow(spark, sf_dir):
     return _compose_paths(
         (
             "global",
-            rainflow(sig, ndigits=2, n_buckets=32, order_cols=("t", "seq")),
+            rainflow(
+                sig,
+                ndigits=2,
+                n_buckets=spark.sparkContext.defaultParallelism,
+                order_cols=("t", "seq"),
+            ),
         ),
         (
             "chunked",
@@ -3492,7 +3504,13 @@ def q_filt_butter(spark, sf_dir):
     return _compose_paths(
         (
             "global",
-            filt_butter(uni, 0.3 * (_HOURLY / 2), 4, "lowpass", n_buckets=32),
+            filt_butter(
+                uni,
+                0.3 * (_HOURLY / 2),
+                4,
+                "lowpass",
+                n_buckets=spark.sparkContext.defaultParallelism,
+            ),
         ),
         (
             "chunked",

@@ -4,8 +4,16 @@ SURVEY.md §7.3.1 gives every whole-channel kernel three execution modes:
 
 - per-channel  — one Arrow group per channel (few medium channels);
 - bucketed     — hash channels into K buckets, one batched matrix kernel
-                 per task (fleets of SMALL channels: amortizes Arrow
-                 dispatch ~bucket-size times);
+                 per task slot (fleets of SMALL channels: amortizes Arrow
+                 dispatch ~bucket-size times).
+                 ``K = P * ceil(total_rows / (P * HUGE_CHANNEL_ROWS))``,
+                 capped at the channel count, with P the default
+                 parallelism; bucket ``b`` is placed on shuffle
+                 partition ``b mod P`` by id (Spark >= 4.1
+                 ``repartitionById``), so every task runs ``K / P``
+                 groups.  Fewer, larger groups are cheaper: the batched
+                 IIR and SRS recursions cost per sample per group,
+                 nearly independent of the group's row count;
 - segmented / chunked — split ONE channel across tasks (channels too big
                  for any single task: overlap-save filtering, relational
                  Welch segmentation).
@@ -110,17 +118,32 @@ def group_apply(src: DataFrame, body, schema, n_buckets: int | None) -> DataFram
     one per-channel / bucketed fork of the channel operators
     (filters/psd/srs/rainflow/custom/fused).
 
-    ``n_buckets=None`` keys by ``channel_id`` (one channel per group);
-    ``n_buckets=K`` keys by ``pmod(hash(channel_id), K)``.  ``body``
+    ``n_buckets=None`` keys by ``channel_id`` (one channel per group,
+    hash-placed on the shuffle partitions);
+    ``n_buckets=K`` keys by ``b = pmod(hash(channel_id), K)``.  ``body``
     always sees the source columns only, so it is written once, for a
     group of any number of channels.  ``pmod``, not ``abs(hash) % K``:
     ``F.hash`` is 32-bit and ``abs(Integer.MIN_VALUE)`` stays negative.
+
+    Buckets are placed by id, not hashed a second time: one
+    ``repartitionById(min(K, P), "_b")`` exchange (Spark >= 4.1) puts
+    bucket ``b`` on partition ``b mod P``, ``P`` the default parallelism,
+    and its partitioning satisfies the ``groupBy("_b")`` clustering, so
+    the grouping adds no exchange of its own.  Each task then runs
+    ``floor(K / P)`` or ``ceil(K / P)`` groups, where hashing the bucket
+    ids again would put 16 buckets on 4 tasks as 3/3/4/6, and ids 0..3
+    on two of them.  AQE does not coalesce this exchange, so its
+    ``minPartitionSize`` floor (``session.get_spark``) does not apply.
     """
     if n_buckets is None:
         return src.groupBy("channel_id").applyInPandas(body, schema)
-    keyed = src.withColumn("_b", F.pmod(F.hash("channel_id"), F.lit(int(n_buckets))))
-    return keyed.groupBy("_b").applyInPandas(
-        lambda pdf: body(pdf.drop(columns=["_b"])), schema
+    k = int(n_buckets)
+    slots = src.sparkSession.sparkContext.defaultParallelism
+    keyed = src.withColumn("_b", F.pmod(F.hash("channel_id"), F.lit(k)))
+    return (
+        keyed.repartitionById(min(k, slots), "_b")
+        .groupBy("_b")
+        .applyInPandas(lambda pdf: body(pdf.drop(columns=["_b"])), schema)
     )
 
 
@@ -162,10 +185,17 @@ def channel_arrays(pdf: pd.DataFrame) -> list:
 
 
 def _fleet_buckets(df: DataFrame, s: ChannelStats) -> int | None:
-    """Bucket count for a fleet of small channels, else None (per-channel)."""
+    """Bucket count for a fleet of small channels, else None (per-channel).
+
+    One group per task slot, ``P = defaultParallelism``, and a multiple
+    of ``P`` more when a group would pass HUGE_CHANNEL_ROWS rows — the
+    per-task bound a single channel gets — capped at one channel per
+    group (why fewer groups: the module docstring).
+    """
     if s.max_rows <= SMALL_CHANNEL_ROWS and s.n_channels > 1:
-        cpus = df.sparkSession.sparkContext.defaultParallelism
-        return min(4 * cpus, max(s.n_channels // 4, 1))
+        slots = df.sparkSession.sparkContext.defaultParallelism
+        per_slot = -(-s.total_rows // (slots * HUGE_CHANNEL_ROWS))
+        return min(slots * per_slot, s.n_channels)
     return None
 
 

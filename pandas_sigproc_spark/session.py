@@ -66,7 +66,9 @@ def get_spark(app_name: str = "pandas_sigproc_spark", cpus: int | None = None) -
         # whose partitions exceed advisoryPartitionSizeInBytes is
         # untouched, so at production scale (partitions >= 64 MB) the
         # setting is inert; parallelismFirst (default true) still caps
-        # the width at the cluster's parallelism.
+        # the width at the cluster's parallelism.  It governs per-channel
+        # kernels and the other hash exchanges; AQE never coalesces the
+        # bucketed kernels' id-placed exchange (planner.group_apply).
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "4k"),

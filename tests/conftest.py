@@ -2,13 +2,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pandas_sigproc_spark.session import get_spark
+from pandas_sigproc_spark.session import get_spark, host_cpus
 from pandas_sigproc_spark.schemas import SIGNALS_SCHEMA
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pandas_sigproc_spark_tests", cpus=8)
+    s = get_spark("pandas_sigproc_spark_tests", cpus=host_cpus())
     yield s
 
 

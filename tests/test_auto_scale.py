@@ -153,3 +153,28 @@ def test_auto_with_tiebreak_warns_on_huge_channel(spark):
         warnings.simplefilter("always")
         mov_rms(df2, 0.5, 16.0, tiebreak_col="value")
     assert not [w for w in rec2 if "single-task" in str(w.message)]
+
+
+@pytest.mark.parametrize(
+    ("n_channels", "max_rows"),
+    [(320, 1024), (2, 1024), (100_000, planner.SMALL_CHANNEL_ROWS)],
+)
+def test_fleet_buckets_one_group_per_task_slot(spark, n_channels, max_rows):
+    # One group per task slot (320 x 1,024 at P=4 gives 4), capped at one
+    # channel per group (2 channels give 2 buckets); a fleet whose rows
+    # pass P x HUGE_CHANNEL_ROWS gets a multiple of P, at most
+    # HUGE_CHANNEL_ROWS rows per group on average.
+    p = spark.sparkContext.defaultParallelism
+    df = _sig(spark)
+    total = n_channels * max_rows
+    planner.register_stats(df, planner.ChannelStats(n_channels, max_rows, total))
+    k, chunk = planner.auto_filter_mode(df, 16.0)
+    assert chunk is None
+    if total <= p * planner.HUGE_CHANNEL_ROWS:
+        assert k == min(p, n_channels)
+    else:
+        assert k % p == 0 and k > p
+        assert total / k <= planner.HUGE_CHANNEL_ROWS
+    assert planner.auto_psd_mode(df, 16.0, 2.0) == (k, False)
+    assert planner.auto_srs_mode(df) == (k, 1)
+    assert planner.auto_rainflow_mode(df) == (k, None)

@@ -4,6 +4,8 @@ This is the shuffle-invariance scale test of SURVEY.md §5.2.5: every
 operator case runs the per-channel side with ``n_buckets=None`` (the
 ``"auto"`` default buckets these fleets too)."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +16,7 @@ from pandas_sigproc_spark.kernels.iir_batch import (
     lfilter_batch_ragged,
 )
 from pandas_sigproc_spark.operators import filt_a, filt_butter, get_psd, get_srs
+from pandas_sigproc_spark.planner import group_apply
 from tests.conftest import make_signals
 
 
@@ -98,6 +101,49 @@ def test_channel_arrays_sorts_each_channel_and_keeps_null_ids():
         assert got == want, (cids, ts)
 
 
+class TestBucketPlacement:
+    """``group_apply`` places bucket ``b`` on shuffle partition ``b mod P``
+    through one id-passthrough exchange, so each task slot runs the same
+    number of groups (a hash exchange would place the bucket ids again)."""
+
+    @staticmethod
+    def _placed(df, k):
+        schema = "channel_id string, t double, value double"
+        out = group_apply(df, lambda pdf: pdf, schema, k)
+        return out, out.select(
+            "channel_id",
+            F.pmod(F.hash("channel_id"), F.lit(k)).alias("b"),
+            F.spark_partition_id().alias("pid"),
+        )
+
+    @pytest.mark.parametrize("ratio", ["below", "equal", "above"])
+    def test_one_passthrough_exchange(self, spark, many_channels, ratio):
+        p = spark.sparkContext.defaultParallelism
+        k = {"below": max(p // 2, 1), "equal": p, "above": 2 * p + 1}[ratio]
+        out, _ = self._placed(many_channels[0], k)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert re.findall(r"Exchange (\w+)\(", plan) == [
+            "shufflepartitionidpassthrough"
+        ], plan
+        n_parts = re.search(r"direct_shuffle_partition_id\(_b#\d+\), (\d+)\)", plan)
+        assert int(n_parts.group(1)) == min(k, p), plan
+
+    @pytest.mark.parametrize("ratio", ["equal", "above"])
+    def test_bucket_b_sits_in_partition_b_mod_p(self, spark, ratio):
+        p = spark.sparkContext.defaultParallelism
+        # K = P, and a K > P that is not a multiple of P (for P > 1)
+        k = {"equal": p, "above": 2 * p + 1}[ratio]
+        t = np.arange(8.0)
+        df = make_signals(spark, {f"c{i:03d}": (t, t * i) for i in range(6 * k)})
+        _, placed = self._placed(df.drop("ts"), k)
+        rows = placed.toPandas()
+        assert len(rows) == 6 * k * len(t)
+        pids = rows.groupby("b")["pid"].unique()
+        assert sorted(pids.index) == list(range(k))
+        for b, pid in pids.items():
+            assert list(pid) == [b % p], (b, list(pid))
+
+
 class TestBucketedOperators:
     def _cmp(self, a_df, b_df, keys, atol=1e-11):
         a = a_df.orderBy(*keys).toPandas()
@@ -115,11 +161,13 @@ class TestBucketedOperators:
 
     def test_filt_butter_bucketed(self, spark, many_channels):
         df, fs = many_channels
-        self._same(
-            filt_butter(df, 50.0, 2, "lowpass", n_buckets=None),
-            filt_butter(df, 50.0, 2, "lowpass", n_buckets=3),
-            ["channel_id", "t"],
-        )
+        # 3 buckets, and one per task slot (the planner's fleet count)
+        for nb in (3, spark.sparkContext.defaultParallelism):
+            self._same(
+                filt_butter(df, 50.0, 2, "lowpass", n_buckets=None),
+                filt_butter(df, 50.0, 2, "lowpass", n_buckets=nb),
+                ["channel_id", "t"],
+            )
 
     def test_filt_a_bucketed(self, spark, many_channels):
         df, fs = many_channels
@@ -133,11 +181,12 @@ class TestBucketedOperators:
 
     def test_psd_bucketed(self, spark, many_channels):
         df, fs = many_channels
-        self._same(
-            get_psd(df, window_length=0.5, samplerate=fs, n_buckets=None),
-            get_psd(df, window_length=0.5, samplerate=fs, n_buckets=3),
-            ["channel_id", "freq"],
-        )
+        for nb in (3, spark.sparkContext.defaultParallelism):
+            self._same(
+                get_psd(df, window_length=0.5, samplerate=fs, n_buckets=None),
+                get_psd(df, window_length=0.5, samplerate=fs, n_buckets=nb),
+                ["channel_id", "freq"],
+            )
 
     @pytest.mark.parametrize("mode", ["median", "max rms", "damage"])
     def test_psd_bucketed_summarize(self, spark, many_channels, mode):

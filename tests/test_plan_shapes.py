@@ -22,7 +22,9 @@ def _plan(df) -> str:
 
 
 def _shuffles(plan: str) -> int:
-    return len(re.findall(r"Exchange (hash|range)partitioning", plan))
+    # shufflepartitionidpassthrough: the bucketed kernels' id-placed exchange
+    kinds = "hashpartitioning|rangepartitioning|shufflepartitionidpassthrough"
+    return len(re.findall(rf"Exchange ({kinds})", plan))
 
 
 @pytest.fixture(scope="module")
@@ -57,6 +59,10 @@ def test_kernel_queries_single_udf_node(spark, qs, name, n_udf):
     plan = _plan(qs[name](spark, SF))
     n = plan.count("FlatMapGroupsInPandas") + plan.count("MapInPandas")
     assert n == n_udf, f"{name} has {n} Python UDF nodes:\n{plan}"
+    # the id-placed exchange into the bucketed UDF, plus one channel_id
+    # hash repartition per arm upstream (the input read)
+    n_shuffle = {"filt_butter": 3}.get(name, 2)
+    assert _shuffles(plan) == n_shuffle, f"{name} shuffles:\n{plan}"
 
 
 def test_between_pushes_raw_ts_bounds(spark, qs):
