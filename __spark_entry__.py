@@ -413,16 +413,13 @@ def _compose_oracle(*branches) -> str:
 def q_mov_rms(spark, sf_dir):
     # Row-based trailing window of 10 samples on the (non-uniform) event
     # channels — the row-window flavor of mov_rms (extension.py:690-691's
-    # rolling(window_n) with warm-up dropped).  r13: CONSOLIDATED with
-    # the chunked twin (one slot proves both paths; see _compose_paths).
+    # rolling(window_n) with warm-up dropped; window=10 s at a declared
+    # 1 Hz gives n=10 and re-centers t by 5 s), through the operator's
+    # whole-channel kernel.  r13: CONSOLIDATED with the chunked twin (one
+    # slot proves both paths; see _compose_paths).
     sig = _signals(spark, sf_dir)
-    w = Window.partitionBy("channel_id").orderBy("t", "seq")
-    roll = w.rowsBetween(-9, 0)
-    base = (
-        sig.withColumn("_rn", F.row_number().over(w))
-        .withColumn("value", F.sqrt(F.avg(F.col("value") * F.col("value")).over(roll)))
-        .filter(F.col("_rn") >= 10)
-        .select("channel_id", "t", F.round("value", 6).alias("value"))
+    base = mov_rms(sig, 10.0, 1.0, tiebreak_col="seq", drop_last=False).select(
+        "channel_id", "t", F.round("value", 6).alias("value")
     )
     return _compose_paths(
         ("global", base), ("chunked", _mov_rms_chunked_branch(spark, sf_dir))
@@ -438,7 +435,7 @@ r AS (
   FROM sig
   WINDOW w AS (PARTITION BY channel_id ORDER BY t, seq)
 )
-SELECT channel_id, t, ROUND(value, 6) AS value FROM r WHERE rn >= 10
+SELECT channel_id, t - 5.0 AS t, ROUND(value, 6) AS value FROM r WHERE rn >= 10
 """
 
 

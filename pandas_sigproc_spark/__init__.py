@@ -27,7 +27,7 @@ from pandas_sigproc_spark.schemas import (
 )
 
 
-def sigproc(df, n_buckets=32):
+def sigproc(df, n_buckets="auto"):
     """Fluent accessor over a signals DataFrame (see :mod:`.api`)."""
     from pandas_sigproc_spark.api import sigproc as _sigproc
 

@@ -17,7 +17,7 @@ the fused plan without asking.
         .between(0.0, 60.0)            # native: parquet-pruned filter
         .filt_butter(500.0, 4, "lowpass")  # buffered ┐ one applyInPandas,
         .filt_a()                          # buffered ┘ one shuffle
-        .mov_rms(0.1, samplerate=48e3)     # flush, then native window
+        .mov_rms(0.1, samplerate=48e3)     # flush, then the mov_rms kernel
         .df
     )
 """
@@ -26,13 +26,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark import operators as ops
+from pandas_sigproc_spark import operators as ops, planner
 from pandas_sigproc_spark.pipeline import KernelPipeline
 
 # Fusion membership is encoded by which methods call _buffer below
 # (the filter trio always; resample when kernel stages are pending or
 # the kind is a spline; the window-math four when stages are pending —
-# standalone they compile to native window plans).  A _FUSABLE name
+# standalone they run their own operators).  A _FUSABLE name
 # tuple used to sit here but drove nothing (a review finding: dead
 # code that misled readers into editing it to change dispatch).
 
@@ -40,7 +40,9 @@ from pandas_sigproc_spark.pipeline import KernelPipeline
 class Sigproc:
     """Immutable fluent wrapper; every method returns a new ``Sigproc``."""
 
-    def __init__(self, df: DataFrame, _pending=None, n_buckets: int | None = 32):
+    def __init__(
+        self, df: DataFrame, _pending=None, n_buckets: int | None | str = "auto"
+    ):
         self._raw = df
         self._pending: tuple = tuple(_pending or ())
         self._n_buckets = n_buckets
@@ -58,7 +60,10 @@ class Sigproc:
         pipe = KernelPipeline()
         for stage, args, kwargs in self._pending:
             getattr(pipe, stage)(*args, **kwargs)
-        return pipe.apply(self._raw, n_buckets=self._n_buckets)
+        n_buckets = self._n_buckets
+        if n_buckets == "auto":
+            n_buckets = planner._fleet_buckets(self._raw, planner.get_stats(self._raw))
+        return pipe.apply(self._raw, n_buckets=n_buckets)
 
     def _native(self, fn, *args, **kwargs) -> "Sigproc":
         return Sigproc(fn(self._flushed(), *args, **kwargs), None, self._n_buckets)
@@ -107,9 +112,10 @@ class Sigproc:
 
     # With kernel stages pending, these four join the fused chain: the
     # values are already NumPy arrays inside the task, so the window math
-    # is free there, versus a JVM re-sort + window pass after the kernel's
-    # Arrow return.  Standalone (no pending kernel) they stay native —
-    # whole-stage-codegen window plans, no Python at all.
+    # is free there, versus a second shuffle and group pass after the
+    # kernel's Arrow return.  Standalone (no pending kernel) they run
+    # their operators: native window plans for detrend, integral and
+    # derivative, and mov_rms's exact whole-channel kernel.
 
     def detrend(self, dt_type: str = "linear", breakpoints=None) -> "Sigproc":
         if self._pending:
@@ -119,7 +125,7 @@ class Sigproc:
     def mov_rms(self, window: float, samplerate: float | None = None) -> "Sigproc":
         # samplerate=None with NO pending stage also routes through the
         # kernel pipeline: the fused stage infers each channel's rate
-        # from its time base, while the native window op requires an
+        # from its time base, while the operator requires an
         # explicit rate and crashed at plan-build time (a review
         # finding: the signature advertised None but only the
         # buffered path honored it).
@@ -184,10 +190,14 @@ class Sigproc:
         return self._native(ops.interp1d_log, grid, axis=axis)
 
 
-def sigproc(df: DataFrame, n_buckets: int | None = 32) -> Sigproc:
+def sigproc(df: DataFrame, n_buckets: int | None | str = "auto") -> Sigproc:
     """Wrap a canonical signals DataFrame in the fluent accessor.
 
     ``n_buckets`` picks the kernel fan-out mode for flushed filter
     chains (None = one Arrow group per channel; K = K channel buckets).
+    The default ``"auto"`` takes the planner's count at flush: one group
+    per task slot for a fleet of small channels, else one per channel
+    (``planner._fleet_buckets``, one cached stats job).  The output bits
+    do not depend on the choice.
     """
     return Sigproc(df, None, n_buckets)

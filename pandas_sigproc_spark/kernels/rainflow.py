@@ -58,27 +58,23 @@ def reversals(series: np.ndarray):
     """Indices+values of the reversal points of ``series`` (E1049 5.4.4.1).
 
     First and last samples are always kept; interior points survive only
-    where the (plateau-collapsed) slope changes sign.
+    where the (plateau-collapsed) slope changes sign.  A step's sign is
+    +1 when it rises, 0 when it is flat and -1 otherwise (a NaN step
+    counts as falling); flat steps drop out, and a turn sits at the
+    start of every nonzero step whose sign differs from the previous
+    nonzero step's.
     """
     series = np.asarray(series, dtype=np.float64)
     n = len(series)
     if n == 0:
         return []
-    if n == 1:
-        return [(0, float(series[0]))]
-    out = [(0, float(series[0]))]
-    prev_sign = 0
-    for i in range(1, n):
-        d = series[i] - series[i - 1]
-        sign = 0 if d == 0 else (1 if d > 0 else -1)
-        if sign == 0:
-            continue
-        if prev_sign != 0 and sign != prev_sign:
-            out.append((i - 1, float(series[i - 1])))
-        prev_sign = sign
-    if out[-1][0] != n - 1:
-        out.append((n - 1, float(series[n - 1])))
-    return out
+    with np.errstate(invalid="ignore"):
+        d = series[1:] - series[:-1]
+    sign = np.where(d > 0, 1, np.where(d == 0, 0, -1))
+    steps = np.flatnonzero(sign)
+    turns = steps[1:][sign[steps[1:]] != sign[steps[:-1]]]
+    idx = np.concatenate(([0], turns, [n - 1] if n > 1 else [])).astype(np.intp)
+    return list(zip(idx.tolist(), series[idx].tolist()))
 
 
 def extract_cycles(series: np.ndarray):

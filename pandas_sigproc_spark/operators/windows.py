@@ -1,11 +1,15 @@
-"""Native ordered-window operators: moving RMS, integral, derivative,
-detrend.
+"""Ordered-window operators: moving RMS, integral, derivative, detrend.
 
-Intra-channel order is declared explicitly via ``Window.partitionBy(
-"channel_id").orderBy("t", ...)`` — order is not ambient in Spark
-(SURVEY.md §2.6).  All four compile to whole-stage-codegen window plans;
-one shuffle on ``channel_id`` that AQE coalesces, amortized across any
-number of chained window ops on the same key.
+Intra-channel order is declared explicitly — ``orderBy("t", ...)``,
+order is not ambient in Spark (SURVEY.md §2.6).  ``integral``,
+``derivative`` and ``detrend`` compile to whole-stage-codegen window
+plans: one shuffle on ``channel_id`` that AQE coalesces, amortized
+across any number of chained window ops on the same key.  ``mov_rms``
+runs a NumPy kernel over whole channels instead (planner.group_apply,
+per channel or by fleet bucket): Spark's sliding ``rowsBetween`` frame
+re-aggregates every row's whole frame with generic JVM aggregate
+updates, where the kernel folds the same frames in the same order with
+``n`` vector adds — the same bits, NULLs and NaNs.
 
 Scale path (SURVEY.md §7.3.1): ``Window.partitionBy("channel_id")``
 funnels each whole channel through ONE task — a 5M-row hot channel costs
@@ -18,7 +22,7 @@ no sort, no single-task stage), rows within the operator's warm-up
 distance of a chunk boundary are duplicated into the neighbouring chunk,
 and the same window expressions run partitioned by ``(channel, chunk)``
 so every task holds at most ``chunk_rows + overlap`` rows.  The chunked
-plans are row-for-row BIT-IDENTICAL to the single-window plans for
+plans are row-for-row BIT-IDENTICAL to the whole-channel plans for
 ``mov_rms``/``derivative`` (frames are equal row sets folded in the same
 order) and identical up to summation association for ``integral``
 (pinned in tests/test_chunked_windows.py).
@@ -32,7 +36,12 @@ index has duplicates or gaps, instead of silently mis-framing.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
+
+from pandas_sigproc_spark import planner
 
 
 def _wspec(order_col: str, tiebreak_col: str | None):
@@ -45,12 +54,12 @@ def _resolve_chunk_rows(
 ):
     """Resolve the ``"auto"`` scale mode from channel statistics
     (planner.py): huge channels chunk, everything else keeps the
-    single-window plan.  Explicit ints/None always win.
+    whole-channel plan.  Explicit ints/None always win.
 
     Two auto-mode adjustments keep ``"auto"`` from ever failing a call
-    that the single-window plan accepts:
+    that the whole-channel plan accepts:
 
-    - ``tiebreak_col`` set → stay on the window plan (the chunked path's
+    - ``tiebreak_col`` set → stay on the whole-channel plan (the chunked path's
       arithmetic sample index cannot disambiguate duplicate timestamps;
       an explicit ``chunk_rows`` int with a tiebreak raises instead of
       silently dropping the tiebreak);
@@ -61,8 +70,6 @@ def _resolve_chunk_rows(
       length itself.
     """
     if chunk_rows == "auto":
-        from pandas_sigproc_spark import planner
-
         if tiebreak_col is not None:
             # The degradation is deliberate (see docstring) but must not
             # be SILENT: above the huge-channel threshold the caller
@@ -75,7 +82,7 @@ def _resolve_chunk_rows(
                 warnings.warn(
                     "chunk_rows='auto' detected a huge channel but "
                     "tiebreak_col forces the single-task whole-channel "
-                    "window plan (the chunked path's arithmetic sample "
+                    "window (the chunked path's arithmetic sample "
                     "index cannot disambiguate duplicate timestamps). "
                     "Deduplicate the time base (deduplicate()) or drop "
                     "tiebreak_col to regain bounded-task chunking.",
@@ -90,7 +97,7 @@ def _resolve_chunk_rows(
         raise ValueError(
             "chunked window ops cannot honor tiebreak_col: the arithmetic "
             "sample index requires unique uniform timestamps — pass "
-            "chunk_rows=None for the sort-based window plan"
+            "chunk_rows=None for the whole-channel plan"
         )
     return chunk_rows
 
@@ -211,12 +218,21 @@ def mov_rms(
     off-by-one discard of the final sample (``extension.py:696`` slices
     ``[window_n-1:-1]``) — pass False for the corrected variant.
 
+    Whole channels run one NumPy kernel body (:func:`_mov_rms_body`)
+    through :func:`planner.group_apply`, keyed per channel or by the
+    planner's fleet bucket count.  It folds the same frames in the same
+    order as Spark's ``avg(value * value)`` over ``rowsBetween(-(n-1),
+    0)``, so every output double, NULL and NaN equals that window
+    plan's (``tests/test_mov_rms_kernel.py``), in O(rows x n) vector
+    adds where the sliding frame re-aggregates row by row in the JVM.
+
     ``chunk_rows="auto"`` (default) lets the planner switch huge channels
-    to the overlap-chunked plan (module docstring): each chunk carries the
-    previous ``n-1`` rows as warm-up overlap, so every trailing frame is
-    the same row set as the single-window plan — bit-identical output,
-    bounded task memory.  NOTE: ``"auto"`` consults one cached COUNT
-    aggregate over the input (planner.get_stats) at plan-build time.
+    to the overlap-chunked native plan (module docstring): each chunk
+    carries the previous ``n-1`` rows as warm-up overlap, so every
+    trailing frame is the same row set folded in the same order —
+    bit-identical output, bounded task memory.  NOTE: the default
+    consults one cached COUNT aggregate over the input (planner.get_stats)
+    at plan-build time, and so does the kernel for its bucket count.
     """
     n = int(round(window * samplerate))
     if n < 1:
@@ -226,33 +242,86 @@ def mov_rms(
     )
     if chunk_rows is not None:
         return _mov_rms_chunked(df, window, n, int(chunk_rows), drop_last)
-    w = _wspec("t", tiebreak_col)
-    roll = w.rowsBetween(-(n - 1), 0)
-    # Whole-partition count (computed ONCE per partition) instead of a
-    # (0, unboundedFollowing) frame: Spark evaluates unbounded-FOLLOWING
-    # frames by re-aggregating from each row to the partition end —
-    # O(n^2) per channel, a multi-minute stall on a 5M-sample hot channel
-    # (caught by tools/skew_bench.py).  row_number vs the total is the
-    # same "not the last row" predicate at O(n).
-    out = (
-        df.withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "_n_tot",
-            F.count("*").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-            ),
-        )
-        .withColumn(
-            "mov_rms", F.sqrt(F.avg(F.col("value") * F.col("value")).over(roll))
-        )
-        .filter(F.col("_rn") >= n)
+    order_cols = ["t"] + ([tiebreak_col] if tiebreak_col else [])
+    cols = list(dict.fromkeys(["channel_id", *order_cols, "value"]))
+    # NULL and NaN are both NaN in pandas: ship each column's NULLs as a
+    # flag so the body can order and count them as Spark does.
+    src = df.select(
+        *cols, *(F.col(c).isNull().alias(f"_null_{c}") for c in cols[1:])
     )
+
+    def body(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _mov_rms_body(pdf, n, window / 2.0, order_cols, drop_last)
+
+    n_buckets = planner._fleet_buckets(df, planner.get_stats(df))
+    return planner.group_apply(
+        src, body, "channel_id string, t double, value double", n_buckets
+    )
+
+
+def _nullable(x: np.ndarray, null: np.ndarray) -> pd.arrays.ArrowExtensionArray:
+    # An Arrow-backed column crosses back to Spark as is; a float column
+    # would have every NaN turned into NULL on the way.
+    return pd.arrays.ArrowExtensionArray(pa.array(x, mask=null))
+
+
+def _mov_rms_body(
+    pdf: pd.DataFrame, n: int, half: float, order_cols: list, drop_last: bool
+) -> pd.DataFrame:
+    """The native window plan's ``mov_rms`` over a group of channels.
+
+    Rows sort by channel, then by ``order_cols`` with NULLs first as in a
+    Spark ``orderBy``.  Spark's ``Average`` folds each frame oldest to
+    newest from ``0.0``, adding ``coalesce(value * value, 0.0)`` and
+    counting non-NULL rows, and returns ``sum / count`` (NULL when the
+    count is 0).  The same fold runs here as ``n`` vector adds over the
+    channel-sorted flat array; the frames that cross a channel boundary
+    belong to warm-up rows, which are dropped.
+    """
+    codes, cids = planner.channel_codes(pdf["channel_id"].to_numpy())
+    keys = []
+    for c in reversed(order_cols):
+        key = pdf[c].to_numpy()
+        if key.dtype == object:
+            key = pd.factorize(key, sort=True)[0]
+        keys.append(key)
+        null = pdf[f"_null_{c}"].to_numpy()
+        if null.any():
+            keys.append(~null)
+    order = np.lexsort([*keys, codes])
+    codes = codes[order]
+    v = pdf["value"].to_numpy(dtype=np.float64)[order]
+    v_null = pdf["_null_value"].to_numpy()[order]
+    m = len(v) - n + 1
+    if m <= 0:
+        return pd.DataFrame(columns=["channel_id", "t", "value"])
+    with np.errstate(over="ignore"):
+        x2 = np.where(v_null, 0.0, v * v)
+        acc = np.zeros(m)
+        for j in range(n):
+            np.add(acc, x2[j : j + m], out=acc)
+    c = np.concatenate(([0], np.cumsum(~v_null)))
+    cnt = c[n:] - c[:-n]
+    # Row i (of the flat array) owns frame i-n+1 .. i; keep the rows at
+    # channel position n-1 or later (and not the channel's last row).
+    sizes = np.bincount(codes, minlength=len(cids))
+    pos = np.arange(len(codes)) - (np.cumsum(sizes) - sizes)[codes]
+    keep = pos >= n - 1
     if drop_last:
-        out = out.filter(F.col("_rn") < F.col("_n_tot"))
-    return out.select(
-        "channel_id",
-        (F.col("t") - window / 2.0).alias("t"),
-        F.col("mov_rms").alias("value"),
+        keep &= pos < sizes[codes] - 1
+    rows = np.flatnonzero(keep)
+    k = rows - (n - 1)
+    null = cnt[k] == 0
+    with np.errstate(invalid="ignore", divide="ignore"):
+        val = np.sqrt(acc[k] / cnt[k])
+    t = pdf["t"].to_numpy(dtype=np.float64)[order][rows]
+    t_null = pdf["_null_t"].to_numpy()[order][rows]
+    return pd.DataFrame(
+        {
+            "channel_id": np.asarray(cids, dtype=object)[codes[rows]],
+            "t": _nullable(t - half, t_null),
+            "value": _nullable(val, null),
+        }
     )
 
 

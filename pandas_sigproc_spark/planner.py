@@ -116,7 +116,7 @@ def get_stats(df: DataFrame) -> ChannelStats:
 def group_apply(src: DataFrame, body, schema, n_buckets: int | None) -> DataFrame:
     """Run ``body(pdf) -> pdf`` over the channel groups of ``src`` — the
     one per-channel / bucketed fork of the channel operators
-    (filters/psd/srs/rainflow/custom/fused).
+    (filters/psd/srs/rainflow/custom/fused/mov_rms).
 
     ``n_buckets=None`` keys by ``channel_id`` (one channel per group,
     hash-placed on the shuffle partitions);
@@ -147,6 +147,22 @@ def group_apply(src: DataFrame, body, schema, n_buckets: int | None) -> DataFram
     )
 
 
+def channel_codes(ids: np.ndarray) -> tuple[np.ndarray, list]:
+    """``(codes, cids)``: a dense code per row of a group's
+    ``channel_id`` column and the channel id of each code.  A group of
+    one channel (every group under the ``channel_id`` key) skips the
+    string factorize; a null ``channel_id`` is a channel of its own, as
+    under the ``channel_id`` group key."""
+    if len(ids) and ids[0] == ids[-1] and (ids == ids[0]).all():
+        return np.zeros(len(ids), dtype=np.intp), [ids[0]]
+    codes, cids = pd.factorize(ids)
+    cids = list(cids)
+    if len(codes) and codes.min() < 0:
+        codes = np.where(codes < 0, len(cids), codes)
+        cids.append(None)
+    return codes, cids
+
+
 def channel_arrays(pdf: pd.DataFrame) -> list:
     """Split a group frame into ``(channel_id, t, value)`` arrays, one
     triple per channel, each sorted by ``t`` — the first step of the
@@ -165,15 +181,7 @@ def channel_arrays(pdf: pd.DataFrame) -> list:
     """
     t = pdf["t"].to_numpy(dtype=np.float64)
     y = pdf["value"].to_numpy(dtype=np.float64)
-    ids = pdf["channel_id"].to_numpy()
-    if len(ids) and ids[0] == ids[-1] and (ids == ids[0]).all():
-        codes, cids = np.zeros(len(ids), dtype=np.intp), [ids[0]]
-    else:
-        codes, cids = pd.factorize(ids)
-        cids = list(cids)
-        if len(codes) and codes.min() < 0:
-            codes = np.where(codes < 0, len(cids), codes)
-            cids.append(None)
+    codes, cids = channel_codes(pdf["channel_id"].to_numpy())
     dc, dt = np.diff(codes), np.diff(t)
     if ((dc > 0) | ((dc == 0) & (dt >= 0))).all():
         order = np.arange(len(t))
@@ -236,13 +244,13 @@ def auto_psd_mode(df: DataFrame, samplerate: float | None, window_length):
 
 
 def auto_window_mode(df: DataFrame):
-    """chunk_rows for the native ordered-window operators (mov_rms /
-    integral / derivative), or None for the single-window-per-channel
-    plan.  A channel above HUGE_CHANNEL_ROWS would otherwise pass whole
-    through ONE task (Window.partitionBy sorts the full channel in a
-    single partition — SKEW.md measures a 5M-row hot channel at ~50x its
-    peers); the overlap-chunked plan bounds every task at chunk_rows +
-    overlap rows."""
+    """chunk_rows for the ordered-window operators (mov_rms / integral /
+    derivative), or None for the whole-channel plan (a window per
+    channel; for mov_rms a kernel group per channel or fleet bucket).  A
+    channel above HUGE_CHANNEL_ROWS would otherwise pass whole through
+    ONE task (SKEW.md measures a 5M-row hot channel at ~50x its peers);
+    the overlap-chunked plan bounds every task at chunk_rows + overlap
+    rows."""
     s = get_stats(df)
     if s.max_rows > HUGE_CHANNEL_ROWS:
         return HUGE_CHANNEL_ROWS // 4

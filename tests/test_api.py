@@ -1,6 +1,8 @@
 """Fluent accessor: reference-style chains == operator composition, and
 consecutive filter stages auto-fuse into one applyInPandas."""
 
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -173,3 +175,23 @@ def test_freqdomain_accessor_surface(spark):
     # power ~ f^-1 is a straight line in log-log: interp is exact there
     for f0, p0 in fv.items():
         assert abs(p0 - 100.0 / f0) < 1e-9
+
+
+def test_default_bucket_count_comes_from_the_planner(spark):
+    # Two small channels: the planner caps the buckets at one channel per
+    # group, so the flushed chain plans one id-passthrough exchange with
+    # min(2, P) partitions (a fixed default of 32 buckets planned P).
+    t = np.arange(0, 0.5, 1 / 2000.0)
+    sig = make_signals(spark, {"u": (t, np.sin(t)), "v": (t, np.cos(t))})
+    out = sigproc(sig).filt_butter(300.0, 4, "lowpass").filt_a().df
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"Exchange (\w+)\(", plan) == ["shufflepartitionidpassthrough"]
+    n_parts = re.search(r"direct_shuffle_partition_id\(_b#\d+\), (\d+)\)", plan)
+    assert int(n_parts.group(1)) == min(2, spark.sparkContext.defaultParallelism)
+    # Explicit counts keep their meaning.
+    plan32 = sigproc(sig, 32).filt_a().df._jdf.queryExecution().executedPlan().toString()
+    n32 = re.search(r"direct_shuffle_partition_id\(_b#\d+\), (\d+)\)", plan32)
+    assert int(n32.group(1)) == min(32, spark.sparkContext.defaultParallelism)
+    assert "Exchange hashpartitioning(channel_id" in (
+        sigproc(sig, None).filt_a().df._jdf.queryExecution().executedPlan().toString()
+    )

@@ -16,6 +16,28 @@ finite = st.floats(
 )
 
 
+def _reversals_loop(series):
+    """The per-sample loop ``kernels.rainflow.reversals`` replaced."""
+    n = len(series)
+    if n == 0:
+        return []
+    if n == 1:
+        return [(0, float(series[0]))]
+    out = [(0, float(series[0]))]
+    prev_sign = 0
+    for i in range(1, n):
+        d = series[i] - series[i - 1]
+        sign = 0 if d == 0 else (1 if d > 0 else -1)
+        if sign == 0:
+            continue
+        if prev_sign != 0 and sign != prev_sign:
+            out.append((i - 1, float(series[i - 1])))
+        prev_sign = sign
+    if out[-1][0] != n - 1:
+        out.append((n - 1, float(series[n - 1])))
+    return out
+
+
 class TestKernelProperties:
     @given(
         st.lists(finite, min_size=8, max_size=200),
@@ -53,6 +75,25 @@ class TestKernelProperties:
         pairs = count_cycles(x)
         total_halves = round(2 * sum(c for _, c in pairs))
         assert total_halves == max(len(revs) - 1, 0)
+
+    @given(
+        st.lists(
+            st.one_of(
+                st.integers(-3, 3).map(float),
+                st.sampled_from([np.nan, np.inf, -np.inf, -0.0]),
+                finite,
+            ),
+            max_size=60,
+        )
+    )
+    @settings(max_examples=300, deadline=None)
+    def test_reversals_matches_scalar_loop(self, xs):
+        # Plateaus (small integers), NaN, +-inf and -0.0 included.
+        x = np.asarray(xs, dtype=np.float64)
+        with np.errstate(invalid="ignore"):  # inf - inf in the loop
+            got, want = reversals(x), _reversals_loop(x)
+        assert [i for i, _ in got] == [i for i, _ in want]
+        np.testing.assert_array_equal([v for _, v in got], [v for _, v in want])
 
     @given(st.integers(2, 6), st.integers(100, 1000))
     @settings(max_examples=20, deadline=None)

@@ -20,7 +20,7 @@ import numpy as np
 import pandas as pd
 
 import __spark_entry__ as entry_mod
-from pandas_sigproc_spark.session import get_spark
+from pandas_sigproc_spark.session import get_spark, host_cpus
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -95,7 +95,7 @@ def main():
         # findings, both)
         print(f"unknown query name(s): {sorted(unknown)}")
         return 2
-    spark = get_spark("oracle_check", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = get_spark("oracle_check", cpus=host_cpus())
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
