@@ -258,7 +258,8 @@ def filtfilt_ctes(p: str, b, a, src: str, srcn: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Production filter designs (mirror the operators' make_ba exactly)
+# Production filter designs (mirror the make_ba of the filter stage
+# builders in pandas_sigproc_spark/pipeline/fused.py exactly)
 # ---------------------------------------------------------------------------
 
 # q_filt_butter: filt_butter(_uniform, 0.3*(HOURLY/2), 4, 'lowpass',

@@ -10,14 +10,15 @@ buffered and flushed as ONE fused ``applyInPandas``
 (``pipeline.KernelPipeline``) the moment a non-filter method (or
 ``.df``) needs the values.  This is SURVEY §4.2's "tiny plan-rewrite in
 our accessor API": a user writing the reference's idiomatic chain gets
-the fused plan without asking.
+the fused plan without asking.  Behind pending filter stages the
+window-math methods and ``resample`` join the chain too.
 
     out = (
         sigproc(df)
         .between(0.0, 60.0)            # native: parquet-pruned filter
-        .filt_butter(500.0, 4, "lowpass")  # buffered ┐ one applyInPandas,
-        .filt_a()                          # buffered ┘ one shuffle
-        .mov_rms(0.1, samplerate=48e3)     # flush, then the mov_rms kernel
+        .filt_butter(500.0, 4, "lowpass")  # buffered ┐
+        .filt_a()                          # buffered │ one applyInPandas,
+        .mov_rms(0.1, samplerate=48e3)     # buffered ┘ one shuffle
         .df
     )
 """

@@ -3,98 +3,41 @@
 
 These are the reference's grouped sequential kernels
 (``extension.py:452-567``): the recursion carries state sample-to-sample,
-so each channel must be processed in time order by one task.  Implementation
-is one ``applyInPandas`` body over a group of channels — one channel per
-group, or a hash bucket of them (planner.group_apply) — running the
-vendored NumPy ragged batch kernels (which themselves use the O(n log n)
-FFT path for long channels, the chunked-filtering scale story of
-SURVEY.md §7.3.1).
+so each channel must be processed in time order by one task.  The
+whole-channel path is a one-stage ``pipeline.KernelPipeline``: the
+filter's stage comes from the pipeline's stage builders, so each
+coefficient design is written once, and the fused group body runs it
+over a group of channels — one channel per group, or a hash bucket of
+them (planner.group_apply) — through the vendored NumPy ragged batch
+kernels (which themselves use the O(n log n) FFT path for long
+channels, the chunked-filtering scale story of SURVEY.md §7.3.1).  A
+failing channel is named in the error, as for any fused stage.
 
 Filter coefficients are designed per group from each channel's own time
-base (``_infer_sr``), once per distinct rate; the chunked mode designs
-driver-side from the declared ``samplerate``.
+base (``planner._infer_sr``), once per distinct rate; the chunked mode
+designs driver-side, with the same stage, from the declared
+``samplerate``.
 
 Scale note: groups are independent, so 1e6 channels fan out across
 executors; the shuffle is one pass on ``channel_id``.  A channel too big
-for one task is the documented limit — the overlap-save split for that
-case rides on the same kernels (``kernels.iir`` impulse-response length
+for one task takes the overlap-save split (:func:`filt_chunked`), which
+rides on the same kernels (``kernels.iir`` impulse-response length
 bounds the needed overlap).
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pandas_sigproc_spark.planner import channel_arrays, group_apply
-
-from pandas_sigproc_spark.kernels import design as _design
 from pandas_sigproc_spark.kernels import iir as _iir
-from pandas_sigproc_spark.kernels import iir_batch as _iirb
-
-_OUT_SCHEMA = "channel_id string, t double, value double"
-
-
-def _infer_sr(t: np.ndarray) -> float:
-    dt = np.diff(t)
-    if len(dt) == 0 or dt.min() <= 0:
-        raise ValueError("cannot infer samplerate from <2 samples or non-increasing t")
-    spread = (dt.max() - dt.min()) / dt.mean()
-    if spread > 1e-4:
-        raise ValueError(
-            "non-uniform channel: filters require a uniform samplerate "
-            "(SURVEY.md §7.3.3)"
-        )
-    sr = 1.0 / dt.mean()
-    return float(round(sr)) if abs(sr - round(sr)) < 0.01 and sr >= 1 else sr
-
-
-def _apply_filter(
-    df: DataFrame, make_ba, zero_phase: bool, n_buckets: int | None = None
-) -> DataFrame:
-    """Shared applyInPandas driver: design (b, a) per samplerate, run the
-    IIR over every channel of the group.
-
-    ``n_buckets=None`` groups one channel; ``n_buckets=K`` hashes channels
-    into K buckets, so each task filters its whole bucket with the ragged
-    batch kernels — per-channel Arrow and call overhead amortized ~bucket-size
-    times.  Both run this one body (planner.group_apply), and each row of
-    the ragged kernels is bit-identical to the 1-D kernel on that channel
-    alone, so the output does not depend on the mode.  Many small channels
-    -> bucket; few huge ones -> per channel (SURVEY.md §7.3.1).
-    """
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pieces = []
-        # Batch channels per samplerate (one coefficient design each),
-        # keyed by the inferred rate exactly as the design uses it.  The
-        # RAGGED batch kernels handle unequal lengths internally, so one
-        # group per rate is one kernel pass per bucket; grouping by
-        # (length, samplerate) — round 3's scheme — fragmented buckets
-        # into per-length slivers (BENCH r4: filt_butter 2.2x).
-        groups: dict = {}
-        for cid, t, y in channel_arrays(pdf):
-            groups.setdefault(_infer_sr(t), []).append((cid, t, y))
-        for sr, members in groups.items():
-            b, a = make_ba(sr)
-            ys = [y for _, _, y in members]
-            outs = (
-                _iirb.filtfilt_batch_ragged(b, a, ys)
-                if zero_phase
-                else _iirb.lfilter_batch_ragged(b, a, ys)
-            )
-            for (cid, t, _y), yout in zip(members, outs):
-                pieces.append(
-                    pd.DataFrame({"channel_id": cid, "t": t, "value": yout})
-                )
-        return pd.concat(pieces, ignore_index=True)
-
-    return group_apply(
-        df.select("channel_id", "t", "value"), kernel, _OUT_SCHEMA, n_buckets
-    )
+from pandas_sigproc_spark.pipeline.fused import (
+    KernelPipeline,
+    a_weighting_stage,
+    butter_stage,
+    cfc_stage,
+)
 
 
 def _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate):
@@ -130,6 +73,22 @@ def _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate):
     return n_buckets, chunk_rows
 
 
+def _filter(df, stage, n_buckets, chunk_rows, samplerate, overlap_rows):
+    """Run one filter stage: overlap-save chunks when the resolved mode
+    chunks, else the one-stage fused pipeline."""
+    n_buckets, chunk_rows = _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate)
+    if chunk_rows is not None:
+        if samplerate is None:
+            raise ValueError(
+                "chunk_rows requires an explicit samplerate: chunk membership"
+                " is decided relationally before any group sees the time base"
+            )
+        b, a = stage.make_ba(float(samplerate))
+        return filt_chunked(df, b, a, stage.zero_phase, chunk_rows, overlap_rows,
+                            samplerate=samplerate)
+    return KernelPipeline(stage).apply(df, n_buckets)
+
+
 def filt_butter(
     df: DataFrame,
     cutoff,
@@ -140,27 +99,10 @@ def filt_butter(
     samplerate: float | None = None,
     overlap_rows: int | None = None,
 ) -> DataFrame:
-    """Zero-phase Butterworth filter (reference ``extension.py:452-497``).
-
-    The order is halved before design because forward-backward filtering
-    doubles it; odd orders are bumped up (``extension.py:480-483`` — the
-    reference prints a warning; here the bump is silent and documented).
-    Cutoff is normalized by Nyquist per group samplerate.
-    """
-    half = order / 2
-    order_used = math.ceil(half)
-
-    def make_ba(sr: float):
-        nyq = 0.5 * sr
-        wn = np.asarray(cutoff, dtype=np.float64) / nyq
-        return _design.butter(order_used, wn, btype)
-
-    n_buckets, chunk_rows = _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate)
-    if chunk_rows is not None:
-        b, a = make_ba(_require_sr(samplerate, "chunk_rows"))
-        return filt_chunked(df, b, a, True, chunk_rows, overlap_rows,
-                            samplerate=samplerate)
-    return _apply_filter(df, make_ba, zero_phase=True, n_buckets=n_buckets)
+    """Zero-phase Butterworth filter (reference ``extension.py:452-497``;
+    design and order halving in ``pipeline.fused.butter_stage``)."""
+    return _filter(df, butter_stage(cutoff, order, btype), n_buckets,
+                   chunk_rows, samplerate, overlap_rows)
 
 
 def filt_cfc(
@@ -173,16 +115,8 @@ def filt_cfc(
 ) -> DataFrame:
     """SAE J211 Channel Frequency Class filter, zero-phase
     (reference ``extension.py:499-539``)."""
-
-    def make_ba(sr: float):
-        return _design.cfc_coefficients(cfc, sr)
-
-    n_buckets, chunk_rows = _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate)
-    if chunk_rows is not None:
-        b, a = make_ba(_require_sr(samplerate, "chunk_rows"))
-        return filt_chunked(df, b, a, True, chunk_rows, overlap_rows,
-                            samplerate=samplerate)
-    return _apply_filter(df, make_ba, zero_phase=True, n_buckets=n_buckets)
+    return _filter(df, cfc_stage(cfc), n_buckets, chunk_rows, samplerate,
+                   overlap_rows)
 
 
 def filt_a(
@@ -196,25 +130,8 @@ def filt_a(
     deliberate phase-distorting contrast to the filtfilt ops
     (reference ``extension.py:541-567``; design ``tools.py:257-301``).
     """
-
-    def make_ba(sr: float):
-        return _design.a_weighting(sr)
-
-    n_buckets, chunk_rows = _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate)
-    if chunk_rows is not None:
-        b, a = make_ba(_require_sr(samplerate, "chunk_rows"))
-        return filt_chunked(df, b, a, False, chunk_rows, overlap_rows,
-                            samplerate=samplerate)
-    return _apply_filter(df, make_ba, zero_phase=False, n_buckets=n_buckets)
-
-
-def _require_sr(samplerate, why: str) -> float:
-    if samplerate is None:
-        raise ValueError(
-            f"{why} requires an explicit samplerate: chunk membership is "
-            "decided relationally before any group sees the time base"
-        )
-    return float(samplerate)
+    return _filter(df, a_weighting_stage(), n_buckets, chunk_rows,
+                   samplerate, overlap_rows)
 
 
 # ---------------------------------------------------------------------------

@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pandas_sigproc_spark.planner import channel_arrays, group_apply
+from pandas_sigproc_spark.planner import _infer_sr, channel_arrays, group_apply
 
 from pandas_sigproc_spark.kernels import spectral as _spectral
 
@@ -364,9 +364,3 @@ def _segmented_psd(
             .filter(F.col("freq") > 0)
         )
     raise ValueError(f"{summarize!r} is not a valid summary type")
-
-
-def _infer_sr(t: np.ndarray) -> float:
-    from pandas_sigproc_spark.operators.filters import _infer_sr as f
-
-    return f(t)

@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark.planner import group_apply
+from pandas_sigproc_spark.planner import channel_codes, group_apply
 
 from pandas_sigproc_spark.kernels import rainflow as _rf
 
@@ -80,11 +80,14 @@ def rainflow(
         )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["channel_id", *order_cols], kind="mergesort")
-        pieces = [
-            one(cid, grp["value"].to_numpy(dtype=np.float64))
-            for cid, grp in pdf.groupby("channel_id", sort=False)
-        ]
+        # Channels by dense code, so a NULL channel_id is a channel of
+        # its own (a pandas groupby would drop it); the stable sort keeps
+        # arrival order among rows that tie on order_cols.
+        codes, cids = channel_codes(pdf["channel_id"].to_numpy())
+        pdf = pdf.assign(_c=codes).sort_values(["_c", *order_cols], kind="mergesort")
+        cuts = np.cumsum(np.bincount(codes, minlength=len(cids)))[:-1]
+        ys = np.split(pdf["value"].to_numpy(dtype=np.float64), cuts)
+        pieces = [one(cid, y) for cid, y in zip(cids, ys)]
         if not pieces:
             return pd.DataFrame(columns=["channel_id", "bin", "cycles"])
         return pd.concat(pieces, ignore_index=True)

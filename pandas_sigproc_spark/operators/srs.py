@@ -16,7 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from pandas_sigproc_spark.planner import group_apply
+from pandas_sigproc_spark.planner import channel_arrays, group_apply
 
 from pandas_sigproc_spark.kernels.srs import (
     build_freq_array,
@@ -75,12 +75,14 @@ def get_srs(
         return _get_srs_bucketed(df, freq, quality_factor, n_buckets)
     fn = build_freq_array() if freq is None else np.asarray(freq, np.float64)
     slices = np.array_split(fn, max(int(n_freq_slices), 1))
-    slice_rows = [(i, s.tolist()) for i, s in enumerate(slices) if len(s)]
+    slice_rows = [(i,) for i, s in enumerate(slices) if len(s)]
 
     src = df.select("channel_id", "t", "value")
     spark = df.sparkSession
-    slice_df = spark.createDataFrame(slice_rows, "slice_id int, fns array<double>")
-    # Broadcast the tiny grid table; every channel pairs with every slice.
+    slice_df = spark.createDataFrame(slice_rows, "slice_id int")
+    # Broadcast the tiny slice-id table; every channel pairs with every
+    # slice.  Only the id crosses Arrow: the body looks its frequencies
+    # up in ``slices``, instead of every sample row carrying the list.
     paired = src.crossJoin(F.broadcast(slice_df))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -90,13 +92,13 @@ def get_srs(
         if len(t) < 2:
             # mean(diff(t)) of one sample is NaN and would silently
             # propagate into every output power (a review finding) —
-            # refuse loudly like filters._infer_sr
+            # refuse loudly like planner._infer_sr
             raise ValueError(
                 f"get_srs: channel {pdf['channel_id'].iloc[0]!r} has"
                 f" {len(t)} sample(s) — SRS needs at least 2 to infer"
                 " the sample interval"
             )
-        fns = np.asarray(pdf["fns"].iloc[0], dtype=np.float64)
+        fns = slices[int(pdf["slice_id"].iloc[0])]
         pos, neg = srs_kernel(t, y, fns, quality_factor)
         return pd.DataFrame(
             {
@@ -114,13 +116,10 @@ def _get_srs_bucketed(df, freq, quality_factor, n_buckets):
     fn_list = fn.tolist()
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["channel_id", "t"])
         fns = np.asarray(fn_list, dtype=np.float64)
         # Sub-batch channels sharing (length, dt); leftovers go singly.
         groups: dict = {}
-        for cid, grp in pdf.groupby("channel_id", sort=False):
-            t = grp["t"].to_numpy(dtype=np.float64)
-            y = grp["value"].to_numpy(dtype=np.float64)
+        for cid, t, y in channel_arrays(pdf):
             if len(t) < 2:
                 # NaN dt would silently NaN the channel's whole SRS
                 raise ValueError(

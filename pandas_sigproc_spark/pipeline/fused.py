@@ -20,13 +20,19 @@ A ``filt_* → resample(lower rate)`` chain is fused anti-aliased
 decimation: the intermediate full-rate filtered signal never leaves the
 task, so the shuffle after the kernel carries only the decimated rows.
 
+The standalone ``filt_butter`` / ``filt_cfc`` / ``filt_a`` operators
+(``operators/filters.py``) are one-stage pipelines built from the stage
+builders below, so each filter design and this one group body serve
+both.
+
 The window-math operators (``detrend`` / ``mov_rms`` / ``integral`` /
-``derivative``) are also available as stages.  Standalone they are
-strictly better as native window plans (whole-stage codegen, zero
-Python), but *adjacent to kernel stages* the arrays are already in task
-memory, so the NumPy version is free while the native one would pay an
-Arrow return + JVM sort + window pass between two kernels.  The accessor
-(``api.py``) makes exactly that call automatically.
+``derivative``) are also available as stages.  Standalone they run
+their own operators (native window plans, and an exact whole-channel
+kernel for ``mov_rms``), but *adjacent to kernel stages* the arrays are
+already in task memory, so the NumPy version is free while the
+standalone one would pay an Arrow return + shuffle + another group pass
+between two kernels.  The accessor (``api.py``) makes exactly that call
+automatically.
 
 Reference parity: composes the same operators as chained accessor calls
 like ``series.timedomain.filt_butter(...).timedomain.resample(...)``
@@ -42,7 +48,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark.planner import channel_arrays, group_apply
+from pandas_sigproc_spark.planner import _infer_sr, channel_arrays, group_apply
 
 from pandas_sigproc_spark.kernels import design as _design
 from pandas_sigproc_spark.kernels import iir as _iir
@@ -70,6 +76,35 @@ class _FilterStage:
             if self.zero_phase
             else _iirb.lfilter_batch_ragged(b, a, ys)
         )
+
+
+def butter_stage(cutoff, order: int, btype: str) -> _FilterStage:
+    """Zero-phase Butterworth (reference ``extension.py:452-497``).
+
+    The order is halved before design because forward-backward filtering
+    doubles it; odd orders are bumped up (``extension.py:480-483`` — the
+    reference prints a warning; here the bump is silent and documented).
+    Cutoff is normalized by Nyquist per channel samplerate.
+    """
+    order_used = math.ceil(order / 2)
+
+    def make_ba(sr: float):
+        wn = np.asarray(cutoff, dtype=np.float64) / (0.5 * sr)
+        return _design.butter(order_used, wn, btype)
+
+    return _FilterStage(f"butter({order},{btype})", make_ba, True)
+
+
+def cfc_stage(cfc: float) -> _FilterStage:
+    """SAE J211 CFC filter, zero-phase (``operators.filt_cfc``)."""
+    return _FilterStage(
+        f"cfc({cfc})", lambda sr: _design.cfc_coefficients(cfc, sr), True
+    )
+
+
+def a_weighting_stage() -> _FilterStage:
+    """IEC 1672 A-weighting, causal (``operators.filt_a``)."""
+    return _FilterStage("a_weighting", _design.a_weighting, False)
 
 
 class _DetrendStage:
@@ -179,47 +214,37 @@ class KernelPipeline:
     """Builder for a fused chain of per-channel kernel stages.
 
     Each stage method appends a stage and returns ``self``; ``apply(df)``
-    emits the single fused ``applyInPandas`` operator.  Stage semantics
-    (coefficient design, order handling, causal vs zero-phase, resample
-    grid) are identical to the standalone operators in ``operators/``.
+    emits the single fused ``applyInPandas`` operator.  The filter stages
+    come from the same builders as the standalone ``operators/filters.py``
+    operators, and the other stages keep their operators' semantics
+    (resample grid, window math).  ``KernelPipeline(*stages)`` starts the
+    chain from built stages.
     """
 
-    def __init__(self) -> None:
-        self._stages: list[object] = []
+    def __init__(self, *stages) -> None:
+        self._stages: list[object] = list(stages)
 
-    # -- stage builders (same design rules as operators/filters.py) --------
+    # -- stage builders ------------------------------------------------------
 
     def filt_butter(self, cutoff, order: int, btype: str) -> "KernelPipeline":
-        order_used = math.ceil(order / 2)
-
-        def make_ba(sr: float):
-            wn = np.asarray(cutoff, dtype=np.float64) / (0.5 * sr)
-            return _design.butter(order_used, wn, btype)
-
-        self._stages.append(_FilterStage(f"butter({order},{btype})", make_ba, True))
+        self._stages.append(butter_stage(cutoff, order, btype))
         return self
 
     def filt_cfc(self, cfc: float) -> "KernelPipeline":
-        def make_ba(sr: float):
-            return _design.cfc_coefficients(cfc, sr)
-
-        self._stages.append(_FilterStage(f"cfc({cfc})", make_ba, True))
+        self._stages.append(cfc_stage(cfc))
         return self
 
     def filt_a(self) -> "KernelPipeline":
-        def make_ba(sr: float):
-            return _design.a_weighting(sr)
-
-        self._stages.append(_FilterStage("a_weighting", make_ba, False))
+        self._stages.append(a_weighting_stage())
         return self
 
     def resample(self, rate: float, kind: str = "linear") -> "KernelPipeline":
         self._stages.append(_ResampleStage(rate, kind))
         return self
 
-    # -- fusable native-math stages (same semantics as operators/windows.py;
+    # -- fusable window-math stages (same semantics as operators/windows.py;
     #    worth fusing only when sandwiched with kernel stages — the accessor
-    #    keeps them JVM-native otherwise) ------------------------------------
+    #    runs their own operators otherwise) -----------------------------------
 
     def detrend(self, dt_type: str = "linear", breakpoints=None) -> "KernelPipeline":
         self._stages.append(_DetrendStage(dt_type, breakpoints))
@@ -249,8 +274,9 @@ class KernelPipeline:
         (planner.group_apply): the leading run of filter stages executes
         through the ragged batch kernels, one call per samplerate in the
         group, and the stages after it run per channel (a resample grid
-        depends on each channel's own time range) — the same two fan-out
-        modes as ``operators/filters.py``, with the same bits.
+        depends on each channel's own time range).  The standalone
+        ``operators/filters.py`` operators are this body with one filter
+        stage.
         """
         if not self._stages:
             raise ValueError("KernelPipeline has no stages")
@@ -300,8 +326,8 @@ class KernelPipeline:
             # handle unequal lengths internally (bit-identical per row to
             # solo execution — kernels/iir_batch).  Grouping by
             # (length, sr) fragmented buckets into per-length slivers
-            # whose dispatch overhead dominated (same fix as
-            # operators/filters.py).  Without leading filter stages sr
+            # whose dispatch overhead dominated (BENCH r4: filt_butter
+            # 2.2x).  Without leading filter stages sr
             # is inferred LAZILY, at the first stage that reads it: a
             # chain of only window-math stages (detrend -> integral, say)
             # accepts non-uniform and single-sample channels exactly like
@@ -357,9 +383,3 @@ class KernelPipeline:
         for stage in self._stages:
             name = f"{stage.name.split('(')[0]}({name})"
         return name
-
-
-def _infer_sr(t: np.ndarray) -> float:
-    from pandas_sigproc_spark.operators.filters import _infer_sr as _f
-
-    return _f(t)

@@ -166,7 +166,8 @@ def channel_codes(ids: np.ndarray) -> tuple[np.ndarray, list]:
 def channel_arrays(pdf: pd.DataFrame) -> list:
     """Split a group frame into ``(channel_id, t, value)`` arrays, one
     triple per channel, each sorted by ``t`` — the first step of the
-    filter, PSD and fused :func:`group_apply` bodies.
+    PSD, SRS and fused :func:`group_apply` bodies (the fused body runs
+    the standalone filters too).
 
     NumPy argsorts instead of a ``(channel_id, t)`` frame sort: the
     frame sort factorizes the string column inside a lexsort and cost a
@@ -190,6 +191,24 @@ def channel_arrays(pdf: pd.DataFrame) -> list:
         order = by_t[np.argsort(codes[by_t], kind="stable")]
     cuts = np.cumsum(np.bincount(codes, minlength=len(cids)))[:-1]
     return [(cid, t[i], y[i]) for cid, i in zip(cids, np.split(order, cuts))]
+
+
+def _infer_sr(t: np.ndarray) -> float:
+    """A channel's samplerate from its sorted time base, the rate rule of
+    the filter designs and the inferred-rate PSD.  Refuses fewer than 2
+    samples, non-increasing ``t`` and a non-uniform grid (SURVEY.md
+    §7.3.3); a rate within 0.01 of an integer >= 1 snaps to it."""
+    dt = np.diff(t)
+    if len(dt) == 0 or dt.min() <= 0:
+        raise ValueError("cannot infer samplerate from <2 samples or non-increasing t")
+    spread = (dt.max() - dt.min()) / dt.mean()
+    if spread > 1e-4:
+        raise ValueError(
+            "non-uniform channel: filters require a uniform samplerate "
+            "(SURVEY.md §7.3.3)"
+        )
+    sr = 1.0 / dt.mean()
+    return float(round(sr)) if abs(sr - round(sr)) < 0.01 and sr >= 1 else sr
 
 
 def _fleet_buckets(df: DataFrame, s: ChannelStats) -> int | None:

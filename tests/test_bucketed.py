@@ -214,9 +214,18 @@ class TestBucketedOperators:
 
     def test_srs_bucketed(self, spark, many_channels):
         df, fs = many_channels
+        # a NULL channel_id is a channel of its own under both keys
+        t = np.arange(0, 1.0, 1 / fs)
+        null = spark.createDataFrame(
+            [(None, float(x), float(np.sin(40.0 * x))) for x in t],
+            "channel_id string, t double, value double",
+        )
+        df = df.select("channel_id", "t", "value").unionByName(null)
         fn = [20.0, 50.0, 100.0]
+        per_channel = get_srs(df, freq=fn, n_buckets=None)
+        assert per_channel.filter(F.col("channel_id").isNull()).count() == len(fn)
         self._cmp(
-            get_srs(df, freq=fn, n_buckets=None),
+            per_channel,
             get_srs(df, freq=fn, n_buckets=3),
             ["channel_id", "freq"],
         )

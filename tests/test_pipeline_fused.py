@@ -3,7 +3,7 @@ Python-UDF plan nodes (the SURVEY §4.2 fusion gap)."""
 
 import numpy as np
 
-from pandas_sigproc_spark.operators.filters import filt_butter, filt_cfc
+from pandas_sigproc_spark.operators.filters import filt_a, filt_butter, filt_cfc
 from pandas_sigproc_spark.pipeline import KernelPipeline
 from tests.conftest import make_signals
 
@@ -235,12 +235,19 @@ def test_short_channel_filter_error_is_located(spark):
     with _pytest.raises(Exception, match="fused stage.*tiny.*rows at this stage"):
         pipe.apply(df).collect()
     # a leading filter stage runs batched: the error names every channel
-    # of the group with its row count, under either group key
+    # of the group with its row count, under either group key.  The
+    # standalone zero-phase filters run the same body (filt_a is causal:
+    # lfilter has no padlen to refuse)
     for nb in (None, 2):
-        with _pytest.raises(Exception, match=r"fused stage.*'tiny' \(5 rows\)"):
-            KernelPipeline().filt_butter(2.0, 2, "lowpass").apply(
-                df.limit(5), n_buckets=nb
-            ).collect()
+        for run in (
+            lambda d: KernelPipeline()
+            .filt_butter(2.0, 2, "lowpass")
+            .apply(d, n_buckets=nb),
+            lambda d: filt_butter(d, 2.0, 2, "lowpass", n_buckets=nb),
+            lambda d: filt_cfc(d, 60.0, n_buckets=nb),
+        ):
+            with _pytest.raises(Exception, match=r"fused stage.*'tiny' \(5 rows\)"):
+                run(df.limit(5)).collect()
 
 
 def test_infer_sr_error_is_located(spark):
@@ -263,6 +270,15 @@ def test_infer_sr_error_is_located(spark):
         KernelPipeline().filt_butter(2.0, 2, "lowpass").apply(
             df, n_buckets=2
         ).collect()
+    # the standalone filters run the same body
+    for nb in (None, 2):
+        for run in (
+            lambda d: filt_butter(d, 2.0, 2, "lowpass", n_buckets=nb),
+            lambda d: filt_cfc(d, 60.0, n_buckets=nb),
+            lambda d: filt_a(d, n_buckets=nb),
+        ):
+            with _pytest.raises(Exception, match="samplerate for channel 'lonely'"):
+                run(df).collect()
 
 
 def test_window_math_chain_accepts_nonuniform(spark):

@@ -38,6 +38,25 @@ def test_chunked_equals_whole(spark, fatigue, kwargs):
     assert seg == whole
 
 
+def test_null_channel_id_is_a_channel(spark, fatigue):
+    # the chunked plan keys by channel_id, which keeps a NULL id as a
+    # group; the whole-channel body counts it too, under both keyings
+    n = 500
+    null = spark.createDataFrame(
+        pd.DataFrame({
+            "channel_id": [None] * n,
+            "t": np.arange(n, dtype=np.float64),
+            "value": np.random.default_rng(5).standard_normal(n).round(2),
+        }),
+        "channel_id string, t double, value double",
+    )
+    df = fatigue.select("channel_id", "t", "value").unionByName(null)
+    want = _counts(rainflow_chunked(df, chunk_rows=4096, ndigits=2))
+    assert any(cid is None for cid, _, _ in want)
+    for nb in (None, 2):
+        assert _counts(rainflow(df, ndigits=2, n_buckets=nb)) == want
+
+
 def test_chunk_size_invariance(spark, fatigue):
     a = _counts(rainflow_chunked(fatigue, chunk_rows=100, ndigits=2))
     b = _counts(rainflow_chunked(fatigue, chunk_rows=50_000, ndigits=2))

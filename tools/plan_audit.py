@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from bench import HEADLINE
-from pandas_sigproc_spark.session import get_spark
+from pandas_sigproc_spark.session import get_spark, host_cpus
 
 
 def audit(df) -> dict:
@@ -39,7 +39,7 @@ def audit(df) -> dict:
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     names = sys.argv[1:] or HEADLINE
-    spark = get_spark("plan_audit", cpus=8)
+    spark = get_spark("plan_audit", cpus=host_cpus())
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry_mod.queries()
     w = max(len(n) for n in names)
