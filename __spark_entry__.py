@@ -6791,15 +6791,17 @@ SELECT i, ROUND(y, {_FFT_ANCHOR_DIGITS}) AS y FROM f
 
 
 # SRS anchor design: one Smallwood ramp-invariant SDOF resonator
-# (fn = 0.05 cycles/sample, Q = 10) — computed once at import, literals
-# embedded in the oracle SQL.
+# (fn = 0.05 cycles/sample at dt = 1, Q = 10) — coefficients computed
+# once at import, literals embedded in the oracle SQL.
+_SRS_FN, _SRS_DT, _SRS_Q = [0.05], 1.0, 10.0
+
+
 def _srs_anchor_ba():
     import numpy as np
 
     from pandas_sigproc_spark.kernels.srs import smallwood_coefficients
 
-    b, a = smallwood_coefficients(np.array([0.05]), 1.0, 10.0)
-    return b, a
+    return smallwood_coefficients(np.array(_SRS_FN), _SRS_DT, _SRS_Q)
 
 
 _SRS_B, _SRS_A = _srs_anchor_ba()
@@ -6809,29 +6811,29 @@ def q_srs_exact(spark, sf_dir):
     """The SRS tier's hash anchor: ONE Smallwood SDOF resonator
     (kernels/srs.py smallwood_coefficients — the reference's
     tools.py:349-374 ramp-invariant recursion) driven over the head-512
-    segment of each channel through the PRODUCTION batch recursion
-    (_sdof_responses_batch), envelope = (max y, |min y|) per channel.
+    segment of each channel through the PRODUCTION recursion
+    (kernels/srs.py srs_multi), envelope = (max y, |min y|) per channel.
     The oracle replays the order-2 recursion sample-by-sample with the
     identical multiply-add order and takes the same MAX/MIN — selection
     of bit-exact values, so the comparison needs no rounding.  The full
-    q_srs fans the same recursion out over the 79-frequency grid.
+    q_srs runs the same recursion over 13 frequencies; get_srs's default
+    grid has 81.
     """
-    import numpy as np
     import pandas as pd
 
-    b, a = _SRS_B, _SRS_A
     head = _head512(spark, sf_dir)
 
     def k(pdf: pd.DataFrame) -> pd.DataFrame:
-        from pandas_sigproc_spark.kernels.srs import _sdof_responses_batch
+        from pandas_sigproc_spark.kernels.srs import srs_multi
 
         pdf = pdf.sort_values("i")
-        pos, aneg = _sdof_responses_batch(pdf["x"].to_numpy("float64"), b, a)
+        x = pdf["x"].to_numpy("float64")[None, :]
+        pos, aneg = srs_multi(x, _SRS_DT, _SRS_FN, _SRS_Q)
         return pd.DataFrame(
             {
                 "channel_id": [pdf["channel_id"].iloc[0]],
-                "srs_pos": [float(pos[0])],
-                "srs_abs_neg": [float(aneg[0])],
+                "srs_pos": [float(pos[0, 0])],
+                "srs_abs_neg": [float(aneg[0, 0])],
             }
         )
 

@@ -958,9 +958,9 @@ FROM wmp WHERE f2 IS NOT NULL GROUP BY channel_id
 
 def sql_srs() -> str:
     """q_srs replay: 13 Smallwood SDOF resonators (kernels/srs.py
-    smallwood_coefficients at dt=3600.0, Q=10 — the bucketed kernel's
-    round(mean(diff(t)), 9) collapses to exactly 3600.0 on the hourly
-    grid) run over every uniform channel; the envelope is
+    smallwood_coefficients at dt=3600.0, Q=10 — get_srs's mean(diff(t))
+    is exactly 3600.0 on the hourly grid, whose epoch times stay in one
+    binade) run over every uniform channel; the envelope is
     GREATEST(MAX(y), ABS(MIN(y))) — selection over bit-identical doubles,
     so no rounding anywhere.  The recursion carries the running extremes
     instead of materializing every response sample.

@@ -17,17 +17,20 @@ Reference behavior being matched (``tools.py:304-376``,
   envelope is ``max(max(y), |min(y)|)`` per frequency.
 
 Unlike the reference's serial Python loop over frequencies
-(``tools.py:371-374``), the Spark operator fans the frequency axis out
-across the cluster (see operators/srs.py); this kernel vectorizes the
-recursion across all requested frequencies at once so a single task
-handles its whole frequency slice with NumPy-level work per time step.
+(``tools.py:371-374``), one recursion (:func:`srs_multi`) runs every
+(channel, frequency) pair of a call at once: the order-2 step is a
+handful of NumPy operations over one flat vector, so the Python-level
+loop is over samples only, shared by every channel and frequency.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from pandas_sigproc_spark.kernels.iir import lfilter
+# Bytes of input expanded to the flat (channel x frequency) vector at a
+# time: the recursion reads one expanded row per sample, and a block of
+# rows bounds the copy whatever the channel count, grid size and length.
+_BLOCK_BYTES = 1 << 22
 
 
 def build_freq_array(
@@ -72,63 +75,50 @@ def smallwood_coefficients(fn_array: np.ndarray, dt: float, quality_factor: floa
     return b, a
 
 
-def _sdof_responses_batch(accel: np.ndarray, b: np.ndarray, a: np.ndarray):
-    """Peak +/- responses for all frequencies, vectorized across the F axis.
-
-    Runs the order-2 recursion once over time with NumPy ops over the
-    frequency dimension (direct form II transposed), so the Python-level
-    loop is over samples only, shared by every frequency.
-    """
-    n = len(accel)
-    nf = b.shape[0]
-    z1 = np.zeros(nf)
-    z2 = np.zeros(nf)
-    pos = np.full(nf, -np.inf)
-    neg = np.full(nf, np.inf)
-    b0, b1, b2 = b[:, 0], b[:, 1], b[:, 2]
-    a1, a2 = a[:, 1], a[:, 2]
-    for i in range(n):
-        x = accel[i]
-        y = b0 * x + z1
-        z1 = b1 * x + z2 - a1 * y
-        z2 = b2 * x - a2 * y
-        np.maximum(pos, y, out=pos)
-        np.minimum(neg, y, out=neg)
-    return pos, np.abs(neg)
-
-
 def srs_multi(
     X: np.ndarray,
     dt: float,
     fn_array: np.ndarray,
     quality_factor: float = 50.0,
 ):
-    """SRS for MANY equal-rate channels at once.
+    """SRS for many equal-length, equal-rate channels at once.
 
     ``X[channels, time]`` -> ``(pos[channels, F], abs_neg[channels, F])``.
-    One Python-level loop over time with NumPy ops over the
-    (channels x frequencies) plane — per-channel overhead vanishes, which
-    is what makes bucketed execution (operators/srs.py) fast for fleets of
-    short channels.
+    Direct form II transposed over one flat vector of channels x
+    frequencies (element ``c * F + f``), with the running extremes kept
+    in place; the input is expanded to that layout ``_BLOCK_BYTES`` at
+    a time.  Every element sees the same multiply-adds in the same order
+    whatever else shares the call, so a channel's peaks do not depend on
+    how channels are batched.
     """
-    fn_array = np.asarray(fn_array, dtype=np.float64)
+    X = np.asarray(X, dtype=np.float64)
     b, a = smallwood_coefficients(fn_array, dt, quality_factor)
     nb, n = X.shape
-    nf = len(fn_array)
-    z1 = np.zeros((nb, nf))
-    z2 = np.zeros((nb, nf))
-    pos = np.full((nb, nf), -np.inf)
-    neg = np.full((nb, nf), np.inf)
-    b0, b1, b2 = b[:, 0], b[:, 1], b[:, 2]
-    a1, a2 = a[:, 1], a[:, 2]
-    for i in range(n):
-        x = X[:, i : i + 1]
-        y = b0 * x + z1
-        z1 = b1 * x + z2 - a1 * y
-        z2 = b2 * x - a2 * y
-        np.maximum(pos, y, out=pos)
-        np.minimum(neg, y, out=neg)
-    return pos, np.abs(neg)
+    nf = b.shape[0]
+    b0, b1, b2 = (np.tile(b[:, j], nb) for j in range(3))
+    a1, a2 = (np.tile(a[:, j], nb) for j in (1, 2))
+    z1 = np.zeros(nb * nf)
+    z2 = np.zeros(nb * nf)
+    y = np.empty(nb * nf)
+    tmp = np.empty(nb * nf)
+    pos = np.full(nb * nf, -np.inf)
+    neg = np.full(nb * nf, np.inf)
+    block = max(_BLOCK_BYTES // (8 * nb * nf), 1)
+    for s in range(0, n, block):
+        for x in np.repeat(X[:, s : s + block].T, nf, axis=1):
+            # y = b0 x + z1;  z1 = b1 x + z2 - a1 y;  z2 = b2 x - a2 y
+            np.multiply(b0, x, out=y)
+            y += z1
+            np.multiply(b1, x, out=z1)
+            z1 += z2
+            np.multiply(a1, y, out=tmp)
+            z1 -= tmp
+            np.multiply(b2, x, out=z2)
+            np.multiply(a2, y, out=tmp)
+            z2 -= tmp
+            np.maximum(pos, y, out=pos)
+            np.minimum(neg, y, out=neg)
+    return pos.reshape(nb, nf), np.abs(neg).reshape(nb, nf)
 
 
 def srs(
@@ -136,23 +126,11 @@ def srs(
     accel: np.ndarray,
     fn_array: np.ndarray | None = None,
     quality_factor: float = 50.0,
-    batch_frequencies: bool = True,
 ):
-    """Maximax SRS: returns ``(pos_peaks, abs_neg_peaks)`` per frequency."""
+    """Maximax SRS of one channel: ``(pos_peaks, abs_neg_peaks)`` per
+    frequency, with the reference's sample interval ``mean(diff(time))``."""
     if fn_array is None:
         fn_array = build_freq_array()
-    time = np.asarray(time, dtype=np.float64)
-    accel = np.asarray(accel, dtype=np.float64)
-    dt = float(np.mean(np.diff(time)))
-    b, a = smallwood_coefficients(fn_array, dt, quality_factor)
-
-    if batch_frequencies and len(fn_array) > 4:
-        return _sdof_responses_batch(accel, b, a)
-
-    pos = np.zeros(len(fn_array))
-    neg = np.zeros(len(fn_array))
-    for i in range(len(fn_array)):
-        y = lfilter(b[i], a[i], accel)
-        pos[i] = y.max()
-        neg[i] = abs(y.min())
-    return pos, neg
+    dt = float(np.mean(np.diff(np.asarray(time, dtype=np.float64))))
+    pos, neg = srs_multi(np.asarray(accel)[None, :], dt, fn_array, quality_factor)
+    return pos[0], neg[0]

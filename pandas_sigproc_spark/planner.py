@@ -277,9 +277,8 @@ def auto_window_mode(df: DataFrame):
 
 
 def auto_srs_mode(df: DataFrame):
-    """(n_buckets, n_freq_slices) for get_srs."""
-    s = get_stats(df)
-    if s.max_rows > HUGE_CHANNEL_ROWS:
-        # One huge channel: fan the frequency axis out instead.
-        return None, 8
-    return _fleet_buckets(df, s), 1
+    """(n_buckets, 1) for get_srs: small-channel fleets bucket, else one
+    group per channel, a huge channel included — a frequency slice of it
+    would still walk every sample.  The second value, the slice count,
+    is always 1; the pair stays for callers that unpack it."""
+    return _fleet_buckets(df, get_stats(df)), 1

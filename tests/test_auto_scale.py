@@ -89,7 +89,7 @@ def test_psd_buckets_small_fleet_by_default(spark):
     assert "_b" in _plan(out)
 
 
-def test_srs_buckets_small_fleet_and_slices_huge(spark):
+def test_srs_buckets_small_fleet_and_keys_huge_per_channel(spark):
     df = _sig(spark)
     out = get_srs(df, freq=[0.5, 1.0], quality_factor=10.0)
     assert "_b" in _plan(out)
@@ -97,7 +97,7 @@ def test_srs_buckets_small_fleet_and_slices_huge(spark):
     _fake_huge(df)
     out2 = get_srs(df, freq=[0.5, 1.0], quality_factor=10.0)
     p2 = _plan(out2)
-    assert "_b" not in p2 and "slice_id" in p2
+    assert "_b" not in p2 and "slice_id" not in p2
 
 
 def test_auto_matches_per_channel_bits(spark):

@@ -62,8 +62,8 @@ class TestBatchKernels:
         pos_m, neg_m = srs_multi(X, 1 / fs, fn)
         for i in range(4):
             pos, neg = K.srs(t, X[i], fn)
-            np.testing.assert_allclose(pos_m[i], pos, rtol=1e-10)
-            np.testing.assert_allclose(neg_m[i], neg, rtol=1e-10)
+            np.testing.assert_array_equal(pos_m[i], pos)
+            np.testing.assert_array_equal(neg_m[i], neg)
 
 
 def test_channel_arrays_sorts_each_channel_and_keeps_null_ids():
@@ -145,14 +145,6 @@ class TestBucketPlacement:
 
 
 class TestBucketedOperators:
-    def _cmp(self, a_df, b_df, keys, atol=1e-11):
-        a = a_df.orderBy(*keys).toPandas()
-        b = b_df.orderBy(*keys).toPandas()
-        assert len(a) == len(b)
-        np.testing.assert_allclose(
-            a.iloc[:, -1].to_numpy(), b.iloc[:, -1].to_numpy(), rtol=1e-9, atol=atol
-        )
-
     def _same(self, a_df, b_df, keys):
         a = a_df.orderBy(*keys).toPandas()
         b = b_df.orderBy(*keys).toPandas()
@@ -224,9 +216,21 @@ class TestBucketedOperators:
         fn = [20.0, 50.0, 100.0]
         per_channel = get_srs(df, freq=fn, n_buckets=None)
         assert per_channel.filter(F.col("channel_id").isNull()).count() == len(fn)
-        self._cmp(
+        self._same(
             per_channel,
             get_srs(df, freq=fn, n_buckets=3),
+            ["channel_id", "freq"],
+        )
+        # 48 kHz: mean(diff(t)) carries more than 9 decimals, so a
+        # rounded rate would move the bucketed bits
+        rng = np.random.default_rng(8)
+        t48 = np.arange(4800) / 48000.0
+        fast = make_signals(
+            spark, {f"k{i}": (t48, rng.standard_normal(len(t48))) for i in range(6)}
+        )
+        self._same(
+            get_srs(fast, n_buckets=None),
+            get_srs(fast, n_buckets=3),
             ["channel_id", "freq"],
         )
 

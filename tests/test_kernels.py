@@ -27,6 +27,11 @@ from pandas_sigproc_spark.kernels import (
 )
 from pandas_sigproc_spark.kernels.iir import _lfilter_loop
 from pandas_sigproc_spark.kernels.rainflow import extract_cycles
+from pandas_sigproc_spark.kernels.srs import (
+    _BLOCK_BYTES,
+    smallwood_coefficients,
+    srs_multi,
+)
 
 
 def freq_response(b, a, w):
@@ -272,15 +277,81 @@ class TestSrs:
         np.testing.assert_allclose(env, 1.0, rtol=0.05)
 
     def test_batch_matches_per_freq_lfilter(self):
+        # the reference's form: one causal lfilter per frequency
         rng = np.random.default_rng(3)
         fs = 5000.0
         t = np.arange(0, 1.0, 1 / fs)
         accel = rng.standard_normal(len(t))
         fn = build_freq_array(10, 100)
-        pos_b, neg_b = srs(t, accel, fn, batch_frequencies=True)
-        pos_s, neg_s = srs(t, accel, fn, batch_frequencies=False)
-        np.testing.assert_allclose(pos_b, pos_s, rtol=1e-9)
-        np.testing.assert_allclose(neg_b, neg_s, rtol=1e-9)
+        pos_b, neg_b = srs(t, accel, fn)
+        b, a = smallwood_coefficients(fn, float(np.mean(np.diff(t))), 50.0)
+        ys = [lfilter(b[i], a[i], accel) for i in range(len(fn))]
+        np.testing.assert_allclose(pos_b, [y.max() for y in ys], rtol=1e-9)
+        np.testing.assert_allclose(neg_b, [abs(y.min()) for y in ys], rtol=1e-9)
+
+
+def _sdof_responses_loop(accel, b, a):
+    """One channel's peak +/- responses, the recursion written out per
+    sample (direct form II transposed, vectorized over frequencies only)
+    — the reference of the flat batched recursion in ``srs_multi``."""
+    nf = b.shape[0]
+    z1 = np.zeros(nf)
+    z2 = np.zeros(nf)
+    pos = np.full(nf, -np.inf)
+    neg = np.full(nf, np.inf)
+    b0, b1, b2 = b[:, 0], b[:, 1], b[:, 2]
+    a1, a2 = a[:, 1], a[:, 2]
+    for x in accel:
+        y = b0 * x + z1
+        z1 = b1 * x + z2 - a1 * y
+        z2 = b2 * x - a2 * y
+        np.maximum(pos, y, out=pos)
+        np.minimum(neg, y, out=neg)
+    return pos, np.abs(neg)
+
+
+class TestSrsMulti:
+    """``srs_multi`` gives every (channel, frequency) pair the bits of
+    the per-sample loop, whatever the batch shape and block cut."""
+
+    @staticmethod
+    def _check(X, fn, dt=1 / 20000.0, q=50.0):
+        pos, neg = srs_multi(X, dt, fn, q)
+        assert pos.shape == neg.shape == (len(X), len(fn))
+        b, a = smallwood_coefficients(fn, dt, q)
+        for row, p, n in zip(X, pos, neg):
+            want_p, want_n = _sdof_responses_loop(row, b, a)
+            np.testing.assert_array_equal(p, want_p)
+            np.testing.assert_array_equal(n, want_n)
+            np.testing.assert_array_equal(np.signbit(p), np.signbit(want_p))
+
+    def test_one_row_one_frequency(self):
+        rng = np.random.default_rng(11)
+        self._check(rng.standard_normal((1, 700)), np.array([250.0]))
+
+    def test_fleet_bucket_default_grid(self):
+        rng = np.random.default_rng(12)
+        self._check(rng.standard_normal((80, 501)), build_freq_array())
+
+    @pytest.mark.parametrize("offset", [-1, 0, 1, None])
+    def test_lengths_around_the_block(self, offset):
+        rng = np.random.default_rng(13)
+        fn = build_freq_array()
+        block = _BLOCK_BYTES // (8 * 80 * len(fn))
+        n = 2 * block + 3 if offset is None else block + offset
+        self._check(rng.standard_normal((80, n)), fn)
+
+    @pytest.mark.filterwarnings("ignore:invalid value:RuntimeWarning")
+    def test_nonfinite_and_signed_zero_inputs(self):
+        rng = np.random.default_rng(14)
+        X = rng.standard_normal((6, 300))
+        X[0, 10] = np.nan
+        X[1, 0] = np.inf
+        X[2, 150] = -np.inf
+        X[3] = -0.0
+        X[4, ::7] = -0.0
+        X[5, -1] = np.nan
+        self._check(X, build_freq_array(10, 100), dt=1e-3, q=10.0)
 
 
 class TestRainflow:

@@ -3,6 +3,8 @@ spline interp — Spark results vs the NumPy kernels run directly (shuffle-
 invariance: Spark must reproduce the single-process kernel bit-for-bit-ish),
 plus analytic anchors."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -127,15 +129,12 @@ class TestPsd:
 
 
 class TestSrs:
-    def test_half_sine_asymptote_and_slicing(self, spark):
+    def test_half_sine_asymptote(self, spark):
         fs = 20000.0
         t = np.arange(0, 0.3, 1 / fs)
         pulse = np.where(t < 0.011, 10.0 * np.sin(np.pi * t / 0.011), 0.0)
         df = make_signals(spark, {"shock": (t, pulse)})
         out1 = get_srs(df).orderBy("freq").toPandas()
-        out4 = get_srs(df, n_freq_slices=4).orderBy("freq").toPandas()
-        # Slicing is a pure parallelization knob: identical results.
-        np.testing.assert_allclose(out1["power"], out4["power"], rtol=1e-12)
         fn = K.build_freq_array()
         assert len(out1) == len(fn)
         pos, neg = K.srs(t, pulse, fn)
@@ -151,9 +150,15 @@ class TestSrs:
         centered = pulse - pulse.mean()
         df_biased = make_signals(spark, {"shock": (t, centered + 5.0)})
         df_clean = make_signals(spark, {"shock": (t, centered)})
-        got = get_srs(df_biased, remove_bias=True).orderBy("freq").toPandas()
         want = get_srs(df_clean).orderBy("freq").toPandas()
-        np.testing.assert_allclose(got["power"], want["power"], rtol=1e-9)
+        for nb in ("auto", 3):
+            out = get_srs(df_biased, remove_bias=True, n_buckets=nb)
+            # the mean is taken in the kernel body: no exchange of its
+            # own before the channel (or bucket) exchange
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert len(re.findall(r"Exchange \w+\(", plan)) == 1, plan
+            got = out.orderBy("freq").toPandas()
+            np.testing.assert_allclose(got["power"], want["power"], rtol=1e-9)
         # and WITHOUT the flag the bias dominates the low-freq asymptote,
         # proving the flag actually changes the computation.
         raw = get_srs(df_biased).orderBy("freq").toPandas()

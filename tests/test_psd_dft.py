@@ -174,7 +174,4 @@ def test_srs_single_sample_channel_raises(spark):
     with pytest.raises(Exception, match="at least 2"):
         get_srs(df, freq=np.array([10.0, 100.0]), n_buckets=2).collect()
     with pytest.raises(Exception, match="at least 2"):
-        get_srs(
-            df, freq=np.array([10.0, 100.0]), n_buckets=None,
-            n_freq_slices=1,
-        ).collect()
+        get_srs(df, freq=np.array([10.0, 100.0]), n_buckets=None).collect()

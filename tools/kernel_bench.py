@@ -99,7 +99,7 @@ def main():
     t1s, x1s = t[:srs_n], x[:srs_n]
     el = best_of(lambda: srs(t1s, x1s), reps=3)
     rows.append(
-        f"| srs (79-freq grid, 48k samples) | {el * 1e3:.2f} ms |"
+        f"| srs (81-freq grid, 48k samples) | {el * 1e3:.2f} ms |"
         f" {srs_n / el / 1e6:,.1f} M samples/s | not measured |"
     )
     rev = np.cumsum(rng.standard_normal(10_000))  # rainflow is per-reversal
