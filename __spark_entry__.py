@@ -653,9 +653,9 @@ idx AS (
 
 
 def _mov_rms_chunked_branch(spark, sf_dir):
-    # Chunked == single-window is BIT-exact (identical frames folded in
-    # the same order; tests/test_chunked_windows.py).  r13: rides as the
-    # 'chunked' path of the consolidated q_mov_rms gate.
+    # Chunked == single-window is BIT-exact (one body, and a frame's sum
+    # depends on its own rows only; tests/test_chunked_windows.py).  r13:
+    # rides as the 'chunked' path of the consolidated q_mov_rms gate.
     out = mov_rms(
         _idx_sig(spark, sf_dir), 0.1, _CHUNK_SR, chunk_rows=_CHUNK_L
     )
@@ -2501,9 +2501,10 @@ def q_accessor_chain(spark, sf_dir):
         .mov_rms(0.0005, samplerate=48000.0)
         .df
         # Rounded for the hash gate vs the chain-replay oracle
-        # (oracle_prod.sql_accessor_chain): the detrend means and the
-        # rolling mean-of-squares are reductions whose summation order
-        # differs across engines (~1e-13); the time base is exact.
+        # (oracle_prod.sql_accessor_chain): the detrend means (NumPy
+        # pairwise) and the rolling mean-of-squares (dyadic window sums)
+        # sum in another order than the oracle's AVG (~1e-13); the time
+        # base is exact.
         .select("channel_id", "t", F.round("value", 6).alias("value"))
     )
 

@@ -560,8 +560,8 @@ def sql_accessor_chain() -> str:
     drop-last, re-centered time base) — the fused KernelPipeline
     (pipeline/fused.py) replayed stage for stage.  The filter recursions
     are bit-exact; the detrend means and the rolling mean-of-squares are
-    reductions (numpy pairwise / longdouble-cumsum vs SQL AVG), so the
-    output VALUE is rounded to 6 digits on both sides (divergence ~1e-13
+    reductions (numpy pairwise means / dyadic window sums vs SQL AVG), so
+    the output VALUE is rounded to 6 digits on both sides (divergence ~1e-13
     against a ~1e-10 measured boundary margin); the time base is exact.
     """
     b1, a1 = butter_chain_ba()

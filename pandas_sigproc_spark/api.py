@@ -116,7 +116,7 @@ class Sigproc:
     # is free there, versus a second shuffle and group pass after the
     # kernel's Arrow return.  Standalone (no pending kernel) they run
     # their operators: native window plans for detrend, integral and
-    # derivative, and mov_rms's exact whole-channel kernel.
+    # derivative, and mov_rms's body on the fused stage's window sums.
 
     def detrend(self, dt_type: str = "linear", breakpoints=None) -> "Sigproc":
         if self._pending:
@@ -124,12 +124,8 @@ class Sigproc:
         return self._native(ops.detrend, dt_type, breakpoints)
 
     def mov_rms(self, window: float, samplerate: float | None = None) -> "Sigproc":
-        # samplerate=None with NO pending stage also routes through the
-        # kernel pipeline: the fused stage infers each channel's rate
-        # from its time base, while the operator requires an
-        # explicit rate and crashed at plan-build time (a review
-        # finding: the signature advertised None but only the
-        # buffered path honored it).
+        # Without a rate the fused stage runs even with nothing pending:
+        # it infers each channel's rate, and the operator needs one.
         if self._pending or samplerate is None:
             return self._buffer("mov_rms", window, samplerate=samplerate)
         return self._native(ops.mov_rms, window, samplerate=samplerate)

@@ -5,11 +5,8 @@ order is not ambient in Spark (SURVEY.md §2.6).  ``integral``,
 ``derivative`` and ``detrend`` compile to whole-stage-codegen window
 plans: one shuffle on ``channel_id`` that AQE coalesces, amortized
 across any number of chained window ops on the same key.  ``mov_rms``
-runs a NumPy kernel over whole channels instead (planner.group_apply,
-per channel or by fleet bucket): Spark's sliding ``rowsBetween`` frame
-re-aggregates every row's whole frame with generic JVM aggregate
-updates, where the kernel folds the same frames in the same order with
-``n`` vector adds — the same bits, NULLs and NaNs.
+runs one NumPy body on dyadic window sums (``kernels.rolling``) instead:
+Spark's sliding ``rowsBetween`` frame re-aggregates every row's frame.
 
 Scale path (SURVEY.md §7.3.1): ``Window.partitionBy("channel_id")``
 funnels each whole channel through ONE task — a 5M-row hot channel costs
@@ -20,18 +17,17 @@ auto-select an *overlap-chunked* plan: every row gets an arithmetic
 per-channel sample index (one broadcast-joined MIN/MAX/COUNT aggregate —
 no sort, no single-task stage), rows within the operator's warm-up
 distance of a chunk boundary are duplicated into the neighbouring chunk,
-and the same window expressions run partitioned by ``(channel, chunk)``
-so every task holds at most ``chunk_rows + overlap`` rows.  The chunked
+and the same computation runs partitioned by ``(channel, chunk)`` so
+every task holds at most ``chunk_rows + overlap`` rows.  The chunked
 plans are row-for-row BIT-IDENTICAL to the whole-channel plans for
-``mov_rms``/``derivative`` (frames are equal row sets folded in the same
-order) and identical up to summation association for ``integral``
-(pinned in tests/test_chunked_windows.py).
+``mov_rms``/``derivative`` and identical up to summation association
+for ``integral`` (pinned in tests/test_chunked_windows.py).
 
 The chunked plans require each channel to sit on a uniform,
 strictly-increasing time grid (the same precondition as the IIR
 ``filt_chunked`` path — the arithmetic index IS the ordinal index only
-there).  A native guard raises inside the task if the reconstructed
-index has duplicates or gaps, instead of silently mis-framing.
+there).  A guard raises inside the task if the reconstructed index has
+duplicates or gaps, instead of silently mis-framing.
 """
 
 from __future__ import annotations
@@ -42,6 +38,15 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pandas_sigproc_spark import planner
+from pandas_sigproc_spark.kernels.rolling import window_sums
+
+#: The chunked plans' grid-guard message, around the channel id.
+_GRID_MSG = (
+    "chunked window op: non-consecutive sample index in channel ",
+    " (duplicate timestamps or a non-uniform grid); chunked execution "
+    "requires a uniform strictly-increasing time base — pass chunk_rows=None",
+)
+_MOV_RMS_SCHEMA = "channel_id string, t double, value double"
 
 
 def _wspec(order_col: str, tiebreak_col: str | None):
@@ -183,23 +188,8 @@ def _chunk_guard(wseg, value_col):
     jitter) — the frames would silently be wrong otherwise."""
     gap = F.col("_i") - F.lag("_i").over(wseg)
     bad = gap.isNotNull() & (gap != 1)
-    return F.when(
-        bad,
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "chunked window op: non-consecutive sample index in "
-                    "channel "
-                ),
-                F.col("channel_id"),
-                F.lit(
-                    " (duplicate timestamps or a non-uniform grid); "
-                    "chunked execution requires a uniform strictly-"
-                    "increasing time base — pass chunk_rows=None"
-                ),
-            )
-        ).cast("double"),
-    ).otherwise(value_col)
+    msg = F.concat(F.lit(_GRID_MSG[0]), F.col("channel_id"), F.lit(_GRID_MSG[1]))
+    return F.when(bad, F.raise_error(msg).cast("double")).otherwise(value_col)
 
 
 def mov_rms(
@@ -218,21 +208,14 @@ def mov_rms(
     off-by-one discard of the final sample (``extension.py:696`` slices
     ``[window_n-1:-1]``) — pass False for the corrected variant.
 
-    Whole channels run one NumPy kernel body (:func:`_mov_rms_body`)
-    through :func:`planner.group_apply`, keyed per channel or by the
-    planner's fleet bucket count.  It folds the same frames in the same
-    order as Spark's ``avg(value * value)`` over ``rowsBetween(-(n-1),
-    0)``, so every output double, NULL and NaN equals that window
-    plan's (``tests/test_mov_rms_kernel.py``), in O(rows x n) vector
-    adds where the sliding frame re-aggregates row by row in the JVM.
-
-    ``chunk_rows="auto"`` (default) lets the planner switch huge channels
-    to the overlap-chunked native plan (module docstring): each chunk
-    carries the previous ``n-1`` rows as warm-up overlap, so every
-    trailing frame is the same row set folded in the same order —
-    bit-identical output, bounded task memory.  NOTE: the default
-    consults one cached COUNT aggregate over the input (planner.get_stats)
-    at plan-build time, and so does the kernel for its bucket count.
+    One NumPy body (:func:`_mov_rms_body`) runs every plan shape:
+    whole channels through :func:`planner.group_apply`, keyed per
+    channel or by the planner's fleet bucket count, and, when
+    ``chunk_rows="auto"`` (default) finds a huge channel, overlap chunks
+    that carry the previous ``n-1`` rows (module docstring).  NOTE: the
+    default consults one cached COUNT aggregate over the input
+    (planner.get_stats) at plan-build time, and so does the kernel for
+    its bucket count.
     """
     n = int(round(window * samplerate))
     if n < 1:
@@ -243,20 +226,22 @@ def mov_rms(
     if chunk_rows is not None:
         return _mov_rms_chunked(df, window, n, int(chunk_rows), drop_last)
     order_cols = ["t"] + ([tiebreak_col] if tiebreak_col else [])
-    cols = list(dict.fromkeys(["channel_id", *order_cols, "value"]))
-    # NULL and NaN are both NaN in pandas: ship each column's NULLs as a
-    # flag so the body can order and count them as Spark does.
-    src = df.select(
-        *cols, *(F.col(c).isNull().alias(f"_null_{c}") for c in cols[1:])
-    )
 
     def body(pdf: pd.DataFrame) -> pd.DataFrame:
         return _mov_rms_body(pdf, n, window / 2.0, order_cols, drop_last)
 
     n_buckets = planner._fleet_buckets(df, planner.get_stats(df))
     return planner.group_apply(
-        src, body, "channel_id string, t double, value double", n_buckets
+        _with_null_flags(df, order_cols), body, _MOV_RMS_SCHEMA, n_buckets
     )
+
+
+def _with_null_flags(df: DataFrame, order_cols: list, *keys: str) -> DataFrame:
+    # NULL and NaN are both NaN in pandas: ship each column's NULLs as a
+    # flag so the body can order and count them as Spark does.
+    cols = list(dict.fromkeys([*order_cols, "t", "value"]))
+    nulls = (F.col(c).isNull().alias(f"_null_{c}") for c in cols)
+    return df.select("channel_id", *keys, *cols, *nulls)
 
 
 def _nullable(x: np.ndarray, null: np.ndarray) -> pd.arrays.ArrowExtensionArray:
@@ -271,12 +256,14 @@ def _mov_rms_body(
     """The native window plan's ``mov_rms`` over a group of channels.
 
     Rows sort by channel, then by ``order_cols`` with NULLs first as in a
-    Spark ``orderBy``.  Spark's ``Average`` folds each frame oldest to
-    newest from ``0.0``, adding ``coalesce(value * value, 0.0)`` and
-    counting non-NULL rows, and returns ``sum / count`` (NULL when the
-    count is 0).  The same fold runs here as ``n`` vector adds over the
-    channel-sorted flat array; the frames that cross a channel boundary
-    belong to warm-up rows, which are dropped.
+    Spark ``orderBy``.  As Spark's ``Average``, each frame sums
+    ``coalesce(value * value, 0.0)`` and counts its non-NULL rows, here
+    by :func:`kernels.rolling.window_sums` over the channel-sorted flat
+    array, and the root of ``sum / count`` is NULL when the count is 0.
+    The frames that cross a channel boundary belong to warm-up rows,
+    which are dropped.  Rows, NULLs, NaNs and infinities equal the
+    window plan's; values are within ``(n.bit_length() + 2) * 2**-51``
+    relative of the exact root (``tests/test_mov_rms_kernel.py``).
     """
     codes, cids = planner.channel_codes(pdf["channel_id"].to_numpy())
     keys = []
@@ -292,16 +279,9 @@ def _mov_rms_body(
     codes = codes[order]
     v = pdf["value"].to_numpy(dtype=np.float64)[order]
     v_null = pdf["_null_value"].to_numpy()[order]
-    m = len(v) - n + 1
-    if m <= 0:
-        return pd.DataFrame(columns=["channel_id", "t", "value"])
     with np.errstate(over="ignore"):
-        x2 = np.where(v_null, 0.0, v * v)
-        acc = np.zeros(m)
-        for j in range(n):
-            np.add(acc, x2[j : j + m], out=acc)
-    c = np.concatenate(([0], np.cumsum(~v_null)))
-    cnt = c[n:] - c[:-n]
+        acc = window_sums(np.where(v_null, 0.0, v * v), n)
+    cnt = window_sums(~v_null, n)
     # Row i (of the flat array) owns frame i-n+1 .. i; keep the rows at
     # channel position n-1 or later (and not the channel's last row).
     sizes = np.bincount(codes, minlength=len(cids))
@@ -327,26 +307,21 @@ def _mov_rms_body(
 
 def _mov_rms_chunked(df, window, n, chunk_rows, drop_last):
     src = _chunked_src(df, chunk_rows, overlap_back=n - 1, overlap_fwd=0)
-    wseg = Window.partitionBy("channel_id", "_seg").orderBy("_i")
-    roll = wseg.rowsBetween(-(n - 1), 0)
-    L = chunk_rows
-    val = _chunk_guard(
-        wseg, F.sqrt(F.avg(F.col("value") * F.col("value")).over(roll))
-    )
-    out = (
-        src.withColumn("mov_rms", val)
-        # core rows only (overlap copies computed their neighbour's warm-up)
-        .filter((F.col("_i") / L).cast("long") == F.col("_seg"))
-        # warm-up: the first n-1 samples of the CHANNEL have no full frame
-        .filter(F.col("_i") >= n - 1)
-    )
     if drop_last:
-        out = out.filter(F.col("_i") < F.col("_n") - 1)
-    return out.select(
-        "channel_id",
-        (F.col("t") - window / 2.0).alias("t"),
-        F.col("mov_rms").alias("value"),
-    )
+        # A trailing frame's last row ends no other frame, so dropping
+        # the channel's last row first drops exactly its output row.
+        src = src.filter(F.col("_i") < F.col("_n") - 1)
+
+    def body(pdf: pd.DataFrame) -> pd.DataFrame:
+        # A chunk's first n-1 rows are the channel's warm-up (chunk 0) or
+        # the previous chunk's tail: the body's warm-up trim drops them.
+        if (np.diff(np.sort(pdf["_i"].to_numpy())) != 1).any():
+            cid = pdf["channel_id"].iloc[0]
+            raise ValueError(f"{_GRID_MSG[0]}{cid}{_GRID_MSG[1]}")
+        return _mov_rms_body(pdf, n, window / 2.0, ["_i"], False)
+
+    keyed = _with_null_flags(src, ["_i"], "_seg").groupBy("channel_id", "_seg")
+    return keyed.applyInPandas(body, _MOV_RMS_SCHEMA)
 
 
 def integral(

@@ -27,12 +27,12 @@ both.
 
 The window-math operators (``detrend`` / ``mov_rms`` / ``integral`` /
 ``derivative``) are also available as stages.  Standalone they run
-their own operators (native window plans, and an exact whole-channel
-kernel for ``mov_rms``), but *adjacent to kernel stages* the arrays are
-already in task memory, so the NumPy version is free while the
-standalone one would pay an Arrow return + shuffle + another group pass
-between two kernels.  The accessor (``api.py``) makes exactly that call
-automatically.
+their own operators (native window plans, and for ``mov_rms`` a NumPy
+body on the stage's window sums), but *adjacent to kernel stages* the
+arrays are already in task memory, so the NumPy version is free while
+the standalone one would pay an Arrow return + shuffle + another group
+pass between two kernels.  The accessor (``api.py``) makes exactly that
+call automatically.
 
 Reference parity: composes the same operators as chained accessor calls
 like ``series.timedomain.filt_butter(...).timedomain.resample(...)``
@@ -54,6 +54,7 @@ from pandas_sigproc_spark.kernels import design as _design
 from pandas_sigproc_spark.kernels import iir as _iir
 from pandas_sigproc_spark.kernels import iir_batch as _iirb
 from pandas_sigproc_spark.kernels import interp as _interp
+from pandas_sigproc_spark.kernels.rolling import window_sums
 
 _OUT_SCHEMA = "channel_id string, t double, value double"
 
@@ -145,7 +146,8 @@ class _MovRmsStage:
     """Trailing moving RMS, reference semantics (``extension.py:664-700``):
     ``n = round(window*sr)`` samples, warm-up prefix dropped, final sample
     dropped (the ``[window_n-1:-1]`` quirk) unless ``drop_last=False``,
-    time base re-centered by ``window/2``."""
+    time base re-centered by ``window/2``.  The operator's window sums,
+    so a channel without NULLs gets the operator's bits."""
 
     def __init__(self, window: float, drop_last: bool = True, samplerate=None) -> None:
         self.name = f"mov_rms({window})"
@@ -155,20 +157,9 @@ class _MovRmsStage:
     def run(self, t: np.ndarray, y: np.ndarray, sr: float):
         use_sr = self.samplerate if self.samplerate is not None else sr
         n = int(round(self.window * use_sr))
-        if n < 1:
-            raise ValueError("window shorter than one sample")
-        # Rolling mean via cumsum differencing.  The subtraction cancels
-        # catastrophically for near-silent windows after a large spike
-        # (abs error ~ sqrt(eps * running_sum)); longdouble accumulation
-        # (80-bit on x86) buys ~3.5 digits for ~2x cost, keeping the
-        # fused result within float tolerance of Spark's exact
-        # re-aggregated window frames for any realistic dynamic range.
-        sq = (y * y).astype(np.longdouble)
-        c = np.concatenate([[0.0], np.cumsum(sq)])
-        means = ((c[n:] - c[:-n]) / n).astype(np.float64)
-        out = np.sqrt(np.maximum(means, 0.0))
+        out = np.sqrt(window_sums(y * y, n) / n)
         tt = t[n - 1 :] - self.window / 2.0
-        if self.drop_last and len(out):
+        if self.drop_last:
             out, tt = out[:-1], tt[:-1]
         return tt, out, sr
 

@@ -101,7 +101,7 @@ def streaming_mov_rms(
 ) -> DataFrame:
     """Sliding-window RMS — streaming analogue of ``mov_rms``.
 
-    The batch op is sample-count-based (rowsBetween); unbounded streams
+    The batch op is sample-count-based (n trailing rows); unbounded streams
     have no global row order, so the streaming semantic is time-based
     sliding windows — the standard Structured Streaming translation.
     """

@@ -43,11 +43,24 @@ def test_chain_equals_operator_composition(spark):
         0.05,
         samplerate=2000.0,
     )
+    # The filters are the same kernels fused or standalone, and the fused
+    # mov_rms stage and the operator share one window-sum kernel.
     a, b = _vals(fluent), _vals(manual)
     assert len(a) == len(b) > 0
-    for (ca, ta, va), (cb, tb, vb) in zip(a, b):
-        assert (ca, ta) == (cb, tb)
-        assert abs(va - vb) <= 1e-12 * max(1.0, abs(vb))
+    assert a == b
+
+
+def test_inferred_rate_mov_rms_equals_operator(spark):
+    # Without a rate the accessor runs the fused stage (rate inferred per
+    # channel); with one it runs the operator's whole-channel body.
+    sig = _mk(spark)
+    fused = sigproc(sig).mov_rms(0.05).df
+    body = sigproc(sig).mov_rms(0.05, samplerate=2000.0).df
+    plans = [d._jdf.queryExecution().executedPlan().toString() for d in (fused, body)]
+    assert ["_null_value" in p for p in plans] == [False, True]
+    a = _vals(fused)
+    assert len(a) > 0
+    assert a == _vals(body)
 
 
 def test_consecutive_filters_fuse_to_one_udf_node(spark):

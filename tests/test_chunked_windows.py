@@ -1,10 +1,13 @@
-"""Overlap-chunked native window ops == single-window plans.
+"""Overlap-chunked window ops == single-window plans.
 
 The chunked plans (operators/windows.py module docstring) bound task
 memory for huge channels; these tests pin their equality contract:
-bit-identical for mov_rms/derivative (same frames, same fold order),
-association-rounding for integral, and agg-vs-window for detrend.
+bit-identical for mov_rms (a window's sum depends on its own samples
+only) and derivative (row-local arithmetic), association-rounding for
+integral, and agg-vs-window for detrend.
 """
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -58,6 +61,31 @@ def test_mov_rms_chunked_n1_and_droplast(uniform):
             mov_rms(uniform, 0.01, 100.0, chunk_rows=512, drop_last=drop_last)
         )
         assert np.array_equal(base["value"].to_numpy(), chunk["value"].to_numpy())
+
+
+def test_mov_rms_chunked_nulls_and_nans_across_boundary(spark):
+    # NULL and NaN values on both sides of the chunk boundaries at 256
+    # and 512, and a run of NULLs longer than the window across 512 (its
+    # frames have no non-NULL row, so their value is NULL).
+    values = np.sin(np.arange(1000) * 0.1)
+    rows = [("u", i / 100.0, float(v)) for i, v in enumerate(values)]
+    nulls = {250, 254, 257, 259, *range(505, 521)}
+    for i, v in {252: math.nan, 258: math.nan, 600: math.inf}.items():
+        rows[i] = ("u", i / 100.0, v)
+    rows = [(c, t, None if i in nulls else v) for i, (c, t, v) in enumerate(rows)]
+    df = spark.createDataFrame(rows, "channel_id string, t double, value double")
+
+    def bits(r):
+        v = r["value"]
+        return (r["t"], None if v is None else "nan" if math.isnan(v) else v)
+
+    for drop_last in (True, False):
+        base = mov_rms(df, 0.1, 100.0, chunk_rows=None, drop_last=drop_last)
+        chunk = mov_rms(df, 0.1, 100.0, chunk_rows=256, drop_last=drop_last)
+        a = sorted(map(bits, base.collect()))
+        assert a == sorted(map(bits, chunk.collect()))
+        kinds = {v if v in (None, "nan") else math.isinf(v) for _, v in a}
+        assert kinds == {None, "nan", True, False}
 
 
 def test_integral_chunked_matches(uniform):

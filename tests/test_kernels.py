@@ -5,6 +5,8 @@ A-weighting curve values from IEC 61672, Parseval for the periodogram,
 the ASTM E1049-85 worked rainflow example, spline exactness on cubics.
 """
 
+import math
+
 import numpy as np
 import pytest
 
@@ -27,6 +29,7 @@ from pandas_sigproc_spark.kernels import (
 )
 from pandas_sigproc_spark.kernels.iir import _lfilter_loop
 from pandas_sigproc_spark.kernels.rainflow import extract_cycles
+from pandas_sigproc_spark.kernels.rolling import window_sums
 from pandas_sigproc_spark.kernels.srs import (
     _BLOCK_BYTES,
     smallwood_coefficients,
@@ -352,6 +355,50 @@ class TestSrsMulti:
         X[4, ::7] = -0.0
         X[5, -1] = np.nan
         self._check(X, build_freq_array(10, 100), dt=1e-3, q=10.0)
+
+
+class TestWindowSums:
+    """``window_sums``: within its tree's rounding bound of the exact sum,
+    the same bits for a window wherever the array starts, and a NaN or
+    infinity only in the windows that hold it."""
+
+    X = np.exp(np.random.default_rng(21).uniform(-8.0, 8.0, 3000))
+    SIZES = [1, 2, 3, 7, 8, 9, 63, 64, 65, 1023, 1024, 1025, 3000]
+
+    @pytest.mark.parametrize("n", SIZES)
+    def test_within_bound_of_fsum(self, n):
+        # Non-negative terms, at most L = n.bit_length() roundings on any
+        # path of the tree, plus the reference's one rounding.
+        got = window_sums(self.X, n)
+        rng = np.random.default_rng(n)
+        for i in rng.integers(0, len(got), 200):
+            want = math.fsum(self.X[i : i + n])
+            assert abs(got[i] - want) <= (n.bit_length() + 2) * 2.0**-53 * want
+
+    @pytest.mark.parametrize("n", SIZES)
+    def test_shift_invariant(self, n):
+        # The same windows behind a prefix of s other samples.
+        want = window_sums(self.X, n)
+        assert len(want) == len(self.X) - n + 1
+        pad = np.random.default_rng(22).standard_normal(1000) ** 2
+        for s in (1, 2, 5, 64, 1000):
+            got = window_sums(np.concatenate([pad[:s], self.X]), n)
+            np.testing.assert_array_equal(got[s:], want)
+
+    @pytest.mark.parametrize("bad", [np.nan, np.inf])
+    def test_nonfinite_reaches_only_its_windows(self, bad):
+        x = np.arange(1.0, 41.0)
+        x[17] = bad
+        got = window_sums(x, 5)
+        held = (np.arange(len(got)) <= 17) & (np.arange(len(got)) > 12)
+        np.testing.assert_array_equal(got[held], np.full(held.sum(), bad))
+        np.testing.assert_array_equal(
+            got[~held], window_sums(np.where(np.arange(40) == 17, 0.0, x), 5)[~held]
+        )
+
+    def test_window_longer_than_input_is_empty(self):
+        assert window_sums(np.ones(4), 5).shape == (0,)
+        assert window_sums(np.ones(4), 4).tolist() == [4.0]
 
 
 class TestRainflow:

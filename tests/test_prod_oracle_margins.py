@@ -161,11 +161,13 @@ def _idx_channels(sf_dir: str):
 def test_accessor_chain_round_margin(sf_dir):
     """q_accessor_chain rounds its VALUE to 6 digits against a chain
     replay whose detrend means / rolling mean-of-squares differ from the
-    kernel's (numpy pairwise & longdouble) summation order.  Re-measure
-    that the rounding margin dominates a summation-order perturbation
-    proxy (sequential-mean detrend variant) on each dataset."""
+    kernel's (numpy pairwise means, dyadic window sums) summation order.
+    Re-measure that the rounding margin of the shipped fused stages
+    dominates a summation-order perturbation proxy (sequential-mean
+    detrend, sequential cumsum window) on each dataset."""
     from pandas_sigproc_spark.kernels.design import a_weighting, butter
     from pandas_sigproc_spark.kernels.iir import filtfilt, lfilter
+    from pandas_sigproc_spark.pipeline.fused import _MovRmsStage
 
     b1, a1 = butter(2, 8000.0 / 24000.0, "lowpass")
     b2, a2 = a_weighting(48000.0)
@@ -186,13 +188,13 @@ def test_accessor_chain_round_margin(sf_dir):
             cov = (np.sum(tc * yc) / len(t)) if seq else np.mean(tc * yc)
             return yc - (cov / den if den > 0 else 0.0) * tc
 
-        outs = []
-        for seq in (False, True):
-            ya = lfilter(b2, a2, detrend(xb, seq))
-            sq = ya * ya
-            cs = np.concatenate([[0.0], np.cumsum(sq if seq else sq.astype(np.longdouble))])
-            means = ((cs[24:] - cs[:-24]) / 24).astype(np.float64)
-            outs.append(np.sqrt(np.maximum(means, 0.0))[:-1])
+        # the shipped fused stage (24 samples, drop-last) ...
+        ya = lfilter(b2, a2, detrend(xb, False))
+        outs = [_MovRmsStage(0.0005, samplerate=48000.0).run(t, ya, 48000.0)[1]]
+        # ... against the sequential-sum proxy
+        ya = lfilter(b2, a2, detrend(xb, True))
+        cs = np.concatenate([[0.0], np.cumsum(ya * ya)])
+        outs.append(np.sqrt(np.maximum((cs[24:] - cs[:-24]) / 24, 0.0))[:-1])
         vals.append(outs[0])
         errs.append(np.max(np.abs(outs[0] - outs[1])))
     allv = np.concatenate(vals)

@@ -9,12 +9,14 @@ surface: the numbers here are what one executor core contributes inside an
 ``applyInPandas`` task, directly comparable row-for-row with BASELINE.md's
 table ("the engine's BENCH harness must measure them at parity time").
 
-Usage: python tools/kernel_bench.py  ->  markdown table on stdout.
+Usage: python tools/kernel_bench.py  ->  markdown table on stdout, after
+a line naming the CPU and its core count.
 """
 
 from __future__ import annotations
 
 import os
+import platform
 import sys
 import time
 
@@ -32,6 +34,7 @@ from pandas_sigproc_spark.kernels import (
     srs,
     welch_psd,
 )
+from pandas_sigproc_spark.kernels.rolling import window_sums
 from pandas_sigproc_spark.kernels.spectral import periodogram
 
 N = 480_000
@@ -47,6 +50,17 @@ def best_of(fn, reps=REPS):
         el = time.perf_counter() - t0
         best = el if best is None else min(best, el)
     return best
+
+
+def _cpu_model() -> str:
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith("model name"):
+                    return line.split(":", 1)[1].strip()
+    except OSError:
+        pass
+    return platform.machine()
 
 
 def main():
@@ -67,13 +81,12 @@ def main():
     add("rms", best_of(lambda: np.sqrt(np.mean(x * x))), 0.58)
     lo, hi = 2.0, 8.0
     add("between mask", best_of(lambda: x[(t >= lo) & (t <= hi)]), 1.31)
-    w = 4800
-    sq = np.concatenate([[0.0], np.cumsum(x * x)])
-
-    def mov_rms():
-        return np.sqrt((sq[w:] - sq[:-w]) / w)
-
-    add("mov_rms (0.1 s window)", best_of(mov_rms), 14.62)
+    w = 4800  # mov_rms's arithmetic: dyadic window sums of the squares
+    add(
+        "mov_rms (0.1 s window)",
+        best_of(lambda: np.sqrt(window_sums(x * x, w) / w)),
+        14.62,
+    )
 
     def integral():
         return np.concatenate(
@@ -111,6 +124,10 @@ def main():
     el = best_of(lambda: interp1d(t, x, x2, "cubic"), reps=3)
     add("cubic spline interp -> 44.1 kHz", el)
 
+    print(
+        f"Single core, best of {REPS} (3 for srs, rainflow and the cubic"
+        f" spline) on {_cpu_model()}, {os.cpu_count()} cores.\n"
+    )
     print("| Kernel | 480k-sample time | Throughput | BASELINE.md (ref math) |")
     print("|---|---|---|---|")
     for r in rows:
