@@ -20,17 +20,18 @@ designs driver-side, with the same stage, from the declared
 
 Scale note: groups are independent, so 1e6 channels fan out across
 executors; the shuffle is one pass on ``channel_id``.  A channel too big
-for one task takes the overlap-save split (:func:`filt_chunked`), which
-rides on the same kernels (``kernels.iir`` impulse-response length
-bounds the needed overlap).
+for one task takes the overlap-save split (:func:`filt_chunked`): the
+same kernels over the planner's halo'd chunks (``planner.chunk_apply``),
+with the ``kernels.iir`` impulse-response length bounding the halo.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 
+from pandas_sigproc_spark import planner
 from pandas_sigproc_spark.kernels import iir as _iir
 from pandas_sigproc_spark.pipeline.fused import (
     KernelPipeline,
@@ -49,14 +50,12 @@ def _resolve_filter_mode(df, n_buckets, chunk_rows, samplerate):
     NOTE: with a declared ``samplerate``, auto-chunking applies ONE
     globally-designed (b, a) and one arithmetic index to EVERY channel.
     A channel whose true rate differs from the declaration is caught by
-    the chunked kernel's consecutive-index assertion (loud error, never
-    silently wrong cutoffs); genuinely mixed-rate tables should omit
+    the planner's chunk grid guard (loud error, never silently wrong
+    cutoffs); genuinely mixed-rate tables should omit
     ``samplerate`` or pass ``n_buckets``/``chunk_rows`` explicitly so
     coefficients are designed per channel.  Consulting the planner runs
     one EAGER cached count job at plan-build time (planner.get_stats)."""
     if n_buckets == "auto" and chunk_rows is None:
-        from pandas_sigproc_spark import planner
-
         return planner.auto_filter_mode(df, samplerate)
     if n_buckets == "auto":
         return None, chunk_rows
@@ -178,24 +177,24 @@ def filt_chunked(
 ) -> DataFrame:
     """Overlap-save IIR filtering for channels that exceed one task's memory.
 
-    Relational segmentation: every row gets a per-channel sample index;
-    rows within ``overlap_rows`` of a chunk boundary are *duplicated*
-    into the neighbouring chunk (backward always — the causal warm-up — and
-    forward too for zero-phase, whose backward pass needs future samples).
-    Each (channel, chunk) group is filtered independently with zero initial
+    The channel is cut by the planner's halo'd chunk primitive
+    (:func:`planner.chunk_apply`): rows within ``overlap_rows`` of a
+    chunk boundary are *duplicated* into the neighbouring chunk
+    (backward always — the causal warm-up — and forward too for
+    zero-phase, whose backward pass needs future samples).  Each
+    (channel, chunk) group is filtered independently with zero initial
     state; because the overlap exceeds the filter's settling length, the
-    state error at the core boundary is below fp noise, and only core rows
-    are emitted.  Equality with whole-channel filtering is pinned in
+    state error at the core boundary is below fp noise, and only core
+    rows are emitted.  Equality with whole-channel filtering is pinned in
     tests/test_chunked_filter.py.
 
-    With ``samplerate`` given, the sample index is ARITHMETIC —
-    ``round((t - min(t)) * sr)`` off one per-channel MIN aggregate — so no
-    stage ever sorts or even sees a whole channel (filters require a
-    uniform grid anyway, where this equals the ordinal index).  Without
-    it, a per-channel ``row_number`` window assigns the index, which
-    SORTS each whole channel in one task — fine at moderate sizes,
-    self-defeating for the channels chunking exists for; the named
-    operators always pass their samplerate through.
+    The sample index is arithmetic, ``round((t - min(t)) * sr)``, with
+    the declared ``samplerate`` or else each channel's inferred
+    ``(n - 1) / (max(t) - min(t))``, so no stage ever sorts or even sees
+    a whole channel.  The index must step by one inside every chunk: a
+    channel whose true rate disagrees with the declared one, or whose
+    grid has jitter or gaps, fails loudly instead of emitting corrupted
+    core rows (the per-channel plan designs per channel instead).
 
     Scale shape: one shuffle on (channel, chunk); chunk size bounds task
     memory regardless of channel length, so a year-long 48 kHz channel
@@ -206,89 +205,19 @@ def filt_chunked(
     b = np.asarray(b, np.float64)
     a = np.asarray(a, np.float64)
     O = int(overlap_rows) if overlap_rows is not None else settling_length(b, a)
-    L = int(chunk_rows)
-    if O >= L:
-        raise ValueError(
-            f"chunk_rows={L} must exceed the overlap ({O}); pick a larger "
-            "chunk or pass a smaller explicit overlap_rows"
-        )
-    if samplerate is not None:
-        t0s = df.groupBy("channel_id").agg(F.min("t").alias("_t0"))
-        src = (
-            df.join(t0s, "channel_id")
-            .select(
-                "channel_id",
-                "t",
-                "value",
-                F.floor((F.col("t") - F.col("_t0")) * float(samplerate) + 0.5)
-                .cast("long")
-                .alias("_i"),
-            )
-        )
-    else:
-        w = Window.partitionBy("channel_id").orderBy("t")
-        src = df.select(
-            "channel_id", "t", "value", (F.row_number().over(w) - 1).alias("_i")
-        )
-    segno = (F.col("_i") / L).cast("long")
-    members = F.array(segno)
-    members = F.when(
-        (F.col("_i") % L >= L - O), F.array(segno, segno + 1)
-    ).otherwise(members)
-    if zero_phase:
-        members = F.when(
-            (F.col("_i") % L < O) & (segno > 0),
-            F.array_union(members, F.array(segno - 1)),
-        ).otherwise(members)
-    src = src.withColumn("_seg", F.explode(members))
+    run = _iir.filtfilt if zero_phase else _iir.lfilter
 
-    out_schema = "channel_id string, t double, value double"
+    def body(pdf: pd.DataFrame, core: np.ndarray) -> pd.DataFrame:
+        y = np.asarray(run(b, a, pdf["value"].to_numpy(np.float64)))
+        out = pdf.loc[core, ["channel_id", "t"]]
+        return out.assign(value=y[core])
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_i")
-        iv = pdf["_i"].to_numpy()
-        # The arithmetic index must be CONSECUTIVE inside a chunk group:
-        # duplicates mean timestamp ties / a channel running FASTER than
-        # the declared samplerate, gaps mean dropped samples / a SLOWER
-        # channel — either way the globally-designed (b, a) and the chunk
-        # membership are wrong for this channel, so fail loudly instead
-        # of emitting silently corrupted core rows (mixed-rate tables
-        # must use the per-channel path, which designs per group).
-        if len(iv) > 1 and (np.diff(iv) != 1).any():
-            cid = str(pdf["channel_id"].iloc[0])
-            raise ValueError(
-                f"filt_chunked: non-consecutive sample index in channel "
-                f"{cid!r} — the channel's true rate disagrees with the "
-                "declared samplerate, or its grid has jitter/gaps; "
-                "chunked filtering requires a uniform grid at the "
-                "declared rate (pass chunk_rows=None for the per-channel "
-                "plan, which infers each channel's own rate)"
-            )
-        segv = int(pdf["_seg"].iloc[0])
-        core = (pdf["_i"] // L) == segv
-        if not core.any():
-            # PHANTOM TAIL GROUP: the forward-overlap duplication puts
-            # the last chunk's tail rows into (last_seg + 1), a group
-            # with no core rows.  Filtering it wastes a pass at best
-            # and CRASHES at worst (a review finding, reproduced: when
-            # the channel length leaves <= padlen rows in the phantom
-            # group, filtfilt raises 'input length must exceed padlen'
-            # and aborts the job).  Nothing would be emitted anyway —
-            # return empty without touching the kernel.
-            return pd.DataFrame(
-                {"channel_id": [], "t": [], "value": []}
-            ).astype({"channel_id": object, "t": float, "value": float})
-        y = (
-            _iir.filtfilt(b, a, pdf["value"].to_numpy(np.float64))
-            if zero_phase
-            else _iir.lfilter(b, a, pdf["value"].to_numpy(np.float64))
-        )
-        return pd.DataFrame(
-            {
-                "channel_id": pdf["channel_id"][core],
-                "t": pdf["t"][core],
-                "value": np.asarray(y)[core.to_numpy()],
-            }
-        )
-
-    return src.groupBy("channel_id", "_seg").applyInPandas(kernel, out_schema)
+    return planner.chunk_apply(
+        df.select("channel_id", "t", "value"),
+        body,
+        "channel_id string, t double, value double",
+        chunk_rows,
+        O,
+        O if zero_phase else 0,
+        samplerate,
+    )

@@ -25,6 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from pandas_sigproc_spark import planner
 from pandas_sigproc_spark.kernels import interp as _interp
 
 _OUT_SCHEMA = "channel_id string, t double, value double"
@@ -53,12 +54,7 @@ def interp1d_spline(
     knot range contains them; out-of-span targets raise from the kernel
     in both plans (SciPy parity — ``extension.py:986-996``).
     """
-    from pandas_sigproc_spark.operators.windows import (
-        _chunked_src,
-        _resolve_chunk_rows,
-    )
-
-    chunk_rows = _resolve_chunk_rows(df, chunk_rows)
+    chunk_rows = planner.resolve_chunk_rows(df, chunk_rows)
 
     if chunk_rows is None:
         def kernel(src: pd.DataFrame, tgt: pd.DataFrame) -> pd.DataFrame:
@@ -81,51 +77,20 @@ def interp1d_spline(
         )
 
     L, O = int(chunk_rows), int(overlap_knots)
-    src = df.select(
-        "channel_id", F.col(axis).alias("t"), "value"
-    )
-    # ONE per-channel MIN/MAX/COUNT aggregate feeds both the chunk
-    # explosion and the target routing (passing it into _chunked_src —
-    # the source is huge by construction, and Spark does not guarantee
-    # exchange reuse across the two differently-shaped parents).
-    geo = src.groupBy("channel_id").agg(
-        F.min("t").alias("_t0"),
-        F.max("t").alias("_t1"),
-        F.count("*").alias("_n"),
-    )
-    chunked = _chunked_src(src, L, overlap_back=O, overlap_fwd=O, geo=geo)
+    src = df.select("channel_id", F.col(axis).alias("t"), "value")
+    # ONE per-channel aggregate feeds both the chunk explosion and the
+    # target routing (the source is huge by construction, and Spark does
+    # not guarantee exchange reuse across the two differently-shaped
+    # parents).
+    geo = planner.channel_geometry(src)
+    chunked = planner.chunked_src(src, L, back=O, fwd=O, geo=geo)
     # route each target to the chunk whose CORE knot range contains it
-    # (clamped: out-of-span targets evaluate in the true end chunks)
-    sr = (F.col("_n") - 1) / (F.col("_t1") - F.col("_t0"))
+    # (clamped: out-of-span targets evaluate in the true end chunks); a
+    # 1-knot channel routes to chunk 0, where the kernel raises its own
+    # 'need at least 2 sample points', as in the global plan
     nseg = (F.floor((F.col("_n") - 1) / L) + 1).cast("long")
-    tpos = (F.col("t") - F.col("_t0")) * sr / L
-    # Degenerate channels: the division by the time span must stay
-    # behind a lazy CaseWhen branch (ANSI Spark throws DIVIDE_BY_ZERO
-    # eagerly otherwise).  A 1-knot channel routes its targets to chunk
-    # 0, where the kernel raises its own 'need at least 2 sample
-    # points' — same loud failure as the global plan; a zero-span
-    # multi-row channel raises here, mirroring _chunked_src.
-    tseg = (
-        F.when(F.col("_n") <= 1, F.lit(0))
-        .when(
-            F.col("_t1") == F.col("_t0"),
-            F.raise_error(
-                F.concat(
-                    F.lit("chunked spline interp: channel "),
-                    F.col("channel_id"),
-                    F.lit(
-                        " has multiple rows with zero time span (all "
-                        "timestamps equal) — no sample grid exists"
-                    ),
-                )
-            ).cast("long"),
-        )
-        .otherwise(
-            F.least(
-                F.greatest(F.floor(tpos).cast("long"), F.lit(0)), nseg - 1
-            )
-        )
-    )
+    home = F.floor(planner.grid_position(F.col("t")) / L).cast("long")
+    tseg = F.least(F.greatest(home, F.lit(0)), nseg - 1)
     tgt = (
         grid.select("channel_id", F.col(axis).alias("t"))
         .join(F.broadcast(geo), "channel_id")
@@ -135,15 +100,7 @@ def interp1d_spline(
     def kernel_chunk(src_pdf: pd.DataFrame, tgt_pdf: pd.DataFrame) -> pd.DataFrame:
         if src_pdf.empty or tgt_pdf.empty:
             return pd.DataFrame(columns=["channel_id", "t", "value"])
-        src_pdf = src_pdf.sort_values("_i")
-        iv = src_pdf["_i"].to_numpy()
-        if len(iv) > 1 and (np.diff(iv) != 1).any():
-            raise ValueError(
-                "interp1d_spline chunked: non-consecutive sample index in "
-                f"channel {src_pdf['channel_id'].iloc[0]!r} — chunked "
-                "spline interpolation requires a uniform strictly-"
-                "increasing grid (pass chunk_rows=None)"
-            )
+        src_pdf = planner.sorted_chunk(src_pdf)
         x = src_pdf["t"].to_numpy(dtype=np.float64)
         y = src_pdf["value"].to_numpy(dtype=np.float64)
         x2 = np.sort(tgt_pdf["t"].to_numpy(dtype=np.float64))

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pandas_sigproc_spark import planner
+
 
 def rss(df: DataFrame, channel_ids=None, out_channel: str = None, time_col: str = "t") -> DataFrame:
     """Root-sum-square across channels sharing a time base.
@@ -244,15 +246,13 @@ def interp1d_native(
         F.lit(0).alias("_is_src"),
     )
     u = data.unionByName(tgt)
-    from pandas_sigproc_spark.operators.windows import _resolve_chunk_rows
-
     auto = chunk_rows == "auto"
-    chunk_rows = _resolve_chunk_rows(df, chunk_rows)
+    chunk_rows = planner.resolve_chunk_rows(df, chunk_rows)
     if chunk_rows is None and auto:
         # the windows sort n_src + n_grid rows per channel, so a huge
         # TARGET grid needs chunking even under a small source (a
         # review finding: upsampling bypassed the bounded-task path)
-        chunk_rows = _resolve_chunk_rows(grid, "auto")
+        chunk_rows = planner.resolve_chunk_rows(grid, "auto")
     if chunk_rows is not None:
         u = _chunk_assign(u, int(chunk_rows))
         part_cols = ["channel_id", "_seg"]
@@ -459,9 +459,7 @@ def resample(
         return interp1d_spline(df, grid, kind=kind, chunk_rows=chunk_rows)
 
     kind = kind.lower()
-    from pandas_sigproc_spark.operators.windows import _resolve_chunk_rows
-
-    chunk_rows = _resolve_chunk_rows(df, chunk_rows)
+    chunk_rows = planner.resolve_chunk_rows(df, chunk_rows)
     if chunk_rows is not None:
         d = _resample_pairs_chunked(df, int(chunk_rows))
     else:

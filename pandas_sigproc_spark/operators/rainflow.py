@@ -10,7 +10,9 @@ Scale path for channels exceeding one task (SURVEY.md §7.3.1): segmented
 counting with residue-stack merge — count full cycles inside chunks, carry
 each chunk's unresolved reversal residue to a final merge pass.  The
 residues are tiny (monotone-envelope stacks), so the merge is a cheap
-second round.  Not enabled by default; whole-channel groups are exact.
+second round.  The default ``rainflow(n_buckets="auto")`` switches to it
+for a channel above ``planner.HUGE_CHANNEL_ROWS``; the counts equal the
+whole-channel kernel's.
 """
 
 from __future__ import annotations

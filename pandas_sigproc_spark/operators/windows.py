@@ -13,21 +13,24 @@ funnels each whole channel through ONE task — a 5M-row hot channel costs
 50x the per-task budget of its peers (measured in SKEW.md), and at
 100 TB a year-long 48 kHz channel would OOM a single executor.  For
 channels above :data:`planner.HUGE_CHANNEL_ROWS` the operators therefore
-auto-select an *overlap-chunked* plan: every row gets an arithmetic
-per-channel sample index (one broadcast-joined MIN/MAX/COUNT aggregate —
-no sort, no single-task stage), rows within the operator's warm-up
-distance of a chunk boundary are duplicated into the neighbouring chunk,
-and the same computation runs partitioned by ``(channel, chunk)`` so
-every task holds at most ``chunk_rows + overlap`` rows.  The chunked
-plans are row-for-row BIT-IDENTICAL to the whole-channel plans for
+auto-select an *overlap-chunked* plan cut by the planner's one halo'd
+chunk primitive (:func:`planner.chunked_src`): an arithmetic per-channel
+sample index off one broadcast MIN/MAX/COUNT aggregate (no sort, no
+single-task stage), rows within the operator's warm-up distance of a
+chunk boundary duplicated into the neighbouring chunk, and the same
+computation partitioned by ``(channel, chunk)``, so every task holds at
+most ``chunk_rows + overlap`` rows.  ``mov_rms`` runs its NumPy body
+through :func:`planner.chunk_apply`; ``integral`` and ``derivative``
+keep native window plans over the chunks.  The chunked plans are
+row-for-row BIT-IDENTICAL to the whole-channel plans for
 ``mov_rms``/``derivative`` and identical up to summation association
 for ``integral`` (pinned in tests/test_chunked_windows.py).
 
 The chunked plans require each channel to sit on a uniform,
-strictly-increasing time grid (the same precondition as the IIR
-``filt_chunked`` path — the arithmetic index IS the ordinal index only
-there).  A guard raises inside the task if the reconstructed index has
-duplicates or gaps, instead of silently mis-framing.
+strictly-increasing time grid — the arithmetic index IS the ordinal
+index only there.  The planner's grid guard raises inside the task if
+the reconstructed index has duplicates or gaps, instead of silently
+mis-framing.
 """
 
 from __future__ import annotations
@@ -40,156 +43,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pandas_sigproc_spark import planner
 from pandas_sigproc_spark.kernels.rolling import window_sums
 
-#: The chunked plans' grid-guard message, around the channel id.
-_GRID_MSG = (
-    "chunked window op: non-consecutive sample index in channel ",
-    " (duplicate timestamps or a non-uniform grid); chunked execution "
-    "requires a uniform strictly-increasing time base — pass chunk_rows=None",
-)
 _MOV_RMS_SCHEMA = "channel_id string, t double, value double"
 
 
 def _wspec(order_col: str, tiebreak_col: str | None):
     order = [F.col(order_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
     return Window.partitionBy("channel_id").orderBy(*order)
-
-
-def _resolve_chunk_rows(
-    df: DataFrame, chunk_rows, *, overlap: int = 0, tiebreak_col=None
-):
-    """Resolve the ``"auto"`` scale mode from channel statistics
-    (planner.py): huge channels chunk, everything else keeps the
-    whole-channel plan.  Explicit ints/None always win.
-
-    Two auto-mode adjustments keep ``"auto"`` from ever failing a call
-    that the whole-channel plan accepts:
-
-    - ``tiebreak_col`` set → stay on the whole-channel plan (the chunked path's
-      arithmetic sample index cannot disambiguate duplicate timestamps;
-      an explicit ``chunk_rows`` int with a tiebreak raises instead of
-      silently dropping the tiebreak);
-    - warm-up ``overlap`` at or above the planner's chunk size (a very
-      long mov_rms window) → grow the chunk to ``4 * overlap``: every
-      task then holds ≤ 5×overlap rows — still bounded, because no
-      chunking scheme can bound a trailing-window task below the window
-      length itself.
-    """
-    if chunk_rows == "auto":
-        if tiebreak_col is not None:
-            # The degradation is deliberate (see docstring) but must not
-            # be SILENT: above the huge-channel threshold the caller
-            # loses exactly the single-task-window protection auto mode
-            # exists for, so say so once per call site (r5 advice).
-            resolved = planner.auto_window_mode(df)
-            if resolved is not None:
-                import warnings
-
-                warnings.warn(
-                    "chunk_rows='auto' detected a huge channel but "
-                    "tiebreak_col forces the single-task whole-channel "
-                    "window (the chunked path's arithmetic sample "
-                    "index cannot disambiguate duplicate timestamps). "
-                    "Deduplicate the time base (deduplicate()) or drop "
-                    "tiebreak_col to regain bounded-task chunking.",
-                    stacklevel=3,
-                )
-            return None
-        resolved = planner.auto_window_mode(df)
-        if resolved is not None and overlap >= resolved:
-            resolved = 4 * overlap
-        return resolved
-    if chunk_rows is not None and tiebreak_col is not None:
-        raise ValueError(
-            "chunked window ops cannot honor tiebreak_col: the arithmetic "
-            "sample index requires unique uniform timestamps — pass "
-            "chunk_rows=None for the whole-channel plan"
-        )
-    return chunk_rows
-
-
-def _chunked_src(
-    df: DataFrame,
-    chunk_rows: int,
-    overlap_back: int,
-    overlap_fwd: int,
-    geo: DataFrame | None = None,
-) -> DataFrame:
-    """Explode ``df`` into overlapping (channel, chunk) groups.
-
-    Adds ``_i`` (arithmetic per-channel sample index), ``_n`` (channel
-    row count) and ``_seg`` (chunk id; boundary rows are duplicated into
-    the neighbouring chunk per the requested overlaps).  The index is
-    ``round((t - t0) * sr)`` with the per-channel rate inferred from one
-    broadcast MIN/MAX/COUNT aggregate — sort-free, so no stage ever holds
-    a whole channel (the point of chunking).  ``overlap_back`` rows from
-    the tail of each chunk feed the next chunk's leading frames (trailing
-    windows / lag); ``overlap_fwd`` rows from the head feed the previous
-    chunk's trailing frames (lead).
-    """
-    L = int(chunk_rows)
-    O_b, O_f = int(overlap_back), int(overlap_fwd)
-    if max(O_b, O_f) >= L:
-        raise ValueError(
-            f"chunk_rows={L} must exceed the window overlap "
-            f"({max(O_b, O_f)}); pick a larger chunk"
-        )
-    if geo is None:
-        # Callers that already aggregated per-channel MIN/MAX/COUNT for
-        # their own routing (chunked spline interp) pass it in — the
-        # source table this path exists for is huge by construction, and
-        # exchange reuse across differently-shaped parents is not
-        # guaranteed.
-        geo = df.groupBy("channel_id").agg(
-            F.min("t").alias("_t0"),
-            F.max("t").alias("_t1"),
-            F.count("*").alias("_n"),
-        )
-    # Per-channel inferred rate: exact on the uniform grids this path
-    # requires; mixed-rate tables are fine (each channel gets its own).
-    sr = (F.col("_n") - 1) / (F.col("_t1") - F.col("_t0"))
-    src = df.join(F.broadcast(geo), "channel_id").withColumn(
-        "_i",
-        F.when(F.col("_n") <= 1, F.lit(0))
-        .when(
-            # zero time span with >1 row: sr is inf, the index NaN->null,
-            # and every downstream filter would silently DROP the channel
-            F.col("_t1") == F.col("_t0"),
-            F.raise_error(
-                F.concat(
-                    F.lit("chunked window op: channel "),
-                    F.col("channel_id"),
-                    F.lit(
-                        " has multiple rows with zero time span (all "
-                        "timestamps equal) — no sample grid exists"
-                    ),
-                )
-            ).cast("long"),
-        )
-        .otherwise(F.floor((F.col("t") - F.col("_t0")) * sr + 0.5))
-        .cast("long"),
-    )
-    segno = (F.col("_i") / L).cast("long")
-    members = F.array(segno)
-    if O_b:
-        members = F.when(
-            F.col("_i") % L >= L - O_b, F.array(segno, segno + 1)
-        ).otherwise(members)
-    if O_f:
-        members = F.when(
-            (F.col("_i") % L < O_f) & (segno > 0),
-            F.array_union(members, F.array(segno - 1)),
-        ).otherwise(members)
-    return src.withColumn("_seg", F.explode(members)).drop("_t0", "_t1")
-
-
-def _chunk_guard(wseg, value_col):
-    """Wrap ``value_col`` so the task RAISES if the arithmetic index has
-    duplicates or gaps within a chunk (non-uniform grid / timestamp
-    jitter) — the frames would silently be wrong otherwise."""
-    gap = F.col("_i") - F.lag("_i").over(wseg)
-    bad = gap.isNotNull() & (gap != 1)
-    msg = F.concat(F.lit(_GRID_MSG[0]), F.col("channel_id"), F.lit(_GRID_MSG[1]))
-    return F.when(bad, F.raise_error(msg).cast("double")).otherwise(value_col)
 
 
 def mov_rms(
@@ -211,8 +70,9 @@ def mov_rms(
     One NumPy body (:func:`_mov_rms_body`) runs every plan shape:
     whole channels through :func:`planner.group_apply`, keyed per
     channel or by the planner's fleet bucket count, and, when
-    ``chunk_rows="auto"`` (default) finds a huge channel, overlap chunks
-    that carry the previous ``n-1`` rows (module docstring).  NOTE: the
+    ``chunk_rows="auto"`` (default) finds a huge channel,
+    :func:`planner.chunk_apply` chunks that carry the previous ``n-1``
+    rows (module docstring).  NOTE: the
     default consults one cached COUNT aggregate over the input
     (planner.get_stats) at plan-build time, and so does the kernel for
     its bucket count.
@@ -220,7 +80,7 @@ def mov_rms(
     n = int(round(window * samplerate))
     if n < 1:
         raise ValueError("window shorter than one sample")
-    chunk_rows = _resolve_chunk_rows(
+    chunk_rows = planner.resolve_chunk_rows(
         df, chunk_rows, overlap=n - 1, tiebreak_col=tiebreak_col
     )
     if chunk_rows is not None:
@@ -306,22 +166,17 @@ def _mov_rms_body(
 
 
 def _mov_rms_chunked(df, window, n, chunk_rows, drop_last):
-    src = _chunked_src(df, chunk_rows, overlap_back=n - 1, overlap_fwd=0)
-    if drop_last:
-        # A trailing frame's last row ends no other frame, so dropping
-        # the channel's last row first drops exactly its output row.
-        src = src.filter(F.col("_i") < F.col("_n") - 1)
+    def body(pdf: pd.DataFrame, core: np.ndarray) -> pd.DataFrame:
+        # The chunk arrives sorted by _i, so the body needs no order key.
+        # Its first n-1 rows are the channel's warm-up (chunk 0) or the
+        # previous chunk's tail: the body's warm-up trim drops them.
+        # Only the channel's last row ends no other frame.
+        last = drop_last and pdf["_i"].iat[-1] == pdf["_n"].iat[0] - 1
+        return _mov_rms_body(pdf, n, window / 2.0, [], last)
 
-    def body(pdf: pd.DataFrame) -> pd.DataFrame:
-        # A chunk's first n-1 rows are the channel's warm-up (chunk 0) or
-        # the previous chunk's tail: the body's warm-up trim drops them.
-        if (np.diff(np.sort(pdf["_i"].to_numpy())) != 1).any():
-            cid = pdf["channel_id"].iloc[0]
-            raise ValueError(f"{_GRID_MSG[0]}{cid}{_GRID_MSG[1]}")
-        return _mov_rms_body(pdf, n, window / 2.0, ["_i"], False)
-
-    keyed = _with_null_flags(src, ["_i"], "_seg").groupBy("channel_id", "_seg")
-    return keyed.applyInPandas(body, _MOV_RMS_SCHEMA)
+    return planner.chunk_apply(
+        _with_null_flags(df, ["t"]), body, _MOV_RMS_SCHEMA, chunk_rows, n - 1, 0
+    )
 
 
 def integral(
@@ -345,7 +200,7 @@ def integral(
     layout (and SQL-replayable — the driver oracle replays the same
     association).
     """
-    chunk_rows = _resolve_chunk_rows(
+    chunk_rows = planner.resolve_chunk_rows(
         df, chunk_rows, overlap=1, tiebreak_col=tiebreak_col
     )
     if chunk_rows is not None:
@@ -364,7 +219,7 @@ def integral(
 
 def _integral_chunked(df, chunk_rows):
     L = chunk_rows
-    src = _chunked_src(df, L, overlap_back=1, overlap_fwd=0)
+    src = planner.chunked_src(df, L, back=1, fwd=0)
     wseg = Window.partitionBy("channel_id", "_seg").orderBy("_i")
     # The overlap row (previous chunk's tail) contributes lag(t/value) to
     # the chunk's first core row; its own area coalesces to 0 here — it
@@ -376,7 +231,7 @@ def _integral_chunked(df, chunk_rows):
         F.lit(0.0),
     )
     prefix = F.sum(area).over(wseg.rowsBetween(Window.unboundedPreceding, 0))
-    base = src.withColumn("_prefix", _chunk_guard(wseg, prefix))
+    base = src.withColumn("_prefix", planner.grid_guard(wseg, prefix))
     # Chunk totals = the prefix at each chunk's last core row (arithmetic
     # predicate, no extra window); offsets = exclusive running sum over
     # the tiny (channel, seg) totals table, broadcast back.  Left folds
@@ -400,7 +255,7 @@ def _integral_chunked(df, chunk_rows):
         F.coalesce(F.sum("_T").over(woff), F.lit(0.0)).alias("_off"),
     )
     return (
-        base.filter((F.col("_i") / L).cast("long") == F.col("_seg"))
+        base.filter("_core")
         .join(F.broadcast(offs), ["channel_id", "_seg"])
         .select(
             "channel_id", "t", (F.col("_off") + F.col("_prefix")).alias("value")
@@ -423,7 +278,7 @@ def derivative(
     ``lead``) — purely row-local arithmetic, so the chunked output is
     bit-identical to the single-window plan.
     """
-    chunk_rows = _resolve_chunk_rows(
+    chunk_rows = planner.resolve_chunk_rows(
         df, chunk_rows, overlap=1, tiebreak_col=tiebreak_col
     )
     if chunk_rows is not None:
@@ -442,13 +297,12 @@ def derivative(
 
 
 def _derivative_chunked(df, chunk_rows):
-    L = chunk_rows
-    src = _chunked_src(df, L, overlap_back=0, overlap_fwd=1)
+    src = planner.chunked_src(df, chunk_rows, back=0, fwd=1)
     wseg = Window.partitionBy("channel_id", "_seg").orderBy("_i")
     out = (
         src.withColumn("_t2", F.lead("t").over(wseg))
-        .withColumn("_y2", _chunk_guard(wseg, F.lead("value").over(wseg)))
-        .filter((F.col("_i") / L).cast("long") == F.col("_seg"))
+        .withColumn("_y2", planner.grid_guard(wseg, F.lead("value").over(wseg)))
+        .filter("_core")
         .filter(F.col("_t2").isNotNull())
     )
     return out.select(
@@ -531,7 +385,7 @@ def detrend(
     if mode not in ("auto", "agg", "window"):
         raise ValueError(f"unknown detrend mode {mode!r}")
     if mode == "auto":
-        mode = "agg" if _resolve_chunk_rows(df, "auto") is not None else "window"
+        mode = "agg" if planner.auto_window_mode(df) is not None else "window"
     if mode == "agg":
         return _detrend_agg(df, dt_type)
     w = Window.partitionBy("channel_id")
@@ -576,50 +430,23 @@ def _detrend_piecewise_agg(df, bps):
     samples keeps small residuals but shifts ordinal indices — gapped
     grids are not detectable here; use the window form for those.
     """
-    geo = df.groupBy("channel_id").agg(
-        F.min("t").alias("_t0"),
-        F.max("t").alias("_t1"),
-        F.count("*").alias("_n"),
-    )
-    sr = (F.col("_n") - 1) / (F.col("_t1") - F.col("_t0"))
-    pos = (F.col("t") - F.col("_t0")) * sr
+    geo = planner.channel_geometry(df)
+    # planner.grid_position: 1-row channels index to slot 0 (their
+    # 1-point segment fit is handled by the try_divide below, matching
+    # the window form); multi-row zero-span channels raise.
+    pos = planner.grid_position(F.col("t"))
     i = F.floor(pos + 0.5).cast("long")
-    off_grid = F.abs(pos - i) > 0.25
-    # The span division must stay behind a lazy CaseWhen branch: ANSI
-    # Spark throws DIVIDE_BY_ZERO eagerly for a 1-row channel (0/0)
-    # otherwise.  1-row channels index to slot 0 (their 1-point segment
-    # fit is handled by the try_divide below, matching the window form);
-    # multi-row zero-span channels raise loudly like _chunked_src.
-    idx = (
-        F.when(F.col("_n") <= 1, F.lit(0).cast("long"))
-        .when(
-            F.col("_t1") == F.col("_t0"),
-            F.raise_error(
-                F.concat(
-                    F.lit("detrend(uniform_grid=True): channel "),
-                    F.col("channel_id"),
-                    F.lit(
-                        " has multiple rows with zero time span (all "
-                        "timestamps equal) — no sample grid exists"
-                    ),
-                )
-            ).cast("long"),
+    off_grid = F.raise_error(
+        F.concat(
+            F.lit("detrend(uniform_grid=True): channel "),
+            F.col("channel_id"),
+            F.lit(
+                " is not on a uniform time grid (timestamp off its "
+                "reconstructed slot); use the default window form"
+            ),
         )
-        .when(
-            off_grid,
-            F.raise_error(
-                F.concat(
-                    F.lit("detrend(uniform_grid=True): channel "),
-                    F.col("channel_id"),
-                    F.lit(
-                        " is not on a uniform time grid (timestamp off its "
-                        "reconstructed slot); use the default window form"
-                    ),
-                )
-            ).cast("long"),
-        )
-        .otherwise(i)
     )
+    idx = F.when(F.abs(pos - i) > 0.25, off_grid.cast("long")).otherwise(i)
     seg = sum(
         (F.when(idx >= b, 1).otherwise(0) for b in bps), F.lit(0)
     )

@@ -16,7 +16,9 @@ SURVEY.md §7.3.1 gives every whole-channel kernel three execution modes:
                  nearly independent of the group's row count;
 - segmented / chunked — split ONE channel across tasks (channels too big
                  for any single task: overlap-save filtering, relational
-                 Welch segmentation).
+                 Welch segmentation).  :func:`chunked_src` is the one
+                 place that cuts a channel into halo'd chunks, and
+                 :func:`chunk_apply` runs one body over them.
 
 Per-channel and bucketed are one body with two group keys
 (:func:`group_apply`): each operator writes only the bucket body, and
@@ -145,6 +147,202 @@ def group_apply(src: DataFrame, body, schema, n_buckets: int | None) -> DataFram
         .groupBy("_b")
         .applyInPandas(lambda pdf: body(pdf.drop(columns=["_b"])), schema)
     )
+
+
+#: The chunked plans' grid-guard message, around the channel id.
+_GRID_MSG = (
+    "chunked plan: non-consecutive sample index in channel ",
+    " (duplicate timestamps, a non-uniform grid or a rate other than the "
+    "declared samplerate); chunked execution requires a uniform "
+    "strictly-increasing time base — pass chunk_rows=None",
+)
+
+
+def channel_geometry(df: DataFrame) -> DataFrame:
+    """One row per channel: ``_t0``/``_t1`` (MIN/MAX of ``t``) and
+    ``_n`` (row count) — the aggregate every chunked plan indexes off."""
+    return df.groupBy("channel_id").agg(
+        F.min("t").alias("_t0"), F.max("t").alias("_t1"), F.count("*").alias("_n")
+    )
+
+
+def grid_position(t, samplerate: float | None = None):
+    """``t``'s unrounded position on its channel's grid, over the columns
+    of :func:`channel_geometry`: ``(t - _t0) * sr`` with the declared
+    rate, else the inferred ``(_n - 1) / (_t1 - _t0)`` (exact on the
+    uniform grids the chunked plans require; each channel its own).  A
+    1-row channel sits at 0; a multi-row channel with zero time span
+    raises — its index would be NULL and every filter on it would drop
+    the channel.  The span division stays behind the lazy CaseWhen
+    branch: ANSI Spark throws DIVIDE_BY_ZERO eagerly otherwise."""
+    sr = (
+        F.lit(float(samplerate))
+        if samplerate is not None
+        else (F.col("_n") - 1) / (F.col("_t1") - F.col("_t0"))
+    )
+    zero_span = F.concat(
+        F.lit("channel "),
+        F.col("channel_id"),
+        F.lit(
+            " has multiple rows with zero time span (all timestamps equal)"
+            " — no sample grid exists"
+        ),
+    )
+    return (
+        F.when(F.col("_n") <= 1, F.lit(0.0))
+        .when(F.col("_t1") == F.col("_t0"), F.raise_error(zero_span).cast("double"))
+        .otherwise((t - F.col("_t0")) * sr)
+    )
+
+
+def resolve_chunk_rows(
+    df: DataFrame, chunk_rows, *, overlap: int = 0, tiebreak_col=None
+):
+    """Resolve a chunked operator's ``"auto"`` scale mode from channel
+    statistics: huge channels chunk, everything else keeps the
+    whole-channel plan.  Explicit ints/None always win.
+
+    Two auto-mode adjustments keep ``"auto"`` from ever failing a call
+    that the whole-channel plan accepts:
+
+    - ``tiebreak_col`` set → stay on the whole-channel plan (the chunked
+      path's arithmetic sample index cannot disambiguate duplicate
+      timestamps; an explicit ``chunk_rows`` int with a tiebreak raises
+      instead of silently dropping the tiebreak);
+    - warm-up ``overlap`` at or above the planner's chunk size (a very
+      long mov_rms window) → grow the chunk to ``4 * overlap``: every
+      task then holds ≤ 5×overlap rows — still bounded, because no
+      chunking scheme can bound a trailing-window task below the window
+      length itself.
+    """
+    if chunk_rows == "auto":
+        resolved = auto_window_mode(df)
+        if tiebreak_col is not None:
+            # The degradation is deliberate (see docstring) but must not
+            # be SILENT: above the huge-channel threshold the caller
+            # loses exactly the single-task-window protection auto mode
+            # exists for, so say so once per call site.
+            if resolved is not None:
+                import warnings
+
+                warnings.warn(
+                    "chunk_rows='auto' detected a huge channel but "
+                    "tiebreak_col forces the single-task whole-channel "
+                    "window (the chunked path's arithmetic sample "
+                    "index cannot disambiguate duplicate timestamps). "
+                    "Deduplicate the time base (deduplicate()) or drop "
+                    "tiebreak_col to regain bounded-task chunking.",
+                    stacklevel=3,
+                )
+            return None
+        if resolved is not None and overlap >= resolved:
+            resolved = 4 * overlap
+        return resolved
+    if chunk_rows is not None and tiebreak_col is not None:
+        raise ValueError(
+            "chunked window ops cannot honor tiebreak_col: the arithmetic "
+            "sample index requires unique uniform timestamps — pass "
+            "chunk_rows=None for the whole-channel plan"
+        )
+    return chunk_rows
+
+
+def chunked_src(
+    df: DataFrame,
+    chunk_rows: int,
+    back: int,
+    fwd: int,
+    samplerate: float | None = None,
+    geo: DataFrame | None = None,
+) -> DataFrame:
+    """Explode ``df`` into halo'd ``(channel_id, _seg)`` chunks — the one
+    place that decides how a channel is cut (SURVEY.md §7.3.1).
+
+    Adds ``_i`` (the arithmetic sample index ``round(grid_position)``,
+    off one broadcast :func:`channel_geometry` aggregate: sort-free, so
+    no stage ever holds a whole channel), ``_n`` (the channel's row
+    count), ``_seg`` (chunk ``_i // chunk_rows`` plus the halo
+    memberships) and ``_core`` (the row is the chunk's own, not a halo
+    copy).  ``back`` rows from the tail of each chunk join the next
+    chunk (trailing windows, lag, causal warm-up) and ``fwd`` rows from
+    its head join the previous one (lead, a backward pass) — each only
+    where that chunk has core rows, so no chunk is all halo.  ``geo``
+    lets a caller that routes other rows by the same aggregate pass it
+    in (exchange reuse across differently-shaped parents is not
+    guaranteed).
+    """
+    L = int(chunk_rows)
+    if max(back, fwd) >= L:
+        raise ValueError(
+            f"chunk_rows={L} must exceed the overlap ({max(back, fwd)}); "
+            "pick a larger chunk or a smaller overlap"
+        )
+    if geo is None:
+        geo = channel_geometry(df)
+    src = df.join(F.broadcast(geo), "channel_id").withColumn(
+        "_i", F.floor(grid_position(F.col("t"), samplerate) + 0.5).cast("long")
+    )
+    i, seg = F.col("_i"), (F.col("_i") / L).cast("long")
+    members = F.array(seg)
+    if back:
+        members = F.when(
+            (i % L >= L - back) & ((seg + 1) * L < F.col("_n")),
+            F.array(seg, seg + 1),
+        ).otherwise(members)
+    if fwd:
+        members = F.when(
+            (i % L < fwd) & (seg > 0), F.array_union(members, F.array(seg - 1))
+        ).otherwise(members)
+    return (
+        src.withColumn("_seg", F.explode(members))
+        .withColumn("_core", seg == F.col("_seg"))
+        .drop("_t0", "_t1")
+    )
+
+
+def sorted_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
+    """A chunk group sorted by ``_i``; raises the grid message on a gap
+    or a duplicate (timestamp jitter, a non-uniform grid, a rate other
+    than the declared one) instead of silently mis-framing."""
+    pdf = pdf.sort_values("_i")
+    if (np.diff(pdf["_i"].to_numpy()) != 1).any():
+        raise ValueError(f"{_GRID_MSG[0]}{pdf['channel_id'].iloc[0]}{_GRID_MSG[1]}")
+    return pdf
+
+
+def grid_guard(wseg, col):
+    """:func:`sorted_chunk`'s check inside a native window plan over the
+    chunks (``wseg`` ordered by ``_i``): ``col``, or a task error where
+    ``_i`` does not step by one."""
+    gap = F.col("_i") - F.lag("_i").over(wseg)
+    msg = F.concat(F.lit(_GRID_MSG[0]), F.col("channel_id"), F.lit(_GRID_MSG[1]))
+    bad = gap.isNotNull() & (gap != 1)
+    return F.when(bad, F.raise_error(msg).cast("double")).otherwise(col)
+
+
+def chunk_apply(
+    df: DataFrame,
+    body,
+    schema,
+    chunk_rows: int,
+    back: int,
+    fwd: int,
+    samplerate: float | None = None,
+) -> DataFrame:
+    """Run ``body(pdf, core) -> pdf`` over the halo'd chunks of
+    :func:`chunked_src` — the chunked counterpart of :func:`group_apply`
+    for channels too big for one task.  Each ``(channel_id, _seg)``
+    group reaches ``body`` sorted by ``_i`` and grid-checked
+    (:func:`sorted_chunk`), with ``core`` the boolean mask of its own
+    rows; the body emits what it computes for those.  No group holds
+    more than ``chunk_rows + back + fwd`` rows."""
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = sorted_chunk(pdf)
+        return body(pdf, pdf["_core"].to_numpy())
+
+    src = chunked_src(df, chunk_rows, back, fwd, samplerate)
+    return src.groupBy("channel_id", "_seg").applyInPandas(run, schema)
 
 
 def channel_codes(ids: np.ndarray) -> tuple[np.ndarray, list]:

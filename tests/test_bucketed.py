@@ -324,6 +324,17 @@ class TestBucketedTable:
             )
             assert "Exchange" in plain._jdf.queryExecution().executedPlan().toString()
 
+            # A grouped kernel keyed per channel rides the bucketing too;
+            # a bucketed kernel groups by its own ``_b`` and still
+            # shuffles, so the layout helps per-channel keying only.
+            from pandas_sigproc_spark.operators import rainflow
+
+            def shape(out):
+                return out._jdf.queryExecution().executedPlan().toString()
+
+            assert "Exchange" not in shape(rainflow(tbl, n_buckets=None))
+            assert "Exchange" in shape(rainflow(tbl, n_buckets=3))
+
             got = {r.channel_id: r.rms for r in agg.collect()}
             want = {
                 cid: float(np.sqrt(np.mean(v**2))) for cid, (_t, v) in chans.items()

@@ -119,6 +119,20 @@ def test_chunked_rejects_rate_mismatch(spark):
         out.collect()
 
 
+def test_chunked_inferred_rate_rejects_dropped_sample(spark):
+    # Without a samplerate the index uses the channel's inferred rate;
+    # one dropped sample moves the later samples off it, and the grid
+    # guard refuses the channel as the whole-channel filter does.
+    from pandas_sigproc_spark.kernels.design import butter as _butter
+
+    t = np.delete(np.arange(6000) / 1000.0, 1000)
+    df = make_signals(spark, {"gap": (t, np.sin(t * 7.0))})
+    b, a = _butter(2, 0.1, "lowpass")
+    out = filt_chunked(df, b, a, zero_phase=True, chunk_rows=2048)
+    with pytest.raises(Exception, match="non-consecutive sample index"):
+        out.collect()
+
+
 def test_phantom_tail_group_does_not_crash(spark):
     # Channel length chosen so the forward-overlap duplication puts
     # <= padlen rows into the phantom (last_seg + 1) group: the kernel

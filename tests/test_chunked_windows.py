@@ -213,6 +213,22 @@ def test_detrend_piecewise_agg_guard(spark):
         detrend(df, "linear", breakpoints=[100], uniform_grid=True).collect()
 
 
+def test_chunked_src_joins_no_segment_past_the_end(spark):
+    # 1,000 samples in chunks of 256 with 99 halo rows: 1,000 core rows
+    # plus the tails of chunks 0-2 (3 x 99).  Chunk 3's tail has no
+    # chunk 4 to join.
+    t = np.arange(1000) / 100.0
+    df = make_signals(spark, {"c": (t, np.ones(1000))}).select(
+        "channel_id", "t", "value"
+    )
+    src = planner.chunked_src(df, 256, back=99, fwd=0).toPandas()
+    assert len(src) == 1297
+    assert sorted(src["_seg"].unique()) == [0, 1, 2, 3]
+    core = src[src["_core"]]
+    assert len(core) == 1000
+    assert (core["_i"] // 256 == core["_seg"]).all()
+
+
 def test_chunk_zero_span_channel_is_loud(spark):
     t = np.full(50, 3.0)
     df = make_signals(spark, {"z": (t, np.ones(50))}).select(
@@ -229,7 +245,7 @@ def test_chunk_zero_span_channel_is_loud(spark):
 
 def test_auto_grows_chunk_when_overlap_exceeds_planner_size(spark):
     from pandas_sigproc_spark import planner
-    from pandas_sigproc_spark.operators.windows import _resolve_chunk_rows
+    from pandas_sigproc_spark.planner import resolve_chunk_rows
 
     df = spark.range(1).select(
         F.lit("c").alias("channel_id"),
@@ -243,21 +259,21 @@ def test_auto_grows_chunk_when_overlap_exceeds_planner_size(spark):
     try:
         base = planner.HUGE_CHANNEL_ROWS // 4
         # modest overlap: planner size wins
-        assert _resolve_chunk_rows(df, "auto", overlap=1000) == base
+        assert resolve_chunk_rows(df, "auto", overlap=1000) == base
         # warm-up overlap >= planner chunk: grow to 4x overlap instead of
         # raising "chunk_rows must exceed the window overlap"
         big = base + 7
-        assert _resolve_chunk_rows(df, "auto", overlap=big) == 4 * big
+        assert resolve_chunk_rows(df, "auto", overlap=big) == 4 * big
         # tiebreak routes auto back to the sort-based window plan
         assert (
-            _resolve_chunk_rows(df, "auto", overlap=10, tiebreak_col="seq")
+            resolve_chunk_rows(df, "auto", overlap=10, tiebreak_col="seq")
             is None
         )
     finally:
         planner.invalidate_stats(df)
     # explicit chunk size + tiebreak is a contradiction -> loud error
     with pytest.raises(ValueError, match="tiebreak_col"):
-        _resolve_chunk_rows(df, 1024, tiebreak_col="seq")
+        resolve_chunk_rows(df, 1024, tiebreak_col="seq")
 
 
 def test_mov_rms_auto_with_giant_window_falls_back_not_raises(spark):
