@@ -21,7 +21,10 @@ rounded on BOTH sides to absorb summation-order differences.
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -390,24 +393,49 @@ FROM s
 """
 
 
-def _compose_paths(*branches):
-    """Consolidated twin gate (r13 capacity plan, PLANS.md): each
-    (label, DataFrame) branch rides as its own rows under a ``path``
-    marker, so ONE driver slot hash-proves every branch — the base plan,
-    its chunked/scale twin, and (because the oracle emits the same
-    labeled union) their agreement with the oracle, together."""
+def _compose_paths(*branches, as_int=()):
+    """One registry slot over several (label, DataFrame) branches: each
+    branch rides as its own rows under a ``path`` marker, so the slot
+    hash-proves every branch, and, because the oracle emits the same
+    labeled union (:func:`_compose_oracle`), their agreement with it.
+    Branches are unioned by column name; a column a branch lacks is NULL
+    in its rows.  A branch that is itself composed nests as
+    ``label/path``.  ``as_int`` names boolean columns that some branch
+    lacks: they ride as 0/1, since a NULL boolean reaches pandas as
+    ``None`` from Spark but as NaN from DuckDB."""
     out = None
     for label, df in branches:
-        b = df.select(F.lit(label).alias("path"), "*")
-        out = b if out is None else out.unionByName(b)
-    return out
+        tag = F.lit(label)
+        if "path" in df.columns:
+            tag = F.concat(tag, F.lit("/"), F.col("path"))
+        b = df.select(tag.alias("path"), *(c for c in df.columns if c != "path"))
+        out = b if out is None else out.unionByName(b, allowMissingColumns=True)
+    return out.withColumns({c: F.col(c).cast("int") for c in as_int})
 
 
-def _compose_oracle(*branches) -> str:
-    return "\nUNION ALL\n".join(
+def _compose_oracle(*branches, as_int=()) -> str:
+    """:func:`_compose_paths` in DuckDB SQL over (label, sql) branches."""
+    union = "\nUNION ALL BY NAME\n".join(
         f"SELECT '{label}' AS path, * FROM ({sql.strip().rstrip(';')})"
         for label, sql in branches
     )
+    if not as_int:
+        return union
+    casts = ", ".join(f"CAST({c} AS INTEGER) AS {c}" for c in as_int)
+    return f"SELECT * REPLACE ({casts}) FROM (\n{union}\n)"
+
+
+def _fold(*fns, as_int=()):
+    """A registry slot over several ``q_<label>`` queries: the union of
+    their outputs under :func:`_compose_paths`, each labeled
+    ``<label>``."""
+
+    def q(spark, sf_dir):
+        return _compose_paths(
+            *((fn.__name__[2:], fn(spark, sf_dir)) for fn in fns), as_int=as_int
+        )
+
+    return q
 
 
 def q_mov_rms(spark, sf_dir):
@@ -4132,7 +4160,6 @@ def q_incr_audio_store(spark, sf_dir):
     + a repartitioned parquet write per batch; the probe is two
     bounded fp equi-joins against a dozens-of-bytes-per-clip table.
     """
-    import os
     import shutil
 
     from pandas_sigproc_spark.operators.audiodup import (
@@ -4421,7 +4448,6 @@ def q_incr_phash_store(spark, sf_dir):
     Hamming equi-joins on int keys (guards default-on), both against
     an 8 B/image table.
     """
-    import os
     import shutil
 
     import pandas as pd
@@ -4757,7 +4783,6 @@ def q_wds_store_roundtrip(spark, sf_dir):
     parquet committer (never the driver); the driver touches only the
     manifest JSON and a 3-scalar size aggregate; the re-read is an
     ordinary parquet scan + zero-shuffle member explode."""
-    import os
     import shutil
 
     from pandas_sigproc_spark.operators.webdataset import (
@@ -4827,7 +4852,6 @@ def q_textio_roundtrip(spark, sf_dir):
     fixture, not the scale path — parquet is the native layout); the
     read is an ordinary schema-enforced text scan that splits by byte
     range, zero Python."""
-    import os
     import shutil
 
     from pandas_sigproc_spark.sources.csv import (
@@ -5745,7 +5769,6 @@ _CF_BLOCKED = ("blocked.example", "other.example")
 def _cf_expect_rows():
     """(base_idx, pos, url, canon, host, admitted) expectation rows —
     urllib-derived, NOT a replay of the engine's expression trees."""
-    import re
     from urllib.parse import urljoin, urlsplit
 
     # html_links emits all double-quoted anchors (even href indices,
@@ -7869,7 +7892,6 @@ def q_ann_pq_store(spark, sf_dir):
     the <= funnel rescore rows — at 100 TB this is the difference
     between re-encoding the corpus per query batch and a parquet scan
     of m-byte rows."""
-    import os
     import shutil
 
     from pandas_sigproc_spark.operators.sigstore import (
@@ -9078,7 +9100,6 @@ def q_ide_scan(spark, sf_dir):
     per-file parallelism a fleet of loggers gives a real cluster
     (ide_datasource.py docs; the 100 TB pattern is read-once ->
     canonical parquet)."""
-    import os
     import shutil
 
     import numpy as np
@@ -9557,7 +9578,6 @@ def q_incr_dedup_store(spark, sf_dir):
     Scale shape: the probe is curation._incremental_dedup_core on two
     ~150 B/doc parquet tables; the build/append/compact writes are the
     maintenance cycle a deployment runs per admitted crawl batch."""
-    import os
     import shutil
 
     from pandas_sigproc_spark.operators.sigstore import (
@@ -9806,7 +9826,6 @@ def _replay_stream_gate(spark, name, sf_dir, parts, schema, build):
     (corpus dedup), and each file's mtime is assigned deterministically
     afterwards."""
     import glob
-    import os
     import shutil
 
     root = os.path.join(
@@ -10216,125 +10235,119 @@ def _sql_streaming_lfilter():
 # ---------------------------------------------------------------------------
 
 
+def green_rounds() -> tuple[dict[str, int], int]:
+    """The recorded correctness verdicts: ``{query: newest round with a
+    hash-green row}`` and the newest recorded round, read from the
+    ``CORRECTNESS_r<N>.json`` files beside this file."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    newest = 0
+    for f in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        newest = max(newest, rnd)
+        with open(os.path.join(root, f)) as fh:
+            verdicts = json.load(fh)
+        for name, row in verdicts.items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                last[name] = max(last.get(name, 0), rnd)
+    return last, newest
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's per-round CORRECTNESS gate validates
-    # the first 50 entries in dict order.  Round-17 ordering
-    # (tests/test_entry_contract.py pins the window AND a max-staleness
-    # contract — no below-cap query may be more than 2 recorded rounds
-    # stale, so this dict must rotate every round):
-    #   tier A — the 49 r13-greens that aged past the 2-round bound when
-    #            CORRECTNESS_r16.json landed (r16's mandatory set, never
-    #            rotated in): the window/SQL basics, the streaming gates,
-    #            the text/crawl tier and the container extractors.
-    #   tier B — 1 slot: interp_daily, the first of the 46 r14-greens
-    #            that age out the moment CORRECTNESS_r17.json lands.
-    #   below the cap — the other 45 r14-greens (fresh through r16: the
-    #            rotation after CORRECTNESS_r17.json lands must take them,
-    #            leaving 5 free slots, so plan consolidations BEFORE adding
-    #            gates), then the 50 r16-greens (fresh through r18); the
-    #            local gate (tools/oracle_check.py) keeps full coverage
-    #            meanwhile.  Registry: 145 entries.
-    return {
-        # -- tier A: r13-green carry-overs (49; mandatory this round) ----
-        "mov_rms": q_mov_rms,
-        "integral": q_integral,
-        "derivative": q_derivative,
-        "detrend_piecewise": q_detrend_piecewise,
+    """One entry per capability.  A slot that folds several plans or
+    variants runs each as a labeled branch (:func:`_fold`).
+
+    The correctness gate hash-checks only the first 50 entries each
+    round, so the registry orders itself oldest evidence first: stably by
+    each name's newest hash-green round in the ``CORRECTNESS_r*.json``
+    verdicts beside this file (:func:`green_rounds`), a name never green
+    ranking 0.  With no verdict files the literal order stands."""
+    registry = {
+        "levels": _fold(q_rms, q_spl, q_rms_lin, q_rms_log),
+        "detrend": _fold(q_detrend_constant, q_detrend_linear, q_detrend_piecewise),
+        "interp": _fold(
+            q_interp_daily,
+            q_interp_nearest,
+            q_interp_cubic,
+            q_interp_quadratic,
+            q_interp_log,
+            q_interp_cubic_exact,
+        ),
+        "psd": _fold(q_psd_welch, q_psd_dft, q_psd_welch_dft, q_psd_segmented),
+        "psd_summary": _fold(
+            q_psd_rms,
+            q_psd_rms_dft,
+            q_psd_median,
+            q_psd_maxrms,
+            q_psd_all,
+            q_psd_summary_dft,
+            q_psd_damage,
+            q_psd_damage_dft,
+        ),
+        "filt": _fold(
+            q_filt_cfc,
+            q_filt_a,
+            q_filt_chain,
+            q_filt_iir_exact,
+            q_filt_iir_fft_exact,
+            q_filtfilt_exact,
+        ),
+        "slice": _fold(
+            q_between, q_between_freq, q_timeshift, q_samplerate, q_deduplicate
+        ),
+        "windows": _fold(q_mov_rms, q_integral, q_derivative),
+        "shock_spectrum": _fold(q_srs, q_srs_exact),
+        "media_image": _fold(
+            q_media_image_jpeg, q_media_image_jpeg_prog, q_media_image_gif
+        ),
+        "media_video": _fold(q_media_video_gif, q_media_video_mp4),
+        "wds": _fold(q_wds_extract, q_wds_roundtrip, q_wds_store_roundtrip),
+        "container_extract": _fold(
+            q_warc_extract, q_zip_extract, q_html_extract, q_sitemap_extract
+        ),
+        "incr_store": _fold(
+            q_incr_dedup,
+            q_incr_dedup_store,
+            q_incr_phash_store,
+            q_incr_audio_store,
+            as_int=("is_exact_dup",),
+        ),
+        "audio_fingerprint": _fold(q_audio_fp, q_audio_fp_pairs),
+        "language_id": _fold(q_lang_id, q_lang_id_model, as_int=("agree",)),
+        "text_profile": _fold(q_text_stats, q_token_count, q_rep_stats),
+        "ivf_search": _fold(q_ann_ivf, q_ann_ivf_int8),
         "doc_chunks": q_doc_chunks,
-        "rep_stats": q_rep_stats,
         "corpus_prep": q_corpus_prep,
         "substr_dedup": q_substr_dedup,
         "resample": q_resample,
         "segment_stats": q_segment_stats,
-        "interp_log": q_interp_log,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        "token_count": q_token_count,
-        "audio_fp": q_audio_fp,
-        "audio_fp_pairs": q_audio_fp_pairs,
         "media_video_dedup": q_media_video_dedup,
-        "incr_phash_store": q_incr_phash_store,
-        "incr_audio_store": q_incr_audio_store,
-        "wds_extract": q_wds_extract,
-        "warc_extract": q_warc_extract,
-        "zip_extract": q_zip_extract,
-        "media_image_jpeg_prog": q_media_image_jpeg_prog,
-        "media_image_gif": q_media_image_gif,
-        "media_video_gif": q_media_video_gif,
         "link_pagerank": q_link_pagerank,
         "domain_cap": q_domain_cap,
-        "html_extract": q_html_extract,
         "url_canon": q_url_canon,
         "gopher_rules": q_gopher_rules,
         "crawl_curate": q_crawl_curate,
         "dedup_embed": q_dedup_embed,
         "shard_assign": q_shard_assign,
-        "ann_ivf": q_ann_ivf,
-        "ann_ivf_int8": q_ann_ivf_int8,
-        "incr_dedup": q_incr_dedup,
         "lm_ppl_terciles": q_lm_ppl_terciles,
-        "rms": q_rms,
-        "spl": q_spl,
-        "rms_lin": q_rms_lin,
-        "rms_log": q_rms_log,
-        "samplerate": q_samplerate,
-        "between": q_between,
-        "between_freq": q_between_freq,
-        "timeshift": q_timeshift,
-        "deduplicate": q_deduplicate,
         "rss_daily": q_rss_daily,
         "streaming_corpus_filter": q_streaming_corpus_filter,
         "streaming_rainflow": q_streaming_rainflow,
-        # -- tier B: oldest r14-green (1) ------------------------------
-        "interp_daily": q_interp_daily,
-        # ---- driver cap: entries BELOW here are not driver-checked -------
-        # -- r14 tier (45; fresh through r16) ----------------------------
-        "interp_nearest": q_interp_nearest,
-        "interp_cubic": q_interp_cubic,
-        "interp_quadratic": q_interp_quadratic,
-        "interp_cubic_exact": q_interp_cubic_exact,
-        "detrend_constant": q_detrend_constant,
-        "detrend_linear": q_detrend_linear,
-        "filt_cfc": q_filt_cfc,
-        "filt_a": q_filt_a,
-        "filt_chain": q_filt_chain,
-        "filt_iir_exact": q_filt_iir_exact,
-        "filt_iir_fft_exact": q_filt_iir_fft_exact,
-        "filtfilt_exact": q_filtfilt_exact,
-        "psd_welch": q_psd_welch,
-        "psd_rms": q_psd_rms,
-        "psd_median": q_psd_median,
-        "psd_maxrms": q_psd_maxrms,
-        "psd_all": q_psd_all,
-        "psd_damage": q_psd_damage,
-        "psd_segmented": q_psd_segmented,
-        "psd_dft": q_psd_dft,
-        "psd_rms_dft": q_psd_rms_dft,
-        "psd_welch_dft": q_psd_welch_dft,
-        "psd_summary_dft": q_psd_summary_dft,
-        "psd_damage_dft": q_psd_damage_dft,
-        "srs": q_srs,
-        "srs_exact": q_srs_exact,
         "accessor_chain": q_accessor_chain,
         "tfidf_topk": q_tfidf_topk,
         "training_mix": q_training_mix,
-        "lang_id_model": q_lang_id_model,
         "url_blocklist": q_url_blocklist,
         "bpe_pack": q_bpe_pack,
         "ann_pq_store": q_ann_pq_store,
-        "wds_roundtrip": q_wds_roundtrip,
         "text_normalize": q_text_normalize,
         "cluster_rep": q_cluster_rep,
-        "sitemap_extract": q_sitemap_extract,
         "semdedup_exact": q_semdedup_exact,
         "corpus_curate_exact": q_corpus_curate_exact,
-        "incr_dedup_store": q_incr_dedup_store,
-        "media_image_jpeg": q_media_image_jpeg,
-        "media_video_mp4": q_media_video_mp4,
-        "wds_store_roundtrip": q_wds_store_roundtrip,
         "crawl_frontier": q_crawl_frontier,
         "dsir_select": q_dsir_select,
-        # -- r16 tier (50; fresh through r18) ----------------------------
         "media_phash": q_media_phash,
         "media_phash_pairs": q_media_phash_pairs,
         "decontaminate": q_decontaminate,
@@ -10386,46 +10399,128 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "textio_roundtrip": q_textio_roundtrip,
         "streaming_lfilter": q_streaming_lfilter,
     }
+    last, _ = green_rounds()
+    return dict(sorted(registry.items(), key=lambda kv: last.get(kv[0], 0)))
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "between": SQL_BETWEEN,
-        "between_freq": SQL_BETWEEN_FREQ,
-        "timeshift": SQL_TIMESHIFT,
-        "deduplicate": SQL_DEDUPLICATE,
-        "rms": SQL_RMS,
-        "spl": SQL_SPL,
-        "samplerate": SQL_SAMPLERATE,
-        # r13 consolidated gates: each proves its global AND chunked
-        # path under one slot (oracle = the two arms unioned under a
-        # 'path' marker; _compose_oracle)
-        "mov_rms": _compose_oracle(
-            ("global", SQL_MOV_RMS), ("chunked", SQL_MOV_RMS_CHUNKED)
+        "levels": _compose_oracle(
+            ("rms", SQL_RMS),
+            ("spl", SQL_SPL),
+            ("rms_lin", SQL_RMS_LIN),
+            ("rms_log", SQL_RMS_LOG),
         ),
-        "integral": _compose_oracle(
-            ("global", SQL_INTEGRAL), ("chunked", SQL_INTEGRAL_CHUNKED)
+        "detrend": _compose_oracle(
+            ("detrend_constant", SQL_DETREND_CONSTANT),
+            # agg plan == window plan under the nudge+round contract
+            ("detrend_linear/global", SQL_DETREND_LINEAR),
+            ("detrend_linear/agg", SQL_DETREND_LINEAR),
+            ("detrend_piecewise", SQL_DETREND_PIECEWISE),
         ),
-        "derivative": _compose_oracle(
-            ("global", SQL_DERIVATIVE), ("chunked", SQL_DERIVATIVE_CHUNKED)
+        "interp": _compose_oracle(
+            # the chunked as-of arm is bit-identical to the global plan
+            # (tests/test_interp_chunked)
+            ("interp_daily/global", SQL_INTERP_DAILY),
+            ("interp_daily/chunked", SQL_INTERP_DAILY),
+            ("interp_nearest", SQL_INTERP_NEAREST),
+            ("interp_cubic", _oracle_prod.sql_interp_cubic()),
+            ("interp_quadratic", _oracle_prod.sql_interp_quadratic()),
+            ("interp_log", SQL_INTERP_LOG),
+            ("interp_cubic_exact", _sql_interp_cubic_exact()),
         ),
-        "detrend_constant": SQL_DETREND_CONSTANT,
-        # r14 consolidated: agg plan == window plan under the
-        # nudge+round contract, so both arms share SQL_DETREND_LINEAR
-        "detrend_linear": _compose_oracle(
-            ("global", SQL_DETREND_LINEAR), ("agg", SQL_DETREND_LINEAR)
+        "psd": _compose_oracle(
+            ("psd_welch", _oracle_prod.sql_psd_welch()),
+            ("psd_dft", SQL_PSD_DFT),
+            ("psd_welch_dft", SQL_PSD_WELCH_DFT),
+            ("psd_segmented", _oracle_prod.sql_psd_segmented()),
         ),
-        "detrend_piecewise": SQL_DETREND_PIECEWISE,
+        "psd_summary": _compose_oracle(
+            ("psd_rms", _oracle_prod.sql_psd_rms()),
+            ("psd_rms_dft", SQL_PSD_RMS_DFT),
+            ("psd_median", _oracle_prod.sql_psd_median()),
+            ("psd_maxrms", _oracle_prod.sql_psd_maxrms()),
+            ("psd_all", _oracle_prod.sql_psd_all()),
+            ("psd_summary_dft", SQL_PSD_SUMMARY_DFT),
+            ("psd_damage", _oracle_prod.sql_psd_damage()),
+            ("psd_damage_dft", _sql_psd_damage_dft()),
+        ),
+        "filt": _compose_oracle(
+            ("filt_cfc", _oracle_prod.sql_filt_cfc()),
+            ("filt_a", _oracle_prod.sql_filt_a()),
+            ("filt_chain", _oracle_prod.sql_filt_chain()),
+            ("filt_iir_exact", _sql_filt_iir_exact()),
+            ("filt_iir_fft_exact", _sql_filt_iir_fft_exact()),
+            ("filtfilt_exact", _sql_filtfilt_exact()),
+        ),
+        "slice": _compose_oracle(
+            ("between", SQL_BETWEEN),
+            ("between_freq", SQL_BETWEEN_FREQ),
+            ("timeshift", SQL_TIMESHIFT),
+            ("samplerate", SQL_SAMPLERATE),
+            ("deduplicate", SQL_DEDUPLICATE),
+        ),
+        "windows": _compose_oracle(
+            ("mov_rms/global", SQL_MOV_RMS),
+            ("mov_rms/chunked", SQL_MOV_RMS_CHUNKED),
+            ("integral/global", SQL_INTEGRAL),
+            ("integral/chunked", SQL_INTEGRAL_CHUNKED),
+            ("derivative/global", SQL_DERIVATIVE),
+            ("derivative/chunked", SQL_DERIVATIVE_CHUNKED),
+        ),
+        "shock_spectrum": _compose_oracle(
+            ("srs", _oracle_prod.sql_srs()),
+            ("srs_exact", _sql_srs_exact()),
+        ),
+        "media_image": _compose_oracle(
+            ("media_image_jpeg", SQL_MEDIA_IMAGE_JPEG),
+            ("media_image_jpeg_prog", SQL_MEDIA_IMAGE_JPEG_PROG),
+            ("media_image_gif", SQL_MEDIA_IMAGE_GIF),
+        ),
+        "media_video": _compose_oracle(
+            ("media_video_gif", SQL_MEDIA_VIDEO_GIF),
+            ("media_video_mp4", SQL_MEDIA_VIDEO_MP4),
+        ),
+        "wds": _compose_oracle(
+            ("wds_extract", SQL_WDS_EXTRACT),
+            ("wds_roundtrip", SQL_WDS_ROUNDTRIP),
+            # the store layout roundtrips the same member table
+            ("wds_store_roundtrip", SQL_WDS_ROUNDTRIP),
+        ),
+        "container_extract": _compose_oracle(
+            ("warc_extract", SQL_WARC_EXTRACT),
+            ("zip_extract", SQL_ZIP_EXTRACT),
+            ("html_extract", SQL_HTML_EXTRACT),
+            ("sitemap_extract", SQL_SITEMAP_EXTRACT),
+        ),
+        "incr_store": _compose_oracle(
+            ("incr_dedup", SQL_INCR_DEDUP),
+            # the store path's contract: the text path's verdict frame
+            # (tests/test_sigstore.py)
+            ("incr_dedup_store", SQL_INCR_DEDUP),
+            ("incr_phash_store", _sql_incr_phash_store()),
+            ("incr_audio_store", _sql_incr_audio_store()),
+            as_int=("is_exact_dup",),
+        ),
+        "audio_fingerprint": _compose_oracle(
+            ("audio_fp", _sql_audio_fp()),
+            ("audio_fp_pairs", _sql_audio_fp_pairs()),
+        ),
+        "language_id": _compose_oracle(
+            ("lang_id", SQL_LANG_ID),
+            ("lang_id_model", _sql_lang_id_model()),
+            as_int=("agree",),
+        ),
+        "text_profile": _compose_oracle(
+            ("text_stats", SQL_TEXT_STATS),
+            ("token_count", SQL_TOKEN_COUNT),
+            ("rep_stats", SQL_REP_STATS),
+        ),
+        "ivf_search": _compose_oracle(
+            ("ann_ivf", SQL_ANN_IVF),
+            ("ann_ivf_int8", SQL_ANN_IVF_INT8),
+        ),
         "rss_daily": SQL_RSS_DAILY,
-        "rms_lin": SQL_RMS_LIN,
-        "rms_log": SQL_RMS_LOG,
-        # r14 consolidated: the chunked arm is bit-identical to the
-        # global as-of plan (tests/test_interp_chunked), so both arms
-        # share SQL_INTERP_DAILY
-        "interp_daily": _compose_oracle(
-            ("global", SQL_INTERP_DAILY), ("chunked", SQL_INTERP_DAILY)
-        ),
-        "interp_nearest": SQL_INTERP_NEAREST,
         # chunked arm bit-identical to the global pair plan
         # (tests/test_interp_chunked), so both arms share SQL_RESAMPLE
         "resample": _compose_oracle(
@@ -10438,35 +10533,25 @@ def oracle_sql() -> dict[str, str]:
         "tpch_order_priority": SQL_TPCH_ORDER_PRIORITY,
         "tpch_custdist": SQL_TPCH_CUSTDIST,
         "tpch_rollup": SQL_TPCH_ROLLUP,
-        "interp_log": SQL_INTERP_LOG,
-        "psd_dft": SQL_PSD_DFT,
-        "text_stats": SQL_TEXT_STATS,
         "text_normalize": SQL_TEXT_NORMALIZE,
         "corpus_to_shards": _sql_corpus_to_shards(),
-        # r14: the store layout roundtrips the SAME member table, so a
-        # green row against the identical oracle certifies the store
-        # write/manifest/read cycle on top of the tar codec
-        "wds_store_roundtrip": SQL_WDS_ROUNDTRIP,
         "crawl_frontier": _sql_crawl_frontier(),
         "dsir_select": _sql_dsir_select(),
         "ide_scan": SQL_IDE_SCAN,
-        # r15 new gates: construction-arithmetic expectation table
-        # (video), documents-derived roundtrip + measured PERMISSIVE
-        # quarantine literals (textio), and the filt_iir_exact DF2T
-        # recursion re-shaped to the streaming operator's output
+        # construction-arithmetic expectation table (video),
+        # documents-derived roundtrip + measured PERMISSIVE quarantine
+        # literals (textio), and the filt_iir_exact DF2T recursion
+        # re-shaped to the streaming operator's output
         "video_stream_info": _sql_video_stream_info(),
         "textio_roundtrip": SQL_TEXTIO_ROUNDTRIP,
         "streaming_lfilter": _sql_streaming_lfilter(),
         "streaming_corpus_filter": SQL_STREAMING_CORPUS_FILTER,
         "streaming_rainflow": SQL_STREAMING_RAINFLOW,
-        "lang_id": SQL_LANG_ID,
-        "lang_id_model": _sql_lang_id_model(),
         "url_blocklist": SQL_URL_BLOCKLIST,
         "bpe_pack": _sql_bpe_pack(),
         # store==recompute: the PQ-store probe must hash-match the
         # plain ivf_pq_topk oracle exactly
         "ann_pq_store": SQL_ANN_IVF_PQ,
-        "token_count": SQL_TOKEN_COUNT,
         "quality_score": SQL_QUALITY_SCORE,
         "doc_fingerprint": SQL_DOC_FINGERPRINT,
         "corpus_prep": SQL_CORPUS_PREP,
@@ -10483,31 +10568,18 @@ def oracle_sql() -> dict[str, str]:
         "cluster_sample": _sql_cluster_sample(),
         "embed_cosine_topk": SQL_EMBED_COSINE_TOPK,
         "ann_lsh": _sql_ann_lsh(),
-        "ann_ivf": SQL_ANN_IVF,
-        "ann_ivf_int8": SQL_ANN_IVF_INT8,
         "ann_ivf_pq": SQL_ANN_IVF_PQ,
         "media_features": SQL_MEDIA_FEATURES,
         "media_audio_real": SQL_MEDIA_AUDIO_REAL,
         "media_image_real": SQL_MEDIA_IMAGE_REAL,
         "media_image_png": SQL_MEDIA_IMAGE_PNG,
-        "media_image_jpeg": SQL_MEDIA_IMAGE_JPEG,
-        "media_video_mp4": SQL_MEDIA_VIDEO_MP4,
         "media_phash": _sql_media_phash(),
         "media_phash_pairs": _sql_media_phash_pairs(),
-        "audio_fp": _sql_audio_fp(),
-        "audio_fp_pairs": _sql_audio_fp_pairs(),
         "media_video_dedup": _sql_media_video_dedup(),
-        "incr_phash_store": _sql_incr_phash_store(),
-        "incr_audio_store": _sql_incr_audio_store(),
-        "wds_extract": SQL_WDS_EXTRACT,
-        "wds_roundtrip": SQL_WDS_ROUNDTRIP,
-        "warc_extract": SQL_WARC_EXTRACT,
         "domain_cap": SQL_DOMAIN_CAP,
-        "html_extract": SQL_HTML_EXTRACT,
         "url_canon": SQL_URL_CANON,
         "robots_filter": SQL_ROBOTS_FILTER,
         "crawl_admission": SQL_CRAWL_ADMISSION,
-        "sitemap_extract": SQL_SITEMAP_EXTRACT,
         "semdedup": _sql_semdedup(exact=False),
         "semdedup_exact": _sql_semdedup(exact=True),
         "substr_dedup": SQL_SUBSTR_DEDUP,
@@ -10515,25 +10587,16 @@ def oracle_sql() -> dict[str, str]:
         "corpus_curate_exact": _sql_corpus_curate(exact=True),
         "stratified_sample": SQL_STRATIFIED_SAMPLE,
         "ngram_counts": SQL_NGRAM_COUNTS,
-        "rep_stats": SQL_REP_STATS,
         "doc_chunks": SQL_DOC_CHUNKS,
         "decontaminate": SQL_DECONTAMINATE,
         "para_dedup": SQL_PARA_DEDUP,
         "quality_classify": SQL_QUALITY_CLASSIFY,
         "gopher_rules": SQL_GOPHER_RULES,
         "crawl_curate": SQL_CRAWL_CURATE,
-        "zip_extract": SQL_ZIP_EXTRACT,
-        "media_image_jpeg_prog": SQL_MEDIA_IMAGE_JPEG_PROG,
-        "media_image_gif": SQL_MEDIA_IMAGE_GIF,
-        "media_video_gif": SQL_MEDIA_VIDEO_GIF,
         "link_pagerank": SQL_LINK_PAGERANK,
         "bloom_decontaminate": SQL_BLOOM_DECONTAMINATE,
         "temp_sample": SQL_TEMP_SAMPLE,
         "pii_scrub": SQL_PII_SCRUB,
-        "incr_dedup": SQL_INCR_DEDUP,
-        # the store path's equality contract: same verdict frame as the
-        # text path, so the SAME oracle (tests/test_sigstore.py pins it)
-        "incr_dedup_store": SQL_INCR_DEDUP,
         "lm_ppl": SQL_LM_PPL,
         "lm_ppl_terciles": SQL_LM_PPL_TERCILES,
         "source_overlap": SQL_SOURCE_OVERLAP,
@@ -10542,10 +10605,6 @@ def oracle_sql() -> dict[str, str]:
         "shard_assign": SQL_SHARD_ASSIGN,
         "train_order": SQL_TRAIN_ORDER,
         "ann_int8": _sql_ann_int8(),
-        "psd_rms_dft": SQL_PSD_RMS_DFT,
-        "psd_welch_dft": SQL_PSD_WELCH_DFT,
-        "psd_summary_dft": SQL_PSD_SUMMARY_DFT,
-        "psd_damage_dft": _sql_psd_damage_dft(),
         "training_mix": SQL_TRAINING_MIX,
         # r15 consolidated: identical counts by the residue-merge
         # theorem (tests pin the chunked==whole equality; the oracle
@@ -10553,8 +10612,6 @@ def oracle_sql() -> dict[str, str]:
         "rainflow": _compose_oracle(
             ("global", SQL_RAINFLOW), ("chunked", SQL_RAINFLOW)
         ),
-        "filt_iir_exact": _sql_filt_iir_exact(),
-        "filt_iir_fft_exact": _sql_filt_iir_fft_exact(),
         # production kernel-tier legs: full recursive-CTE replays
         # (oracle_prod.py) — bit-exact at the gate's sf0.01 scale where
         # every channel runs the kernels' exact loop/banded paths.
@@ -10564,21 +10621,5 @@ def oracle_sql() -> dict[str, str]:
             ("global", _oracle_prod.sql_filt_butter()),
             ("chunked", _oracle_prod.sql_filt_chunked()),
         ),
-        "filt_cfc": _oracle_prod.sql_filt_cfc(),
-        "filt_a": _oracle_prod.sql_filt_a(),
-        "filt_chain": _oracle_prod.sql_filt_chain(),
-        "srs": _oracle_prod.sql_srs(),
-        "psd_welch": _oracle_prod.sql_psd_welch(),
-        "psd_median": _oracle_prod.sql_psd_median(),
-        "psd_maxrms": _oracle_prod.sql_psd_maxrms(),
-        "psd_damage": _oracle_prod.sql_psd_damage(),
-        "psd_all": _oracle_prod.sql_psd_all(),
-        "psd_segmented": _oracle_prod.sql_psd_segmented(),
-        "psd_rms": _oracle_prod.sql_psd_rms(),
-        "interp_cubic": _oracle_prod.sql_interp_cubic(),
-        "interp_quadratic": _oracle_prod.sql_interp_quadratic(),
         "accessor_chain": _oracle_prod.sql_accessor_chain(),
-        "filtfilt_exact": _sql_filtfilt_exact(),
-        "srs_exact": _sql_srs_exact(),
-        "interp_cubic_exact": _sql_interp_cubic_exact(),
     }

@@ -91,11 +91,9 @@ def interp1d_spline(
     nseg = (F.floor((F.col("_n") - 1) / L) + 1).cast("long")
     home = F.floor(planner.grid_position(F.col("t")) / L).cast("long")
     tseg = F.least(F.greatest(home, F.lit(0)), nseg - 1)
-    tgt = (
-        grid.select("channel_id", F.col(axis).alias("t"))
-        .join(F.broadcast(geo), "channel_id")
-        .select("channel_id", "t", tseg.alias("_seg"))
-    )
+    tgt = planner.join_channel(
+        grid.select("channel_id", F.col(axis).alias("t")), geo
+    ).select("channel_id", "t", tseg.alias("_seg"))
 
     def kernel_chunk(src_pdf: pd.DataFrame, tgt_pdf: pd.DataFrame) -> pd.DataFrame:
         if src_pdf.empty or tgt_pdf.empty:

@@ -372,7 +372,7 @@ def _resample_pairs_chunked(df: DataFrame, chunk_rows: int) -> DataFrame:
         F.greatest(F.floor((F.col("t") - F.col("_t0")) / span).cast("long"), F.lit(0)),
         nseg - 1,
     )
-    s2 = src.join(F.broadcast(geo), "channel_id").select(
+    s2 = planner.join_channel(src, geo).select(
         "channel_id", "t", "value", "_t0", "_t1", seg.alias("_seg")
     )
     firsts = s2.groupBy("channel_id", "_seg").agg(
@@ -383,10 +383,11 @@ def _resample_pairs_chunked(df: DataFrame, chunk_rows: int) -> DataFrame:
         .orderBy(F.col("_seg").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    nxt = firsts.withColumn(
+        "_nxt", F.last("_firsts", ignorenulls=True).over(w_next)
+    ).filter(F.col("_nxt").isNotNull())
     inj = (
-        firsts.withColumn("_nxt", F.last("_firsts", ignorenulls=True).over(w_next))
-        .filter(F.col("_nxt").isNotNull())
-        .join(F.broadcast(geo.select("channel_id", "_t0", "_t1")), "channel_id")
+        planner.join_channel(nxt, geo.select("channel_id", "_t0", "_t1"))
         .select(
             "channel_id",
             F.col("_nxt.t").alias("t"),

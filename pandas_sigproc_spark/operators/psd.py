@@ -28,7 +28,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pandas_sigproc_spark.planner import _infer_sr, channel_arrays, group_apply
+from pandas_sigproc_spark.planner import (
+    _infer_sr,
+    channel_arrays,
+    group_apply,
+    join_channel,
+)
 
 from pandas_sigproc_spark.kernels import spectral as _spectral
 
@@ -248,7 +253,7 @@ def _segmented_psd(
     # for FEW huge channels.
     geo = df.groupBy("channel_id").agg(F.count("*").alias("_cn"))
     seg_df = (
-        seg_df.join(F.broadcast(geo), "channel_id")
+        join_channel(seg_df, geo)
         .withColumn(
             "_pos",
             F.when(
@@ -341,7 +346,7 @@ def _segmented_psd(
         )
         b = float(fatigue_exponent)
         factors = (
-            seg_rms.join(F.broadcast(mean_rms), "channel_id")
+            join_channel(seg_rms, mean_rms)
             .groupBy("channel_id", "_mean_rms")
             .agg(
                 F.max("_rms").alias("_max_rms"),
@@ -357,7 +362,7 @@ def _segmented_psd(
             factor = F.pow(F.col("_mean_pow"), 2.0 / b)
         factors = factors.select("channel_id", factor.alias("_factor"))
         return (
-            mean_psd.join(F.broadcast(factors), "channel_id")
+            join_channel(mean_psd, factors)
             .select(
                 "channel_id", "freq", (F.col("power") * F.col("_factor")).alias("power")
             )

@@ -255,8 +255,7 @@ def _integral_chunked(df, chunk_rows):
         F.coalesce(F.sum("_T").over(woff), F.lit(0.0)).alias("_off"),
     )
     return (
-        base.filter("_core")
-        .join(F.broadcast(offs), ["channel_id", "_seg"])
+        planner.join_channel(base.filter("_core"), offs, ["channel_id", "_seg"])
         .select(
             "channel_id", "t", (F.col("_off") + F.col("_prefix")).alias("value")
         )
@@ -451,14 +450,14 @@ def _detrend_piecewise_agg(df, bps):
         (F.when(idx >= b, 1).otherwise(0) for b in bps), F.lit(0)
     )
     src = (
-        df.join(F.broadcast(geo), "channel_id")
+        planner.join_channel(df, geo)
         .withColumn("_seg", seg)
         .select("channel_id", "_seg", "t", "value")
     )
     means = src.groupBy("channel_id", "_seg").agg(
         F.avg("t").alias("_mt"), F.avg("value").alias("_my")
     )
-    centered = src.join(F.broadcast(means), ["channel_id", "_seg"]).select(
+    centered = planner.join_channel(src, means, ["channel_id", "_seg"]).select(
         "channel_id",
         "_seg",
         "t",
@@ -471,7 +470,7 @@ def _detrend_piecewise_agg(df, bps):
     )
     slope = F.coalesce(F.try_divide(F.col("_sxy"), F.col("_sxx")), F.lit(0.0))
     return (
-        centered.join(F.broadcast(fits), ["channel_id", "_seg"])
+        planner.join_channel(centered, fits, ["channel_id", "_seg"])
         .select(
             "channel_id", "t", (F.col("_yc") - slope * F.col("_tc")).alias("value")
         )
@@ -485,13 +484,13 @@ def _detrend_agg(df, dt_type):
     if dt_type == "constant":
         means = df.groupBy("channel_id").agg(F.avg("value").alias("_m"))
         return (
-            df.join(F.broadcast(means), "channel_id")
+            planner.join_channel(df, means)
             .select("channel_id", "t", (F.col("value") - F.col("_m")).alias("value"))
         )
     means = df.groupBy("channel_id").agg(
         F.avg("t").alias("_mt"), F.avg("value").alias("_my")
     )
-    centered = df.join(F.broadcast(means), "channel_id").select(
+    centered = planner.join_channel(df, means).select(
         "channel_id",
         "t",
         (F.col("t") - F.col("_mt")).alias("_tc"),
@@ -505,7 +504,7 @@ def _detrend_agg(df, dt_type):
     # point is its mean removal (slope 0), matching the window form.
     slope = F.coalesce(F.try_divide(F.col("_sxy"), F.col("_sxx")), F.lit(0.0))
     return (
-        centered.join(F.broadcast(fits), "channel_id")
+        planner.join_channel(centered, fits)
         .select(
             "channel_id",
             "t",

@@ -166,6 +166,18 @@ def channel_geometry(df: DataFrame) -> DataFrame:
     )
 
 
+def join_channel(df: DataFrame, small: DataFrame, keys=("channel_id",)) -> DataFrame:
+    """``df`` inner-joined to the broadcast per-channel table ``small`` on
+    ``keys``, NULL-safely: ``groupBy`` keeps the NULL-id channel as a
+    group of its own, and a plain equi-join would drop its rows again,
+    so every per-channel aggregate joins back through here."""
+    renamed = {k: f"_k_{k}" for k in keys}
+    cond = [F.col(k).eqNullSafe(F.col(r)) for k, r in renamed.items()]
+    return df.join(
+        F.broadcast(small.withColumnsRenamed(renamed)), cond
+    ).drop(*renamed.values())
+
+
 def grid_position(t, samplerate: float | None = None):
     """``t``'s unrounded position on its channel's grid, over the columns
     of :func:`channel_geometry`: ``(t - _t0) * sr`` with the declared
@@ -279,7 +291,7 @@ def chunked_src(
         )
     if geo is None:
         geo = channel_geometry(df)
-    src = df.join(F.broadcast(geo), "channel_id").withColumn(
+    src = join_channel(df, geo).withColumn(
         "_i", F.floor(grid_position(F.col("t"), samplerate) + 0.5).cast("long")
     )
     i, seg = F.col("_i"), (F.col("_i") / L).cast("long")

@@ -61,7 +61,7 @@ def truth():
 @pytest.mark.parametrize("name", sorted(FLOORS))
 def test_ann_recall_floor(spark, name, truth):
     out = (
-        entry_mod.queries()[name](spark, SF_DIR)
+        getattr(entry_mod, f"q_{name}")(spark, SF_DIR)
         .filter("rank <= 3")
         .select("qid", "vec_id")
         .collect()

@@ -15,7 +15,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from pandas_sigproc_spark import planner
-from pandas_sigproc_spark.operators import derivative, detrend, integral, mov_rms
+from pandas_sigproc_spark.operators import (
+    derivative,
+    detrend,
+    filt_butter,
+    get_psd,
+    integral,
+    mov_rms,
+    resample,
+)
 from tests.conftest import make_signals
 
 
@@ -354,3 +362,66 @@ def test_chunked_spline_single_row_channel_raises_kernel_error(spark):
     with pytest.raises(Exception, match="at least|DIVIDE") as ei:
         interp1d_spline(src, grid, kind="cubic", chunk_rows=128).count()
     assert "DIVIDE" not in str(ei.value)
+
+
+def test_null_channel_id_survives_chunked_and_agg_plans(spark):
+    # The NULL-id channel is a group of its own in every whole-channel
+    # and window plan; the chunked, agg and segmented plans join
+    # per-channel aggregates back onto the rows, and must keep it too.
+    rng = np.random.default_rng(3)
+    t = np.arange(1000) / 100.0
+    rows = [
+        (cid, float(ti), float(v))
+        for cid in ("a", None)
+        for ti, v in zip(t, (np.sin(t * 2.0) + rng.standard_normal(t.size)).round(3))
+    ]
+    df = spark.createDataFrame(rows, "channel_id string, t double, value double")
+
+    def by_channel(out):
+        pdf = out.toPandas()
+        pdf["channel_id"] = pdf["channel_id"].fillna("<null>")
+        cols = [c for c in pdf.columns if c != "channel_id"]
+        return {
+            cid: g.sort_values(cols)[cols].to_numpy()
+            for cid, g in pdf.groupby("channel_id")
+        }
+
+    def psd(segmented):
+        return get_psd(
+            df, window_length=2.56, summarize="max rms", segmented=segmented,
+            samplerate=100.0, n_buckets=None,
+        )
+
+    pairs = {
+        "mov_rms": (
+            mov_rms(df, 0.1, 100.0, chunk_rows=None),
+            mov_rms(df, 0.1, 100.0, chunk_rows=128),
+        ),
+        "derivative": (
+            derivative(df, chunk_rows=None),
+            derivative(df, chunk_rows=128),
+        ),
+        "integral": (integral(df, chunk_rows=None), integral(df, chunk_rows=128)),
+        "filt_butter": (
+            filt_butter(df, 20.0, 2, "lowpass", n_buckets=None, samplerate=100.0),
+            # the filter's settling overlap (276 rows) needs longer chunks
+            filt_butter(
+                df, 20.0, 2, "lowpass", n_buckets=None, chunk_rows=400,
+                samplerate=100.0,
+            ),
+        ),
+        "detrend": (detrend(df, mode="window"), detrend(df, mode="agg")),
+        "get_psd": (psd(False), psd(True)),
+        "resample": (
+            resample(df, sample_rate=30.0, chunk_rows=None),
+            resample(df, sample_rate=30.0, chunk_rows=128),
+        ),
+    }
+    for op, (whole, split) in pairs.items():
+        want, got = by_channel(whole), by_channel(split)
+        assert set(got) == set(want) == {"a", "<null>"}, (op, set(got))
+        for cid in want:
+            assert got[cid].shape == want[cid].shape, (op, cid)
+            np.testing.assert_allclose(
+                got[cid], want[cid], rtol=1e-12, atol=1e-9, err_msg=f"{op} {cid}"
+            )

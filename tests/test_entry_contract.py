@@ -1,30 +1,15 @@
 """Driver-contract invariants on __spark_entry__ that do not need a
-SparkSession: dict shape, oracle coverage, and the 50-slot rotation
-window (the driver hash-checks only the FIRST 50 queries() entries, so
-ordering mistakes silently drop queries out of the correctness gate —
-exactly the off-by-three a round-5 review caught)."""
-
-import json
-import os
-import re
+SparkSession: dict shape, oracle coverage, and the 50-slot window (the
+correctness gate hash-checks only the FIRST 50 queries() entries, and
+queries() orders itself oldest-green-first from the recorded verdicts,
+so these tests pin that every entry keeps fresh evidence)."""
 
 import __spark_entry__ as entry_mod
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _driver_checked():
     """Queries with a hash-green driver row in any recorded round."""
-    seen = set()
-    for f in sorted(os.listdir(REPO)):
-        if not re.fullmatch(r"CORRECTNESS_r\d+\.json", f):
-            continue
-        with open(os.path.join(REPO, f)) as fh:
-            data = json.load(fh)
-        for name, row in data.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                seen.add(name)
-    return seen
+    return set(entry_mod.green_rounds()[0])
 
 
 def test_every_query_has_an_oracle():
@@ -85,35 +70,10 @@ def test_registry_keys_unique_in_source():
     )
 
 
-def test_cap_comment_matches_reality():
-    # The cap marker comment in queries() must sit at exactly entry 50.
-    src = open(os.path.join(REPO, "__spark_entry__.py")).read()
-    assert "---- driver cap" in src
-    names = list(entry_mod.queries().keys())
-    # the comment names the 50th entry explicitly; keep them in sync
-    assert names[49] == "interp_daily", (
-        f"50th queries() entry is {names[49]!r}; update the cap comment "
-        "and this pin together when re-rotating"
-    )
-
-
 def _latest_green_round():
     """{query: most recent round with a hash-green driver row}, plus the
     newest recorded round overall."""
-    last: dict[str, int] = {}
-    newest = 0
-    for f in sorted(os.listdir(REPO)):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        newest = max(newest, rnd)
-        with open(os.path.join(REPO, f)) as fh:
-            data = json.load(fh)
-        for name, row in data.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                last[name] = max(last.get(name, 0), rnd)
-    return last, newest
+    return entry_mod.green_rounds()
 
 
 def test_max_staleness_of_below_cap_queries():
@@ -138,4 +98,26 @@ def test_max_staleness_of_below_cap_queries():
     assert not stale, (
         f"below-cap queries more than 2 recorded rounds stale vs r{newest}: "
         f"{stale} — rotate them above the cap marker in queries()"
+    )
+
+
+def test_next_landing_leaves_no_below_cap_query_stale():
+    # The registry must stay checkable whole every other round, not just
+    # today: simulate the next verdict file greening the first 50 entries
+    # at newest + 1, then hold every entry outside the window to the
+    # 2-round staleness bound against that new newest round.  With more
+    # than 100 entries, or entries whose evidence ages together, some
+    # fall out of the bound whatever the order.
+    names = list(entry_mod.queries().keys())
+    last, newest = _latest_green_round()
+    landed = newest + 1
+    last.update({q: landed for q in names[:50]})
+    stale = [
+        f"{q} (last green r{last.get(q, 0)})"
+        for q in names[50:]
+        if last.get(q, 0) < landed - 2
+    ]
+    assert not stale, (
+        f"below-cap queries more than 2 rounds stale once r{landed} lands: "
+        f"{stale}"
     )

@@ -81,6 +81,23 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return errs
 
 
+def failing_paths(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
+    """The ``path`` labels of a composed slot whose rows differ between
+    the engines, so a red slot names the branch that broke.  Each label
+    is compared alone, without the columns its branch lacks (all NULL in
+    its rows)."""
+    if "path" not in spark_pdf.columns or "path" not in duck_pdf.columns:
+        return []
+    labels = sorted(set(spark_pdf["path"].dropna()) | set(duck_pdf["path"].dropna()))
+    bad = []
+    for label in labels:
+        s = spark_pdf[spark_pdf["path"] == label].dropna(axis=1, how="all")
+        d = duck_pdf[duck_pdf["path"] == label].dropna(axis=1, how="all")
+        if compare(label, s, d):
+            bad.append(label)
+    return bad
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     only = set(sys.argv[1:])
@@ -134,6 +151,9 @@ def main():
             print(f"FAIL {name} rows={len(spark_pdf)} ({time.time()-t0:.1f}s)")
             for e in errs:
                 print(f"     {e}")
+            bad = failing_paths(spark_pdf, duck_pdf)
+            if bad:
+                print(f"     failing paths: {', '.join(bad)}")
             n_fail += 1
         else:
             print(f"PASS {name} rows={len(spark_pdf)} ({time.time()-t0:.1f}s)")
