@@ -18,8 +18,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
-
 import __spark_entry__ as entry_mod
 from pandas_sigproc_spark.session import get_spark, host_cpus
 
@@ -46,17 +44,20 @@ BPE_BENCH_MERGES = [
     ('b', 'i'),
 ]
 
-# The interleaved calibration probe: one fixed, cheap native plan.
-CALIBRATION_LEG = "levels/rms"
-
 HEADLINE = [
     # native relational tier
-    "slice",
-    "levels",
-    "windows",
-    "detrend",
+    "between",
+    "between_freq",
+    "deduplicate",
+    "rms",
+    "mov_rms",
+    "integral",
+    "derivative",
+    "detrend_linear",
+    "detrend_piecewise",
     "rss_daily",
-    "interp",
+    "rms_lin",
+    "interp_daily",
     "segment_stats",
     # joins / classic relational
     "tpch_pricing",
@@ -66,9 +67,10 @@ HEADLINE = [
     "tpch_custdist",
     # kernel tier (applyInPandas)
     "filt_butter",
-    "filt",
-    "psd",
-    "shock_spectrum",
+    "filt_chain",
+    "psd_welch",
+    "psd_dft",
+    "srs",
     "rainflow",
     # LLM-data-pipeline tier
     "dedup_exact",
@@ -79,20 +81,22 @@ HEADLINE = [
     "dedup_jaccard_pairs",
     "dedup_embed",
     "doc_fingerprint",
-    "language_id",
-    "text_profile",
+    "lang_id",
+    "token_count",
     "embed_cosine_topk",
     "ann_lsh",
-    "ivf_search",
+    "ann_ivf",
     "media_features",
     "media_audio_real",
     # round-10: the audio near-dup join (fingerprint pass runs once —
     # persisted — then the fp equi-join; measures the whole tier), plus
     # the container-ingestion gates (WebDataset shard explode + decode,
     # WARC record-gzip roundtrip)
-    "audio_fingerprint",
-    "wds",
-    "container_extract",
+    "audio_fp_pairs",
+    "wds_extract",
+    "warc_extract",
+    "zip_extract",
+    "html_extract",
     "url_canon",
     "crawl_curate",
     "corpus_prep",
@@ -103,9 +107,11 @@ HEADLINE = [
     "tfidf_topk",
     "seq_pack",
     "ann_int8",
+    "ann_ivf_int8",
     "ann_ivf_pq",
     "training_mix",
     # round-5 text additions
+    "rep_stats",
     "doc_chunks",
     "substr_dedup",
     "semdedup",
@@ -117,17 +123,20 @@ HEADLINE = [
     "bloom_decontaminate",
     "temp_sample",
     "pii_scrub",
-    "incr_store",
+    "incr_dedup",
     "lm_ppl",
     "source_overlap",
-    # round-11: the URL blocklist gate and the BPE -> shard -> pack
-    # composition (relational encode)
+    # round-11: model-based lang ID, the URL blocklist gate, and the
+    # BPE -> shard -> pack composition (relational encode)
+    "lang_id_model",
     "url_blocklist",
     "bpe_pack",
-    # round-11 late additions: the normalize chain
+    # round-11 late additions: the WebDataset WRITER roundtrip (write +
+    # re-extract: the output sink's full cost), the normalize chain
     # (12 chained regexp_replace in one codegen span), the
     # no-global-sort corpus permutation, and the quality-argmax
     # near-dup keeper (pairs -> components -> argmax)
+    "wds_roundtrip",
     "text_normalize",
     "train_order",
     "cluster_rep",
@@ -135,6 +144,8 @@ HEADLINE = [
     "robots_filter",
     # composed admission pipeline: blocklist -> robots -> domain cap
     "crawl_admission",
+    # sitemap discovery: robots Sitemap: directives + urlset/index XML
+    "sitemap_extract",
     # round-12: the end-to-end capstone (WARC -> admission -> extract ->
     # normalize -> quality -> dedup -> decontaminate -> BPE counts ->
     # pack -> WebDataset shard manifests, ONE plan) and the EBML .ide
@@ -149,19 +160,11 @@ HEADLINE = [
     "streaming_rainflow",
     # round-14: frontier expansion (html_links -> resolve_url ->
     # canonicalize/host -> admission, one codegen'd expression tree).
+    # The other r14 gate (wds_store_roundtrip) is timed as a DETAIL-ONLY
+    # leg: its wall rides in bench_detail.json, keeping the final line
+    # under the driver's 1.9 KB window.
     "crawl_frontier",
 ]
-
-
-def _leg(qs, name, spark, sf_dir):
-    """The DataFrame a leg runs: a registry slot, or one branch of a
-    composed slot named ``"slot/path"`` (the filter on the literal
-    ``path`` prunes the other branches from the plan)."""
-    slot, _, path = name.partition("/")
-    df = qs[slot](spark, sf_dir)
-    if not path:
-        return df
-    return df.filter(F.col("path") == path)
 
 
 # Linear-work queries re-timed on a replicated dataset to measure scaling
@@ -174,13 +177,12 @@ def _leg(qs, name, spark, sf_dir):
 # Fixed order of the final line's "recall3" array (compact form of the
 # per-tier recall@3 floors; the keyed map stays in bench_detail.json).
 ANN_RECALL_ORDER = (
-    "ann_lsh", "ivf_search/ann_ivf", "ann_int8", "ivf_search/ann_ivf_int8",
-    "ann_ivf_pq",
+    "ann_lsh", "ann_ivf", "ann_int8", "ann_ivf_int8", "ann_ivf_pq",
 )
 
 SCALE_QUERIES = [
-    "levels", "windows", "filt_butter", "psd",
-    "dedup_exact", "dedup_minhash", "text_profile",
+    "rms", "mov_rms", "filt_butter", "psd_welch",
+    "dedup_exact", "dedup_minhash", "token_count",
     "stratified_sample", "seq_pack",
     # round-6: map-side curation ops (linear by construction; the scale
     # row verifies the constant factor holds, not the asymptotic)
@@ -209,7 +211,7 @@ SCALE_QUERIES = [
 # staying ~flat (the engine's join cost per emitted pair), never
 # wall/repl.  They are excluded from the final line's max/geomean,
 # which would otherwise flag data growth as an engine outlier.
-SCALE_PAIR_QUERIES = ["dedup_embed", "audio_fingerprint/audio_fp_pairs"]
+SCALE_PAIR_QUERIES = ["dedup_embed", "audio_fp_pairs"]
 
 
 def _materialize_scaled(spark, sf_dir: str, repl: int, out_dir: str) -> None:
@@ -218,6 +220,7 @@ def _materialize_scaled(spark, sf_dir: str, repl: int, out_dir: str) -> None:
     Idempotent via a marker file; ~seconds at sf0.1.  The scaled events
     keep the raw nanos ts as bigint (ts_seconds handles both layouts).
     """
+    import pyspark.sql.functions as F
 
     # v4: + embeddings table, + replica decorrelation (see SCALE_QUERIES;
     # v3's cyclic shift / 40-amplitude noise left x3-4 pair inflation at
@@ -327,6 +330,15 @@ def main():
     spark = get_spark("bench", cpus=cpus)
 
     qs = entry_mod.queries()
+    # A leg keeps its name and its plan when its query is folded into a
+    # registry slot: it runs that slot's branch, q_<name>.
+    qs.update(
+        {
+            fn.__name__[2:]: fn
+            for slot in list(qs.values())
+            for fn in getattr(slot, "branches", ())
+        }
+    )
     # Warm-up: JVM, parquet footer reads, Python worker pool.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(f"{sf_dir}/events.parquet").count()
@@ -338,9 +350,7 @@ def main():
     # steady state for the probe's own plan; run the exact probe plan
     # to a stable wall before the first recorded probe.
     for _ in range(4):
-        _leg(qs, CALIBRATION_LEG, spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        qs["rms"](spark, sf_dir).write.mode("overwrite").format("noop").save()
     # Spin up one Arrow-python worker per core so the first kernel-tier
     # query isn't billed for pool startup (one-time cost, not query cost).
     (
@@ -435,7 +445,7 @@ def main():
         reps = []
         for _ in range(3):
             t0 = time.time()
-            _leg(qs, CALIBRATION_LEG, spark, sf_dir).write.mode("overwrite").format(
+            qs["rms"](spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
             reps.append(round(time.time() - t0, 3))
@@ -468,7 +478,8 @@ def main():
             reps.append(el)
         timings[name] = round(min(reps), 3)
         medians[name] = round(sorted(reps)[1], 3)
-        # Queries that persist() intermediates (decontaminate, ann_int8, training_mix) can't unpersist before
+        # Queries that persist() intermediates (psd_damage_dft,
+        # decontaminate, ann_int8, training_mix) can't unpersist before
         # their terminal action; release exactly the blocks they pinned
         # (entry_mod.release_caches) so reps and later queries never pay
         # eviction pressure for earlier ones.
@@ -562,17 +573,13 @@ def main():
             n_reps = 5 if name == "dedup_minhash" else 3
             for rep in range(n_reps):
                 t0 = time.time()
-                _leg(qs, name, spark, base_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
+                qs[name](spark, base_dir).write.mode("overwrite").format("noop").save()
                 el = time.time() - t0
                 best_b = el if best_b is None else min(best_b, el)
             entry_mod.release_caches()
             for rep in range(n_reps):
                 t0 = time.time()
-                _leg(qs, name, spark, out_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
+                qs[name](spark, out_dir).write.mode("overwrite").format("noop").save()
                 el = time.time() - t0
                 print(f"[bench] scale{repl}x {name} rep{rep}: {el:.2f}s "
                       f"(fresh base {best_b:.2f}s)",
@@ -591,7 +598,7 @@ def main():
             best = None
             for rep in range(3):
                 t0 = time.time()
-                _leg(qs, name, spark, d).write.mode("overwrite").format(
+                qs[name](spark, d).write.mode("overwrite").format(
                     "noop"
                 ).save()
                 el = time.time() - t0
@@ -602,10 +609,10 @@ def main():
         for name in SCALE_PAIR_QUERIES:
             # layout-matched base (instrument v5), like the linear legs
             wb = _pair_wall(name, base_dir)
-            nb = _leg(qs, name, spark, base_dir).count()
+            nb = qs[name](spark, base_dir).count()
             entry_mod.release_caches()
             ws = _pair_wall(name, out_dir)
-            ns = _leg(qs, name, spark, out_dir).count()
+            ns = qs[name](spark, out_dir).count()
             entry_mod.release_caches()
             per_out = (
                 round((ws / max(ns, 1)) / (wb / max(nb, 1)), 2)
@@ -679,7 +686,7 @@ def main():
     for name in ANN_RECALL_ORDER:
         pred = {
             (r["qid"], r["vec_id"])
-            for r in _leg(qs, name, spark, sf_dir).filter("rank <= 3").collect()
+            for r in qs[name](spark, sf_dir).filter("rank <= 3").collect()
         }
         recall[name] = round(len(pred & truth) / len(truth), 4)
         print(f"[bench] recall@3 {name}: {recall[name]}",
@@ -699,9 +706,7 @@ def main():
             t0 = time.time()
             pred = {
                 (r["qid"], r["vec_id"])
-                for r in _leg(qs, "ivf_search/ann_ivf", spark, sf_dir)
-                .filter("rank <= 3")
-                .collect()
+                for r in qs["ann_ivf"](spark, sf_dir).filter("rank <= 3").collect()
             }
             el = round(time.time() - t0, 3)
             rec = round(len(pred & truth) / len(truth), 4)
@@ -750,6 +755,8 @@ def main():
     # every rep — this leg shows what a deployment that materialized
     # its codes actually pays per query batch).
     import shutil as _shutil
+
+    from pyspark.sql import functions as F
 
     from pandas_sigproc_spark.operators import ann as _bench_ann
     from pandas_sigproc_spark.operators.sigstore import (
@@ -814,13 +821,17 @@ def main():
     print(f"[bench] corpus_to_shards split: {c2s_split}",
           file=sys.stderr, flush=True)
 
-    # Detail-only legs: not on the final line (1.9 KB budget); their
-    # walls and cross-round history live here.  The video-inspection and text-interchange
+    # r14 detail-only leg: the object-store WebDataset layout (write
+    # shards -> save parquet-payload store -> manifest -> load ->
+    # re-explode).  Not on the final line (1.9 KB budget); its wall and
+    # cross-round history live here.
+    detail_only_walls = {}
+    # r15 gates ride here too: the video-inspection and text-interchange
     # gates are fixture-dominated (driver-side mux / csv+json export),
     # and the streaming gate carries the 4-file replay harness — all
     # real costs worth tracking, none representative headline legs.
-    detail_only_walls = {}
     for leg in (
+        "wds_store_roundtrip",
         "dsir_select",
         "video_stream_info",
         "textio_roundtrip",
@@ -856,7 +867,7 @@ def main():
         "bpe_encode": bpe_leg,
         "pq_store": pq_leg,
         "calibration": {
-            "query": CALIBRATION_LEG,
+            "query": "rms",
             "walls_start_q1_middle_q3_post_end": calib_walls,
             "spread": round(max(calib_walls) / min(calib_walls), 3),
         },
@@ -893,17 +904,10 @@ def main():
     # residue-merge arm (the old rainflow_chunked leg) — expect roughly
     # the sum of the former standalone walls.
     detail["composed_legs_since_r15"] = ["filt_butter", "rainflow"]
-    # r17 registry fold: each of these legs runs its former standalone
-    # legs as the 'path' branches of one slot (__spark_entry__._fold),
-    # so its wall is roughly their sum, and it replaces them.
-    detail["composed_legs_since_r17"] = [
-        "slice", "levels", "windows", "detrend", "interp", "filt", "psd",
-        "shock_spectrum", "language_id", "text_profile", "ivf_search",
-        "audio_fingerprint", "wds", "container_extract", "incr_store",
-    ]
     detail["corpus_to_shards_split"] = c2s_split
-    # detail-only legs: walls live here, not on the 1.9 KB final line
-    # (dsir_select = the DSIR importance-resampling selection)
+    # r14 detail-only legs: walls live here, not on the 1.9 KB final
+    # line (wds_store_roundtrip = the object-store layout roundtrip;
+    # dsir_select = the DSIR importance-resampling selection)
     detail["detail_only_legs"] = detail_only_walls
     # full-precision walls live here; the final line carries 2 dp
     detail["queries_3dp"] = timings

@@ -7,11 +7,6 @@ so these tests pin that every entry keeps fresh evidence)."""
 import __spark_entry__ as entry_mod
 
 
-def _driver_checked():
-    """Queries with a hash-green driver row in any recorded round."""
-    return set(entry_mod.green_rounds()[0])
-
-
 def test_every_query_has_an_oracle():
     qs = entry_mod.queries()
     osql = entry_mod.oracle_sql()
@@ -34,11 +29,13 @@ def test_rotation_window_covers_every_unchecked_query():
     names = list(entry_mod.queries().keys())
     if len(names) <= 50:
         return
-    checked = _driver_checked() | BELOW_CAP_AUDIT_TWINS
+    checked = set(entry_mod.green_rounds()[0]) | BELOW_CAP_AUDIT_TWINS
     outside = [q for q in names[50:] if q not in checked]
     assert not outside, (
         f"never-driver-checked queries OUTSIDE the 50-slot window: "
-        f"{outside} — move them above the cap marker in queries()"
+        f"{outside} — queries() orders itself from the verdict files, so "
+        f"fold or retire entries until it has at most 100, or land another "
+        f"verdict round"
     )
 
 
@@ -70,12 +67,6 @@ def test_registry_keys_unique_in_source():
     )
 
 
-def _latest_green_round():
-    """{query: most recent round with a hash-green driver row}, plus the
-    newest recorded round overall."""
-    return entry_mod.green_rounds()
-
-
 def test_max_staleness_of_below_cap_queries():
     # Max-staleness contract (r7 verdict #1: 45 queries silently aged to
     # three-rounds-stale because the window never rotated).  Every query
@@ -89,7 +80,7 @@ def test_max_staleness_of_below_cap_queries():
     names = list(entry_mod.queries().keys())
     if len(names) <= 50:
         return
-    last, newest = _latest_green_round()
+    last, newest = entry_mod.green_rounds()
     stale = [
         f"{q} (last green r{last[q]})"
         for q in names[50:]
@@ -97,7 +88,9 @@ def test_max_staleness_of_below_cap_queries():
     ]
     assert not stale, (
         f"below-cap queries more than 2 recorded rounds stale vs r{newest}: "
-        f"{stale} — rotate them above the cap marker in queries()"
+        f"{stale} — queries() orders itself from the verdict files, so fold "
+        f"or retire entries until it has at most 100, or land another "
+        f"verdict round"
     )
 
 
@@ -109,7 +102,7 @@ def test_next_landing_leaves_no_below_cap_query_stale():
     # than 100 entries, or entries whose evidence ages together, some
     # fall out of the bound whatever the order.
     names = list(entry_mod.queries().keys())
-    last, newest = _latest_green_round()
+    last, newest = entry_mod.green_rounds()
     landed = newest + 1
     last.update({q: landed for q in names[:50]})
     stale = [
