@@ -21,7 +21,6 @@ rounded on BOTH sides to absorb summation-order differences.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import re
@@ -2385,8 +2384,8 @@ def q_corpus_curate(spark, sf_dir):
     compose as equi-joins on doc id (uniform key); the final agg is a
     tiny per-language partial agg.  The semantic gate consumes only the
     DISCRETE keep flags, so the margin argument of q_semdedup carries
-    over unchanged; the bit-pinned replay survives as the below-cap
-    audit twin `corpus_curate_exact`.
+    over unchanged; the bit-pinned replay survives as the audit twin
+    `corpus_curate_exact`, a branch of the same slot.
     """
     return _corpus_curate_impl(spark, sf_dir, exact_sums=False)
 
@@ -2997,7 +2996,8 @@ def q_semdedup(spark, sf_dir):
     centroid bits, and even under full-precision jitter the argmin
     margins dominate by > 1e6x (tests/test_prod_oracle_margins.py
     measures both on the gate corpora).  The bit-pinned exact_sums
-    replay survives as the below-cap audit twin `semdedup_exact`.
+    replay survives as the audit twin `semdedup_exact`, a branch of the
+    same slot.
 
     Pairs are WITHIN-CLUSTER only, so the quadratic cost is bounded by
     the largest cluster — k is the knob at corpus scale, and the
@@ -3136,7 +3136,7 @@ def q_dedup_embed(spark, sf_dir):
     # the L banded LSH tables with cosine >= 0.4.  Delegates to the
     # package API (operators/ann.py embedding_near_pairs — identical
     # plan, oracle-proven), guard default-on with the original op_name
-    # so the SKEW.md firing probe's message stays stable.
+    # so its refusal message stays stable.
     return _ann.embedding_near_pairs(
         _embeds_base(spark, sf_dir),
         0.4,
@@ -5371,9 +5371,10 @@ def q_robots_filter(spark, sf_dir):
             (did % 6).cast("int") + 1,
         ).alias("path"),
     )
+    # `url_path`: `path` is the crawl slot's branch marker
     return robots_verdicts(pages, rules, agent="sparkbot").select(
         "doc_id", "host", "path", "matched_rule", "matched_path", "allowed"
-    )
+    ).withColumnRenamed("path", "url_path")
 
 
 def q_sitemap_extract(spark, sf_dir):
@@ -5544,7 +5545,7 @@ def q_crawl_admission(spark, sf_dir):
     return rb.select(
         "doc_id",
         "host",
-        "path",
+        F.col("path").alias("url_path"),
         "category",
         "robots_allowed",
         (elig & (F.row_number().over(w) <= _ADMIT_CAP)).alias(
@@ -5586,7 +5587,7 @@ r AS (
            ORDER BY doc_id) AS rk
   FROM v
 )
-SELECT doc_id, host, path, category, robots_allowed,
+SELECT doc_id, host, path AS url_path, category, robots_allowed,
        (elig AND rk <= {_ADMIT_CAP}) AS admitted
 FROM r
 """
@@ -5611,7 +5612,7 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
        'h' || CAST(CAST(doc_id % 4 AS INTEGER) AS VARCHAR) || '.example' AS host,
        CASE CAST(doc_id % 6 AS INTEGER)
          {" ".join(f"WHEN {i} THEN '{p}'" for i, p in enumerate(_ROBOTS_PATHS))}
-       END AS path,
+       END AS url_path,
        {_sql_robots_case(lambda e: e[0])} AS matched_rule,
        {_sql_robots_case(lambda e: e[1])} AS matched_path,
        {_sql_robots_case(lambda e: e[2])} AS allowed
@@ -6170,13 +6171,15 @@ def q_video_stream_info(spark, sf_dir):
     )
 
 
-def _sql_video_stream_info() -> str:
+def _sql_video_stream_info(flavor: str) -> str:
+    """The ``flavor`` arm (h264 / hevc) of :func:`q_video_stream_info`."""
     vals = ",\n    ".join(
-        f"({v}, '{fl}', {si}, {nn}, '{nt}', {kf}, {w}, {h}, {pr}, {lv})"
+        f"({v}, {si}, {nn}, '{nt}', {kf}, {w}, {h}, {pr}, {lv})"
         for v, fl, si, nn, nt, kf, w, h, pr, lv in _vsi_expect_rows()
+        if fl == flavor
     )
     return f"""
-WITH exp(v, path, sample_idx, n_nals, nal_types, is_keyframe,
+WITH exp(v, sample_idx, n_nals, nal_types, is_keyframe,
          width, height, profile_idc, level_idc) AS (
   VALUES
     {vals}
@@ -6186,8 +6189,7 @@ d AS (
          CAST(doc_id AS BIGINT) % 12 AS v
   FROM documents
 )
-SELECT e.path,
-       d.media_id,
+SELECT d.media_id,
        CAST(e.sample_idx AS INTEGER) AS sample_idx,
        CAST(e.n_nals AS INTEGER) AS n_nals,
        e.nal_types,
@@ -10293,38 +10295,13 @@ def _sql_streaming_lfilter():
 # ---------------------------------------------------------------------------
 
 
-def green_rounds() -> tuple[dict[str, int], int]:
-    """The recorded correctness verdicts: ``{query: newest round with a
-    hash-green row}`` and the newest recorded round, read from the
-    ``CORRECTNESS_r<N>.json`` files beside this file."""
-    root = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    newest = 0
-    for f in os.listdir(root):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        newest = max(newest, rnd)
-        with open(os.path.join(root, f)) as fh:
-            verdicts = json.load(fh)
-        for name, row in verdicts.items():
-            if isinstance(row, dict) and row.get("hash_match"):
-                last[name] = max(last.get(name, 0), rnd)
-    return last, newest
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per capability.  A slot that folds several plans or
     variants runs each as a labeled branch and carries the oracle of
-    the whole (:func:`_slot`).
-
-    The correctness gate hash-checks only the first 50 entries each
-    round, so the registry orders itself oldest evidence first: stably by
-    each name's newest hash-green round in the ``CORRECTNESS_r*.json``
-    verdicts beside this file (:func:`green_rounds`), a name never green
-    ranking 0.  With no verdict files the literal order stands."""
-    registry = {
+    the whole (:func:`_slot`).  The correctness gate hash-checks the
+    first 50 entries each round, so the registry stays at 50 or fewer
+    and every entry is checked every round."""
+    return {
         "levels": _slot(
             (q_rms, SQL_RMS),
             (q_spl, SQL_SPL),
@@ -10403,6 +10380,201 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             (q_srs, _oracle_prod.sql_srs()),
             (q_srs_exact, _sql_srs_exact()),
         ),
+        "filt_butter": q_filt_butter,
+        "resample": q_resample,
+        "segment_stats": q_segment_stats,
+        "rss_daily": q_rss_daily,
+        "rainflow": q_rainflow,
+        "streaming_lfilter": q_streaming_lfilter,
+        "streaming_rainflow": q_streaming_rainflow,
+        "accessor_chain": q_accessor_chain,
+        "ide_scan": q_ide_scan,
+        "textio_roundtrip": q_textio_roundtrip,
+        "tpch": _slot(
+            (q_tpch_pricing, SQL_TPCH_PRICING),
+            (q_tpch_order_priority, SQL_TPCH_ORDER_PRIORITY),
+            (q_tpch_rollup, SQL_TPCH_ROLLUP),
+            (q_tpch_custdist, SQL_TPCH_CUSTDIST),
+            (q_tpch_revenue_join, SQL_TPCH_REVENUE_JOIN),
+            (q_tpch_local_supplier, SQL_TPCH_LOCAL_SUPPLIER),
+            exact=(
+                "c_count", "count_order", "custdist", "n_items", "n_rows",
+                "o_orderkey", "order_count",
+            ),
+        ),
+        "near_dup": _slot(
+            (q_dedup_exact, SQL_DEDUP_EXACT),
+            (q_dedup_minhash, SQL_DEDUP_MINHASH),
+            (q_dedup_minhash_lsh, SQL_DEDUP_MINHASH_LSH),
+            (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+            (q_dedup_simhash, SQL_DEDUP_SIMHASH),
+            (q_dedup_jaccard_pairs, SQL_DEDUP_JACCARD_PAIRS),
+            # the prefix-filtered join returns the naive join's pairs
+            # (tests/test_jaccard_ppjoin)
+            (q_dedup_jaccard_ppjoin, SQL_DEDUP_JACCARD_PAIRS),
+            (q_para_dedup, SQL_PARA_DEDUP),
+            (q_substr_dedup, SQL_SUBSTR_DEDUP),
+            (q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+            (q_bloom_decontaminate, SQL_BLOOM_DECONTAMINATE),
+            exact=(
+                "component", "d1", "d2", "doc_id", "fingerprint",
+                "is_dropped", "keeper_doc_id", "mh0", "mh1", "mh2", "mh3",
+                "n_blocks", "n_copies", "n_dup_blocks", "n_dup_tokens",
+                "n_flagged", "n_ngrams", "n_tokens", "simhash",
+            ),
+        ),
+        "semantic_dedup": _slot(
+            (q_semdedup, _sql_semdedup(exact=False)),
+            (q_semdedup_exact, _sql_semdedup(exact=True)),
+            (q_dedup_embed, _sql_dedup_embed()),
+            (q_embed_kmeans, _sql_embed_kmeans()),
+            (q_cluster_rep, SQL_CLUSTER_REP),
+            (q_cluster_sample, _sql_cluster_sample()),
+            exact=(
+                "cluster", "component", "dim", "doc_id", "keep", "kept", "n",
+                "rep_doc_id", "u", "v1", "v2", "vec_id",
+            ),
+        ),
+        "ann": _slot(
+            (q_ann_lsh, _sql_ann_lsh()),
+            (q_ann_int8, _sql_ann_int8()),
+            (q_embed_cosine_topk, SQL_EMBED_COSINE_TOPK),
+            (q_ann_ivf, SQL_ANN_IVF),
+            (q_ann_ivf_int8, SQL_ANN_IVF_INT8),
+            exact=("qscore",),
+        ),
+        "pq_search": _slot(
+            (q_ann_ivf_pq, SQL_ANN_IVF_PQ),
+            # store == recompute: the PQ-store probe returns the plain
+            # ivf_pq_topk rows exactly
+            (q_ann_pq_store, SQL_ANN_IVF_PQ),
+        ),
+        "quality": _slot(
+            (q_gopher_rules, SQL_GOPHER_RULES),
+            (q_quality_classify, SQL_QUALITY_CLASSIFY),
+            (q_quality_score, SQL_QUALITY_SCORE),
+            (q_lm_ppl, SQL_LM_PPL),
+            (q_lm_ppl_terciles, SQL_LM_PPL_TERCILES),
+            (q_pii_scrub, SQL_PII_SCRUB),
+            exact=(
+                "doc_id", "event_id", "keep", "n_required", "n_tokens",
+                "n_trans", "n_words", "props_masked_chars",
+            ),
+        ),
+        "decontam": _slot(
+            (q_decontaminate, SQL_DECONTAMINATE),
+            (q_source_overlap, SQL_SOURCE_OVERLAP),
+            exact=("doc_id", "n_hits", "n_ngrams"),
+        ),
+        "language_id": _slot(
+            (q_lang_id, SQL_LANG_ID),
+            (q_lang_id_model, _sql_lang_id_model()),
+            exact=("n_stopword_hits", "n_grams", "n_hits", "agree"),
+        ),
+        "text_profile": _slot(
+            (q_text_stats, SQL_TEXT_STATS),
+            (q_token_count, SQL_TOKEN_COUNT),
+            (q_rep_stats, SQL_REP_STATS),
+            exact=(
+                "n_chars_actual",
+                "n_tokens",
+                "n_stopwords",
+                "n_ws_tokens",
+                "n_re_tokens",
+                "n_unique_tokens",
+                "n_lines",
+            ),
+        ),
+        "tfidf_topk": q_tfidf_topk,
+        "ngram_counts": q_ngram_counts,
+        "doc_chunks": q_doc_chunks,
+        "curation": _slot(
+            (q_corpus_curate, _sql_corpus_curate(exact=False)),
+            (q_corpus_curate_exact, _sql_corpus_curate(exact=True)),
+            (q_streaming_corpus_filter, SQL_STREAMING_CORPUS_FILTER),
+            (q_text_normalize, SQL_TEXT_NORMALIZE),
+            exact=(
+                "changed", "clean_tokens", "doc_id", "n_chars_norm",
+                "n_chars_raw", "n_docs", "n_tokens",
+            ),
+        ),
+        "crawl": _slot(
+            (q_url_canon, SQL_URL_CANON),
+            (q_url_blocklist, SQL_URL_BLOCKLIST),
+            (q_robots_filter, SQL_ROBOTS_FILTER),
+            (q_domain_cap, SQL_DOMAIN_CAP),
+            (q_crawl_admission, SQL_CRAWL_ADMISSION),
+            (q_crawl_curate, SQL_CRAWL_CURATE),
+            (q_link_pagerank, SQL_LINK_PAGERANK),
+            exact=(
+                "admitted", "allowed", "doc_id", "host_docs", "keep", "kept",
+                "n_same", "n_url_dups", "robots_allowed",
+            ),
+        ),
+        "crawl_frontier": q_crawl_frontier,
+        "container_extract": _slot(
+            (q_warc_extract, SQL_WARC_EXTRACT),
+            (q_zip_extract, SQL_ZIP_EXTRACT),
+            (q_html_extract, SQL_HTML_EXTRACT),
+            (q_sitemap_extract, SQL_SITEMAP_EXTRACT),
+            exact=("n_bytes", "pos"),
+        ),
+        "sampling": _slot(
+            (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
+            (q_temp_sample, SQL_TEMP_SAMPLE),
+            (q_training_mix, SQL_TRAINING_MIX),
+            (q_dsir_select, _sql_dsir_select()),
+            (q_train_order, SQL_TRAIN_ORDER),
+            (q_shard_assign, SQL_SHARD_ASSIGN),
+            exact=(
+                "bucket", "doc_id", "global_pos", "global_start", "n_docs",
+                "n_packs", "n_tokens", "shard", "u",
+            ),
+        ),
+        "packing": _slot(
+            (q_seq_pack, SQL_SEQ_PACK),
+            (q_bpe_pack, _sql_bpe_pack()),
+            (q_corpus_to_shards, _sql_corpus_to_shards()),
+            (q_corpus_prep, SQL_CORPUS_PREP),
+            exact=(
+                "global_start", "n_bytes", "n_docs", "n_members", "n_tokens",
+                "pack_id", "pack_pos", "shard", "shard_id",
+            ),
+        ),
+        "media_decode": _slot(
+            (q_media_image_png, SQL_MEDIA_IMAGE_PNG),
+            (q_media_image_real, SQL_MEDIA_IMAGE_REAL),
+            (q_media_audio_real, SQL_MEDIA_AUDIO_REAL),
+            # each arm against its construction-arithmetic expectation table
+            (
+                q_video_stream_info,
+                [(fl, _sql_video_stream_info(fl)) for fl in ("h264", "hevc")],
+            ),
+            exact=(
+                "is_keyframe", "level_idc", "n_bytes", "n_frames", "n_nals",
+                "pixel_sum", "profile_idc", "sample_idx",
+            ),
+        ),
+        "perceptual_hash": _slot(
+            (q_media_phash, _sql_media_phash()),
+            (q_media_phash_pairs, _sql_media_phash_pairs()),
+            (q_media_video_dedup, _sql_media_video_dedup()),
+            (q_media_features, SQL_MEDIA_FEATURES),
+            exact=(
+                "best_hamming", "hamming", "height", "m1", "m2", "media_id",
+                "n_bytes", "n_frame_pairs", "n_frames", "phash", "v1", "v2",
+                "width",
+            ),
+        ),
+        "incr_store": _slot(
+            (q_incr_dedup, SQL_INCR_DEDUP),
+            # the store path's contract: the text path's verdict frame
+            # (tests/test_sigstore.py)
+            (q_incr_dedup_store, SQL_INCR_DEDUP),
+            (q_incr_phash_store, _sql_incr_phash_store()),
+            (q_incr_audio_store, _sql_incr_audio_store()),
+            exact=("doc_id", "is_exact_dup", "media_id", "phash", "n_fp"),
+        ),
         "media_image": _slot(
             (q_media_image_jpeg, SQL_MEDIA_IMAGE_JPEG),
             (q_media_image_jpeg_prog, SQL_MEDIA_IMAGE_JPEG_PROG),
@@ -10431,231 +10603,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "n_bytes",
             ),
         ),
-        "container_extract": _slot(
-            (q_warc_extract, SQL_WARC_EXTRACT),
-            (q_zip_extract, SQL_ZIP_EXTRACT),
-            (q_html_extract, SQL_HTML_EXTRACT),
-            (q_sitemap_extract, SQL_SITEMAP_EXTRACT),
-            exact=("n_bytes", "pos"),
-        ),
-        "incr_store": _slot(
-            (q_incr_dedup, SQL_INCR_DEDUP),
-            # the store path's contract: the text path's verdict frame
-            # (tests/test_sigstore.py)
-            (q_incr_dedup_store, SQL_INCR_DEDUP),
-            (q_incr_phash_store, _sql_incr_phash_store()),
-            (q_incr_audio_store, _sql_incr_audio_store()),
-            exact=("doc_id", "is_exact_dup", "media_id", "phash", "n_fp"),
-        ),
         "audio_fingerprint": _slot(
             (q_audio_fp, _sql_audio_fp()),
             (q_audio_fp_pairs, _sql_audio_fp_pairs()),
             exact=("media_id", "fp", "m1", "m2", "n_matches"),
         ),
-        "language_id": _slot(
-            (q_lang_id, SQL_LANG_ID),
-            (q_lang_id_model, _sql_lang_id_model()),
-            exact=("n_stopword_hits", "n_grams", "n_hits", "agree"),
-        ),
-        "text_profile": _slot(
-            (q_text_stats, SQL_TEXT_STATS),
-            (q_token_count, SQL_TOKEN_COUNT),
-            (q_rep_stats, SQL_REP_STATS),
-            exact=(
-                "n_chars_actual",
-                "n_tokens",
-                "n_stopwords",
-                "n_ws_tokens",
-                "n_re_tokens",
-                "n_unique_tokens",
-                "n_lines",
-            ),
-        ),
-        "ivf_search": _slot(
-            (q_ann_ivf, SQL_ANN_IVF),
-            (q_ann_ivf_int8, SQL_ANN_IVF_INT8),
-            exact=("qscore",),
-        ),
-        "doc_chunks": q_doc_chunks,
-        "corpus_prep": q_corpus_prep,
-        "substr_dedup": q_substr_dedup,
-        "resample": q_resample,
-        "segment_stats": q_segment_stats,
-        "media_video_dedup": q_media_video_dedup,
-        "link_pagerank": q_link_pagerank,
-        "domain_cap": q_domain_cap,
-        "url_canon": q_url_canon,
-        "gopher_rules": q_gopher_rules,
-        "crawl_curate": q_crawl_curate,
-        "dedup_embed": q_dedup_embed,
-        "shard_assign": q_shard_assign,
-        "lm_ppl_terciles": q_lm_ppl_terciles,
-        "rss_daily": q_rss_daily,
-        "streaming_corpus_filter": q_streaming_corpus_filter,
-        "streaming_rainflow": q_streaming_rainflow,
-        "accessor_chain": q_accessor_chain,
-        "tfidf_topk": q_tfidf_topk,
-        "training_mix": q_training_mix,
-        "url_blocklist": q_url_blocklist,
-        "bpe_pack": q_bpe_pack,
-        "ann_pq_store": q_ann_pq_store,
-        "text_normalize": q_text_normalize,
-        "cluster_rep": q_cluster_rep,
-        "semdedup_exact": q_semdedup_exact,
-        "corpus_curate_exact": q_corpus_curate_exact,
-        "crawl_frontier": q_crawl_frontier,
-        "dsir_select": q_dsir_select,
-        "media_phash": q_media_phash,
-        "media_phash_pairs": q_media_phash_pairs,
-        "decontaminate": q_decontaminate,
-        "stratified_sample": q_stratified_sample,
-        "ngram_counts": q_ngram_counts,
-        "media_image_png": q_media_image_png,
-        "tpch_pricing": q_tpch_pricing,
-        "tpch_order_priority": q_tpch_order_priority,
-        "tpch_rollup": q_tpch_rollup,
-        "tpch_custdist": q_tpch_custdist,
-        "tpch_revenue_join": q_tpch_revenue_join,
-        "tpch_local_supplier": q_tpch_local_supplier,
-        "para_dedup": q_para_dedup,
-        "quality_classify": q_quality_classify,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "temp_sample": q_temp_sample,
-        "pii_scrub": q_pii_scrub,
-        "lm_ppl": q_lm_ppl,
-        "source_overlap": q_source_overlap,
-        "embed_kmeans": q_embed_kmeans,
-        "cluster_sample": q_cluster_sample,
-        "media_image_real": q_media_image_real,
-        "semdedup": q_semdedup,
-        "corpus_curate": q_corpus_curate,
-        "ann_int8": q_ann_int8,
-        "quality_score": q_quality_score,
-        "doc_fingerprint": q_doc_fingerprint,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "dedup_jaccard_ppjoin": q_dedup_jaccard_ppjoin,
-        "embed_cosine_topk": q_embed_cosine_topk,
-        "ann_lsh": q_ann_lsh,
-        "media_features": q_media_features,
-        "media_audio_real": q_media_audio_real,
-        "robots_filter": q_robots_filter,
-        "crawl_admission": q_crawl_admission,
-        "train_order": q_train_order,
-        "ann_ivf_pq": q_ann_ivf_pq,
-        "seq_pack": q_seq_pack,
-        "corpus_to_shards": q_corpus_to_shards,
-        "ide_scan": q_ide_scan,
-        "rainflow": q_rainflow,
-        "filt_butter": q_filt_butter,
-        "video_stream_info": q_video_stream_info,
-        "textio_roundtrip": q_textio_roundtrip,
-        "streaming_lfilter": q_streaming_lfilter,
     }
-    last, _ = green_rounds()
-    return dict(sorted(registry.items(), key=lambda kv: last.get(kv[0], 0)))
 
 
 def oracle_sql() -> dict[str, str]:
     slots = {n: q.oracle for n, q in queries().items() if hasattr(q, "oracle")}
     return {
         **slots,
-        "rss_daily": SQL_RSS_DAILY,
-        # chunked arm bit-identical to the global pair plan
-        # (tests/test_interp_chunked), so both arms share SQL_RESAMPLE
-        "resample": _compose_oracle(
-            ("global", SQL_RESAMPLE), ("chunked", SQL_RESAMPLE)
-        ),
-        "segment_stats": SQL_SEGMENT_STATS,
-        "tpch_pricing": SQL_TPCH_PRICING,
-        "tpch_revenue_join": SQL_TPCH_REVENUE_JOIN,
-        "tpch_local_supplier": SQL_TPCH_LOCAL_SUPPLIER,
-        "tpch_order_priority": SQL_TPCH_ORDER_PRIORITY,
-        "tpch_custdist": SQL_TPCH_CUSTDIST,
-        "tpch_rollup": SQL_TPCH_ROLLUP,
-        "text_normalize": SQL_TEXT_NORMALIZE,
-        "corpus_to_shards": _sql_corpus_to_shards(),
-        "crawl_frontier": _sql_crawl_frontier(),
-        "dsir_select": _sql_dsir_select(),
-        "ide_scan": SQL_IDE_SCAN,
-        # construction-arithmetic expectation table (video),
-        # documents-derived roundtrip + measured PERMISSIVE quarantine
-        # literals (textio), and the filt_iir_exact DF2T recursion
-        # re-shaped to the streaming operator's output
-        "video_stream_info": _sql_video_stream_info(),
-        "textio_roundtrip": SQL_TEXTIO_ROUNDTRIP,
-        "streaming_lfilter": _sql_streaming_lfilter(),
-        "streaming_corpus_filter": SQL_STREAMING_CORPUS_FILTER,
-        "streaming_rainflow": SQL_STREAMING_RAINFLOW,
-        "url_blocklist": SQL_URL_BLOCKLIST,
-        "bpe_pack": _sql_bpe_pack(),
-        # store==recompute: the PQ-store probe must hash-match the
-        # plain ivf_pq_topk oracle exactly
-        "ann_pq_store": SQL_ANN_IVF_PQ,
-        "quality_score": SQL_QUALITY_SCORE,
-        "doc_fingerprint": SQL_DOC_FINGERPRINT,
-        "corpus_prep": SQL_CORPUS_PREP,
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "dedup_minhash": SQL_DEDUP_MINHASH,
-        "dedup_minhash_lsh": SQL_DEDUP_MINHASH_LSH,
-        "dedup_clusters": SQL_DEDUP_CLUSTERS,
-        "cluster_rep": SQL_CLUSTER_REP,
-        "dedup_simhash": SQL_DEDUP_SIMHASH,
-        "dedup_jaccard_pairs": SQL_DEDUP_JACCARD_PAIRS,
-        "dedup_jaccard_ppjoin": SQL_DEDUP_JACCARD_PAIRS,
-        "dedup_embed": _sql_dedup_embed(),
-        "embed_kmeans": _sql_embed_kmeans(),
-        "cluster_sample": _sql_cluster_sample(),
-        "embed_cosine_topk": SQL_EMBED_COSINE_TOPK,
-        "ann_lsh": _sql_ann_lsh(),
-        "ann_ivf_pq": SQL_ANN_IVF_PQ,
-        "media_features": SQL_MEDIA_FEATURES,
-        "media_audio_real": SQL_MEDIA_AUDIO_REAL,
-        "media_image_real": SQL_MEDIA_IMAGE_REAL,
-        "media_image_png": SQL_MEDIA_IMAGE_PNG,
-        "media_phash": _sql_media_phash(),
-        "media_phash_pairs": _sql_media_phash_pairs(),
-        "media_video_dedup": _sql_media_video_dedup(),
-        "domain_cap": SQL_DOMAIN_CAP,
-        "url_canon": SQL_URL_CANON,
-        "robots_filter": SQL_ROBOTS_FILTER,
-        "crawl_admission": SQL_CRAWL_ADMISSION,
-        "semdedup": _sql_semdedup(exact=False),
-        "semdedup_exact": _sql_semdedup(exact=True),
-        "substr_dedup": SQL_SUBSTR_DEDUP,
-        "corpus_curate": _sql_corpus_curate(exact=False),
-        "corpus_curate_exact": _sql_corpus_curate(exact=True),
-        "stratified_sample": SQL_STRATIFIED_SAMPLE,
-        "ngram_counts": SQL_NGRAM_COUNTS,
-        "doc_chunks": SQL_DOC_CHUNKS,
-        "decontaminate": SQL_DECONTAMINATE,
-        "para_dedup": SQL_PARA_DEDUP,
-        "quality_classify": SQL_QUALITY_CLASSIFY,
-        "gopher_rules": SQL_GOPHER_RULES,
-        "crawl_curate": SQL_CRAWL_CURATE,
-        "link_pagerank": SQL_LINK_PAGERANK,
-        "bloom_decontaminate": SQL_BLOOM_DECONTAMINATE,
-        "temp_sample": SQL_TEMP_SAMPLE,
-        "pii_scrub": SQL_PII_SCRUB,
-        "lm_ppl": SQL_LM_PPL,
-        "lm_ppl_terciles": SQL_LM_PPL_TERCILES,
-        "source_overlap": SQL_SOURCE_OVERLAP,
-        "tfidf_topk": SQL_TFIDF_TOPK,
-        "seq_pack": SQL_SEQ_PACK,
-        "shard_assign": SQL_SHARD_ASSIGN,
-        "train_order": SQL_TRAIN_ORDER,
-        "ann_int8": _sql_ann_int8(),
-        "training_mix": SQL_TRAINING_MIX,
-        # r15 consolidated: identical counts by the residue-merge
-        # theorem (tests pin the chunked==whole equality; the oracle
-        # pins both arms to the standard)
-        "rainflow": _compose_oracle(
-            ("global", SQL_RAINFLOW), ("chunked", SQL_RAINFLOW)
-        ),
         # production kernel-tier legs: full recursive-CTE replays
         # (oracle_prod.py) — bit-exact at the gate's sf0.01 scale where
         # every channel runs the kernels' exact loop/banded paths.
@@ -10665,5 +10624,30 @@ def oracle_sql() -> dict[str, str]:
             ("global", _oracle_prod.sql_filt_butter()),
             ("chunked", _oracle_prod.sql_filt_chunked()),
         ),
+        # chunked arm bit-identical to the global pair plan
+        # (tests/test_interp_chunked), so both arms share SQL_RESAMPLE
+        "resample": _compose_oracle(
+            ("global", SQL_RESAMPLE), ("chunked", SQL_RESAMPLE)
+        ),
+        "segment_stats": SQL_SEGMENT_STATS,
+        "rss_daily": SQL_RSS_DAILY,
+        # r15 consolidated: identical counts by the residue-merge
+        # theorem (tests pin the chunked==whole equality; the oracle
+        # pins both arms to the standard)
+        "rainflow": _compose_oracle(
+            ("global", SQL_RAINFLOW), ("chunked", SQL_RAINFLOW)
+        ),
+        # the filt_iir_exact DF2T recursion re-shaped to the streaming
+        # operator's output
+        "streaming_lfilter": _sql_streaming_lfilter(),
+        "streaming_rainflow": SQL_STREAMING_RAINFLOW,
         "accessor_chain": _oracle_prod.sql_accessor_chain(),
+        "ide_scan": SQL_IDE_SCAN,
+        # documents-derived roundtrip + measured PERMISSIVE quarantine
+        # literals
+        "textio_roundtrip": SQL_TEXTIO_ROUNDTRIP,
+        "tfidf_topk": SQL_TFIDF_TOPK,
+        "ngram_counts": SQL_NGRAM_COUNTS,
+        "doc_chunks": SQL_DOC_CHUNKS,
+        "crawl_frontier": _sql_crawl_frontier(),
     }

@@ -75,8 +75,8 @@ def block_dedup(
     Scale shape: blocks are assembled by exploding TOKENS (one small
     row per token) and folding them back on the uniform ``(doc_id,
     block_id)`` key with per-group state bounded by ``block_tokens``.
-    This shape was forced by a measured Spark quadratic, caught by the
-    giant-document probe (tools/skew_llm.py): any column referenced
+    This shape was forced by a measured Spark quadratic, caught by a
+    giant-document probe: any column referenced
     after a ``posexplode`` is copied into EVERY generated row, so both
     the tempting map-side forms — ``transform(starts, i ->
     slice(ws, i, B))`` (HOF lambdas get no subexpression elimination:

@@ -261,7 +261,7 @@ def interp1d_native(
     # Both bracket sides are BACKWARD frames (unboundedPreceding, 0):
     # Spark evaluates unbounded-FOLLOWING frames by re-aggregating from
     # each row to the partition end — O(n^2) per channel, a stall on a
-    # multi-million-sample hot channel (caught by tools/skew_bench.py).
+    # multi-million-sample hot channel (caught by a 5M-row skew probe).
     # The forward bracket ("first source at-or-ahead") becomes
     # last-source-so-far on the DESCENDING ordering — one extra in-
     # partition sort, O(n log n), same values.  Tie rules: ascending,

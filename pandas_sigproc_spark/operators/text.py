@@ -618,9 +618,8 @@ def substring_dedup(
     # oracle uses): explode tokens to (doc_id, p, w), drop covered
     # positions, reassemble in order.  The earlier formulation tested
     # membership per token with array_contains over the doc's covered
-    # SET — O(len^2) inside ONE task, which the giant-document skew
-    # probe (tools/skew_llm.py) measured hanging at 4e5 tokens
-    # (1.6e11 comparisons).  The anti-join is linear in corpus tokens
+    # SET — O(len^2) inside ONE task, which a giant-document skew
+    # probe measured hanging at 4e5 tokens (1.6e11 comparisons).  The anti-join is linear in corpus tokens
     # with uniform (doc_id, position) shuffle keys; the per-doc
     # reassembly sort is O(len log len), bounded by document length.
     # The covered COUNT falls out of the same aggregation

@@ -10,7 +10,8 @@ Spark's sliding ``rowsBetween`` frame re-aggregates every row's frame.
 
 Scale path (SURVEY.md §7.3.1): ``Window.partitionBy("channel_id")``
 funnels each whole channel through ONE task — a 5M-row hot channel costs
-50x the per-task budget of its peers (measured in SKEW.md), and at
+50x the per-task budget of its peers (measured: mov_rms 16.1 s whole vs
+6.0 s chunked beside 31 channels of 20k rows), and at
 100 TB a year-long 48 kHz channel would OOM a single executor.  For
 channels above :data:`planner.HUGE_CHANNEL_ROWS` the operators therefore
 auto-select an *overlap-chunked* plan cut by the planner's one halo'd

@@ -477,7 +477,7 @@ def auto_window_mode(df: DataFrame):
     derivative), or None for the whole-channel plan (a window per
     channel; for mov_rms a kernel group per channel or fleet bucket).  A
     channel above HUGE_CHANNEL_ROWS would otherwise pass whole through
-    ONE task (SKEW.md measures a 5M-row hot channel at ~50x its peers);
+    ONE task (a 5M-row hot channel measured ~50x its peers);
     the overlap-chunked plan bounds every task at chunk_rows + overlap
     rows."""
     s = get_stats(df)

@@ -40,10 +40,15 @@ def _write_corpus(tmp: Path, seed: int, n: int = 120) -> str:
 
 
 def test_ppjoin_equals_naive_random_corpora(spark, tmp_path):
-    qs = entry_mod.queries()
+    # both plans are path branches of the near_dup slot; compare their
+    # own q_* functions
     for seed in (0, 1, 2):
         sf = _write_corpus(tmp_path / f"c{seed}", seed)
-        naive = sorted(map(tuple, qs["dedup_jaccard_pairs"](spark, sf).collect()))
-        pp = sorted(map(tuple, qs["dedup_jaccard_ppjoin"](spark, sf).collect()))
+        naive = sorted(
+            map(tuple, entry_mod.q_dedup_jaccard_pairs(spark, sf).collect())
+        )
+        pp = sorted(
+            map(tuple, entry_mod.q_dedup_jaccard_ppjoin(spark, sf).collect())
+        )
         assert naive == pp, f"seed {seed}: {len(naive)} vs {len(pp)} pairs"
         assert naive, f"seed {seed}: corpus produced no near-dup pairs"

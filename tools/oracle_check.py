@@ -3,8 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at sf0.01 (or $SPARK_GRAFT_SF_DIR), sorts columns by name, sorts rows, and
 compares values exactly (floats must already be rounded identically inside
-the queries).  Kernel-tier queries without an oracle get the rows-only
-check.  Usage: python tools/oracle_check.py [name ...]
+the queries).  An entry without an oracle fails.  Usage: python
+tools/oracle_check.py [name ...]
 """
 
 from __future__ import annotations
@@ -123,22 +123,16 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle_sql() entry")
+            n_fail += 1
+            continue
         t0 = time.time()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark raised {type(exc).__name__}: {exc}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            status = "rows-only"
-            ok = len(spark_pdf) >= 0
-            print(
-                f"{'PASS' if ok else 'FAIL'} {name} [{status}] rows={len(spark_pdf)} "
-                f"({time.time()-t0:.1f}s)"
-            )
-            n_pass += ok
-            n_fail += not ok
             continue
         try:
             duck_pdf = con.sql(oracles[name]).df()

@@ -41,7 +41,11 @@ def main():
     names = sys.argv[1:] or HEADLINE
     spark = get_spark("plan_audit", cpus=host_cpus())
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
+    # registry slots, and every plan a slot folds under its q_* name
+    qs = {
+        **entry_mod.queries(),
+        **{k[2:]: fn for k, fn in vars(entry_mod).items() if k.startswith("q_")},
+    }
     w = max(len(n) for n in names)
     print(f"{'query':<{w}}  shuffles  bcasts  py_udf  pushdown")
     for name in names:
