@@ -402,12 +402,14 @@ _EXACT_TYPES = {
 }
 
 
-def _compose_paths(*branches, exact=()):
+def _compose_paths(*branches, exact=(), nested=()):
     """One registry slot over several (label, DataFrame) branches: each
     branch rides as its own rows under a ``path`` marker, so the slot
     hash-proves every branch, and, because the oracle emits the same
     labeled union (:func:`_compose_oracle`), their agreement with it.
-    A branch that is itself composed nests as ``label/path``.
+    A branch that is itself composed is named in ``nested`` and nests
+    as ``label/path``; any other branch with a ``path`` column of its
+    own raises, as the oracle's union refuses the clash.
 
     Branches are unioned by column name and must agree on the type of
     every column they share.  A column a branch lacks is NULL in its
@@ -418,8 +420,13 @@ def _compose_paths(*branches, exact=()):
     tagged, types = [], {}
     for label, df in branches:
         tag = F.lit(label)
-        if "path" in df.columns:
+        if label in nested:
             tag = F.concat(tag, F.lit("/"), F.col("path"))
+        elif "path" in df.columns:
+            raise ValueError(
+                f"branch {label!r} emits its own path column, which is "
+                f"the branch marker; rename it"
+            )
         b = df.select(tag.alias("path"), *(c for c in df.columns if c != "path"))
         for f in b.schema.fields:
             if types.setdefault(f.name, f.dataType) != f.dataType:
@@ -480,12 +487,15 @@ def _slot(*branches, exact=()):
     """A registry slot over (``q_<label>``, oracle) branches: the union
     of their outputs under :func:`_compose_paths`, each labeled
     ``<label>``, carrying its oracle (:func:`_compose_oracle`) as
-    ``.oracle`` and its branch queries as ``.branches``."""
+    ``.oracle`` and its branch queries as ``.branches``.  A branch whose
+    oracle is a list is itself composed and nests, on both sides."""
+    nested = {fn.__name__[2:] for fn, sql in branches if not isinstance(sql, str)}
 
     def q(spark, sf_dir):
         return _compose_paths(
             *((fn.__name__[2:], fn(spark, sf_dir)) for fn, _ in branches),
             exact=exact,
+            nested=nested,
         )
 
     q.oracle = _compose_oracle(

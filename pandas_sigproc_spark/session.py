@@ -3,9 +3,10 @@
 Local mode runs one task slot per core: ``cpus`` defaults to
 ``$SPARK_GRAFT_CPUS``, else to the cores this process may run on; the
 driver heap defaults to 8 GiB (``$SPARK_DRIVER_MEMORY``).  On a real
-cluster every setting here except master/driver-memory and the
-checkpoint file manager carries over unchanged.  AQE stays on so skewed
-channel groups and small shuffle partitions get re-planned at runtime.
+cluster every setting here except master/driver-memory, the checkpoint
+file manager and the ``file:`` filesystem carries over unchanged.  AQE
+stays on so skewed channel groups and small shuffle partitions get
+re-planned at runtime.
 
 Streaming checkpoints go through Spark's ``FileSystem``-based checkpoint
 file manager.  The default ``FileContext`` one renames each checkpoint
@@ -19,6 +20,24 @@ paths the same check-then-rename the ``FileContext`` path does, with no
 fork.  The setting is for LOCAL ``file:`` checkpoints.  On HDFS the
 ``FileContext`` rename is atomic, so a cluster deployment keeps Spark's
 default.
+
+For the same reason Hadoop's local filesystem forks ``chmod`` for every
+file and directory it creates: each state-store delta and checksum
+file, each offset, commit and sink-metadata log entry, each parquet
+part file and the ``.crc`` beside each of them (about 36 forks per
+micro-batch of a stateful query).  ``spark.hadoop.fs.file.impl`` points
+``file:`` at ``jvm/NoForkLocalFileSystem.java``, the stock
+``LocalFileSystem`` with a ``setPermission`` that sets the same
+(already umasked) mode through ``java.nio``; only a sticky bit or a
+non-POSIX filesystem takes the stock path.  Checksums and the files,
+contents and modes on disk are the stock ones, so a checkpoint restarts
+across the change either way.  Its prebuilt jar goes on
+``spark.driver.extraClassPath``, and both settings are LOCAL-mode ones:
+the session is always ``local[N]``, so the executors run in the driver
+JVM.  A cluster deployment would ship the jar to its executors, or keep
+the stock class where ``libhadoop`` is installed.  The ``FileContext``
+checkpoint manager builds its own raw filesystem and is not covered;
+the manager swap above still stands.
 """
 
 from __future__ import annotations
@@ -36,6 +55,13 @@ _CHECKPOINT_FILE_MANAGER = (
 # (its UDFs pickle by reference, and the worker daemon lives in it), so it
 # goes on their path whatever directory the driver runs from.
 _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# The fork-free ``file:`` filesystem (see the module); rebuild its jar
+# with ``jvm/build.sh`` after editing the source.
+_LOCAL_FS = "pandas_sigproc_spark.jvm.NoForkLocalFileSystem"
+_LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NoForkLocalFileSystem.jar"
+)
 
 
 def host_cpus() -> int:
@@ -83,6 +109,9 @@ def get_spark(app_name: str = "pandas_sigproc_spark", cpus: int | None = None) -
         .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
         # No forked readlink per checkpoint rename (see the module).
         .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
+        # No forked chmod per local file written (see the module).
+        .config("spark.driver.extraClassPath", _LOCAL_FS_JAR)
+        .config("spark.hadoop.fs.file.impl", _LOCAL_FS)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()

@@ -92,3 +92,21 @@ def test_branches_disagreeing_on_a_column_type_raise(spark):
     retyped = phashes.withColumn("doc_id", phashes["doc_id"].cast(StringType()))
     with pytest.raises(ValueError, match="doc_id"):
         entry_mod._compose_paths(("dedup", dedup), (label, retyped), exact=EXACT)
+
+
+def test_plain_branch_with_its_own_path_column_raises(spark):
+    # Only a branch whose oracle is a list is composed and may carry a
+    # ``path`` column (it nests as label/path); the oracle's union
+    # refuses the clash for any other branch, and so must the slot.
+    def q_inner(spark, sf_dir):
+        return entry_mod._compose_paths(("a", spark.range(1)), ("b", spark.range(2)))
+
+    def q_url(spark, sf_dir):
+        return spark.createDataFrame([("/robots.txt",)], "path string")
+
+    inner = [("a", "SELECT 0::BIGINT AS id"), ("b", "SELECT 0::BIGINT AS id")]
+    nested = entry_mod._slot((q_inner, inner))(spark, None).toPandas()
+    assert sorted(nested["path"]) == ["inner/a", "inner/b", "inner/b"]
+    slot = entry_mod._slot((q_inner, inner), (q_url, "SELECT '/x' AS path"))
+    with pytest.raises(ValueError, match="'url'"):
+        slot(spark, None)
