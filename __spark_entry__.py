@@ -988,7 +988,7 @@ def q_interp_daily(spark, sf_dir):
 
 
 def _interp_chunked_branch(spark, sf_dir):
-    # The range-chunked as-of interpolation plan (joins._chunk_assign:
+    # The range-chunked as-of interpolation plan (planner.range_chunks:
     # time-range chunks + injected boundary sources) forced through the
     # hash gate — bit-identical to the global plan, so its oracle arm is
     # SQL_INTERP_DAILY verbatim.  Chunk size 400 puts every channel
@@ -1063,8 +1063,8 @@ def q_resample(spark, sf_dir):
 
 
 def _resample_chunked_branch(spark, sf_dir):
-    # The range-chunked resample plan (joins._resample_pairs_chunked:
-    # per-chunk lead with the injected global successor) — pairs and
+    # The range-chunked resample plan (planner.range_chunks: per-chunk
+    # lead with the injected global successor) — pairs and
     # emitted grid points are bit-identical to the global plan, so its
     # oracle arm is SQL_RESAMPLE verbatim.  r13: the 'chunked' path of
     # the consolidated q_resample gate.
@@ -3513,9 +3513,9 @@ def q_psd_all(spark, sf_dir):
 
 def q_psd_segmented(spark, sf_dir):
     # The §7.3.1 huge-channel scale path through the driver gate: same
-    # Welch mean as q_psd_welch, but segment membership is assigned
-    # relationally and every (channel, segment) is FFT'd by its own task
-    # — the mode for one channel too large for any single task.
+    # Welch mean as q_psd_welch, but each Welch segment is one of the
+    # planner's halo'd chunks, FFT'd by its own task — the mode for one
+    # channel too large for any single task.
     # Equality with the whole-channel path is pinned in
     # tests/test_operators_kernel.py.
     out = get_psd(

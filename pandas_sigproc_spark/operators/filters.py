@@ -205,6 +205,7 @@ def filt_chunked(
     b = np.asarray(b, np.float64)
     a = np.asarray(a, np.float64)
     O = int(overlap_rows) if overlap_rows is not None else settling_length(b, a)
+    chunk_rows = planner.resolve_chunk_rows(df, chunk_rows, overlap=O)
     run = _iir.filtfilt if zero_phase else _iir.lfilter
 
     def body(pdf: pd.DataFrame, core: np.ndarray) -> pd.DataFrame:

@@ -54,7 +54,7 @@ def interp1d_spline(
     knot range contains them; out-of-span targets raise from the kernel
     in both plans (SciPy parity — ``extension.py:986-996``).
     """
-    chunk_rows = planner.resolve_chunk_rows(df, chunk_rows)
+    chunk_rows = planner.resolve_chunk_rows(df, chunk_rows, overlap=overlap_knots)
 
     if chunk_rows is None:
         def kernel(src: pd.DataFrame, tgt: pd.DataFrame) -> pd.DataFrame:

@@ -82,104 +82,6 @@ def _combine_expr(kind: str, x0, y0, x1, y1, x):
     return y1  # next
 
 
-def _chunk_assign(u: DataFrame, chunk_rows: int) -> DataFrame:
-    """Assign every unioned source/target row a time-RANGE chunk id and
-    inject each chunk's out-of-chunk bracketing sources.
-
-    Unlike the arithmetic-index chunking of the window ops (which needs
-    a uniform grid), range chunking only needs a time axis: each channel
-    is cut into ``ceil((n_src + n_targets) / chunk_rows)`` equal time
-    spans — the TOTAL row count, because the bracket windows sort both
-    sides and an upsampling grid can dwarf its source (a review
-    finding: sizing on sources alone left per-chunk target counts
-    unbounded).  Balanced when combined density is roughly even; always
-    bounded per task by the span row count.  A chunk's as-of brackets
-    can reach outside it, so
-    for every (channel, chunk) the cumulative latest-earlier source and
-    earliest-later source (tiny per-chunk table, window over chunk ids)
-    are duplicated in as extra source rows — after which the bracket
-    windows are correct per chunk, bit-identical to the global plan.
-
-    NOTE: channels with duplicate source ``_x`` values have ambiguous
-    brackets in the GLOBAL plan too (documented: deduplicate upstream);
-    the boundary table resolves such ties by max/min value, which may
-    differ from the global plan's arbitrary in-window pick.
-    """
-    L = int(chunk_rows)
-    # _t0/_t1 span SOURCES only (targets clamp into it); _n counts ALL
-    # rows — see the docstring.  A target-only channel now gets a geo
-    # row with NULL span: its rows park in chunk 0 via the coalesce
-    # below and bracket to NULL, exactly as the old no-geo-row path.
-    src_x = F.when(F.col("_is_src") == 1, F.col("_x"))
-    geo = u.groupBy("channel_id").agg(
-        F.min(src_x).alias("_t0"),
-        F.max(src_x).alias("_t1"),
-        F.count("*").alias("_n"),
-    )
-    nseg = F.greatest(F.ceil(F.col("_n") / L), F.lit(1)).cast("long")
-    span = F.when(
-        F.col("_t1") > F.col("_t0"), (F.col("_t1") - F.col("_t0")) / nseg
-    ).otherwise(F.lit(1.0))
-    raw_seg = F.floor((F.col("_x") - F.col("_t0")) / span).cast("long")
-    # clamp: out-of-range targets live in the first/last chunk, where
-    # their (possibly one-sided) brackets resolve exactly as globally.
-    # LEFT join + coalesce(0): a grid channel with no sources at all has
-    # no geo row — its targets park in chunk 0 and bracket to NULL,
-    # matching the global plan (inner join would silently drop them).
-    seg = F.coalesce(
-        F.least(F.greatest(raw_seg, F.lit(0)), nseg - 1), F.lit(0)
-    )
-    src2 = u.join(F.broadcast(geo), "channel_id", "left").select(
-        "channel_id", "_x", "_y", "_is_src", seg.alias("_seg")
-    )
-    # per-chunk source extremes -> cumulative across chunks (fills chunks
-    # that hold targets but no sources); the spine enumerates every chunk
-    # id [0, nseg) ARITHMETICALLY from the tiny geo table (clamping pins
-    # all rows into that range) — no distinct scan over the data
-    spine = geo.select(
-        "channel_id",
-        F.explode(F.sequence(F.lit(0).cast("long"), nseg - 1)).alias("_seg"),
-    )
-    b = (
-        src2.filter(F.col("_is_src") == 1)
-        .groupBy("channel_id", "_seg")
-        .agg(
-            F.max(F.struct("_x", "_y")).alias("_lasts"),
-            F.min(F.struct("_x", "_y")).alias("_firsts"),
-        )
-    )
-    w_prev = (
-        Window.partitionBy("channel_id")
-        .orderBy("_seg")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_next = (
-        Window.partitionBy("channel_id")
-        .orderBy(F.col("_seg").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bb = (
-        spine.join(b, ["channel_id", "_seg"], "left")
-        .withColumn("_prev", F.last("_lasts", ignorenulls=True).over(w_prev))
-        .withColumn("_next", F.last("_firsts", ignorenulls=True).over(w_next))
-    )
-    inj_prev = bb.filter(F.col("_prev").isNotNull()).select(
-        "channel_id",
-        F.col("_prev._x").alias("_x"),
-        F.col("_prev._y").alias("_y"),
-        F.lit(1).alias("_is_src"),
-        "_seg",
-    )
-    inj_next = bb.filter(F.col("_next").isNotNull()).select(
-        "channel_id",
-        F.col("_next._x").alias("_x"),
-        F.col("_next._y").alias("_y"),
-        F.lit(1).alias("_is_src"),
-        "_seg",
-    )
-    return src2.unionByName(inj_prev).unionByName(inj_next)
-
-
 def interp1d_native(
     df: DataFrame,
     grid: DataFrame,
@@ -218,14 +120,16 @@ def interp1d_native(
     ``chunk_rows="auto"`` (default): above ``planner.HUGE_CHANNEL_ROWS``
     — judged on the SOURCE and the GRID (an upsampling grid can dwarf
     its source, and the bracket windows sort both) — the windows run
-    per (channel, time-range chunk) with boundary sources injected
-    (:func:`_chunk_assign`) instead of one whole-channel sorted window
-    task: bounded task memory, NO uniform-grid requirement (range
-    chunking only needs the time axis), and results identical to the
-    global plan except on channels with DUPLICATE source timestamps,
-    where the boundary table's max/min tie pick may differ from the
-    global window's arbitrary one (the :func:`_chunk_assign` note;
-    deduplicate upstream for a replayable contract).
+    per (channel, time-range chunk) of :func:`planner.range_chunks`,
+    each chunk given its latest earlier and earliest later source,
+    instead of one whole-channel sorted window task: bounded task
+    memory, NO uniform-grid requirement (range chunking only needs the
+    time axis), and results identical to the global plan except on
+    channels with DUPLICATE source timestamps, where the injected
+    source's max/min tie pick may differ from the global window's
+    arbitrary one (deduplicate upstream for a replayable contract).
+    The spans count sources AND targets, so an upsampling grid cannot
+    overfill a chunk.
     """
     kind = kind.lower()
     if kind not in NATIVE_INTERP_KINDS:
@@ -254,7 +158,9 @@ def interp1d_native(
         # review finding: upsampling bypassed the bounded-task path)
         chunk_rows = planner.resolve_chunk_rows(grid, "auto")
     if chunk_rows is not None:
-        u = _chunk_assign(u, int(chunk_rows))
+        u = planner.range_chunks(
+            u, chunk_rows, x="_x", back=True, fwd=True, carry=("_y",), src="_is_src"
+        )
         part_cols = ["channel_id", "_seg"]
     else:
         part_cols = ["channel_id"]
@@ -351,64 +257,6 @@ def interp1d_log(
     )
 
 
-def _resample_pairs_chunked(df: DataFrame, chunk_rows: int) -> DataFrame:
-    """Bracket-pair assembly for resample with bounded tasks: lead()
-    per (channel, time-range chunk), the chunk's earliest-later source
-    injected so the last real row of every chunk still sees its true
-    global successor.  Emits the same (t, value, _x1, _y1, _t0, _t1)
-    pair rows as the global plan, bit-for-bit."""
-    L = int(chunk_rows)
-    src = df.select("channel_id", "t", "value")
-    geo = src.groupBy("channel_id").agg(
-        F.min("t").alias("_t0"),
-        F.max("t").alias("_t1"),
-        F.count("*").alias("_n"),
-    )
-    nseg = F.greatest(F.ceil(F.col("_n") / L), F.lit(1)).cast("long")
-    span = F.when(
-        F.col("_t1") > F.col("_t0"), (F.col("_t1") - F.col("_t0")) / nseg
-    ).otherwise(F.lit(1.0))
-    seg = F.least(
-        F.greatest(F.floor((F.col("t") - F.col("_t0")) / span).cast("long"), F.lit(0)),
-        nseg - 1,
-    )
-    s2 = planner.join_channel(src, geo).select(
-        "channel_id", "t", "value", "_t0", "_t1", seg.alias("_seg")
-    )
-    firsts = s2.groupBy("channel_id", "_seg").agg(
-        F.min(F.struct("t", "value")).alias("_firsts")
-    )
-    w_next = (
-        Window.partitionBy("channel_id")
-        .orderBy(F.col("_seg").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    nxt = firsts.withColumn(
-        "_nxt", F.last("_firsts", ignorenulls=True).over(w_next)
-    ).filter(F.col("_nxt").isNotNull())
-    inj = (
-        planner.join_channel(nxt, geo.select("channel_id", "_t0", "_t1"))
-        .select(
-            "channel_id",
-            F.col("_nxt.t").alias("t"),
-            F.col("_nxt.value").alias("value"),
-            "_t0",
-            "_t1",
-            "_seg",
-        )
-    )
-    w2 = Window.partitionBy("channel_id", "_seg").orderBy("t")
-    return (
-        s2.unionByName(inj)
-        .withColumn("_x1", F.lead("t").over(w2))
-        .withColumn("_y1", F.lead("value").over(w2))
-        # the injected successor orders last in its chunk (its t exceeds
-        # every in-chunk t), so its own lead is null and this filter
-        # removes it — it exists only to complete the chunk-tail pair
-        .filter(F.col("_x1") > F.col("t"))
-    )
-
-
 def resample(
     df: DataFrame,
     sample_rate: float,
@@ -435,17 +283,14 @@ def resample(
     materialized grid, as before.
 
     ``chunk_rows="auto"``: above ``planner.HUGE_CHANNEL_ROWS`` the lead
-    window runs per (channel, time-range chunk), with each chunk's
-    earliest-later source injected from a tiny per-chunk boundary table
-    (same technique as :func:`_chunk_assign`, forward side only) — the
-    pairs, and therefore every emitted grid point, are bit-identical to
-    the global plan while task size stays bounded.
+    window runs per (channel, time-range chunk) of
+    :func:`planner.range_chunks`, each chunk given its earliest later
+    source — the pairs, and therefore every emitted grid point, are
+    bit-identical to the global plan while task size stays bounded.
     """
     dt = 1.0 / float(sample_rate)
     if kind.lower() not in NATIVE_INTERP_KINDS:
-        bounds = df.groupBy("channel_id").agg(
-            F.min("t").alias("_t0"), F.max("t").alias("_t1")
-        )
+        bounds = planner.channel_geometry(df)
         # n = ceil((t1 - t0)/dt) points, end-exclusive like np.arange (a
         # zero-length channel yields an empty grid, same as arange).
         n = F.ceil((F.col("_t1") - F.col("_t0")) / dt).cast("long")
@@ -462,7 +307,16 @@ def resample(
     kind = kind.lower()
     chunk_rows = planner.resolve_chunk_rows(df, chunk_rows)
     if chunk_rows is not None:
-        d = _resample_pairs_chunked(df, int(chunk_rows))
+        # the chunk's earliest later source completes its last pair; that
+        # copy orders last in its chunk, so its own NULL lead drops it
+        w = Window.partitionBy("channel_id", "_seg").orderBy("t")
+        src = df.select("channel_id", "t", "value")
+        d = (
+            planner.range_chunks(src, chunk_rows, fwd=True)
+            .withColumn("_x1", F.lead("t").over(w))
+            .withColumn("_y1", F.lead("value").over(w))
+            .filter(F.col("_x1") > F.col("t"))
+        )
     else:
         w = Window.partitionBy("channel_id").orderBy("t")
         wp = Window.partitionBy("channel_id")

@@ -4,10 +4,13 @@ Reference ``get_psd`` (``extension.py:569-625``, kernel ``tools.py:13-100``).
 
 Spark-first decomposition (SURVEY.md §2.8 row get_psd):
 
-1. **Segmentation is relational** — per-channel row numbers assign each
-   sample to the Welch segments it belongs to (an overlapping segment
-   membership is a bounded explode of at most
-   ``ceil(n_window / n_step)`` copies — 2 for the default 50% overlap).
+1. **Segmentation is the planner's cut** (``planner.chunk_apply``) — the
+   arithmetic sample index puts each sample in the Welch segments it
+   belongs to: a chunk of ``n_step`` rows with an ``n_window - n_step``
+   forward halo is one segment, and the overlapping membership is a
+   bounded explode of at most ``ceil(n_window / n_step)`` copies — 2 for
+   the default 50% overlap.  No stage sorts a whole channel; the grid
+   must be uniform at the declared samplerate.
 2. **FFT per (channel, segment)** via ``applyInPandas`` — this
    parallelizes *within* a channel, which the reference's whole-array
    kernel cannot do.
@@ -31,6 +34,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pandas_sigproc_spark.planner import (
     _infer_sr,
     channel_arrays,
+    chunk_apply,
     group_apply,
     join_channel,
 )
@@ -51,7 +55,6 @@ def get_psd(
     detrend="constant",
     samplerate: float | None = None,
     segmented: bool | str = "auto",
-    tiebreak_col: str | None = None,
     n_buckets: int | None | str = "auto",
 ) -> DataFrame:
     """Per-channel PSD -> spectra(channel_id, freq, power).
@@ -62,8 +65,9 @@ def get_psd(
     density scale.
     Execution modes by channel size (SURVEY.md §7.3.1): ``n_buckets=K``
     batches many small channels per task with one stacked FFT;
-    ``segmented=True`` splits one huge channel across tasks (relational
-    segment ids + per-segment FFT); per-channel otherwise, which runs the
+    ``segmented=True`` splits one huge channel across tasks (one
+    planner chunk per Welch segment + per-segment FFT; the grid must be
+    uniform at ``samplerate``); per-channel otherwise, which runs the
     bucketed body with one channel per group, so the two give the same
     bits.  Both default to ``"auto"``: the mode is picked from
     per-channel row statistics (planner.py) so the 100 TB plan needs no
@@ -108,7 +112,6 @@ def get_psd(
         fatigue_exponent,
         detrend,
         samplerate,
-        tiebreak_col,
     )
 
 
@@ -213,94 +216,46 @@ def _segmented_psd(
     fatigue_exponent,
     detrend,
     sr,
-    tiebreak_col,
 ):
-    """Scale path: explode samples into their overlapping segments, FFT per
-    (channel, segment) group, reduce natively."""
+    """Scale path: the planner cuts each channel into chunks of one Welch
+    step with the segment's overlap as forward halo, so chunk ``s`` is
+    segment ``s``; FFT per chunk, reduce natively."""
     if sr is None:
         raise ValueError("segmented PSD requires an explicit samplerate")
     n_window = int(sr * window_length)
-    n_overlap = int(round(n_window * overlap))
-    n_step = n_window - n_overlap
+    n_step = n_window - int(round(n_window * overlap))
     if n_step <= 0:
         raise ValueError("overlap must leave a positive step")
-    max_copies = -(-n_window // n_step)  # ceil
 
-    order = [F.col("t")] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    w = Window.partitionBy("channel_id").orderBy(*order)
-    # Sample rn belongs to segment s iff s*step <= rn < s*step + n_window.
-    s_hi = F.floor(F.col("_rn") / n_step)  # last candidate segment
-    copies = F.sequence(
-        F.greatest(s_hi - (max_copies - 1), F.lit(0).cast("long")), s_hi
-    )
-    seg_df = (
-        df.select("channel_id", "t", "value")
-        .withColumn("_rn", F.row_number().over(w) - 1)
-        .withColumn("_seg", F.explode(copies))
-        .filter(
-            (F.col("_rn") >= F.col("_seg") * n_step)
-            & (F.col("_rn") < F.col("_seg") * n_step + n_window)
-        )
-        .withColumn("_pos", F.col("_rn") - F.col("_seg") * n_step)
-    )
-    # Loud short-channel guard BEFORE the complete-segment filter: a
-    # channel with fewer than n_window rows has NO complete segment and
-    # previously just vanished from the output (a review finding —
-    # every other PSD path raises 'window_length longer than the
-    # signal').  The condition is arithmetic (complete segment exists
-    # iff rows >= n_window), so the guard needs only the tiny
-    # per-channel count table — broadcast, the segmented path exists
-    # for FEW huge channels.
-    geo = df.groupBy("channel_id").agg(F.count("*").alias("_cn"))
-    seg_df = (
-        join_channel(seg_df, geo)
-        .withColumn(
-            "_pos",
-            F.when(
-                F.col("_cn") < n_window,
-                F.raise_error(
-                    F.concat(
-                        F.lit("get_psd segmented: channel "),
-                        F.col("channel_id"),
-                        F.lit(
-                            " is shorter than one window_length — no"
-                            " complete segment exists (the whole-channel"
-                            " path raises for the same input)"
-                        ),
-                    )
-                ).cast("long"),
-            ).otherwise(F.col("_pos")),
-        )
-        .drop("_cn")
-    )
-    # Keep only complete segments (strided-view truncation, tools.py:67)
-    # via a count window over the SAME (channel, segment) partitioning
-    # the FFT groupBy needs — one pass, reusable exchange (a review
-    # finding: the old self-join against a separate aggregation of
-    # seg_df re-executed the row_number + explode lineage twice).
-    wseg = Window.partitionBy("channel_id", "_seg")
-    seg_df = seg_df.withColumn("_n", F.count("*").over(wseg)).filter(
-        F.col("_n") == n_window
-    )
-
-    def fft_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_pos")
+    def fft_kernel(pdf: pd.DataFrame, core: np.ndarray) -> pd.DataFrame:
+        cid = pdf["channel_id"].iloc[0]
+        if pdf["_n"].iloc[0] < n_window:
+            raise ValueError(
+                f"get_psd segmented: channel {cid} is shorter than one"
+                " window_length — no complete segment exists (the"
+                " whole-channel path raises for the same input)"
+            )
+        if len(pdf) < n_window:
+            # a tail segment (strided-view truncation, tools.py:67)
+            return pd.DataFrame(columns=["channel_id", "seg", "freq", "power"])
         y = pdf["value"].to_numpy(dtype=np.float64)
         freq, pxx = _spectral.periodogram(y, sr, window_type, detrend)
-        return pd.DataFrame(
-            {
-                "channel_id": pdf["channel_id"].iloc[0],
-                "seg": int(pdf["_seg"].iloc[0]),
-                "freq": freq,
-                "power": pxx,
-            }
-        )
+        seg = int(pdf["_seg"].iloc[0])
+        return pd.DataFrame({"channel_id": cid, "seg": seg, "freq": freq, "power": pxx})
 
     # NOTE: the positive-frequency mask is applied at the END — the
     # reference's 'max rms'/'damage' factors integrate the full spectrum
     # including the DC bin (tools.py:87-95 run before the f>0 mask at
     # extension.py:619-620).
-    sub = seg_df.groupBy("channel_id", "_seg").applyInPandas(fft_kernel, _SEG_SCHEMA)
+    sub = chunk_apply(
+        df.select("channel_id", "t", "value"),
+        fft_kernel,
+        _SEG_SCHEMA,
+        n_step,
+        0,
+        n_window - n_step,
+        sr,
+    )
 
     if summarize == "all":
         return sub.filter(F.col("freq") > 0)

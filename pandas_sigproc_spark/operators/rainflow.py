@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from pandas_sigproc_spark.planner import channel_codes, group_apply
+from pandas_sigproc_spark.planner import channel_codes, group_apply, range_chunks
 
 from pandas_sigproc_spark.kernels import rainflow as _rf
 
@@ -109,15 +109,22 @@ def rainflow_chunked(
 ) -> DataFrame:
     """Segmented rainflow for channels exceeding one task (SURVEY.md §7.3.1).
 
+    Chunks are :func:`planner.range_chunks` spans of ``order_cols[0]``
+    (``ceil(n / chunk_rows)`` equal spans per channel, so no stage sorts
+    a whole channel; they balance rows where the sample density is
+    even).  Rows that tie on it share a chunk, so the further
+    ``order_cols`` order them inside it.
+
     Stage 1 (parallel over (channel, chunk)): the 4-point rule extracts
     every *full* cycle whose reversals live inside the chunk and emits the
     chunk's residue — the divergent reversal envelope, typically a few
     dozen points regardless of chunk length.  Stage 2 (per channel, tiny):
     residues concatenate in chunk order and the standard 3-point E1049
     pass counts the rest (cross-chunk fulls + half cycles).  The merge is
-    exact — rainflow's residue decomposition theorem, pinned against the
-    whole-channel kernel in tests/test_rainflow_chunked.py over random
-    signals, chunk sizes, and every binning mode.
+    exact for any contiguous cut in sample order — rainflow's residue
+    decomposition theorem, pinned against the whole-channel kernel in
+    tests/test_rainflow_chunked.py over random signals, chunk sizes, and
+    every binning mode.
 
     Binning runs relationally on the unioned cycle stream (groupBy after a
     per-channel max-range window for nbins/binsize), so no stage ever
@@ -129,12 +136,8 @@ def rainflow_chunked(
     if given > 1:
         raise ValueError("specify at most one of ndigits, nbins, binsize")
 
-    L = int(chunk_rows)
-    w = Window.partitionBy("channel_id").orderBy(*order_cols)
-    src = df.select(
-        "channel_id", *order_cols, "value",
-        ((F.row_number().over(w) - 1) / L).cast("long").alias("_seg"),
-    )
+    cols = ["channel_id", *order_cols, "value"]
+    src = range_chunks(df.select(*cols), chunk_rows, x=order_cols[0])
 
     stage1_schema = (
         "channel_id string, seg long, pos long, rng double, cnt double, val double"
@@ -153,7 +156,11 @@ def rainflow_chunked(
             rows, columns=["channel_id", "seg", "pos", "rng", "cnt", "val"]
         )
 
-    mixed = src.groupBy("channel_id", "_seg").applyInPandas(stage1, stage1_schema)
+    mixed = (
+        src.select(*cols, "_seg")
+        .groupBy("channel_id", "_seg")
+        .applyInPandas(stage1, stage1_schema)
+    )
     mixed = mixed.persist()
     cycle_rows = mixed.filter(F.col("pos") == -1).select("channel_id", "rng", "cnt")
 

@@ -15,10 +15,14 @@ SURVEY.md §7.3.1 gives every whole-channel kernel three execution modes:
                  IIR and SRS recursions cost per sample per group,
                  nearly independent of the group's row count;
 - segmented / chunked — split ONE channel across tasks (channels too big
-                 for any single task: overlap-save filtering, relational
-                 Welch segmentation).  :func:`chunked_src` is the one
-                 place that cuts a channel into halo'd chunks, and
-                 :func:`chunk_apply` runs one body over them.
+                 for any single task: overlap-save filtering, Welch
+                 segments, rainflow residues, as-of brackets).  Two
+                 primitives cut a channel, neither sorting it whole:
+                 :func:`chunked_src` by arithmetic sample index on a
+                 uniform grid, with halos of any length
+                 (:func:`chunk_apply` runs one body over its chunks),
+                 and :func:`range_chunks` by equal time spans on any
+                 grid, with the neighbouring sources injected.
 
 Per-channel and bucketed are one body with two group keys
 (:func:`group_apply`): each operator writes only the bucket body, and
@@ -44,7 +48,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 #: Above this many rows, one channel is too big to give a single task
 #: (4M float64 samples = 32 MB of values plus kernel workspace): split it.
@@ -212,7 +216,9 @@ def resolve_chunk_rows(
 ):
     """Resolve a chunked operator's ``"auto"`` scale mode from channel
     statistics: huge channels chunk, everything else keeps the
-    whole-channel plan.  Explicit ints/None always win.
+    whole-channel plan.  Explicit ints/None always win; an int must
+    exceed the operator's halo ``overlap``, the rows each chunk borrows
+    from its neighbours.
 
     Two auto-mode adjustments keep ``"auto"`` from ever failing a call
     that the whole-channel plan accepts:
@@ -256,6 +262,11 @@ def resolve_chunk_rows(
             "sample index requires unique uniform timestamps — pass "
             "chunk_rows=None for the whole-channel plan"
         )
+    if chunk_rows is not None and overlap >= int(chunk_rows):
+        raise ValueError(
+            f"chunk_rows={chunk_rows} must exceed the overlap ({overlap}); "
+            "pick a larger chunk or a smaller overlap"
+        )
     return chunk_rows
 
 
@@ -267,46 +278,40 @@ def chunked_src(
     samplerate: float | None = None,
     geo: DataFrame | None = None,
 ) -> DataFrame:
-    """Explode ``df`` into halo'd ``(channel_id, _seg)`` chunks — the one
-    place that decides how a channel is cut (SURVEY.md §7.3.1).
+    """Explode ``df`` into halo'd ``(channel_id, _seg)`` chunks of a
+    uniform grid — the planner's cut by sample index (SURVEY.md §7.3.1;
+    :func:`range_chunks` is its cut by time span).
 
     Adds ``_i`` (the arithmetic sample index ``round(grid_position)``,
     off one broadcast :func:`channel_geometry` aggregate: sort-free, so
     no stage ever holds a whole channel), ``_n`` (the channel's row
     count), ``_seg`` (chunk ``_i // chunk_rows`` plus the halo
     memberships) and ``_core`` (the row is the chunk's own, not a halo
-    copy).  ``back`` rows from the tail of each chunk join the next
-    chunk (trailing windows, lag, causal warm-up) and ``fwd`` rows from
-    its head join the previous one (lead, a backward pass) — each only
-    where that chunk has core rows, so no chunk is all halo.  ``geo``
+    copy).  With ``L = chunk_rows``, chunk ``s`` holds the rows ``_i``
+    in ``[s * L - back, (s + 1) * L + fwd)``: its core, the ``back`` rows
+    before it (trailing windows, lag, causal warm-up) and the ``fwd``
+    rows after it (lead, a backward pass, a Welch segment's overlap).
+    A halo may outrun a chunk, so a row can join several; only chunks
+    with core rows exist, so no chunk is all halo.  ``geo``
     lets a caller that routes other rows by the same aggregate pass it
     in (exchange reuse across differently-shaped parents is not
     guaranteed).
     """
     L = int(chunk_rows)
-    if max(back, fwd) >= L:
-        raise ValueError(
-            f"chunk_rows={L} must exceed the overlap ({max(back, fwd)}); "
-            "pick a larger chunk or a smaller overlap"
-        )
     if geo is None:
         geo = channel_geometry(df)
     src = join_channel(df, geo).withColumn(
         "_i", F.floor(grid_position(F.col("t"), samplerate) + 0.5).cast("long")
     )
     i, seg = F.col("_i"), (F.col("_i") / L).cast("long")
-    members = F.array(seg)
-    if back:
-        members = F.when(
-            (i % L >= L - back) & ((seg + 1) * L < F.col("_n")),
-            F.array(seg, seg + 1),
-        ).otherwise(members)
-    if fwd:
-        members = F.when(
-            (i % L < fwd) & (seg > 0), F.array_union(members, F.array(seg - 1))
-        ).otherwise(members)
+    last = ((F.col("_n") - 1) / L).cast("long")
+    lo = F.greatest(F.floor((i - fwd) / L), F.lit(0))
+    # its own chunk always, even past the last one on a grid the declared
+    # rate mis-states: the grid check then names the channel
+    hi = F.greatest(F.least(F.floor((i + back) / L), last), seg)
+    # explode_outer: a row with a NULL t keeps one row, in the NULL chunk
     return (
-        src.withColumn("_seg", F.explode(members))
+        src.withColumn("_seg", F.explode_outer(F.sequence(lo, hi)))
         .withColumn("_core", seg == F.col("_seg"))
         .drop("_t0", "_t1")
     )
@@ -355,6 +360,79 @@ def chunk_apply(
 
     src = chunked_src(df, chunk_rows, back, fwd, samplerate)
     return src.groupBy("channel_id", "_seg").applyInPandas(run, schema)
+
+
+def range_chunks(
+    df: DataFrame,
+    chunk_rows: int,
+    x: str = "t",
+    back: bool = False,
+    fwd: bool = False,
+    carry: tuple = ("value",),
+    src: str | None = None,
+) -> DataFrame:
+    """Cut each channel of ``df`` into ``ceil(_n / chunk_rows)`` equal
+    spans of ``x`` — the planner's cut by time span, for grids of any
+    spacing (:func:`chunked_src` is its cut by sample index).
+
+    Adds ``_t0``/``_t1`` (the span of the channel's source rows), ``_n``
+    (its row count) and ``_seg`` (the row's span, clamped into the
+    channel's ``nseg`` spans; rows that tie on ``x`` share one, and a
+    channel without a span puts every row in span 0), off one per-channel
+    aggregate joined back through :func:`join_channel`.  ``src`` names a
+    0/1 column marking source rows; rows marked 0 (interpolation targets)
+    count toward ``_n`` but not toward the span.  ``None`` makes every
+    row a source.  Chunks balance rows where the density is even.
+
+    ``back`` adds to every chunk a copy of the latest source row before
+    it and ``fwd`` one of the earliest source row after it, carried
+    across chunks with no sources, so a chunk's as-of brackets and
+    ``lead``/``lag`` pairs equal the whole channel's.  A copy holds
+    ``channel_id``, ``x``, ``carry``, ``src`` (1) and ``_seg``, its other
+    columns NULL; sources that tie on ``x`` give the max/min of
+    ``(x, *carry)``.
+    """
+    L = int(chunk_rows)
+    is_src = F.lit(True) if src is None else F.col(src) == 1
+    geo = df.groupBy("channel_id").agg(
+        F.min(F.when(is_src, F.col(x))).alias("_t0"),
+        F.max(F.when(is_src, F.col(x))).alias("_t1"),
+        F.count("*").alias("_n"),
+    )
+    nseg = F.greatest(F.ceil(F.col("_n") / L), F.lit(1)).cast("long")
+    span = F.when(
+        F.col("_t1") > F.col("_t0"), (F.col("_t1") - F.col("_t0")) / nseg
+    ).otherwise(F.lit(1.0))
+    raw_seg = F.floor((F.col(x) - F.col("_t0")) / span).cast("long")
+    seg = F.coalesce(F.least(F.greatest(raw_seg, F.lit(0)), nseg - 1), F.lit(0))
+    out = join_channel(df, geo).withColumn("_seg", seg)
+    row = F.struct(x, *carry)
+    ends = out.groupBy("channel_id", "_seg").agg(
+        F.max(F.when(is_src, row)).alias("_last"),
+        F.min(F.when(is_src, row)).alias("_first"),
+    )
+    marker = [F.lit(1).alias(src)] if src else []
+    # both sides as running frames (one ascending, one descending): an
+    # unbounded-following frame re-aggregates to the partition end per row
+    for on, end, order in ((back, "_last", "_seg"), (fwd, "_first", F.desc("_seg"))):
+        if not on:
+            continue
+        w = (
+            Window.partitionBy("channel_id")
+            .orderBy(order)
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        near = ends.select(
+            "channel_id", "_seg", F.last(end, ignorenulls=True).over(w).alias("_m")
+        ).filter(F.col("_m").isNotNull())
+        copies = near.select(
+            "channel_id",
+            *(F.col(f"_m.{c}").alias(c) for c in (x, *carry)),
+            *marker,
+            "_seg",
+        )
+        out = out.unionByName(copies, allowMissingColumns=True)
+    return out
 
 
 def channel_codes(ids: np.ndarray) -> tuple[np.ndarray, list]:

@@ -21,7 +21,10 @@ from pandas_sigproc_spark.operators import (
     filt_butter,
     get_psd,
     integral,
+    interp1d_native,
     mov_rms,
+    rainflow,
+    rainflow_chunked,
     resample,
 )
 from tests.conftest import make_signals
@@ -386,6 +389,8 @@ def test_null_channel_id_survives_chunked_and_agg_plans(spark):
             for cid, g in pdf.groupby("channel_id")
         }
 
+    grid = df.select("channel_id", (F.col("t") + 0.005).alias("t"))
+
     def psd(segmented):
         return get_psd(
             df, window_length=2.56, summarize="max rms", segmented=segmented,
@@ -415,6 +420,14 @@ def test_null_channel_id_survives_chunked_and_agg_plans(spark):
         "resample": (
             resample(df, sample_rate=30.0, chunk_rows=None),
             resample(df, sample_rate=30.0, chunk_rows=128),
+        ),
+        "rainflow": (
+            rainflow(df, n_buckets=None),
+            rainflow_chunked(df, chunk_rows=128),
+        ),
+        "interp1d_native": (
+            interp1d_native(df, grid, chunk_rows=None),
+            interp1d_native(df, grid, chunk_rows=128),
         ),
     }
     for op, (whole, split) in pairs.items():

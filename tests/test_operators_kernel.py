@@ -111,6 +111,37 @@ class TestPsd:
         np.testing.assert_allclose(s["freq"], w["freq"])
         np.testing.assert_allclose(s["power"], w["power"], rtol=1e-9)
 
+    @pytest.mark.parametrize("summarize", ["mean", "all"])
+    def test_segmented_halo_over_several_steps_matches_whole(
+        self, spark, two_tone, summarize
+    ):
+        # overlap 0.75: every sample sits in 4 segments, so a segment's
+        # halo reaches 3 chunks past its own
+        df, t, v, fs = two_tone
+        kw = dict(window_length=0.25, overlap=0.75, samplerate=fs, summarize=summarize)
+        keys = ["channel_id", "freq"] + (["seg"] if summarize == "all" else [])
+        w = get_psd(df, **kw).orderBy(*keys).toPandas()
+        s = get_psd(df, segmented=True, **kw).orderBy(*keys).toPandas()
+        assert len(s) == len(w)
+        np.testing.assert_allclose(s["freq"], w["freq"])
+        np.testing.assert_allclose(s["power"], w["power"], rtol=1e-9)
+        if summarize == "all":
+            assert (s["seg"].to_numpy() == w["seg"].to_numpy()).all()
+
+    @pytest.mark.parametrize("grid", ["jitter", "gap"])
+    def test_segmented_refuses_a_non_uniform_grid(self, spark, grid):
+        fs = 1000.0
+        t = np.arange(4000) / fs
+        if grid == "jitter":
+            t = t + np.random.default_rng(5).uniform(-0.6, 0.6, t.size) / fs
+        else:
+            t = np.delete(t, np.arange(1500, 1510))
+        df = make_signals(spark, {"c": (t, np.sin(2 * np.pi * 40 * t))})
+        with pytest.raises(Exception, match="non-consecutive sample index"):
+            get_psd(
+                df, window_length=0.5, samplerate=fs, segmented=True
+            ).collect()
+
     @pytest.mark.parametrize("mode", ["median", "max", "min", "max rms", "damage"])
     def test_segmented_summarize_modes_match_kernel(self, spark, mode):
         fs = 2000.0

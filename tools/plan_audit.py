@@ -22,11 +22,17 @@ from bench import HEADLINE
 from pandas_sigproc_spark.session import get_spark, host_cpus
 
 
+#: Every shuffle exchange; shufflepartitionidpassthrough is the bucketed
+#: kernels' id-placed one (planner.group_apply).
+SHUFFLE = re.compile(
+    r"Exchange (hashpartitioning|rangepartitioning|shufflepartitionidpassthrough)"
+)
+
+
 def audit(df) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     return {
-        "shuffle_exchanges": len(re.findall(r"Exchange hashpartitioning", plan))
-        + len(re.findall(r"Exchange rangepartitioning", plan)),
+        "shuffle_exchanges": len(SHUFFLE.findall(plan)),
         "broadcasts": plan.count("BroadcastExchange"),
         "py_udf_nodes": plan.count("FlatMapGroupsInPandas")
         + plan.count("FlatMapCoGroupsInPandas")
