@@ -505,6 +505,13 @@ def _slot(*branches, exact=()):
     return q
 
 
+def _single(q, oracle: str):
+    """A registry entry of one query, carrying its oracle SQL as
+    ``.oracle`` like a :func:`_slot` does."""
+    q.oracle = oracle
+    return q
+
+
 def q_mov_rms(spark, sf_dir):
     # Row-based trailing window of 10 samples on the (non-uniform) event
     # channels — the row-window flavor of mov_rms (extension.py:690-691's
@@ -10390,16 +10397,42 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             (q_srs, _oracle_prod.sql_srs()),
             (q_srs_exact, _sql_srs_exact()),
         ),
-        "filt_butter": q_filt_butter,
-        "resample": q_resample,
-        "segment_stats": q_segment_stats,
-        "rss_daily": q_rss_daily,
-        "rainflow": q_rainflow,
-        "streaming_lfilter": q_streaming_lfilter,
-        "streaming_rainflow": q_streaming_rainflow,
-        "accessor_chain": q_accessor_chain,
-        "ide_scan": q_ide_scan,
-        "textio_roundtrip": q_textio_roundtrip,
+        # production kernel-tier legs: full recursive-CTE replays
+        # (oracle_prod.py) — bit-exact at the gate's sf0.01 scale where
+        # every channel runs the kernels' exact loop/banded paths.
+        # r15 consolidated: the chunked arm keeps its own order-2
+        # production oracle (different filter than the global arm)
+        "filt_butter": _single(
+            q_filt_butter,
+            _compose_oracle(
+                ("global", _oracle_prod.sql_filt_butter()),
+                ("chunked", _oracle_prod.sql_filt_chunked()),
+            ),
+        ),
+        # chunked arm bit-identical to the global pair plan
+        # (tests/test_interp_chunked), so both arms share SQL_RESAMPLE
+        "resample": _single(
+            q_resample,
+            _compose_oracle(("global", SQL_RESAMPLE), ("chunked", SQL_RESAMPLE)),
+        ),
+        "segment_stats": _single(q_segment_stats, SQL_SEGMENT_STATS),
+        "rss_daily": _single(q_rss_daily, SQL_RSS_DAILY),
+        # r15 consolidated: identical counts by the residue-merge
+        # theorem (tests pin the chunked==whole equality; the oracle
+        # pins both arms to the standard)
+        "rainflow": _single(
+            q_rainflow,
+            _compose_oracle(("global", SQL_RAINFLOW), ("chunked", SQL_RAINFLOW)),
+        ),
+        # the filt_iir_exact DF2T recursion re-shaped to the streaming
+        # operator's output
+        "streaming_lfilter": _single(q_streaming_lfilter, _sql_streaming_lfilter()),
+        "streaming_rainflow": _single(q_streaming_rainflow, SQL_STREAMING_RAINFLOW),
+        "accessor_chain": _single(q_accessor_chain, _oracle_prod.sql_accessor_chain()),
+        "ide_scan": _single(q_ide_scan, SQL_IDE_SCAN),
+        # documents-derived roundtrip + measured PERMISSIVE quarantine
+        # literals
+        "textio_roundtrip": _single(q_textio_roundtrip, SQL_TEXTIO_ROUNDTRIP),
         "tpch": _slot(
             (q_tpch_pricing, SQL_TPCH_PRICING),
             (q_tpch_order_priority, SQL_TPCH_ORDER_PRIORITY),
@@ -10495,9 +10528,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "n_lines",
             ),
         ),
-        "tfidf_topk": q_tfidf_topk,
-        "ngram_counts": q_ngram_counts,
-        "doc_chunks": q_doc_chunks,
+        "tfidf_topk": _single(q_tfidf_topk, SQL_TFIDF_TOPK),
+        "ngram_counts": _single(q_ngram_counts, SQL_NGRAM_COUNTS),
+        "doc_chunks": _single(q_doc_chunks, SQL_DOC_CHUNKS),
         "curation": _slot(
             (q_corpus_curate, _sql_corpus_curate(exact=False)),
             (q_corpus_curate_exact, _sql_corpus_curate(exact=True)),
@@ -10521,7 +10554,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "n_same", "n_url_dups", "robots_allowed",
             ),
         ),
-        "crawl_frontier": q_crawl_frontier,
+        "crawl_frontier": _single(q_crawl_frontier, _sql_crawl_frontier()),
         "container_extract": _slot(
             (q_warc_extract, SQL_WARC_EXTRACT),
             (q_zip_extract, SQL_ZIP_EXTRACT),
@@ -10622,42 +10655,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    slots = {n: q.oracle for n, q in queries().items() if hasattr(q, "oracle")}
-    return {
-        **slots,
-        # production kernel-tier legs: full recursive-CTE replays
-        # (oracle_prod.py) — bit-exact at the gate's sf0.01 scale where
-        # every channel runs the kernels' exact loop/banded paths.
-        # r15 consolidated: the chunked arm keeps its own order-2
-        # production oracle (different filter than the global arm)
-        "filt_butter": _compose_oracle(
-            ("global", _oracle_prod.sql_filt_butter()),
-            ("chunked", _oracle_prod.sql_filt_chunked()),
-        ),
-        # chunked arm bit-identical to the global pair plan
-        # (tests/test_interp_chunked), so both arms share SQL_RESAMPLE
-        "resample": _compose_oracle(
-            ("global", SQL_RESAMPLE), ("chunked", SQL_RESAMPLE)
-        ),
-        "segment_stats": SQL_SEGMENT_STATS,
-        "rss_daily": SQL_RSS_DAILY,
-        # r15 consolidated: identical counts by the residue-merge
-        # theorem (tests pin the chunked==whole equality; the oracle
-        # pins both arms to the standard)
-        "rainflow": _compose_oracle(
-            ("global", SQL_RAINFLOW), ("chunked", SQL_RAINFLOW)
-        ),
-        # the filt_iir_exact DF2T recursion re-shaped to the streaming
-        # operator's output
-        "streaming_lfilter": _sql_streaming_lfilter(),
-        "streaming_rainflow": SQL_STREAMING_RAINFLOW,
-        "accessor_chain": _oracle_prod.sql_accessor_chain(),
-        "ide_scan": SQL_IDE_SCAN,
-        # documents-derived roundtrip + measured PERMISSIVE quarantine
-        # literals
-        "textio_roundtrip": SQL_TEXTIO_ROUNDTRIP,
-        "tfidf_topk": SQL_TFIDF_TOPK,
-        "ngram_counts": SQL_NGRAM_COUNTS,
-        "doc_chunks": SQL_DOC_CHUNKS,
-        "crawl_frontier": _sql_crawl_frontier(),
-    }
+    return {n: q.oracle for n, q in queries().items()}

@@ -180,10 +180,14 @@ def _bucketed_psd(
             n_overlap = int(round(n_window * overlap))
             seg_rows = []
             seg_counts = []
-            for _cid, y in members:
+            for cid, y in members:
                 starts = _spectral.welch_segment_bounds(len(y), n_window, n_overlap)
                 if not starts:
-                    raise ValueError("window_length longer than the signal")
+                    raise ValueError(
+                        f"get_psd: channel {cid!r} has {len(y)} sample(s),"
+                        f" fewer than one window_length of {window_length} s"
+                        f" ({n_window} samples at {rate} Hz)"
+                    )
                 seg_rows.extend(y[s: s + n_window] for s in starts)
                 seg_counts.append(len(starts))
             segs = np.stack(seg_rows)

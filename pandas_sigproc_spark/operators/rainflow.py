@@ -126,9 +126,12 @@ def rainflow_chunked(
     tests/test_rainflow_chunked.py over random signals, chunk sizes, and
     every binning mode.
 
-    Binning runs relationally on the unioned cycle stream (groupBy after a
-    per-channel max-range window for nbins/binsize), so no stage ever
-    needs the whole channel.
+    Both stages' cycles leave one ``applyInPandas`` keyed by (channel,
+    ``_k``): ``_k`` is the chunk for a chunk's full cycles, which pass
+    through, and -1 for the residues, which merge.  Binning runs
+    relationally on that cycle stream (groupBy after a per-channel
+    max-range window for nbins/binsize), so no stage ever needs the
+    whole channel.
     """
     from pyspark.sql import Window, functions as F
 
@@ -156,17 +159,13 @@ def rainflow_chunked(
             rows, columns=["channel_id", "seg", "pos", "rng", "cnt", "val"]
         )
 
-    mixed = (
-        src.select(*cols, "_seg")
-        .groupBy("channel_id", "_seg")
-        .applyInPandas(stage1, stage1_schema)
-    )
-    mixed = mixed.persist()
-    cycle_rows = mixed.filter(F.col("pos") == -1).select("channel_id", "rng", "cnt")
-
-    residue_schema = "channel_id string, rng double, cnt double"
+    # Stage 1 feeds only the (channel, _k) pass, so it runs once per
+    # chunk with nothing cached.
+    cycles_schema = "channel_id string, rng double, cnt double"
 
     def stage2(pdf: pd.DataFrame) -> pd.DataFrame:
+        if pdf["_k"].iloc[0] != -1:
+            return pdf[["channel_id", "rng", "cnt"]]
         pdf = pdf.sort_values(["seg", "pos"])
         pairs = _rf.extract_cycles(pdf["val"].to_numpy(dtype=np.float64))
         cid = pdf["channel_id"].iloc[0]
@@ -175,13 +174,14 @@ def rainflow_chunked(
             columns=["channel_id", "rng", "cnt"],
         )
 
-    residue_rows = (
-        mixed.filter(F.col("pos") >= 0)
-        .select("channel_id", "seg", "pos", "val")
-        .groupBy("channel_id")
-        .applyInPandas(stage2, residue_schema)
+    cycles = (
+        src.select(*cols, "_seg")
+        .groupBy("channel_id", "_seg")
+        .applyInPandas(stage1, stage1_schema)
+        .withColumn("_k", F.when(F.col("pos") == -1, F.col("seg")).otherwise(-1))
+        .groupBy("channel_id", "_k")
+        .applyInPandas(stage2, cycles_schema)
     )
-    cycles = cycle_rows.unionByName(residue_rows)
 
     if ndigits is not None:
         key = F.round(F.col("rng"), ndigits)

@@ -95,10 +95,7 @@ def get_spark(app_name: str = "pandas_sigproc_spark", cpus: int | None = None) -
         # the width at the cluster's parallelism.  It governs per-channel
         # kernels and the other hash exchanges; AQE never coalesces the
         # bucketed kernels' id-placed exchange (planner.group_apply).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "4k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "4k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -1,18 +1,22 @@
 """enDAQ/SlamStick ``.ide`` ingest (reference ``Endaq``/``EndaqChannel``,
 ``io.py:161-301``).
 
-The ``endaq`` package is not installed in this environment, so the driver
-is import-gated: construction raises a clear ImportError until the
-dependency is present; everything downstream of the raw read reuses the
-generic :class:`~pandas_sigproc_spark.sources.channel.Channel` ingest.
+A file whose EBML DocType is ``mide`` (the recorder profile) is read by
+the built-in parser (``sources/mide.py``); any other file needs the
+optional ``endaq`` package, so that path is import-gated: without the
+package it raises an ImportError naming the DocType it found.
+Everything downstream of the raw read reuses the generic
+:class:`~pandas_sigproc_spark.sources.channel.Channel` ingest.
 
 Design (SURVEY.md §2.1 Endaq row): ``.ide`` is a single-file EBML log —
-not splittable — so ingest parallelism is per *file* (one task opens one
-file, emits its channels) rather than per byte range.  ``ingest_ide_dir``
-fans a directory of logs across the cluster with one task per file via
-``spark.sparkContext.parallelize``, which is the right shape for the
-"thousands of logger files" case; analytics then run on the canonical
-parquet, never re-touching the raw format.
+not splittable — so ingest parallelism is per *file*.  A directory of
+logs goes through the ``spark.read.format("ide")`` data source
+(``sources/ide_datasource.py``, one input partition per file), and is
+written once to canonical parquet::
+
+    spark.read.format("ide").load(d).write.partitionBy("channel_id").parquet(out)
+
+Analytics then run on that parquet, never re-touching the raw format.
 """
 
 from __future__ import annotations
@@ -26,13 +30,11 @@ except Exception:  # ImportError or transitive dep failures
 
 
 def _builtin_channels(filename: str):
-    """Built-in EBML fallback (sources/mide.py): parses real EBML bytes
-    for recordings in either built-in profile — the MIDE DocType (the
-    genuine recorder layout: struct-format payloads, start/end
-    time-code interpolation, modulo-2**24 unwrap, polynomial
-    calibration) or the engine's own documented profile.  Returns None
-    when the file is neither (then only the endaq package can read
-    it)."""
+    """Channels of a MIDE-profile file, read by ``sources/mide.py``.
+
+    Returns None for any other file when the ``endaq`` package is
+    installed (then it reads the file); without the package, raises an
+    ImportError that names the DocType found."""
     from pandas_sigproc_spark.sources import mide
 
     try:
@@ -50,19 +52,18 @@ def _builtin_channels(filename: str):
         raise
     if mide.is_mide(buf):
         return mide.read_mide_channels(buf, source=filename)
-    if not mide.is_recording(buf):
+    if _endaq_ide is not None:
         return None
-    return mide.read_recording_channels(buf, source=filename)
-
-
-def _require_endaq():
-    if _endaq_ide is None:
-        raise ImportError(
-            "the 'endaq' package is required for full-fidelity .ide "
-            "ingest (pip install endaq); recordings in the engine's own "
-            "EBML profile (sources/mide.py) are read by the built-in "
-            "parser without it"
-        )
+    doctype = mide.doctype(buf)
+    found = (
+        "no EBML header" if doctype is None
+        else f"EBML DocType {doctype.decode(errors='replace')!r}"
+    )
+    raise ImportError(
+        f"{filename}: {found}; the built-in parser reads DocType 'mide'"
+        " only, any other .ide needs the 'endaq' package (pip install"
+        " endaq)"
+    )
 
 
 def _subchannels(doc):
@@ -76,15 +77,11 @@ def _subchannels(doc):
 def ide_channel_list(filename: str) -> list[str]:
     """Display names in one ``.ide`` file (reference ``Endaq.channel_list``,
     ``daq/io.py:175-184``)."""
-    # profile-first dispatch: a file in one of the BUILT-IN profiles is
-    # read by the built-in parser even when the endaq package is
-    # installed — endaq cannot parse the engine profile, so the old
-    # package-absence gate broke those files the moment endaq appeared
-    # on the executors (a review finding)
+    # profile-first dispatch: a MIDE file is read by the built-in
+    # parser even when the endaq package is installed
     chans = _builtin_channels(filename)
     if chans is not None:
         return [c.name for c in chans]
-    _require_endaq()
     doc = _endaq_ide.get_doc(filename=filename)
     try:
         return [name for name, _ in _subchannels(doc)]
@@ -125,7 +122,6 @@ def read_ide_channel(filename: str, ch_name: str) -> Channel:
             if c.name == ch_name:
                 return c
         raise KeyError(f"channel {ch_name!r} not in {filename}")
-    _require_endaq()
     doc = _endaq_ide.get_doc(filename=filename)
     try:
         for name, sub in _subchannels(doc):
@@ -141,7 +137,6 @@ def read_ide_channels(filename: str) -> list[Channel]:
     chans = _builtin_channels(filename)  # profile-first (see above)
     if chans is not None:
         return chans
-    _require_endaq()
     doc = _endaq_ide.get_doc(filename=filename)
     try:
         return [_sub_to_channel(filename, sub) for _, sub in _subchannels(doc)]
@@ -152,34 +147,3 @@ def read_ide_channels(filename: str) -> list[Channel]:
 def ingest_ide(spark, filename: str):
     """One ``.ide`` file -> (signals_df, channels_df)."""
     return channels_to_signals(spark, read_ide_channels(filename))
-
-
-def ingest_ide_dir(spark, filenames: list[str], output_path: str) -> None:
-    """Distributed ingest: one task per file, appending canonical parquet.
-
-    Each executor task opens its own file (both readers are pure Python,
-    so they run fine in executors) and writes that file's channels
-    partitioned by ``channel_id``.  Files in the engine's own EBML
-    profile are parsed by the built-in reader; anything else needs the
-    ``endaq`` package on the executors (the per-task reader raises a
-    clear ImportError otherwise).
-    """
-    if not filenames:
-        # parallelize([], 0) dies in pyspark with an opaque
-        # ZeroDivisionError (a review finding) — refuse by name
-        raise ValueError("ingest_ide_dir: no input files")
-
-    def one_file(fn: str):
-        # plain tuples, one per sample — the old path built a pandas
-        # frame only to explode it back into per-row DICTS, which
-        # pickle and re-verify per row (a review finding); a
-        # zero-channel file yields no rows instead of crashing
-        # pd.concat([]) (same class channel.py:40-44 records as fixed)
-        for ch in read_ide_channels(fn):
-            cid = ch.channel_id
-            for t, v in zip(ch.time.tolist(), ch.data.tolist()):
-                yield (cid, float(t), float(v))
-
-    rows = spark.sparkContext.parallelize(filenames, len(filenames)).flatMap(one_file)
-    df = spark.createDataFrame(rows, "channel_id string, t double, value double")
-    df.write.mode("append").partitionBy("channel_id").parquet(output_path)

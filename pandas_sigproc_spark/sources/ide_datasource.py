@@ -1,14 +1,13 @@
-"""Spark 4 Python Data Source for enDAQ-style ``.ide`` recordings:
+"""Spark 4 Python Data Source for enDAQ ``.ide`` recordings:
 ``spark.read.format("ide").load("/logs/*.ide")``.
 
-SURVEY.md §2.1 sketches two ingest shapes for the non-splittable EBML
-logs; this is the second one — a first-class `pyspark.sql.datasource.
-DataSource` (public Spark 4 API) instead of an explicit ingest job.
+The engine's one distributed ``.ide`` ingest (SURVEY.md §2.1): a
+first-class `pyspark.sql.datasource.DataSource` (public Spark 4 API).
 One input partition per FILE (an .ide is a single sequential EBML
 stream, so per-file is the natural split), each executor task parsing
-its file with the pure-Python readers (`sources/mide.py` built-in
-profile, or the `endaq` package when installed) and emitting canonical
-``(channel_id, t, value)`` rows.
+its file through ``sources/endaq.py`` — the built-in MIDE-profile
+reader (``sources/mide.py``), or the ``endaq`` package for any other
+DocType — and emitting canonical ``(channel_id, t, value)`` rows.
 
 Usage::
 
@@ -25,7 +24,9 @@ Options:
 Column pruning is honoured by Spark above the reader; predicate pushdown
 does not apply (EBML has no row-group statistics) — at 100 TB the
 pattern is: read once through this source, write canonical parquet
-partitioned/bucketed by channel, run analytics there (SURVEY.md §2.1).
+partitioned by channel, run analytics there::
+
+    df.write.partitionBy("channel_id").parquet(out)
 """
 
 from __future__ import annotations

@@ -1,72 +1,25 @@
-"""From-scratch EBML reader + a MIDE-style recording profile.
+"""From-scratch EBML reader for the MIDE ``.ide`` recording profile.
 
 The reference ingests enDAQ ``.ide`` logs through the ``endaq``/``idelib``
-packages (``daq/io.py:161-301``), which are not installable in this
-environment.  ``.ide`` is EBML — the same public wire format Matroska
-uses (RFC 8794): every element is ``VINT id | VINT size | payload``,
-containers nest by size.  This module implements that wire format for
-real, from bytes:
+packages (``daq/io.py:161-301``), which this package does not require.
+``.ide`` is EBML — the same public wire format Matroska uses (RFC 8794):
+every element is ``VINT id | VINT size | payload``, containers nest by
+size.  This module implements that wire format for real, from bytes:
 
 - :func:`iter_elements` — RFC 8794 variable-length integer parsing
   (length-descriptor leading-zero scheme, marker bit stripped for sizes
   and kept for ids, unknown-size rejected) and container walking;
-- a RECORDING PROFILE — channel definitions + int16 data blocks — whose
-  element IDs are documented below.  The profile mirrors the SHAPE of
-  MIDE recordings (channel metadata elements + ChannelDataBlock streams);
-  genuine ``.ide`` files use the element IDs of Mide's published
-  ``mide_ide.xml`` schema, so adapting this reader to them is a table
-  swap plus their calibration polynomials, not a new parser.
+- the MIDE profile (DocType ``mide``, the layout enDAQ/SlamStick
+  recorders write): :func:`read_mide_channels` decodes it,
+  :func:`encode_mide` writes it, and :func:`mide_parse_report` lists
+  what a file holds when the reader refuses it.  Its element ids sit in
+  one table, ``MIDE_IDS`` (see the section comment below).
 
 Channel field semantics match ``EndaqChannel`` (``daq/io.py:242-301``):
-seconds time base from the block start + sample rate, display name,
-unit string, and ``start_time`` = the earliest absolute timestamp.
-
-Profile (all inside one EBML body):
-
-====================  ======  =====================================
-element               id      payload
-====================  ======  =====================================
-EBML header           1A45DFA3  standard; DocType 'spark-sigproc-rec'
-Segment               18538067  container of everything below
-ChannelDef            4100    container
-  ChId                4101    unsigned int
-  ChName              4102    UTF-8
-  ChUnit              4103    UTF-8
-  ChRate              4104    float64 (Hz)
-  ChStartUs           4105    unsigned int (epoch microseconds)
-  ChTimebase          4106    unsigned int (ticks per second; enables
-                              integer-tick block timestamps)
-  SubChannel          4110    container, repeated (hardware layout)
-    SubName           4111    UTF-8
-    SubUnit           4112    UTF-8
-    CalA              4113    float64 (calibration intercept)
-    CalB              4114    float64 (calibration gain)
-DataBlock             4200    container
-  ChRef               4201    unsigned int
-  BlockT0             4202    float64 (seconds, channel-relative)
-  BlockTicks          4205    unsigned int (start in ChTimebase ticks —
-                              how hardware stamps blocks; wins over
-                              BlockT0 when both present)
-  Scale               4203    float64 (value = sample * scale;
-                              single-subchannel layout only)
-  Samples             4204    int16 little-endian payload
-====================  ======  =====================================
-
-HARDWARE LAYOUT (the shape genuine recorders write, per the public
-idelib/enDAQ documentation of MIDE recordings): a parent channel (e.g.
-a 3-axis accelerometer) declares N ``SubChannel`` elements; every
-``DataBlock`` payload is then N-way INTERLEAVED int16 sample frames
-(``x0 y0 z0 x1 y1 z1 ...``), the block start time is an integer tick
-count against the channel's ``ChTimebase`` (devices stamp blocks with
-an integer clock, not floats), and each subchannel carries its own
-linear calibration polynomial ``value = CalA + CalB * raw`` (idelib's
-univariate calibration).  The decoder de-interleaves ``samples[k::N]``,
-applies the per-subchannel polynomial, and emits one Channel per
-subchannel named ``{ChName}:{SubName}`` — mirroring endaq subchannel
-``displayName`` semantics (``daq/io.py:242-301``).  The exact element
-IDs of Mide's ``mide_ide.xml`` cannot be verified offline (no package,
-no network), so they live in this swappable table; the WIRE FORMAT
-(RFC 8794) and the payload semantics above are the hardware ones.
+one Channel per subchannel named ``{ChannelName}:{SubChannelName}``
+(endaq subchannel ``displayName``), seconds time base, unit string, and
+``start_time`` = the epoch of the recording's tick zero.  Any other
+DocType is read by the ``endaq`` package (``sources/endaq.py``).
 """
 
 from __future__ import annotations
@@ -80,20 +33,7 @@ import numpy as np
 from pandas_sigproc_spark.sources.channel import Channel
 
 EBML_HEADER = 0x1A45DFA3
-SEGMENT = 0x18538067
 DOCTYPE = 0x4282  # standard EBML DocType element id
-CHANNEL_DEF, CH_ID, CH_NAME, CH_UNIT, CH_RATE, CH_START_US = (
-    0x4100, 0x4101, 0x4102, 0x4103, 0x4104, 0x4105,
-)
-CH_TIMEBASE = 0x4106
-SUBCHANNEL, SUB_NAME, SUB_UNIT, CAL_A, CAL_B = (
-    0x4110, 0x4111, 0x4112, 0x4113, 0x4114,
-)
-DATA_BLOCK, CH_REF, BLOCK_T0, SCALE, SAMPLES = (
-    0x4200, 0x4201, 0x4202, 0x4203, 0x4204,
-)
-BLOCK_TICKS = 0x4205
-DOCTYPE_NAME = b"spark-sigproc-rec"
 
 
 # -- RFC 8794 varints --------------------------------------------------------
@@ -173,59 +113,6 @@ def _el_uint(eid: int, val: int) -> bytes:
     return _el(eid, val.to_bytes(n, "big"))
 
 
-def encode_recording(channels: list[dict]) -> bytes:
-    """Encode channel dicts (ch_id, name, unit, rate, start_us, scale,
-    blocks=[(t0, int16 ndarray), ...]) as one EBML recording.
-
-    Hardware layout: add ``timebase`` (ticks/s) plus ``subchannels``
-    (list of ``{name, unit, a, b}``) and pass each block as
-    ``(ticks:int, frames)`` where ``frames`` is an (n, n_sub) int16
-    array (encoded row-major = interleaved, exactly how devices pack
-    multi-axis samples)."""
-    body = []
-    for ch in channels:
-        payload = (
-            _el_uint(CH_ID, ch["ch_id"])
-            + _el(CH_NAME, ch["name"].encode())
-            + _el(CH_UNIT, ch["unit"].encode())
-            + _el(CH_RATE, struct.pack(">d", ch["rate"]))
-            + _el_uint(CH_START_US, ch["start_us"])
-        )
-        if "timebase" in ch:
-            payload += _el_uint(CH_TIMEBASE, ch["timebase"])
-        for sub in ch.get("subchannels", ()):
-            payload += _el(
-                SUBCHANNEL,
-                _el(SUB_NAME, sub["name"].encode())
-                + _el(SUB_UNIT, sub["unit"].encode())
-                + _el(CAL_A, struct.pack(">d", float(sub["a"])))
-                + _el(CAL_B, struct.pack(">d", float(sub["b"]))),
-            )
-        body.append(_el(CHANNEL_DEF, payload))
-    for ch in channels:
-        for t0, samples in ch["blocks"]:
-            arr = np.ascontiguousarray(np.asarray(samples, dtype="<i2"))
-            blk = _el_uint(CH_REF, ch["ch_id"])
-            if ch.get("subchannels"):
-                blk += _el_uint(BLOCK_TICKS, int(t0))
-            else:
-                blk += _el(BLOCK_T0, struct.pack(">d", float(t0)))
-                blk += _el(SCALE, struct.pack(">d", float(ch["scale"])))
-            blk += _el(SAMPLES, arr.tobytes())
-            body.append(_el(DATA_BLOCK, blk))
-    header = _el(EBML_HEADER, _el(DOCTYPE, DOCTYPE_NAME))
-    return header + _el(SEGMENT, b"".join(body))
-
-
-# -- decode -------------------------------------------------------------------
-
-
-def is_recording(buf: bytes) -> bool:
-    """True when the EBML header carries this module's DocType
-    (the same header walk is_mide uses — one traversal to maintain)."""
-    return _doctype(buf) == DOCTYPE_NAME
-
-
 # -- the MIDE profile (DocType "mide") ---------------------------------------
 #
 # Genuine enDAQ/SlamStick recorders write DocType "mide" with the
@@ -260,9 +147,10 @@ def is_recording(buf: bytes) -> bool:
 # deliberately centralized — if a genuine recorder file disagrees,
 # correcting this table against the published ``mide_ide.xml`` is the
 # entire fix; every structural/semantic rule above stays as is.
-# tests/test_mide.py pins the encode->decode roundtrip, the modulus
-# unwrap, the struct-format de-interleave, and the polynomial
-# calibration at byte level.
+# tests/test_mide_profile.py pins the encode->decode roundtrip, the
+# modulus unwrap, the struct-format de-interleave and the polynomial
+# calibration; tests/test_mide_ebml.py checks the decoder against bytes
+# built without :func:`encode_mide`.
 
 MIDE_IDS = {
     "RecordingProperties": 0x18526570,
@@ -294,7 +182,7 @@ MIDE_TICKS_PER_SEC = 32768  # the device clock idelib's parsers assume
 MIDE_TIMECODE_MODULUS = 1 << 24  # time codes wrap every ~512 s
 
 
-def _doctype(buf: bytes) -> bytes | None:
+def doctype(buf: bytes) -> bytes | None:
     """DocType payload of the leading EBML header, or None."""
     try:
         for eid, s, e in iter_elements(buf, 0, len(buf)):
@@ -311,7 +199,7 @@ def _doctype(buf: bytes) -> bytes | None:
 
 def is_mide(buf: bytes) -> bool:
     """True when the EBML header carries the MIDE DocType."""
-    return _doctype(buf) == MIDE_DOCTYPE
+    return doctype(buf) == MIDE_DOCTYPE
 
 
 def encode_mide(
@@ -678,7 +566,7 @@ def read_mide_channels(buf: bytes, source: str = "mide") -> list[Channel]:
         # the downstream contract is ts = start_time + t (channel.py),
         # and t here is already absolute ticks from TimeBaseUTC — adding
         # t[0] again would double-count the first-sample offset (a
-        # review finding; read_recording_channels has the same rule).
+        # review finding).
         start_dt = datetime.fromtimestamp(
             time_base_utc, tz=timezone.utc
         ).replace(tzinfo=None)
@@ -808,148 +696,3 @@ def mide_parse_report(
 
     walk(iter_elements(buf, 0, len(buf)), 0)
     return rows
-
-
-def read_recording_channels(buf: bytes, source: str = "mide") -> list[Channel]:
-    """Parse EBML bytes -> Channels (reference field semantics:
-    ``daq/io.py:242-301`` — seconds time base, displayName, unit,
-    start_time = earliest absolute timestamp)."""
-    defs: dict[int, dict] = {}
-    blocks: dict[int, list] = {}
-    seen_header = False
-    for eid, s, e in iter_elements(buf, 0, len(buf)):
-        if eid == EBML_HEADER:
-            seen_header = True
-            continue
-        if eid != SEGMENT:
-            continue
-        for eid2, s2, e2 in iter_elements(buf, s, e):
-            if eid2 == CHANNEL_DEF:
-                d: dict = {"subs": []}
-                for eid3, s3, e3 in iter_elements(buf, s2, e2):
-                    if eid3 == CH_ID:
-                        d["ch_id"] = _uint(buf, s3, e3)
-                    elif eid3 == CH_NAME:
-                        d["name"] = buf[s3:e3].decode()
-                    elif eid3 == CH_UNIT:
-                        d["unit"] = buf[s3:e3].decode()
-                    elif eid3 == CH_RATE:
-                        d["rate"] = _f64(buf, s3, e3)
-                    elif eid3 == CH_START_US:
-                        d["start_us"] = _uint(buf, s3, e3)
-                    elif eid3 == CH_TIMEBASE:
-                        d["timebase"] = _uint(buf, s3, e3)
-                    elif eid3 == SUBCHANNEL:
-                        sub: dict = {}
-                        for eid4, s4, e4 in iter_elements(buf, s3, e3):
-                            if eid4 == SUB_NAME:
-                                sub["name"] = buf[s4:e4].decode()
-                            elif eid4 == SUB_UNIT:
-                                sub["unit"] = buf[s4:e4].decode()
-                            elif eid4 == CAL_A:
-                                sub["a"] = _f64(buf, s4, e4)
-                            elif eid4 == CAL_B:
-                                sub["b"] = _f64(buf, s4, e4)
-                        d["subs"].append(sub)
-                defs[d["ch_id"]] = d
-            elif eid2 == DATA_BLOCK:
-                ref = None
-                t0 = 0.0
-                ticks = None
-                scale = 1.0
-                samples = np.zeros(0, np.int16)
-                for eid3, s3, e3 in iter_elements(buf, s2, e2):
-                    if eid3 == CH_REF:
-                        ref = _uint(buf, s3, e3)
-                    elif eid3 == BLOCK_T0:
-                        t0 = _f64(buf, s3, e3)
-                    elif eid3 == BLOCK_TICKS:
-                        ticks = _uint(buf, s3, e3)
-                    elif eid3 == SCALE:
-                        scale = _f64(buf, s3, e3)
-                    elif eid3 == SAMPLES:
-                        samples = np.frombuffer(buf[s3:e3], dtype="<i2")
-                if ref is None:
-                    raise ValueError("EBML: DataBlock without ChRef")
-                blocks.setdefault(ref, []).append((t0, ticks, scale, samples))
-    if not seen_header:
-        raise ValueError("EBML: missing header element")
-    out = []
-    for ch_id, d in defs.items():
-        start = datetime.fromtimestamp(d["start_us"] / 1e6, tz=timezone.utc)
-        start = start.replace(tzinfo=None)
-        chblocks = blocks.get(ch_id, [])
-        # Block order: integer ticks when stamped (hardware layout),
-        # else the float t0.
-        def _key(b):
-            t0, ticks, _, _ = b
-            return t0 if ticks is None else ticks / d.get("timebase", 1)
-
-        chblocks = sorted(chblocks, key=_key)
-        subs = d["subs"]
-        if subs:
-            # Hardware layout: de-interleave N-way int16 frames, apply
-            # each subchannel's linear calibration, one Channel per
-            # subchannel ({ChName}:{SubName} display names).
-            n_sub = len(subs)
-            tb = d.get("timebase")
-            if tb is None:
-                raise ValueError(
-                    "EBML: subchannel layout requires ChTimebase"
-                )
-            ts = []
-            raws = []
-            for t0, ticks, _, samples in chblocks:
-                if len(samples) % n_sub:
-                    raise ValueError(
-                        f"EBML: DataBlock of {len(samples)} int16 samples "
-                        f"is not a whole number of {n_sub}-wide frames"
-                    )
-                n = len(samples) // n_sub
-                base = (ticks / tb) if ticks is not None else t0
-                ts.append(base + np.arange(n, dtype=np.float64) / d["rate"])
-                raws.append(samples.reshape(n, n_sub))
-            t = np.concatenate(ts) if ts else np.zeros(0)
-            raw = (
-                np.concatenate(raws)
-                if raws
-                else np.zeros((0, n_sub), np.int16)
-            )
-            for k, sub in enumerate(subs):
-                v = sub.get("a", 0.0) + sub.get("b", 1.0) * raw[:, k].astype(
-                    np.float64
-                )
-                name = f"{d['name']}:{sub['name']}"
-                out.append(
-                    Channel(
-                        channel_id=f"{source}:{name}",
-                        time=t,
-                        data=v,
-                        name=name,
-                        unit=sub.get("unit", d["unit"]),
-                        start_time=start,
-                    )
-                )
-            continue
-        ts = []
-        vs = []
-        for t0, ticks, scale, samples in chblocks:
-            n = len(samples)
-            base = (
-                (ticks / d.get("timebase", 1)) if ticks is not None else t0
-            )
-            ts.append(base + np.arange(n, dtype=np.float64) / d["rate"])
-            vs.append(samples.astype(np.float64) * scale)
-        t = np.concatenate(ts) if ts else np.zeros(0)
-        v = np.concatenate(vs) if vs else np.zeros(0)
-        out.append(
-            Channel(
-                channel_id=f"{source}:{d['name']}",
-                time=t,
-                data=v,
-                name=d["name"],
-                unit=d["unit"],
-                start_time=start,
-            )
-        )
-    return out

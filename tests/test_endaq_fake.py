@@ -82,13 +82,22 @@ def fake_ide(monkeypatch):
 
 
 def test_import_gate_without_endaq(monkeypatch, tmp_path):
-    # A genuine .ide (not the engine's own EBML profile, sources/mide.py)
-    # still demands the endaq package when it is absent.
+    # A file that is not in the MIDE profile (sources/mide.py) still
+    # demands the endaq package when it is absent, and the error names
+    # what the file holds.
+    from pandas_sigproc_spark.sources import mide
+
     monkeypatch.setattr(endaq_mod, "_endaq_ide", None)
     path = tmp_path / "f.ide"
     path.write_bytes(b"\x1a\x45\xdf\xa3 not-our-profile")
-    with pytest.raises(ImportError, match="endaq"):
+    with pytest.raises(ImportError, match="no EBML header.*'endaq'"):
         endaq_mod.ide_channel_list(str(path))
+    # an EBML file of another DocType (an old in-house recording, say)
+    old = tmp_path / "old.ide"
+    old.write_bytes(mide._el(mide.EBML_HEADER, mide._el(mide.DOCTYPE, b"spark-rec")))
+    with pytest.raises(ImportError, match="DocType 'spark-rec'") as err:
+        endaq_mod.read_ide_channels(str(old))
+    assert "endaq" in str(err.value) and str(old) in str(err.value)
 
 
 def test_channel_enumeration(fake_ide):
@@ -156,38 +165,39 @@ def test_single_sample_subchannel_is_1d():
     assert ch.data.ndim == 1 and len(ch.data) == 1
 
 
-def test_ingest_ide_dir_empty_and_zero_channel(spark, tmp_path):
-    import pytest as _pytest
-
+def test_ide_source_empty_dir_and_zero_channel(spark, tmp_path):
     from pandas_sigproc_spark.sources import mide
-    from pandas_sigproc_spark.sources.endaq import ingest_ide_dir
+    from pandas_sigproc_spark.sources.ide_datasource import register_ide_source
 
-    with _pytest.raises(ValueError, match="no input files"):
-        ingest_ide_dir(spark, [], str(tmp_path / "out"))
+    register_ide_source(spark)
+    empty_dir = tmp_path / "none"
+    empty_dir.mkdir()
+    with pytest.raises(Exception, match="contains no .ide files") as err:
+        spark.read.format("ide").load(str(empty_dir)).count()
+    assert str(empty_dir) in str(err.value)
 
     # a zero-channel recording contributes no rows instead of crashing
+    d = tmp_path / "logs"
+    d.mkdir()
     ids = mide.MIDE_IDS
     empty = mide._el(
         mide.EBML_HEADER, mide._el(mide.DOCTYPE, b"mide")
     ) + mide._el(ids["RecordingProperties"], mide._el_uint(ids["TimeBaseUTC"], 0))
-    f1 = tmp_path / "empty.ide"
-    f1.write_bytes(empty)
+    (d / "empty.ide").write_bytes(empty)
     blob = mide.encode_mide(
         [{
             "ch_id": 1, "name": "C", "fmt": "<h",
             "subchannels": [
                 {"sub_id": 0, "name": "s", "units": "", "cal_id": 1}
             ],
-            "blocks": [(0, 2048, __import__("numpy").array([[1], [2]], "<i2"))],
+            "blocks": [(0, 2048, np.array([[1], [2]], "<i2"))],
         }],
         {1: (0.0, [1.0, 0.0])},
     )
-    f2 = tmp_path / "real.ide"
-    f2.write_bytes(blob)
-    out = tmp_path / "parquet"
-    ingest_ide_dir(spark, [str(f1), str(f2)], str(out))
-    got = spark.read.parquet(str(out))
-    assert got.count() == 2
+    (d / "real.ide").write_bytes(blob)
+    got = spark.read.format("ide").load(str(d))
+    assert got.rdd.getNumPartitions() == 2
+    assert sorted(r.value for r in got.collect()) == [1.0, 2.0]
 
 
 def test_missing_file_without_endaq_is_filenotfound(monkeypatch, tmp_path):

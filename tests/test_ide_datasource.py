@@ -1,4 +1,4 @@
-"""spark.read.format("ide") — the Spark 4 Python Data Source over EBML
+"""spark.read.format("ide") — the Spark 4 Python Data Source over MIDE
 recordings (one input partition per file, Arrow-batched rows)."""
 
 import numpy as np
@@ -7,38 +7,36 @@ import pytest
 from pandas_sigproc_spark.sources import mide
 from pandas_sigproc_spark.sources.ide_datasource import register_ide_source
 
+TPS = mide.MIDE_TICKS_PER_SEC
 
-def _channels(tag):
-    t0 = 1_700_000_000_000_000  # epoch us
-    return [
-        {
-            "ch_id": 1,
-            "name": f"accel{tag}",
-            "unit": "g",
-            "rate": 100.0,
-            "start_us": t0,
-            "scale": 0.01,
-            "blocks": [(0.0, np.arange(50, dtype=np.int16)),
-                       (0.5, np.arange(50, 90, dtype=np.int16))],
-        },
-        {
-            "ch_id": 2,
-            "name": f"press{tag}",
-            "unit": "Pa",
-            "rate": 10.0,
-            "start_us": t0,
-            "scale": 2.0,
-            "blocks": [(0.0, np.asarray([3, -4, 5], dtype=np.int16))],
-        },
-    ]
+
+def _channel(ch_id, name, sub, blocks):
+    return {
+        "ch_id": ch_id, "name": name, "fmt": "<h",
+        "subchannels": [{"sub_id": 0, "name": sub, "units": "", "cal_id": ch_id}],
+        "blocks": blocks,
+    }
+
+
+def _recording(tag):
+    # accel at 128 Hz (256 ticks a frame): 50 frames from t=0, then 40
+    # from t=0.5 s; press at 8 Hz: 3 frames
+    accel = _channel(1, f"accel{tag}", "x", [
+        (0, 50 * 256, np.arange(50, dtype=np.int16)[:, None]),
+        (TPS // 2, TPS // 2 + 40 * 256, np.arange(50, 90, dtype=np.int16)[:, None]),
+    ])
+    press = _channel(2, f"press{tag}", "p", [
+        (0, 3 * 4096, np.asarray([[3], [-4], [5]], dtype=np.int16)),
+    ])
+    # value = 0.01 * raw (accel), 2 * raw (press)
+    return mide.encode_mide([accel, press], {1: (0.0, [0.01, 0.0]), 2: (0.0, [2.0, 0.0])})
 
 
 @pytest.fixture(scope="module")
 def ide_dir(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("ide_ds")
     for i in range(3):
-        with open(d / f"log{i}.ide", "wb") as fh:
-            fh.write(mide.encode_recording(_channels(i)))
+        (d / f"log{i}.ide").write_bytes(_recording(i))
     register_ide_source(spark)
     return str(d)
 
@@ -49,9 +47,9 @@ def test_read_directory_all_channels(spark, ide_dir):
     assert df.count() == 3 * (90 + 3)
     # one scan partition per file
     assert df.rdd.getNumPartitions() == 3
-    # value fidelity: int16 * scale through the whole source
+    # value fidelity: calibrated int16 through the whole source
     vals = sorted(
-        r.value for r in df.filter(df.channel_id.endswith("press1")).collect()
+        r.value for r in df.filter(df.channel_id.endswith("press1:p")).collect()
     )
     assert vals == [-8.0, 6.0, 10.0]
 
@@ -59,12 +57,12 @@ def test_read_directory_all_channels(spark, ide_dir):
 def test_channel_option_and_glob(spark, ide_dir):
     df = (
         spark.read.format("ide")
-        .option("channel", "accel2")
+        .option("channel", "accel2:x")
         .load(ide_dir + "/log2.ide")
     )
     rows = df.orderBy("t").collect()
     assert len(rows) == 90
-    assert rows[0].t == 0.0 and abs(rows[-1].t - (0.5 + 39 / 100.0)) < 1e-12
+    assert rows[0].t == 0.0 and rows[-1].t == 0.5 + 39 / 128.0
     assert rows[-1].value == pytest.approx(89 * 0.01)
 
 
@@ -77,7 +75,7 @@ def test_composes_with_operators(spark, ide_dir):
     from pandas_sigproc_spark.operators import rms
 
     df = spark.read.format("ide").load(ide_dir)
-    out = {r.channel_id.split(":")[-1]: r for r in rms(df).collect()}
+    out = {r.channel_id.split(":")[-2]: r for r in rms(df).collect()}
     exp = np.sqrt(np.mean((np.asarray([3, -4, 5]) * 2.0) ** 2))
     for tag in range(3):
         assert out[f"press{tag}"].rms == pytest.approx(exp)
@@ -96,20 +94,9 @@ def test_empty_dir_raises(tmp_path):
 def test_channel_option_is_filter_across_files(spark, tmp_path):
     # r13 review finding: a file lacking the named channel killed the
     # whole multi-file read with KeyError; filter semantics now.
-    from pandas_sigproc_spark.sources import mide
-    from pandas_sigproc_spark.sources.ide_datasource import (
-        register_ide_source,
-    )
-
     def rec(ch_name):
         return mide.encode_mide(
-            [{
-                "ch_id": 1, "name": ch_name, "fmt": "<h",
-                "subchannels": [
-                    {"sub_id": 0, "name": "s", "units": "", "cal_id": 1}
-                ],
-                "blocks": [(0, 2048, __import__("numpy").array([[1], [2]], "<i2"))],
-            }],
+            [_channel(1, ch_name, "s", [(0, 2048, np.array([[1], [2]], "<i2"))])],
             {1: (0.0, [1.0, 0.0])},
         )
 

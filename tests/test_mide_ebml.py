@@ -1,16 +1,20 @@
-"""Byte-level EBML recording parse (sources/mide.py) + .ide reader
-fallback (sources/endaq.py).
+"""Byte-level EBML parse of the MIDE profile (sources/mide.py) + the .ide
+reader dispatch (sources/endaq.py) and ``spark.read.format("ide")``.
 
-Round-3 verdict item 7: the endaq source was only ever exercised against
-a fake ``endaq.ide`` module double — no real bytes were parsed.  These
-tests build an EBML fixture byte by byte (RFC 8794 varints, nested
-container sizes) and drive the whole ingest path over it: varint edge
-cases, header/doctype detection, channel reconstruction with the
-reference's field semantics (``daq/io.py:242-301`` — seconds time base,
-displayName, unit, start_time), and the catalog rows produced by
-``ingest_ide``.
+The fixture here is built byte by byte with the test's own tiny encoder
+(RFC 8794 varints, nested container sizes) — independent of
+``mide.encode_mide`` — so the decoder is proven against raw wire bytes,
+not a roundtrip through the module under test.  It carries the hardware
+layout genuine recorders write: interleaved int16 subchannel frames,
+start/end tick time codes stored modulo 2**24 (block 0 straddles the
+wrap), and a calibration polynomial per subchannel.  The tests drive the
+whole ingest path over it: varint edge cases, DocType detection, channel
+reconstruction with the reference's field semantics
+(``daq/io.py:242-301`` — seconds time base, displayName, unit,
+start_time), the catalog rows of ``ingest_ide`` and the data source.
 """
 
+import struct
 from datetime import datetime
 
 import numpy as np
@@ -18,23 +22,9 @@ import pytest
 
 from pandas_sigproc_spark.sources import mide
 
-
-def _fixture_channels():
-    return [
-        {
-            "ch_id": 8, "name": "X (100g)", "unit": "g", "rate": 100.0,
-            "start_us": 1_704_067_200_000_000, "scale": 0.01,
-            "blocks": [
-                (0.0, np.arange(-5, 5, dtype=np.int16)),
-                (0.1, np.arange(100, 110, dtype=np.int16)),
-            ],
-        },
-        {
-            "ch_id": 36, "name": "Pressure", "unit": "Pa", "rate": 10.0,
-            "start_us": 1_704_067_201_500_000, "scale": 2.5,
-            "blocks": [(0.0, np.array([-32768, 0, 32767], dtype=np.int16))],
-        },
-    ]
+IDS = mide.MIDE_IDS
+MOD = mide.MIDE_TIMECODE_MODULUS
+TPS = mide.MIDE_TICKS_PER_SEC
 
 
 def test_varint_widths_and_errors():
@@ -61,37 +51,151 @@ def test_element_overrun_is_loud():
         list(mide.iter_elements(bad, 0, len(bad)))
 
 
+# ---------------------------------------------------------------------------
+# the hand-rolled hardware-layout fixture
+# ---------------------------------------------------------------------------
+
+
+def _hw_el(name, payload: bytes) -> bytes:
+    eid = IDS.get(name, name)
+    ident = eid.to_bytes((eid.bit_length() + 7) // 8, "big")
+    n = len(payload)
+    for width in range(1, 9):
+        if n < (1 << (7 * width)) - 1:
+            size = (n | (1 << (7 * width))).to_bytes(width, "big")
+            break
+    return ident + size + payload
+
+
+def _hw_uint(name, val: int) -> bytes:
+    return _hw_el(name, val.to_bytes(max((val.bit_length() + 7) // 8, 1), "big"))
+
+
+def _hw_f64(name, val: float) -> bytes:
+    return _hw_el(name, struct.pack(">d", val))
+
+
+# (name, units, cal_id, reference, coeffs highest-order first)
+ACCEL_SUBS = [
+    ("X", "g", 1, 0.0, [0.01, -0.5]),
+    ("Y", "g", 2, 2048.0, [0.02, 0.25]),
+    ("Z", "g", 3, 0.0, [0.001, 0.0]),
+]
+PRESSURE_CAL = (9, 0.0, [2.5, 0.0])
+# block 0: 4 frames starting 128 ticks before the 2**24 wrap (its stored
+# end code is below its start); block 1: 2 frames 0.5 s later.  64 ticks
+# per frame = 512 Hz.
+ACCEL_F0 = np.array(
+    [[100, -200, 300], [101, -201, 301], [102, -202, 302], [103, -203, 303]],
+    dtype="<i2",
+)
+ACCEL_F1 = np.array([[-32768, 0, 32767], [7, -7, 7]], dtype="<i2")
+ACCEL_BLOCKS = [(MOD - 128, MOD + 128, ACCEL_F0), (MOD - 128 + TPS // 2, MOD + TPS // 2, ACCEL_F1)]
+PRESSURE_BLOCK = (1024, 1024 + 3 * 4096, np.array([[-32768], [0], [32767]], dtype="<i2"))
+TIME_BASE_UTC = 1_704_067_200  # 2024-01-01 00:00:00
+
+
+def _hw_recording(tag: str = "") -> bytes:
+    """A 3-axis accelerometer channel plus a pressure channel, in the
+    element order a recorder writes them."""
+    accel_subs = b"".join(
+        _hw_el(
+            "SubChannel",
+            _hw_uint("SubChannelID", k)
+            + _hw_el("SubChannelName", name.encode())
+            + _hw_el("SubChannelUnits", units.encode())
+            + _hw_uint("SubChannelCalIDRef", cal_id),
+        )
+        for k, (name, units, cal_id, _ref, _coeffs) in enumerate(ACCEL_SUBS)
+    )
+    channels = _hw_el(
+        "Channel",
+        _hw_uint("ChannelID", 8)
+        + _hw_el("ChannelName", f"Acceleration{tag}".encode())
+        + _hw_el("ChannelFormat", b"<hhh")
+        + accel_subs,
+    ) + _hw_el(
+        "Channel",
+        _hw_uint("ChannelID", 36)
+        + _hw_el("ChannelName", f"Pressure{tag}".encode())
+        + _hw_el("ChannelFormat", b"<h")
+        + _hw_el(
+            "SubChannel",
+            _hw_uint("SubChannelID", 0)
+            + _hw_el("SubChannelName", b"P")
+            + _hw_el("SubChannelUnits", b"Pa")
+            + _hw_uint("SubChannelCalIDRef", PRESSURE_CAL[0]),
+        ),
+    )
+    cals = b"".join(
+        _hw_el(
+            "UnivariatePolynomial",
+            _hw_uint("CalID", cal_id)
+            + _hw_f64("CalReferenceValue", ref)
+            + b"".join(_hw_f64("PolynomialCoef", c) for c in coeffs),
+        )
+        for cal_id, ref, coeffs in [s[2:] for s in ACCEL_SUBS] + [PRESSURE_CAL]
+    )
+    props = _hw_el(
+        "RecordingProperties",
+        _hw_uint("TimeBaseUTC", TIME_BASE_UTC)
+        + _hw_el("ChannelList", channels)
+        + _hw_el("CalibrationList", cals),
+    )
+    blocks = b"".join(
+        _hw_el(
+            "ChannelDataBlock",
+            _hw_uint("ChannelIDRef", ch_id)
+            + _hw_uint("StartTimeCodeAbs", start % MOD)
+            + _hw_uint("EndTimeCodeAbs", end % MOD)
+            + _hw_el("ChannelDataPayload", frames.tobytes()),
+        )
+        for ch_id, (start, end, frames) in [(8, b) for b in ACCEL_BLOCKS]
+        + [(36, PRESSURE_BLOCK)]
+    )
+    header = _hw_el(mide.EBML_HEADER, _hw_el(mide.DOCTYPE, b"mide"))
+    return header + props + blocks
+
+
+def _expected_times(blocks) -> np.ndarray:
+    return np.concatenate(
+        [
+            (start + np.arange(len(f), dtype=np.float64) * ((end - start) / len(f)))
+            / TPS
+            for start, end, f in blocks
+        ]
+    )
+
+
+NAMES = ["Acceleration:X", "Acceleration:Y", "Acceleration:Z", "Pressure:P"]
+N_ROWS = 3 * 6 + 3  # 3 axes x 6 frames + 3 pressure samples
+
+
 def test_recording_roundtrip_field_semantics():
-    blob = mide.encode_recording(_fixture_channels())
-    assert mide.is_recording(blob)
-    chans = {c.name: c for c in mide.read_recording_channels(blob, source="fx")}
-    assert set(chans) == {"X (100g)", "Pressure"}
-
-    x = chans["X (100g)"]
-    # seconds time base across blocks: t0 + i/rate per block
-    expect_t = np.concatenate(
-        [0.0 + np.arange(10) / 100.0, 0.1 + np.arange(10) / 100.0]
-    )
-    assert np.array_equal(x.time, expect_t)
-    # scaled int16 payload
-    assert np.array_equal(
-        x.data, np.concatenate([np.arange(-5, 5), np.arange(100, 110)]) * 0.01
-    )
-    assert x.unit == "g"
-    assert x.start_time == datetime(2024, 1, 1, 0, 0, 0)
-    assert x.channel_id == "fx:X (100g)"
-
-    p = chans["Pressure"]
-    assert np.array_equal(p.data, np.array([-32768, 0, 32767]) * 2.5)
-    assert p.start_time == datetime(2024, 1, 1, 0, 0, 1, 500000)
+    chans = mide.read_mide_channels(_hw_recording(), source="fx")
+    assert [c.name for c in chans] == NAMES
+    by = {c.name: c for c in chans}
+    p = by["Pressure:P"]
+    assert p.channel_id == "fx:Pressure:P"
+    assert p.unit == "Pa"
+    # seconds time base: 4096 ticks per frame = 0.125 s
+    np.testing.assert_array_equal(p.time, (1024 + 4096 * np.arange(3)) / TPS)
+    np.testing.assert_array_equal(p.data, [-32768 * 2.5, 0.0, 32767 * 2.5])
+    # start_time is the epoch of tick zero for every channel
+    for c in chans:
+        assert c.start_time == datetime(2024, 1, 1, 0, 0, 0)
+    assert by["Acceleration:X"].unit == "g"
 
 
-def test_is_recording_rejects_other_bytes():
-    assert not mide.is_recording(b"RIFF....WAVE")
-    assert not mide.is_recording(b"")
+def test_is_mide_rejects_other_bytes():
+    assert mide.is_mide(_hw_recording())
+    assert not mide.is_mide(b"RIFF....WAVE")
+    assert not mide.is_mide(b"")
     # valid EBML header but foreign doctype
-    foreign = mide._el(mide.EBML_HEADER, mide._el(mide.DOCTYPE, b"matroska"))
-    assert not mide.is_recording(foreign)
+    foreign = _hw_el(mide.EBML_HEADER, _hw_el(mide.DOCTYPE, b"matroska"))
+    assert not mide.is_mide(foreign)
+    assert mide.doctype(foreign) == b"matroska"
+    assert mide.doctype(b"RIFF....WAVE") is None
 
 
 def test_endaq_reader_falls_back_to_builtin_parser(tmp_path):
@@ -103,20 +207,20 @@ def test_endaq_reader_falls_back_to_builtin_parser(tmp_path):
 
     path = str(tmp_path / "rec0.ide")
     with open(path, "wb") as fh:
-        fh.write(mide.encode_recording(_fixture_channels()))
+        fh.write(_hw_recording())
 
-    assert ide_channel_list(path) == ["X (100g)", "Pressure"]
-    ch = read_ide_channel(path, "Pressure")
+    assert ide_channel_list(path) == NAMES
+    ch = read_ide_channel(path, "Pressure:P")
     assert ch.unit == "Pa" and len(ch.data) == 3
     with pytest.raises(KeyError):
         read_ide_channel(path, "nope")
-    assert len(read_ide_channels(path)) == 2
+    assert len(read_ide_channels(path)) == 4
 
-    # non-recording bytes still demand the real endaq package
+    # non-MIDE bytes still demand the real endaq package
     other = str(tmp_path / "foreign.ide")
     with open(other, "wb") as fh:
         fh.write(b"\x1aEbml-but-not-ours")
-    with pytest.raises(ImportError):
+    with pytest.raises(ImportError, match="endaq"):
         read_ide_channels(other)
 
 
@@ -125,201 +229,118 @@ def test_ingest_ide_catalog_rows(spark, tmp_path):
 
     path = str(tmp_path / "rec1.ide")
     with open(path, "wb") as fh:
-        fh.write(mide.encode_recording(_fixture_channels()))
+        fh.write(_hw_recording())
     signals, catalog = ingest_ide(spark, path)
     cat = {r.name: r for r in catalog.collect()}
-    assert set(cat) == {"X (100g)", "Pressure"}
-    assert cat["X (100g)"].unit == "g"
-    assert cat["Pressure"].unit == "Pa"
-    assert cat["X (100g)"].start_time == datetime(2024, 1, 1, 0, 0, 0)
-    n = signals.count()
-    assert n == 23  # 20 accel samples + 3 pressure samples
+    assert set(cat) == set(NAMES)
+    assert cat["Acceleration:X"].unit == "g"
+    assert cat["Pressure:P"].unit == "Pa"
+    assert cat["Acceleration:X"].start_time == datetime(2024, 1, 1, 0, 0, 0)
+    assert signals.count() == N_ROWS
 
 
-def test_ingest_ide_dir_distributed(spark, tmp_path):
-    # The multi-file distributed ingest path (one task per file) over
-    # REAL EBML bytes via the built-in parser — no endaq package, no
-    # mocks: files -> executor-side parse -> canonical parquet.
-    from pandas_sigproc_spark.sources.endaq import ingest_ide_dir
+def test_ide_dir_to_partitioned_parquet(spark, tmp_path):
+    # Directory ingest, one task per file, over REAL EBML bytes through
+    # the built-in parser — no endaq package, no mocks: files ->
+    # executor-side parse -> canonical parquet partitioned by channel.
+    from pandas_sigproc_spark.sources.ide_datasource import register_ide_source
 
-    paths = []
+    d = tmp_path / "logs"
+    d.mkdir()
     for i in range(2):
-        chans = _fixture_channels()
-        for c in chans:
-            c["ch_id"] += 10 * i
-            c["name"] = f"{c['name']}#{i}"
-        p = str(tmp_path / f"rec_dir{i}.ide")
-        with open(p, "wb") as fh:
-            fh.write(mide.encode_recording(chans))
-        paths.append(p)
+        (d / f"rec_dir{i}.ide").write_bytes(_hw_recording(f"#{i}"))
+    register_ide_source(spark)
     out = str(tmp_path / "ide_parquet")
-    ingest_ide_dir(spark, paths, out)
+    src = spark.read.format("ide").load(str(d))
+    assert src.rdd.getNumPartitions() == 2
+    src.write.partitionBy("channel_id").parquet(out)
     df = spark.read.parquet(out)
-    assert df.count() == 2 * 23  # 20 accel + 3 pressure samples per file
-    names = {r.channel_id.split(":")[-1] for r in df.select("channel_id").distinct().collect()}
-    assert names == {"X (100g)#0", "Pressure#0", "X (100g)#1", "Pressure#1"}
-    # value fidelity through the distributed path: pressure samples are
-    # int16 * scale from the encoded blocks
+    assert df.count() == 2 * N_ROWS
+    names = {
+        r.channel_id.split("/")[-1].split(":", 1)[1]
+        for r in df.select("channel_id").distinct().collect()
+    }
+    assert names == {
+        f"{n.replace(':', f'#{i}:')}" for n in NAMES for i in range(2)
+    }
+    # value fidelity through the distributed path: calibrated int16
     pr = (
-        df.filter(df.channel_id.endswith("Pressure#1"))
+        df.filter(df.channel_id.endswith("Pressure#1:P"))
         .toPandas().sort_values("t")["value"].to_numpy()
     )
-    exp = _fixture_channels()[1]
-    import numpy as np
-    expv = np.concatenate([np.asarray(s, "<i2") for _t, s in exp["blocks"]]) * exp["scale"]
-    np.testing.assert_allclose(pr, expv)
-
-
-# ---------------------------------------------------------------------------
-# hardware layout: interleaved multi-subchannel frames, tick timestamps,
-# per-subchannel linear calibration (r5 verdict item 6)
-# ---------------------------------------------------------------------------
-#
-# The fixture below is rolled BYTE BY BYTE with its own tiny encoder —
-# independent of mide.encode_recording — so the decoder is proven against
-# raw wire bytes, not a roundtrip through the module under test.
-
-import struct as _struct
-
-
-def _hw_el(eid: int, payload: bytes) -> bytes:
-    ident = eid.to_bytes((eid.bit_length() + 7) // 8, "big")
-    n = len(payload)
-    for width in range(1, 9):
-        if n < (1 << (7 * width)) - 1:
-            size = (n | (1 << (7 * width))).to_bytes(width, "big")
-            break
-    return ident + size + payload
-
-
-def _hw_uint(val: int) -> bytes:
-    return val.to_bytes(max((val.bit_length() + 7) // 8, 1), "big")
-
-
-def _hw_accel_recording():
-    """One 3-axis accelerometer channel, 2 DataBlocks of interleaved
-    int16 frames stamped in 2^16 ticks/s, per-axis calibration."""
-    subs = [
-        ("X", "g", -0.5, 0.01),
-        ("Y", "g", 0.25, 0.02),
-        ("Z", "g", 0.0, 0.001),
-    ]
-    chdef = (
-        _hw_el(mide.CH_ID, _hw_uint(8))
-        + _hw_el(mide.CH_NAME, b"Acceleration")
-        + _hw_el(mide.CH_UNIT, b"g")
-        + _hw_el(mide.CH_RATE, _struct.pack(">d", 400.0))
-        + _hw_el(mide.CH_START_US, _hw_uint(1_704_067_200_000_000))
-        + _hw_el(mide.CH_TIMEBASE, _hw_uint(65536))
-    )
-    for name, unit, a, b in subs:
-        chdef += _hw_el(
-            mide.SUBCHANNEL,
-            _hw_el(mide.SUB_NAME, name.encode())
-            + _hw_el(mide.SUB_UNIT, unit.encode())
-            + _hw_el(mide.CAL_A, _struct.pack(">d", a))
-            + _hw_el(mide.CAL_B, _struct.pack(">d", b)),
-        )
-    # block 0: 4 frames at tick 0; block 1: 2 frames at tick 32768 (0.5s)
-    f0 = np.array(
-        [[100, -200, 300], [101, -201, 301], [102, -202, 302], [103, -203, 303]],
-        dtype="<i2",
-    )
-    f1 = np.array([[-32768, 0, 32767], [7, -7, 7]], dtype="<i2")
-    blocks = b""
-    for ticks, frames in [(0, f0), (32768, f1)]:
-        blocks += _hw_el(
-            mide.DATA_BLOCK,
-            _hw_el(mide.CH_REF, _hw_uint(8))
-            + _hw_el(mide.BLOCK_TICKS, _hw_uint(ticks))
-            + _hw_el(mide.SAMPLES, frames.tobytes()),
-        )
-    header = _hw_el(
-        mide.EBML_HEADER, _hw_el(mide.DOCTYPE, b"spark-sigproc-rec")
-    )
-    return header + _hw_el(mide.SEGMENT, chdef_wrap(chdef) + blocks), subs, f0, f1
-
-
-def chdef_wrap(chdef: bytes) -> bytes:
-    return _hw_el(mide.CHANNEL_DEF, chdef)
+    np.testing.assert_array_equal(pr, [-32768 * 2.5, 0.0, 32767 * 2.5])
 
 
 def test_hw_layout_deinterleave_and_calibration():
-    blob, subs, f0, f1 = _hw_accel_recording()
-    assert mide.is_recording(blob)
-    chans = {c.name: c for c in mide.read_recording_channels(blob, source="hw")}
-    assert sorted(chans) == [
-        "Acceleration:X", "Acceleration:Y", "Acceleration:Z"
-    ]
-    raw = np.concatenate([f0, f1])
-    # tick base: block 0 at 0.0s, block 1 at 32768/65536 = 0.5s; 400 Hz
-    t_expected = np.concatenate(
-        [0.0 + np.arange(4) / 400.0, 0.5 + np.arange(2) / 400.0]
-    )
-    for k, (name, unit, a, b) in enumerate(subs):
+    chans = {c.name: c for c in mide.read_mide_channels(_hw_recording(), source="hw")}
+    raw = np.concatenate([ACCEL_F0, ACCEL_F1]).astype(np.float64)
+    # unwrapped tick codes, linear per block: block 0 starts 128 ticks
+    # before the wrap, so sample 2 sits exactly on tick 2**24
+    t_expected = _expected_times(ACCEL_BLOCKS)
+    assert t_expected[2] == MOD / TPS
+    assert np.all(np.diff(t_expected) > 0)
+    for k, (name, unit, _cal, ref, (b, a)) in enumerate(ACCEL_SUBS):
         ch = chans[f"Acceleration:{name}"]
         assert ch.unit == unit
         np.testing.assert_array_equal(ch.time, t_expected)
-        np.testing.assert_array_equal(
-            ch.data, a + b * raw[:, k].astype(np.float64)
-        )
-        assert ch.start_time == datetime(2024, 1, 1, 0, 0, 0)
+        np.testing.assert_array_equal(ch.data, b * (raw[:, k] - ref) + a)
     # int16 extremes survive calibration exactly
     z = chans["Acceleration:Z"]
     assert z.data[4] == 0.001 * 32767.0
 
 
 def test_hw_layout_roundtrips_through_module_encoder():
-    frames = np.array([[1, 2], [3, 4], [5, 6]], dtype="<i2")
-    blob = mide.encode_recording(
-        [
-            {
-                "ch_id": 3, "name": "Gyro", "unit": "dps", "rate": 200.0,
-                "start_us": 1_704_067_200_000_000, "timebase": 65536,
-                "subchannels": [
-                    {"name": "P", "unit": "dps", "a": 0.0, "b": 0.5},
-                    {"name": "Q", "unit": "dps", "a": 1.0, "b": 0.25},
-                ],
-                "blocks": [(65536, frames)],
-            }
-        ]
-    )
-    chans = {c.name: c for c in mide.read_recording_channels(blob)}
-    p, q = chans["Gyro:P"], chans["Gyro:Q"]
-    np.testing.assert_array_equal(p.time, 1.0 + np.arange(3) / 200.0)
-    np.testing.assert_array_equal(p.data, 0.5 * frames[:, 0])
-    np.testing.assert_array_equal(q.data, 1.0 + 0.25 * frames[:, 1])
+    # The module's encoder writes the same wire bytes as the hand-rolled
+    # layout, so its roundtrip tests speak for recorder bytes too.
+    channels = [
+        {
+            "ch_id": 8, "name": "Acceleration", "fmt": "<hhh",
+            "subchannels": [
+                {"sub_id": k, "name": n, "units": u, "cal_id": c}
+                for k, (n, u, c, _r, _co) in enumerate(ACCEL_SUBS)
+            ],
+            "blocks": ACCEL_BLOCKS,
+        },
+        {
+            "ch_id": 36, "name": "Pressure", "fmt": "<h",
+            "subchannels": [
+                {"sub_id": 0, "name": "P", "units": "Pa", "cal_id": PRESSURE_CAL[0]}
+            ],
+            "blocks": [PRESSURE_BLOCK],
+        },
+    ]
+    cals = {c: (r, co) for _n, _u, c, r, co in ACCEL_SUBS}
+    cals[PRESSURE_CAL[0]] = PRESSURE_CAL[1:]
+    blob = mide.encode_mide(channels, cals, time_base_utc=TIME_BASE_UTC)
+    assert blob == _hw_recording()
 
 
 def test_hw_layout_rejects_ragged_frames():
-    blob, _, _, _ = _hw_accel_recording()
-    # append a block whose sample count is not a multiple of n_sub
+    # MIDE data blocks sit at the root: append one whose 4-byte payload
+    # is not a whole number of 6-byte '<hhh' frames
     bad = _hw_el(
-        mide.DATA_BLOCK,
-        _hw_el(mide.CH_REF, _hw_uint(8))
-        + _hw_el(mide.BLOCK_TICKS, _hw_uint(99))
-        + _hw_el(mide.SAMPLES, np.array([1, 2], dtype="<i2").tobytes()),
+        "ChannelDataBlock",
+        _hw_uint("ChannelIDRef", 8)
+        + _hw_uint("StartTimeCodeAbs", 99)
+        + _hw_uint("EndTimeCodeAbs", 163)
+        + _hw_el("ChannelDataPayload", np.array([1, 2], dtype="<i2").tobytes()),
     )
-    # splice: rebuild segment with the bad block appended
-    parts = list(mide.iter_elements(blob, 0, len(blob)))
-    (hdr_id, hs, he), (seg_id, ss, se) = parts
-    spliced = blob[: he] + _hw_el(mide.SEGMENT, blob[ss:se] + bad)
-    with pytest.raises(ValueError, match="whole number"):
-        mide.read_recording_channels(spliced)
+    with pytest.raises(ValueError, match="not whole frames"):
+        mide.read_mide_channels(_hw_recording() + bad)
 
 
 def test_hw_layout_through_spark_ide_source(spark, tmp_path):
-    blob, subs, f0, f1 = _hw_accel_recording()
     d = tmp_path / "hwlogs"
     d.mkdir()
-    (d / "accel.ide").write_bytes(blob)
+    (d / "accel.ide").write_bytes(_hw_recording())
     from pandas_sigproc_spark.sources.ide_datasource import register_ide_source
 
     register_ide_source(spark)
     df = spark.read.format("ide").load(str(d))
     rows = df.orderBy("channel_id", "t").collect()
-    assert len(rows) == 18  # 3 subchannels x 6 frames
-    raw = np.concatenate([f0, f1])
+    assert len(rows) == N_ROWS
+    raw = np.concatenate([ACCEL_F0, ACCEL_F1]).astype(np.float64)
     x = [r for r in rows if r.channel_id.endswith(":X")]
-    assert [r.value for r in x] == list(-0.5 + 0.01 * raw[:, 0].astype(float))
-    assert x[4].t == 0.5 + 0.0 / 400.0
+    assert [r.value for r in x] == list(0.01 * raw[:, 0] - 0.5)
+    assert [r.t for r in x] == list(_expected_times(ACCEL_BLOCKS))
+    assert x[4].t == (MOD - 128 + TPS // 2) / TPS

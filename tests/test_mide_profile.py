@@ -67,7 +67,6 @@ def test_mide_roundtrip_unwrap_and_calibration():
     channels, cals = _fixture()
     blob = mide.encode_mide(channels, cals, time_base_utc=1_704_067_200)
     assert mide.is_mide(blob)
-    assert not mide.is_recording(blob)  # profiles don't cross-match
     out = {c.name: c for c in mide.read_mide_channels(blob, source="fx")}
     assert set(out) == {"Accel:X", "Accel:Y", "Accel:Z", "Temp:T"}
 
@@ -546,19 +545,6 @@ def test_parse_report_does_not_recurse_into_sample_payloads():
     assert not any(
         r["depth"] > payload_rows[0]["depth"] + 1 for r in rows
     )
-
-
-def test_is_recording_still_matches_doctype():
-    ch = {
-        "ch_id": 1, "name": "a", "unit": "g", "rate": 10.0,
-        "start_us": 0, "scale": 1.0,
-        "blocks": [(0.0, __import__("numpy").zeros((4, 1), "<i2"))],
-        "subchannels": [{"name": "x", "unit": "g", "a": 1.0, "b": 0.0}],
-    }
-    blob = mide.encode_recording([ch])
-    assert mide.is_recording(blob)
-    assert not mide.is_mide(blob)
-    assert not mide.is_recording(b"\x00\x01")
 
 
 def test_unpack_frames_native_long_width_mismatch_falls_back():

@@ -149,6 +149,31 @@ def test_segmented_psd_short_channel_raises_loudly(spark):
         ).collect()
 
 
+@pytest.mark.parametrize("n_buckets", [None, 2], ids=["per_channel", "bucketed"])
+def test_whole_channel_psd_short_channel_names_it(spark, n_buckets):
+    # the whole-channel refusal names the channel and its length, on the
+    # per-channel and the bucketed route alike
+    import pandas as pd
+
+    from pandas_sigproc_spark.operators.psd import get_psd
+
+    t = np.arange(2048) / 256.0
+    df = spark.createDataFrame(
+        pd.concat([
+            pd.DataFrame({"channel_id": "long", "t": t, "value": np.sin(t)}),
+            pd.DataFrame({"channel_id": "short", "t": t[:100], "value": np.ones(100)}),
+        ])
+    )
+    with pytest.raises(
+        Exception, match=r"channel 'short' has 100 sample\(s\), fewer than one"
+        r" window_length of 1.0 s \(256 samples at 256.0 Hz\)"
+    ):
+        get_psd(
+            df, window_length=1.0, samplerate=256.0, segmented=False,
+            n_buckets=n_buckets,
+        ).collect()
+
+
 def test_segmented_true_requires_window_length(spark):
     import pandas as pd
     import pytest

@@ -66,3 +66,17 @@ def test_chunk_size_invariance(spark, fatigue):
 def test_mutually_exclusive_kwargs(spark, fatigue):
     with pytest.raises(ValueError, match="at most one"):
         rainflow_chunked(fatigue, chunk_rows=1024, ndigits=2, nbins=5)
+
+
+def test_repeated_calls_cache_nothing(spark, fatigue):
+    # stage 1 feeds one keyed stage-2 pass: no cached frame per call, and
+    # exactly two Python nodes (stage 1, stage 2) with no union between
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        out = rainflow_chunked(fatigue, chunk_rows=1024, nbins=10)
+        out.count()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert after == before
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 2, plan
+    assert "Union" not in plan and "InMemory" not in plan, plan

@@ -71,9 +71,9 @@ def test_ide_source_is_import_gated(tmp_path):
 
     from pandas_sigproc_spark.sources.endaq import read_ide_channels
 
-    # A real file that is NOT the engine's own EBML profile
-    # (sources/mide.py reads those without the package) still demands
-    # the endaq dependency.
+    # A real file that is NOT in the MIDE profile (sources/mide.py
+    # reads those without the package) still demands the endaq
+    # dependency.
     p = tmp_path / "foreign.ide"
     p.write_bytes(b"\x1a\x45\xdf\xa3 foreign-ide-bytes")
     with _pytest.raises(ImportError, match="endaq"):
